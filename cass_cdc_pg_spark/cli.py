@@ -138,13 +138,14 @@ def cmd_dlq_resolve(args, spark) -> int:
               file=sys.stderr)
         return 1
     now_us = int(time.time() * 1_000_000)
-    updated = (
-        df.filter(F.col("dlq_id") == args.id)
-        .withColumn("resolution_status", F.lit(args.status))
-        .withColumn("_cdc_deleted", F.lit(False))
-        .withColumn("_cdc_timestamp_micros", F.lit(now_us))
-        .withColumn("_last_event_id", F.lit(f"resolve-{uuid.uuid4().hex[:8]}"))
-        .withColumn("_ttl_expiry_timestamp_us", F.lit(None).cast("long"))
+    updated = df.filter(F.col("dlq_id") == args.id).withColumns(
+        {
+            "resolution_status": F.lit(args.status),
+            "_cdc_deleted": F.lit(False),
+            "_cdc_timestamp_micros": F.lit(now_us),
+            "_last_event_id": F.lit(f"resolve-{uuid.uuid4().hex[:8]}"),
+            "_ttl_expiry_timestamp_us": F.lit(None).cast("long"),
+        }
     )
     t.merge(updated)
     print(json.dumps({"dlq_id": args.id, "resolution_status": args.status}))

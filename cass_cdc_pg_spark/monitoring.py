@@ -27,7 +27,7 @@ import os
 import threading
 import time
 import uuid
-from collections import defaultdict
+from collections import defaultdict, deque
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession
@@ -36,6 +36,24 @@ from pyspark.sql.streaming import StreamingQueryListener
 # ---------------------------------------------------------------------------
 # metrics registry
 # ---------------------------------------------------------------------------
+
+
+#: Most recent observations kept per series for ``observations()``;
+#: ``_count``/``_sum`` cover every observation ever made.
+OBSERVATION_WINDOW = 1024
+
+
+class _Series:
+    """One observed series: running count and sum, plus a bounded
+    window of recent values — memory stays constant however long a
+    stream runs."""
+
+    __slots__ = ("count", "sum", "recent")
+
+    def __init__(self) -> None:
+        self.count = 0
+        self.sum = 0.0
+        self.recent: deque[float] = deque(maxlen=OBSERVATION_WINDOW)
 
 
 class MetricsCollector:
@@ -47,7 +65,7 @@ class MetricsCollector:
         self._lock = threading.Lock()
         self._counters: dict[tuple, float] = defaultdict(float)
         self._gauges: dict[tuple, float] = {}
-        self._observations: dict[tuple, list[float]] = defaultdict(list)
+        self._observations: dict[tuple, _Series] = defaultdict(_Series)
 
     @staticmethod
     def _key(name: str, labels: dict[str, str] | None) -> tuple:
@@ -63,7 +81,10 @@ class MetricsCollector:
 
     def observe(self, name: str, value: float, labels: dict[str, str] | None = None) -> None:
         with self._lock:
-            self._observations[self._key(name, labels)].append(value)
+            series = self._observations[self._key(name, labels)]
+            series.count += 1
+            series.sum += value
+            series.recent.append(value)
 
     def value(self, name: str, labels: dict[str, str] | None = None) -> float:
         key = self._key(name, labels)
@@ -73,8 +94,10 @@ class MetricsCollector:
             return self._gauges.get(key, 0.0)
 
     def observations(self, name: str, labels: dict[str, str] | None = None) -> list[float]:
+        """The most recent ``OBSERVATION_WINDOW`` values, oldest first."""
         with self._lock:
-            return list(self._observations[self._key(name, labels)])
+            series = self._observations.get(self._key(name, labels))
+            return list(series.recent) if series else []
 
     @staticmethod
     def _fmt_labels(labels: tuple) -> str:
@@ -92,9 +115,9 @@ class MetricsCollector:
                 lines.append(f"{name}{self._fmt_labels(labels)} {v}")
             for (name, labels), v in sorted(self._gauges.items()):
                 lines.append(f"{name}{self._fmt_labels(labels)} {v}")
-            for (name, labels), obs in sorted(self._observations.items()):
-                lines.append(f"{name}_count{self._fmt_labels(labels)} {len(obs)}")
-                lines.append(f"{name}_sum{self._fmt_labels(labels)} {sum(obs)}")
+            for (name, labels), series in sorted(self._observations.items()):
+                lines.append(f"{name}_count{self._fmt_labels(labels)} {series.count}")
+                lines.append(f"{name}_sum{self._fmt_labels(labels)} {series.sum}")
         return "\n".join(lines) + "\n"
 
 

@@ -13,11 +13,14 @@ executable spec ``tests/integration/test_out_of_order_events.py``):
   event multiset converges to the same state.
 
 Implementation: ``max_by(struct(payload), struct(ts, event_id))`` —
-an *aggregate*, not a window.  Catalyst plans it with a map-side
-partial aggregate, so at 100 TB each executor reduces its partitions
+an *aggregate*, not a window.  On its own, Catalyst plans it with a
+map-side partial aggregate, so each executor reduces its partitions
 to ≤1 row per key before the shuffle; a window (`row_number`)
-variant would shuffle + sort every event.  `lww_window` is kept for
-the cross-check test.
+variant would shuffle + sort every event.  ``KeyedTable.merge``
+instead hands it a batch already clustered by bucket: the aggregate
+then runs after that one bucket shuffle, with no exchange of its own,
+so the merge shuffles once rather than twice.  `lww_window` is kept
+for the cross-check test.
 """
 
 from __future__ import annotations
@@ -40,7 +43,7 @@ def lww_latest(
             F.struct(F.col(ts_col), F.col(tiebreak_col)),
         ).alias("_win")
     )
-    return agg.select(*keys, *[F.col(f"_win.{c}").alias(c) for c in payload])
+    return agg.select(*keys, "_win.*")
 
 
 def lww_window(

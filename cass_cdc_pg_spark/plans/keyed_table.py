@@ -16,7 +16,9 @@ merge-on-read:
 - a merge LWW-reduces the incoming batch (intra-batch dedup) and
   appends it as a new delta, partitioned by bucket — **cost is
   O(batch), never O(table)**: base files are not read and not
-  rewritten;
+  rewritten.  The batch is shuffled once, by bucket; the LWW aggregate
+  reuses that clustering, so a merge is two Spark jobs (the shuffle
+  stage, then the reduce-and-write);
 - reads union base+deltas and LWW-reduce per key (merge-on-read);
   buckets with no deltas skip the reduce;
 - a bucket whose delta count exceeds ``compact_threshold`` is
@@ -28,6 +30,11 @@ ingest throughput is bounded by batch size, not table size; bucket
 count spreads compaction work (thousands of buckets for TB-scale
 tables — set ``num_buckets`` accordingly; it is fixed at table
 creation like any hash-bucketing scheme).
+
+File format: zstd parquet with the default v1 pages, one file per
+touched bucket per commit, written straight into a fresh uuid dir
+(``_write`` is the one writer; nothing is ever overwritten in place).
+Snappy files from older commits read and compact alongside them.
 
 Writes are atomic-by-manifest: delta/base dirs are written first, then
 the fsync'd manifest swaps in one ``os.replace`` — a crash mid-merge
@@ -58,6 +65,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cass_cdc_pg_spark.operators.lww import lww_latest
+
+#: Codec of every parquet file the table writes (see ``KeyedTable._write``).
+PARQUET_CODEC = "zstd"
 
 META_COLS = (
     "_cdc_deleted",
@@ -395,27 +405,18 @@ class KeyedTable:
         if missing:
             raise ValueError(f"merge batch missing columns: {missing}")
 
+        # the one shuffle: cluster by bucket first, and the LWW
+        # aggregate (grouped on keys + _bucket) reuses that clustering,
+        # so the reduce and the per-bucket write run in the same tasks
+        parts = min(self.num_buckets, self.spark.sparkContext.defaultParallelism)
         reduced = lww_latest(
-            batch.withColumn("_bucket", self._bucket_col()),
+            batch.withColumn("_bucket", self._bucket_col()).repartition(parts, "_bucket"),
             [*self.key_cols, "_bucket"],
             ts_col="_cdc_timestamp_micros",
             tiebreak_col="_last_event_id",
         )
         delta = f"delta-{uuid.uuid4().hex[:12]}"
-        (
-            reduced.repartition("_bucket")
-            .write.partitionBy("_bucket")
-            .mode("overwrite")
-            .parquet(f"{self.path}/{delta}")
-        )
-        # the written partition dirs ARE the touched-bucket set — no
-        # extra job needed to discover it
-        touched = []
-        for d in os.listdir(f"{self.path}/{delta}"):
-            if d.startswith("_bucket="):
-                b = d.split("=", 1)[1]
-                os.rename(f"{self.path}/{delta}/{d}", f"{self.path}/{delta}/bucket={b}")
-                touched.append(b)
+        touched = self._write(reduced, f"{self.path}/{delta}")
         if not touched:
             shutil.rmtree(f"{self.path}/{delta}", ignore_errors=True)
             return
@@ -437,11 +438,13 @@ class KeyedTable:
         unconditional form.  *rows* carries key + payload columns only;
         metadata is stamped here."""
         now_us = now_us or int(time.time() * 1_000_000)
-        stamped = (
-            rows.withColumn("_cdc_deleted", F.lit(False))
-            .withColumn("_cdc_timestamp_micros", F.lit(now_us).cast("long"))
-            .withColumn("_last_event_id", F.expr("uuid()"))
-            .withColumn("_ttl_expiry_timestamp_us", F.lit(None).cast("long"))
+        stamped = rows.withColumns(
+            {
+                "_cdc_deleted": F.lit(False),
+                "_cdc_timestamp_micros": F.lit(now_us).cast("long"),
+                "_last_event_id": F.expr("uuid()"),
+                "_ttl_expiry_timestamp_us": F.lit(None).cast("long"),
+            }
         )
         self.merge(stamped)
 
@@ -499,24 +502,44 @@ class KeyedTable:
         that ends up empty gets an empty-schema marker dir."""
         snap_name = f"snap-{uuid.uuid4().hex[:12]}"
         snap = f"{self.path}/{snap_name}"
-        (
-            df_with_bucket.repartition(max(len(buckets), 1), "_bucket")
-            .write.partitionBy("_bucket")
-            .mode("overwrite")
-            .parquet(snap)
+        written = set(
+            self._write(
+                df_with_bucket.repartition(max(len(buckets), 1), "_bucket"), snap
+            )
         )
         manifest = self._read_manifest()
         for b in map(str, buckets):
-            src_dir = f"{snap}/_bucket={b}"
-            if os.path.isdir(src_dir):
-                os.rename(src_dir, f"{snap}/bucket={b}")
-            else:
-                df_with_bucket.drop("_bucket").limit(0).write.mode(
-                    "overwrite"
-                ).parquet(f"{snap}/bucket={b}")
+            if b not in written:
+                self._write(df_with_bucket.drop("_bucket").limit(0), f"{snap}/bucket={b}")
             manifest[b] = {"base": snap_name, "deltas": []}
         self._write_manifest(manifest, op=op, added=[snap_name])
         self._gc(manifest)
+
+    def _write(self, df: DataFrame, dest: str) -> list[str]:
+        """Write *df* into the fresh directory *dest* — every data file
+        the table holds goes through here, so the file format is set in
+        one place: zstd parquet (``PARQUET_CODEC``), default v1 pages.
+        The default error-if-exists mode writes straight into *dest*;
+        it is always a new uuid dir, so there is nothing to overwrite.
+
+        A ``_bucket`` column partitions the output: one ``bucket=<b>``
+        dir per value, one file per bucket when *df* is clustered by
+        bucket; the bucket ids written are returned (the written dirs
+        ARE the touched set, no extra job to discover it).  Without
+        that column *dest* is a single bucket dir and ``[]`` comes
+        back — the empty-bucket marker of ``_publish``."""
+        w = df.write.option("compression", PARQUET_CODEC)
+        if "_bucket" not in df.columns:
+            w.parquet(dest)
+            return []
+        w.partitionBy("_bucket").parquet(dest)
+        touched = []
+        for d in os.listdir(dest):
+            if d.startswith("_bucket="):
+                b = d.split("=", 1)[1]
+                os.rename(f"{dest}/{d}", f"{dest}/bucket={b}")
+                touched.append(b)
+        return touched
 
     def _gc(self, manifest: dict[str, dict]) -> None:
         """Drop snapshot/delta dirs nothing points at anymore — where

@@ -22,8 +22,6 @@ _RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Upserts rewrite only the buckets a batch touches.
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
     # Deterministic timestamp rendering for checksums.
     "spark.sql.session.timeZone": "UTC",
     # Arrow for the few pandas-interop paths (multimodal stubs).

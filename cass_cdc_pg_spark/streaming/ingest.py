@@ -275,11 +275,13 @@ class CdcIngest:
         from cass_cdc_pg_spark.streaming.transforms import check_payload_schema
 
         check_payload_schema(self.table_schemas[name])
-        stamped = (
-            snapshot.withColumn("_cdc_deleted", F.lit(False))
-            .withColumn("_cdc_timestamp_micros", F.lit(ts_us).cast("long"))
-            .withColumn("_last_event_id", F.lit(""))
-            .withColumn("_ttl_expiry_timestamp_us", F.lit(None).cast("long"))
+        stamped = snapshot.withColumns(
+            {
+                "_cdc_deleted": F.lit(False),
+                "_cdc_timestamp_micros": F.lit(ts_us).cast("long"),
+                "_last_event_id": F.lit(""),
+                "_ttl_expiry_timestamp_us": F.lit(None).cast("long"),
+            }
         )
         self.table(name).merge(stamped)
 

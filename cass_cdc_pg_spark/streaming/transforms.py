@@ -270,19 +270,17 @@ def add_cdc_metadata(rows: DataFrame) -> DataFrame:
     op = F.col("_cdc_env_op")
     ts = F.col("_cdc_env_ts_micros")
     ttl = F.col("_cdc_env_ttl_seconds")
-    return (
-        rows.withColumn("_cdc_deleted", op == "DELETE")
-        .withColumn("_cdc_timestamp_micros", ts)
-        .withColumn("_last_event_id", F.col("_cdc_env_event_id"))
-        .withColumn(
-            "_ttl_expiry_timestamp_us",
-            F.when(
+    return rows.withColumns(
+        {
+            "_cdc_deleted": op == "DELETE",
+            "_cdc_timestamp_micros": ts,
+            "_last_event_id": F.col("_cdc_env_event_id"),
+            "_ttl_expiry_timestamp_us": F.when(
                 ttl.isNotNull() & (ttl > 0),
                 ts + ttl.cast("long") * F.lit(1_000_000),
             ),
-        )
-        .drop(*ENVELOPE_ALIASES.values())
-    )
+        }
+    ).drop(*ENVELOPE_ALIASES.values())
 
 
 def apply_column_rules(

@@ -188,6 +188,90 @@ def test_compaction_folds_deltas_and_preserves_state(spark, tmp_path):
     assert all(not e["deltas"] for e in t._read_manifest().values())
 
 
+def test_snappy_files_read_merge_and_compact_to_zstd(spark, tmp_path):
+    """Format compatibility: a table whose base and delta files are
+    snappy (what the table wrote before zstd; pyarrow stands in for
+    that writer) still reads, merges and compacts to the same LWW
+    state, and every file a later merge or compaction writes is zstd."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 4
+    arrow_schema = pa.schema([
+        ("id", pa.string()), ("val", pa.string()), ("_cdc_deleted", pa.bool_()),
+        ("_cdc_timestamp_micros", pa.int64()), ("_last_event_id", pa.string()),
+        ("_ttl_expiry_timestamp_us", pa.int64()),
+    ])
+    base_rows = [(f"k{i}", "base", False, 100, f"b{i}", None) for i in range(12)]
+    delta_rows = [(f"k{i}", "delta", i % 4 == 0, 200, f"d{i}", None)
+                  for i in range(0, 12, 2)]
+    late_rows = [("k1", "late", False, 300, "m1", None),
+                 ("k2", "stale", False, 150, "m2", None),
+                 ("k20", "new", False, 300, "m20", None)]
+    bucket_of = {
+        r["id"]: str(r["b"])
+        for r in _batch(spark, base_rows + late_rows)
+        .select("id", F.expr(f"pmod(xxhash64(id), {n})").alias("b")).collect()
+    }
+
+    path = tmp_path / "legacy"
+    buckets: dict[str, dict] = {}
+    for d, rows in (("snap-legacy00000", base_rows), ("delta-legacy0000", delta_rows)):
+        by_bucket: dict[str, list] = {}
+        for r in rows:
+            by_bucket.setdefault(bucket_of[r[0]], []).append(r)
+        for b, rs in by_bucket.items():
+            os.makedirs(path / d / f"bucket={b}")
+            pq.write_table(
+                pa.Table.from_pylist([dict(zip(arrow_schema.names, r)) for r in rs],
+                                     schema=arrow_schema),
+                path / d / f"bucket={b}" / "part-00000.snappy.parquet",
+                compression="snappy",
+            )
+            entry = buckets.setdefault(b, {"base": None, "deltas": []})
+            if d.startswith("snap-"):
+                entry["base"] = d
+            else:
+                entry["deltas"].append(d)
+    with open(path / "_manifest.json", "w") as f:
+        json.dump({"buckets": buckets, "num_buckets": n, "key_cols": ["id"],
+                   "version": 1, "op": "merge", "added": []}, f)
+
+    def lww(rows):  # the state every step must agree with, as _state reports it
+        win: dict = {}
+        for r in rows:
+            if r[0] not in win or (r[3], r[4]) > win[r[0]][1]:
+                win[r[0]] = ((r[1], r[2], r[3]), (r[3], r[4]))
+        return {k: v[0] for k, v in win.items()}
+
+    def codecs_of_last_commit():  # footer codecs of the dirs the last commit added
+        out = set()
+        for d in t._version_doc(t._current_version())["added"]:
+            for root, _, files in os.walk(path / d):
+                for f in files:
+                    if f.endswith(".parquet"):
+                        md = pq.ParquetFile(os.path.join(root, f)).metadata
+                        out |= {md.row_group(g).column(c).compression
+                                for g in range(md.num_row_groups)
+                                for c in range(md.num_columns)}
+        return out
+
+    t = KeyedTable(spark, str(path), ["id"], num_buckets=n, compact_threshold=100)
+    assert _state(t) == lww(base_rows + delta_rows)
+    t.merge(_batch(spark, late_rows))
+    assert _state(t) == lww(base_rows + delta_rows + late_rows)
+    assert codecs_of_last_commit() == {"ZSTD"}
+    t.compact()
+    assert _state(t) == lww(base_rows + delta_rows + late_rows)
+    assert codecs_of_last_commit() == {"ZSTD"}
+    # compaction folded every snappy file away
+    assert all(e["base"] != "snap-legacy00000" and not e["deltas"]
+               for e in t._read_manifest().values())
+
+
 def test_auto_compaction_triggers_at_threshold(spark, tmp_path):
     import os
 

@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 
 from cass_cdc_pg_spark.monitoring import (
     METRICS,
+    OBSERVATION_WINDOW,
     AlertService,
     CdcStreamingListener,
     MetricsCollector,
@@ -38,6 +39,26 @@ def test_metrics_collector_counters_and_render():
     assert 'cdc_events_processed_total{operation="CREATE",table="users"} 6' in text
     assert 'cdc_backlog_depth{topic="cdc-events-users"} 42' in text
     assert "cdc_processing_latency_seconds_count" in text
+
+
+def test_metrics_observations_bounded():
+    """A long-running stream observes once per batch: _count/_sum stay
+    exact over every observation while at most OBSERVATION_WINDOW
+    values are retained."""
+    m = MetricsCollector()
+    labels = {"stage": "process_batch"}
+    n = 10_000
+    for i in range(n):
+        m.observe("cdc_processing_latency_seconds", i * 0.5, labels)
+    text = m.render_prometheus()
+    assert f'cdc_processing_latency_seconds_count{{stage="process_batch"}} {n}' in text
+    assert (f'cdc_processing_latency_seconds_sum{{stage="process_batch"}} '
+            f"{sum(i * 0.5 for i in range(n))}") in text
+    recent = m.observations("cdc_processing_latency_seconds", labels)
+    assert len(recent) == OBSERVATION_WINDOW < n
+    assert recent == [i * 0.5 for i in range(n - OBSERVATION_WINDOW, n)]
+    assert m.observations("never_observed") == []
+    assert "never_observed" not in m.render_prometheus()
 
 
 def test_alert_severity_thresholds():

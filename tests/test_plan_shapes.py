@@ -90,6 +90,52 @@ def test_keyed_table_read_prunes_to_requested_buckets(spark, tmp_path):
     assert files and all("/bucket=3/" in f for f in files), files
 
 
+def test_keyed_table_merge_shuffles_once(spark, tmp_path):
+    """The merge's cost: two Spark jobs with ONE shuffle-writing stage
+    (the bucket clustering, which the LWW aggregate reuses — no
+    exchange of its own) and one parquet file per touched bucket in
+    the new delta.  Jobs and stages come from the JVM status store,
+    for the merge's own job group."""
+    import json
+    import os
+
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+
+    t = KeyedTable(spark, str(tmp_path / "kt"), ["id"], num_buckets=8)
+    # 200 keys, each repeated 5 times: the intra-batch LWW reduce works
+    batch = spark.range(1000).selectExpr(
+        "CAST(id % 200 AS STRING) AS id", "id AS v", "false AS _cdc_deleted",
+        "id AS _cdc_timestamp_micros", "CAST(id AS STRING) AS _last_event_id",
+        "CAST(NULL AS LONG) AS _ttl_expiry_timestamp_us")
+    sc = spark.sparkContext
+    group = "keyed-table-merge-shape"
+    sc.setJobGroup(group, "keyed table merge plan shape")
+    try:
+        t.merge(batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 2, jobs  # the shuffle stage, then reduce-and-write
+    stage_ids = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    store = jsc.statusStore()
+    shuffle_writers = [
+        s for s in stage_ids if store.lastStageAttempt(s).shuffleWriteRecords() > 0
+    ]
+    assert len(shuffle_writers) == 1, (sorted(stage_ids), shuffle_writers)
+
+    with open(f"{t.path}/_manifest.json") as f:
+        delta = json.load(f)["added"][0]
+    bucket_dirs = [d for d in os.listdir(f"{t.path}/{delta}") if d.startswith("bucket=")]
+    assert len(bucket_dirs) == 8, bucket_dirs
+    for d in bucket_dirs:
+        files = [f for f in os.listdir(f"{t.path}/{delta}/{d}") if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    assert t.read().count() == 200
+
+
 def test_crash_between_delta_write_and_manifest_is_invisible(spark, tmp_path):
     """LSM durability: a delta directory written without a manifest
     swap (crash window) is ignored by reads and GC'd by the next
