@@ -2,7 +2,9 @@
 
 Source → parse (S2/S3) → validate/split (T7/S5) → unwrap+type (T1/T8)
 → cdc metadata+TTL (T4-T6/T9) → intra-batch LWW dedup (C1a) →
-keyed-table merge (C1b/S4), with the DLQ appended per batch.
+keyed-table merge (C1b/S4).  One classifier tags each event with its
+DLQ route (T7, unknown table, rejected schema version, T8 conversion);
+the DLQ is merged once per batch, only when some event was routed to it.
 
 One streaming query serves all tables (the reference's
 ``subscribePattern cdc-events-.*``): ``foreachBatch`` fans out by
@@ -288,23 +290,31 @@ class CdcIngest:
     # -- batch core (also used directly by tests and replay) ---------------
 
     def process_batch(self, events: DataFrame, batch_id: int = 0) -> None:
-        """Validate → split → per-table unwrap/convert/merge.
+        """Classify → summarize → per-table unwrap/merge → one DLQ write.
 
-        One summary aggregation up front tells us which tables the
-        batch actually touches, whether any rows failed validation, and
-        the winning TRUNCATE per table — so a microbatch for one table
-        costs jobs proportional to that table, not to the configured
-        table count.  The same pass feeds the RED metrics
-        (``monitoring.METRICS``) at zero extra job cost.
+        :func:`transforms.classify` tags every event once with the DLQ
+        route it takes (NULL if it merges), against a clock read once
+        per batch; the tagged batch is persisted, so every later job
+        reuses that one decision.  One summary aggregation over it tells
+        us which tables the batch touches, the winning TRUNCATE per
+        table and whether any event goes to the DLQ — so a microbatch
+        for one table costs jobs proportional to that table, not to the
+        configured table count, and a clean batch never writes the DLQ.
+        The same pass feeds the RED metrics (``monitoring.METRICS``) at
+        zero extra job cost.
         """
         _t0 = _time.time()
         # T3 addEventId runs before validation, as in the reference's
         # source connector (cassandra-source.json:48-50)
-        events = transforms.add_event_id(events).persist()
+        events = transforms.add_event_id(events)
+        tagged = transforms.classify(
+            events,
+            self.table_schemas,
+            {name: self.schema_registry.rejected_versions(name)
+             for name in self.table_schemas},
+            int(_time.time() * 1_000_000),
+        ).persist()
         try:
-            tagged = events.withColumn(
-                "_error_type", transforms.validation_status()
-            )
             aggs = [
                 F.count(F.lit(1)).alias("n"),
                 F.max(F.struct("timestamp_micros", "event_id")).alias("mx"),
@@ -360,85 +370,25 @@ class CdcIngest:
                         )
 
             # schema-change detection (auto.evolve): unseen payload keys
-            # advance the pinned schema through the compatibility gate
+            # of merging events advance the pinned schema through the
+            # compatibility gate.  Classifying first routes events as
+            # classifying after would: the added columns are nullable
+            # strings, which no compatibility mode rejects and no value
+            # fails to convert to.
             if self.auto_evolve:
                 for name in row_tables:
-                    if name not in self.table_schemas:
-                        continue
                     known = {f.name for f in self.table_schemas[name].fields}
                     unknown = seen_keys.get(name, set()) - known
                     if unknown:
                         self._auto_add_columns(name, sorted(unknown))
 
-            dlq_parts = []
-            if any_bad:
-                bad = tagged.filter(F.col("_error_type").isNotNull())
-                dlq_parts.append(
-                    transforms.to_dlq_rows(
-                        bad,
-                        events.columns,
-                        F.col("_error_type"),
-                        F.concat(F.lit("validation failed: "), F.col("_error_type")),
-                    )
-                )
-            good = tagged.filter(F.col("_error_type").isNull()).drop("_error_type")
-
-            # Valid events for tables with no registered schema must
-            # not vanish (ADVICE r2): route them to the DLQ as
-            # UNKNOWN_TABLE so misrouted / unconfigured-table events
-            # stay visible and replayable once the table is registered.
-            unknown_tables = (row_tables | set(truncates)) - set(self.table_schemas)
-            if unknown_tables:
-                unk = good.filter(F.col("source_table").isin(*sorted(unknown_tables)))
-                dlq_parts.append(
-                    transforms.to_dlq_rows(
-                        unk,
-                        events.columns,
-                        F.lit("UNKNOWN_TABLE"),
-                        F.concat(
-                            F.lit("no registered schema for table "),
-                            F.col("source_table"),
-                        ),
-                    )
-                )
-                for r in stats:
-                    if r["_error_type"] is None and r["source_table"] in unknown_tables:
-                        METRICS.inc(
-                            "cdc_dlq_events_total",
-                            {"table": r["source_table"], "error_type": "UNKNOWN_TABLE"},
-                            by=r["n"],
-                        )
-
             for name, payload_schema in self.table_schemas.items():
                 if name in row_tables:
-                    subset = good.filter(
+                    ok = tagged.filter(
                         (F.col("source_table") == name)
                         & (F.col("operation_type") != "TRUNCATE")
+                        & F.col("_error_type").isNull()
                     )
-                    # FR-017: events written under a REJECTED schema
-                    # version go to the DLQ as SCHEMA_MISMATCH
-                    rejected = self.schema_registry.rejected_versions(name)
-                    if rejected:
-                        rej = subset.filter(F.col("schema_version").isin(*rejected))
-                        dlq_parts.append(
-                            transforms.to_dlq_rows(
-                                rej,
-                                events.columns,
-                                F.lit("SCHEMA_MISMATCH"),
-                                F.concat(
-                                    F.lit("rejected schema version "),
-                                    F.col("schema_version").cast("string"),
-                                ),
-                            )
-                        )
-                        subset = subset.filter(
-                            ~F.col("schema_version").isin(*rejected)
-                        )
-                    # T8 error contract: raw-non-null → typed-null rows
-                    # go to the DLQ as TYPE_CONVERSION_ERROR, never
-                    # merged as NULL columns (type_mapper.py:88-134).
-                    ok, conv_dlq = transforms.split_convertible(subset, payload_schema)
-                    dlq_parts.append(conv_dlq)
                     rows = transforms.unwrap(ok, payload_schema)
                     rows = transforms.add_cdc_metadata(rows)
                     target = self.table(name)
@@ -460,16 +410,13 @@ class CdcIngest:
                     for view in self._views.get(name, ()):
                         view.rebuild(batch_id=batch_id)
 
-            if dlq_parts:
+            if any_bad:
                 # DLQ merge (S5): deterministic dlq_id + LWW merge make
                 # replays idempotent — no duplicate PENDING rows, never
                 # a lost error (`errors.tolerance=all` semantics).
-                dlq = dlq_parts[0]
-                for p in dlq_parts[1:]:
-                    dlq = dlq.unionByName(p)
-                self.dlq_table().merge(dlq)
+                self.dlq_table().merge(transforms.to_dlq_rows(tagged, events.columns))
         finally:
-            events.unpersist()
+            tagged.unpersist()
             METRICS.observe(
                 "cdc_processing_latency_seconds",
                 _time.time() - _t0,

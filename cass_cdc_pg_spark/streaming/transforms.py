@@ -54,16 +54,15 @@ def add_event_id(events: DataFrame) -> DataFrame:
     )
 
 
-def validation_status(now_us: Column | None = None) -> Column:
+def validation_status(now_us: int) -> Column:
     """T7: classify an event row → NULL if valid, else the DLQ
     error_type (``src/models/dlq_record.py:10-17``).
 
     Rules (``src/utils/validators.py:44-83``): required fields, UUID
-    format, timestamp not in the future beyond 1-min skew, and the
-    op-specific before/after invariants
+    format, timestamp not in the future beyond 1-min skew of *now_us*,
+    and the op-specific before/after invariants
     (``src/models/change_event.py:93-117``).
     """
-    now_us = now_us if now_us is not None else F.unix_micros(F.current_timestamp())
     op = F.col("operation_type")
     return (
         F.when(F.col("event_id").isNull() | ~F.col("event_id").rlike(UUID_RE),
@@ -73,7 +72,7 @@ def validation_status(now_us: Column | None = None) -> Column:
         .when(~op.isin(*OPERATIONS), F.lit("SCHEMA_MISMATCH"))
         .when(F.col("timestamp_micros").isNull() | (F.col("timestamp_micros") <= 0),
               F.lit("SCHEMA_MISMATCH"))
-        .when(F.col("timestamp_micros") > now_us + F.lit(FUTURE_SKEW_US),
+        .when(F.col("timestamp_micros") > F.lit(now_us + FUTURE_SKEW_US),
               F.lit("CONSTRAINT_VIOLATION"))
         .when((op == "CREATE") & (F.col("after").isNull() | F.col("before").isNotNull()),
               F.lit("SCHEMA_MISMATCH"))
@@ -90,29 +89,82 @@ def validation_status(now_us: Column | None = None) -> Column:
     )
 
 
-def to_dlq_rows(
-    bad: DataFrame,
-    original_cols: list[str],
-    error_type: Column,
-    error_message: Column,
+def classify(
+    events: DataFrame,
+    schemas: dict[str, T.StructType],
+    rejected: dict[str, set[int]],
+    now_us: int,
 ) -> DataFrame:
-    """S5: project failed events into the DLQ record shape
-    (``src/models/dlq_record.py:10-64``), plus the keyed-table
-    metadata columns that make DLQ writes idempotent merges.
+    """T7+T8+S5 in one pass: *events* plus the ``_error_type`` and
+    ``_error_message`` of the DLQ route each event takes, both NULL for
+    an event that merges.  The first matching route wins:
+
+    1. T7 validation (:func:`validation_status` against *now_us*, one
+       literal per batch, so every job over the result agrees on it);
+    2. UNKNOWN_TABLE — ``source_table`` has no entry in *schemas*;
+    3. SCHEMA_MISMATCH — a version in ``rejected[source_table]`` (FR-017);
+    4. TYPE_CONVERSION_ERROR — a raw non-null payload value whose typed
+       extraction is NULL (T8, :func:`conversion_failures` of the
+       table's schema).
+
+    Routes 3 and 4 skip TRUNCATEs: they carry no row and always apply.
+    """
+    table, version = F.col("source_table"), F.col("schema_version")
+    is_row = F.col("operation_type") != "TRUNCATE"
+    rejected_version = F.lit(False)
+    for name, versions in rejected.items():
+        if versions:
+            rejected_version |= (table == name) & version.isin(*sorted(versions))
+    failures = F.array().cast("array<string>")
+    for name, schema in schemas.items():
+        failures = F.when(table == name, conversion_failures(schema)).otherwise(failures)
+
+    def route(error_type: Column, message: Column) -> Column:
+        return F.struct(error_type.alias("type"), message.alias("message"))
+
+    t7, conv = F.col("_t7"), F.col("_conv")
+    error = (
+        F.when(t7.isNotNull(), route(t7, F.concat(F.lit("validation failed: "), t7)))
+        .when(~table.isin(*schemas),
+              route(F.lit("UNKNOWN_TABLE"),
+                    F.concat(F.lit("no registered schema for table "), table)))
+        .when(is_row & rejected_version,
+              route(F.lit("SCHEMA_MISMATCH"),
+                    F.concat(F.lit("rejected schema version "), version.cast("string"))))
+        .when(is_row & (F.size(conv) > 0),
+              route(F.lit("TYPE_CONVERSION_ERROR"),
+                    F.concat(F.lit("type conversion failed for columns: "),
+                             F.concat_ws(",", conv))))
+    )
+    return (
+        events.withColumns({"_t7": validation_status(now_us), "_conv": failures})
+        .withColumn("_error", error)
+        .withColumns({"_error_type": F.col("_error.type"),
+                      "_error_message": F.col("_error.message")})
+        .drop("_t7", "_conv", "_error")
+    )
+
+
+def to_dlq_rows(tagged: DataFrame, original_cols: list[str]) -> DataFrame:
+    """S5: project the events :func:`classify` routed to the DLQ into
+    the DLQ record shape (``src/models/dlq_record.py:10-64``), plus the
+    keyed-table metadata columns that make DLQ writes idempotent merges.
 
     ``dlq_id`` is **deterministic** — md5 over (error_type, original
-    event JSON) — so replaying a microbatch merges the same DLQ key
-    instead of appending a duplicate PENDING row.  The LWW timestamp
-    is the event's own ``timestamp_micros`` (deterministic), so a
-    later *resolution* merge (stamped with wall time) always wins."""
+    event JSON of *original_cols*) — so replaying a microbatch merges
+    the same DLQ key instead of appending a duplicate PENDING row.  The
+    LWW timestamp is the event's own ``timestamp_micros``
+    (deterministic), so a later *resolution* merge (stamped with wall
+    time) always wins."""
+    error_type = F.col("_error_type")
     original = F.to_json(F.struct(*original_cols))
     ts = F.coalesce(F.col("timestamp_micros"), F.lit(0))
-    return bad.select(
+    return tagged.filter(error_type.isNotNull()).select(
         F.md5(F.concat(error_type, F.lit("|"), original)).alias("dlq_id"),
         F.col("source_table"),
         original.alias("original_event"),
         error_type.alias("error_type"),
-        error_message.alias("error_message"),
+        F.col("_error_message").alias("error_message"),
         F.lit(0).alias("retry_count"),
         ts.alias("first_failed_at_us"),
         F.lit(None).cast("long").alias("last_retry_at_us"),
@@ -124,18 +176,18 @@ def to_dlq_rows(
     )
 
 
-def split_valid(events: DataFrame, now_us: Column | None = None) -> tuple[DataFrame, DataFrame]:
-    """T7+S5: (valid events, DLQ rows with error metadata)."""
-    tagged = events.withColumn("_error_type", validation_status(now_us))
-    good = tagged.filter(F.col("_error_type").isNull()).drop("_error_type")
-    bad = tagged.filter(F.col("_error_type").isNotNull())
-    dlq = to_dlq_rows(
-        bad,
-        events.columns,
-        F.col("_error_type"),
-        F.concat(F.lit("validation failed: "), F.col("_error_type")),
-    )
-    return good, dlq
+def split_convertible(
+    events: DataFrame,
+    schemas: dict[str, T.StructType],
+    rejected: dict[str, set[int]],
+    now_us: int,
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`classify` as a split: (events that merge, their DLQ
+    rows).  Run before unwrap, so DLQ rows keep the full original
+    envelope."""
+    tagged = classify(events, schemas, rejected, now_us)
+    good = tagged.filter(F.col("_error_type").isNull())
+    return good.drop("_error_type", "_error_message"), to_dlq_rows(tagged, events.columns)
 
 
 #: Envelope fields carried through unwrap under reserved aliases so a
@@ -214,28 +266,6 @@ def conversion_failures(payload_type: T.StructType) -> Column:
     return F.array_compact(F.array(*probes))
 
 
-def split_convertible(
-    events: DataFrame, payload_type: T.StructType
-) -> tuple[DataFrame, DataFrame]:
-    """T8+S5: (cleanly-converting events, DLQ rows tagged
-    TYPE_CONVERSION_ERROR).  Run *after* validation, *before* unwrap,
-    so DLQ rows keep the full original envelope."""
-    probe_cols = list(events.columns)
-    tagged = events.withColumn("_conv_fail", conversion_failures(payload_type))
-    good = tagged.filter(F.size("_conv_fail") == 0).drop("_conv_fail")
-    bad = tagged.filter(F.size("_conv_fail") > 0)
-    dlq = to_dlq_rows(
-        bad,
-        probe_cols,
-        F.lit("TYPE_CONVERSION_ERROR"),
-        F.concat(
-            F.lit("type conversion failed for columns: "),
-            F.concat_ws(",", F.col("_conv_fail")),
-        ),
-    )
-    return good, dlq
-
-
 def unwrap(events: DataFrame, payload_type: T.StructType) -> DataFrame:
     """T1 ExtractNewRecordState: row = after (or before for DELETE),
     typed via the pinned per-table schema (T8), plus envelope fields
@@ -247,7 +277,7 @@ def unwrap(events: DataFrame, payload_type: T.StructType) -> DataFrame:
     ``type_mapper.py:88-134``) — ANSI-safe: a value that cannot
     convert becomes NULL instead of failing the batch.  Callers that
     honor the reference's error contract route conversion failures to
-    the DLQ first via :func:`split_convertible`.
+    the DLQ first via :func:`classify`.
 
     TRUNCATE events (no before/after) must be split out *before*
     unwrap — they are table-level operations, not rows

@@ -53,8 +53,9 @@ def _eid(n: int) -> str:
     return str(uuid.UUID(int=n))
 
 
-def _event(event_id, op, ts, after=None, before=None, table="users", ttl=None, tomb=False):
-    return (event_id, table, op, ts, before, after, 1, ttl, tomb)
+def _event(event_id, op, ts, after=None, before=None, table="users", ttl=None, tomb=False,
+           version=1):
+    return (event_id, table, op, ts, before, after, version, ttl, tomb)
 
 
 def _df(spark, events):
@@ -397,3 +398,107 @@ def test_unregistered_table_events_routed_to_dlq(spark, users_ingest):
     assert set(dlq) == {_eid(2), _eid(3)}
     assert all(r["error_type"] == "UNKNOWN_TABLE" for r in dlq.values())
     assert "ghosts" in dlq[_eid(2)]["error_message"]
+
+
+def test_routing_parity_mixed_batch(spark, users_ingest):
+    """One batch holding every DLQ route at once: each event gets
+    exactly one outcome, with the DLQ key, type and message it has
+    always had (so replays across upgrades still dedup), and the
+    TRUNCATE carrying a rejected schema version still applies."""
+    import json
+
+    U3 = "33333333-3333-3333-3333-333333333333"
+    U4 = "44444444-4444-4444-4444-444444444444"
+    users_ingest.process_batch(_df(spark, [
+        _event(_eid(1), "CREATE", 500, after={"id": U3, "username": "seed", "age": "5"}),
+    ]))
+    # MODIFY_COLUMN is rejected under BACKWARD: version 2 is REJECTED
+    ok, version, _ = users_ingest.evolve_table_schema("users", T.StructType([
+        T.StructField("id", T.StringType()),
+        T.StructField("username", T.StringType()),
+        T.StructField("age", T.StringType()),
+    ]))
+    assert (ok, version) == (False, 2)
+
+    far_future = 10**17
+    users_ingest.process_batch(_df(spark, [
+        _event("bad-uuid", "CREATE", 1000, after={"id": U4, "username": "b", "age": "1"}),
+        _event(_eid(11), "CREATE", far_future, after={"id": U4, "username": "f", "age": "1"}),
+        _event(_eid(12), "CREATE", 1000, table="ghosts", after={"id": U4}),
+        _event(_eid(13), "TRUNCATE", 1000, table="phantoms"),
+        _event(_eid(14), "CREATE", 1000, after={"id": U4, "username": "r", "age": "1"},
+               version=2),
+        _event(_eid(15), "CREATE", 1000, after={"id": U4, "username": "rp", "age": "x"},
+               version=2),
+        _event(_eid(16), "TRUNCATE", 1500, version=2),
+        _event(_eid(17), "CREATE", 1000, after={"id": U4, "username": "p", "age": "abc"}),
+        _event(_eid(18), "CREATE", 1200, after={"id": U1, "username": "old", "age": "2"}),
+        _event(_eid(19), "CREATE", 2000, after={"id": U2, "username": "new", "age": "3"}),
+    ]))
+
+    # dlq_id = md5(error_type | original event JSON) is pinned: replays
+    # across an upgrade must merge onto the same DLQ keys
+    dlq = users_ingest.dlq().collect()
+    by_event = {json.loads(r["original_event"])["event_id"]:
+                (r["error_type"], r["error_message"], r["dlq_id"]) for r in dlq}
+    assert len(dlq) == len(by_event) == 7
+    assert by_event == {
+        "bad-uuid": ("SCHEMA_MISMATCH", "validation failed: SCHEMA_MISMATCH",
+                     "af2e31f5395a734ccad81314c4de22cb"),
+        _eid(11): ("CONSTRAINT_VIOLATION", "validation failed: CONSTRAINT_VIOLATION",
+                   "3299ae5608c56a71e8d49d8504ff7b4b"),
+        _eid(12): ("UNKNOWN_TABLE", "no registered schema for table ghosts",
+                   "bc02ed8d3522901a68b2fc55e5b4c91e"),
+        _eid(13): ("UNKNOWN_TABLE", "no registered schema for table phantoms",
+                   "c49b3e4d883b2a70e0fc1c3c6f3e9aad"),
+        _eid(14): ("SCHEMA_MISMATCH", "rejected schema version 2",
+                   "2ef61ae41ec154ef612ddab76b294f26"),
+        _eid(15): ("SCHEMA_MISMATCH", "rejected schema version 2",
+                   "cd348e5cacb9c1162a584a3aab914b4b"),
+        _eid(17): ("TYPE_CONVERSION_ERROR", "type conversion failed for columns: age",
+                   "139f36b3e64e70677f85f01450442290"),
+    }
+
+    # the version-2 TRUNCATE at 1500 soft-deleted the seed row and the
+    # row at 1200; the row at 2000 survives
+    live = {r["id"]: (r["username"], r["age"], r["_last_event_id"])
+            for r in users_ingest.table("users").read_live().collect()}
+    assert live == {U2: ("new", 3, _eid(19))}
+    assert users_ingest.table("users").read().count() == 3
+
+
+def test_clock_edge_events_land_exactly_once(spark, users_ingest):
+    """Events stamped around the now+60 s future-skew limit: each one
+    either merges or lands in the DLQ as CONSTRAINT_VIOLATION, exactly
+    once — the limit is fixed once per batch, not re-read per job."""
+    import json
+    import time
+
+    now_us = int(time.time() * 1_000_000)
+    events = [
+        _event(_eid(1000 + i), "CREATE", now_us + 58_000_000 + i * 50_000,
+               after={"id": _eid(i), "username": str(i), "age": str(i)})
+        for i in range(200)
+    ]
+    users_ingest.process_batch(_df(spark, events))
+    live = [r["id"] for r in users_ingest.table("users").read_live().collect()]
+    dlq = users_ingest.dlq().collect() if users_ingest.dlq_table().exists() else []
+    dlq_ids = [json.loads(r["original_event"])["after"]["id"] for r in dlq]
+    assert {r["error_type"] for r in dlq} <= {"CONSTRAINT_VIOLATION"}
+    assert sorted(live + dlq_ids) == sorted(_eid(i) for i in range(200))
+
+
+def test_null_schema_version_merges_beside_a_rejected_version(spark, users_ingest):
+    """An event with no schema_version is not on a rejected version:
+    it merges, even after the table recorded a REJECTED version."""
+    ok, _, _ = users_ingest.evolve_table_schema("users", T.StructType([
+        T.StructField("id", T.StringType()),
+        T.StructField("username", T.StringType()),
+        T.StructField("age", T.StringType()),
+    ]))
+    assert not ok
+    users_ingest.process_batch(_df(spark, [
+        _event(_eid(1), "CREATE", 1000, after={"id": U1, "username": "a", "age": "1"},
+               version=None),
+    ]))
+    assert [r["id"] for r in users_ingest.table("users").read_live().collect()] == [U1]

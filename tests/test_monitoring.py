@@ -120,30 +120,48 @@ def test_scheduler_max_one_instance_per_table(spark, tmp_path):
 
 def test_ingest_feeds_red_metrics(spark, tmp_path):
     """process_batch feeds cdc_events_processed_total /
-    cdc_errors_total / cdc_dlq_events_total from its summary pass."""
+    cdc_errors_total / cdc_dlq_events_total from its summary pass: the
+    DLQ counters move by exactly the DLQ rows of each type, and only
+    the events that were not sent to the DLQ count as processed."""
     from cass_cdc_pg_spark.streaming.ingest import CdcIngest
 
-    schema = T.StructType([T.StructField("id", T.StringType())])
+    schema = T.StructType([T.StructField("id", T.StringType()),
+                           T.StructField("age", T.IntegerType())])
     ingest = CdcIngest(spark, str(tmp_path / "wh"), {"users": schema},
                        {"users": ["id"]}, num_buckets=2)
+    # retyping a column is rejected under BACKWARD: version 2 is REJECTED
+    ok, version, _ = ingest.evolve_table_schema(
+        "users", T.StructType([T.StructField("id", T.StringType()),
+                               T.StructField("age", T.StringType())]))
+    assert (ok, version) == (False, 2)
+    types = ("SCHEMA_MISMATCH", "TYPE_CONVERSION_ERROR")
     before_ok = METRICS.value("cdc_events_processed_total",
                               {"table": "users", "operation": "CREATE"})
-    before_err = METRICS.value("cdc_errors_total",
-                               {"error_type": "SCHEMA_MISMATCH"})
-    u1 = str(uuid.UUID(int=1))
+    before_err = {t: METRICS.value("cdc_errors_total", {"error_type": t}) for t in types}
+    before_dlq = {t: METRICS.value("cdc_dlq_events_total",
+                                   {"table": "users", "error_type": t}) for t in types}
+    u = [str(uuid.UUID(int=i)) for i in range(4)]
     ingest.process_batch(spark.createDataFrame(
         [
-            (u1, "users", "CREATE", 1000, None, {"id": "a"}, 1, None, False),
+            (u[1], "users", "CREATE", 1000, None, {"id": "a", "age": "1"}, 1, None, False),
             ("bad-uuid", "users", "CREATE", 1000, None, {"id": "b"}, 1, None, False),
+            (u[2], "users", "CREATE", 1000, None, {"id": "c", "age": "x"}, 1, None, False),
+            (u[3], "users", "CREATE", 1000, None, {"id": "d", "age": "4"}, 2, None, False),
         ],
         "event_id string, source_table string, operation_type string, "
         "timestamp_micros long, before map<string,string>, after map<string,string>, "
         "schema_version int, ttl_seconds int, is_tombstone boolean",
     ))
+    dlq_by_type = {t: ingest.dlq().filter(F.col("error_type") == t).count() for t in types}
+    assert dlq_by_type == {"SCHEMA_MISMATCH": 2, "TYPE_CONVERSION_ERROR": 1}
+    for t in types:
+        assert METRICS.value("cdc_errors_total", {"error_type": t}) \
+            == before_err[t] + dlq_by_type[t], t
+        assert METRICS.value("cdc_dlq_events_total",
+                             {"table": "users", "error_type": t}) \
+            == before_dlq[t] + dlq_by_type[t], t
     assert METRICS.value("cdc_events_processed_total",
                          {"table": "users", "operation": "CREATE"}) == before_ok + 1
-    assert METRICS.value("cdc_errors_total",
-                         {"error_type": "SCHEMA_MISMATCH"}) == before_err + 1
     assert METRICS.observations("cdc_processing_latency_seconds",
                                 {"stage": "process_batch"})
 

@@ -136,6 +136,50 @@ def test_keyed_table_merge_shuffles_once(spark, tmp_path):
     assert t.read().count() == 200
 
 
+def test_clean_ingest_batch_skips_the_dlq(spark, tmp_path):
+    """A microbatch with no bad event classifies once and never touches
+    the DLQ: at most 5 Spark jobs under its job group (the summary
+    pass plus the table merge), and no DLQ table on disk.  One bad
+    event then costs exactly one DLQ row."""
+    import os
+    import uuid
+
+    from pyspark.sql import types as T
+
+    from cass_cdc_pg_spark.streaming.ingest import CdcIngest
+
+    schema = T.StructType([T.StructField("id", T.StringType()),
+                           T.StructField("age", T.IntegerType())])
+    ingest = CdcIngest(spark, str(tmp_path / "wh"), {"users": schema},
+                       {"users": ["id"]}, num_buckets=4)
+    ddl = ("event_id string, source_table string, operation_type string, "
+           "timestamp_micros long, before map<string,string>, "
+           "after map<string,string>, schema_version int, ttl_seconds int, "
+           "is_tombstone boolean")
+    clean = spark.createDataFrame(
+        [(str(uuid.UUID(int=i + 1)), "users", "CREATE", 1000 + i, None,
+          {"id": str(i % 50), "age": str(i)}, 1, None, False) for i in range(200)],
+        ddl)
+    sc = spark.sparkContext
+    group = "ingest-clean-batch-shape"
+    sc.setJobGroup(group, "clean ingest batch")
+    try:
+        ingest.process_batch(clean)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 5, sorted(jobs)
+    assert not os.path.exists(f"{ingest.dlq_path}/_manifest.json")
+    assert ingest.table("users").read_live().count() == 50
+
+    ingest.process_batch(spark.createDataFrame(
+        [(str(uuid.UUID(int=999)), "users", "CREATE", 5000, None,
+          {"id": "x", "age": "not-a-number"}, 1, None, False)], ddl))
+    dlq = ingest.dlq().collect()
+    assert [r["error_type"] for r in dlq] == ["TYPE_CONVERSION_ERROR"]
+
+
 def test_crash_between_delta_write_and_manifest_is_invisible(spark, tmp_path):
     """LSM durability: a delta directory written without a manifest
     swap (crash window) is ignored by reads and GC'd by the next
