@@ -48,7 +48,6 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlsplit
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from cass_cdc_pg_spark import middleware
 
@@ -174,12 +173,9 @@ class CdcApiService:
         return self.warehouse
 
     def _dlq_table(self):
-        from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+        from cass_cdc_pg_spark.streaming.ingest import dlq_table
 
-        return KeyedTable(
-            self.spark, f"{self._require_warehouse()}/dlq_records", ["dlq_id"],
-            num_buckets=8,
-        )
+        return dlq_table(self.spark, self._require_warehouse())
 
     def _mismatch_table(self):
         from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
@@ -194,16 +190,10 @@ class CdcApiService:
     def _ingest(self):
         from cass_cdc_pg_spark.streaming.ingest import CdcIngest
 
-        tables = self.table_config["tables"]
-        if not tables:
+        if not self.table_config["tables"]:
             raise ApiError(503, "table config not provided")
-        return CdcIngest(
-            self.spark,
-            self._require_warehouse(),
-            table_schemas={
-                n: T.StructType.fromDDL(c["ddl"]) for n, c in tables.items()
-            },
-            key_cols={n: c["keys"] for n, c in tables.items()},
+        return CdcIngest.from_config(
+            self.spark, self._require_warehouse(), self.table_config
         )
 
     # -- health / metrics ---------------------------------------------------
@@ -525,18 +515,16 @@ class CdcApiService:
         return [r.asDict(recursive=True) for r in df.limit(limit).collect()]
 
     def _keyed_table_or_404(self, table: str):
-        import os
-
         from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
 
         cfg = self.table_config["tables"].get(table)
         if cfg is None:
             raise ApiError(404, f"unknown table: {table}")
         wh = self._require_warehouse()
-        path = f"{wh}/cdc_{table}"
-        if not os.path.exists(f"{path}/_manifest.json"):
+        t = KeyedTable(self.spark, f"{wh}/cdc_{table}", cfg["keys"])
+        if not t.exists():
             raise ApiError(404, f"table {table} has no data yet")
-        return KeyedTable(self.spark, path, cfg["keys"])
+        return t
 
 
 # ---------------------------------------------------------------------------

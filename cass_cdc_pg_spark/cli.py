@@ -33,13 +33,11 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 import uuid
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _load_config(path: str) -> dict:
@@ -47,25 +45,11 @@ def _load_config(path: str) -> dict:
         return json.load(fh)
 
 
-def _ingest(spark, warehouse: str, config: dict):
-    from cass_cdc_pg_spark.streaming.ingest import CdcIngest
-
-    tables = config["tables"]
-    return CdcIngest(
-        spark,
-        warehouse,
-        table_schemas={
-            n: T.StructType.fromDDL(c["ddl"]) for n, c in tables.items()
-        },
-        key_cols={n: c["keys"] for n, c in tables.items()},
-    )
-
-
 def _dlq_df(spark, warehouse: str):
-    from cass_cdc_pg_spark.plans.keyed_table import META_COLS, KeyedTable
+    from cass_cdc_pg_spark.plans.keyed_table import META_COLS
+    from cass_cdc_pg_spark.streaming.ingest import dlq_table
 
-    t = KeyedTable(spark, f"{warehouse.rstrip('/')}/dlq_records", ["dlq_id"],
-                   num_buckets=8)
+    t = dlq_table(spark, warehouse)
     return t, t.read_live().drop(*META_COLS)
 
 
@@ -121,7 +105,9 @@ def cmd_dlq_stats(args, spark) -> int:
 
 
 def cmd_dlq_replay(args, spark) -> int:
-    ingest = _ingest(spark, args.warehouse, _load_config(args.config))
+    from cass_cdc_pg_spark.streaming.ingest import CdcIngest
+
+    ingest = CdcIngest.from_config(spark, args.warehouse, _load_config(args.config))
     n = ingest.replay_dlq(args.ids)
     print(json.dumps({"replayed": n, "resolution_status": "MANUAL_RESOLVED"}))
     return 0
@@ -201,32 +187,31 @@ def cmd_metrics_dump(args, spark) -> int:
     return 0
 
 
-def _require_table(warehouse: str, table: str) -> str | None:
-    """Existence gate BEFORE KeyedTable is constructed: the ctor
-    os.makedirs its path, so probing a misspelled --table would
-    silently create an empty warehouse directory and then surface as
-    a confusing empty-table/version error (or exit 0 with no output
-    for history).  A table exists iff its _manifest.json does."""
-    path = f"{warehouse.rstrip('/')}/{table}"
-    if not os.path.exists(os.path.join(path, "_manifest.json")):
+def _require_table(spark, warehouse: str, table: str):
+    """The keyed table *table* of *warehouse* (keys and bucket count as
+    committed), or None after a ``table_not_found`` error when nothing
+    is committed there — so a misspelled --table fails loudly instead
+    of surfacing as a confusing empty-table/version error (or exit 0
+    with no output for history).  The probe creates nothing."""
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+
+    t = KeyedTable(spark, f"{warehouse.rstrip('/')}/{table}", [])
+    if not t.exists():
         print(
             json.dumps({"error": "table_not_found", "table": table}),
             file=sys.stderr,
         )
         return None
-    return path
+    return t
 
 
 def cmd_table_history(args, spark) -> int:
     """Retained snapshot versions of a keyed table (the DESCRIBE
     HISTORY analog; versions come from the manifest log, see
     ``plans/keyed_table.py``)."""
-    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
-
-    path = _require_table(args.warehouse, args.table)
-    if path is None:
+    t = _require_table(spark, args.warehouse, args.table)
+    if t is None:
         return 1
-    t = KeyedTable(spark, path, [])
     for h in t.history():
         print(json.dumps(h, sort_keys=True))
     return 0
@@ -235,12 +220,11 @@ def cmd_table_history(args, spark) -> int:
 def cmd_table_read(args, spark) -> int:
     """Read a keyed table's current — or, with ``--version``, a
     retained historical — snapshot (time travel)."""
-    from cass_cdc_pg_spark.plans.keyed_table import META_COLS, KeyedTable
+    from cass_cdc_pg_spark.plans.keyed_table import META_COLS
 
-    path = _require_table(args.warehouse, args.table)
-    if path is None:
+    t = _require_table(spark, args.warehouse, args.table)
+    if t is None:
         return 1
-    t = KeyedTable(spark, path, [])
     try:
         df = t.read(version=args.version)
     except FileNotFoundError as e:
@@ -258,12 +242,9 @@ def cmd_table_changes(args, spark) -> int:
     analog — see ``KeyedTable.read_changes``): merge-commit rows with
     ``_change_version``; errors distinctly when the range crosses a
     rewrite (resync required) or falls outside retention."""
-    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
-
-    path = _require_table(args.warehouse, args.table)
-    if path is None:
+    t = _require_table(spark, args.warehouse, args.table)
+    if t is None:
         return 1
-    t = KeyedTable(spark, path, [])
     try:
         df = t.read_changes(args.since, args.to)
     except FileNotFoundError as e:
@@ -281,12 +262,9 @@ def cmd_table_changes(args, spark) -> int:
 def cmd_table_compact(args, spark) -> int:
     """Fold LSM deltas into fresh bases (the OPTIMIZE verb); prints
     the number of buckets compacted."""
-    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
-
-    path = _require_table(args.warehouse, args.table)
-    if path is None:
+    t = _require_table(spark, args.warehouse, args.table)
+    if t is None:
         return 1
-    t = KeyedTable(spark, path, [])
     if not t.key_cols:
         # legacy manifest without persisted key_cols: compacting would
         # LWW-reduce with zero group keys — one row per bucket, durable
@@ -314,10 +292,9 @@ def cmd_table_sync(args, spark) -> int:
     from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
     from cass_cdc_pg_spark.streaming.follower import ChangeFeedFollower
 
-    src_path = _require_table(args.warehouse, args.table)
-    if src_path is None:
+    source = _require_table(spark, args.warehouse, args.table)
+    if source is None:
         return 1
-    source = KeyedTable(spark, src_path, [])
     if not source.key_cols:
         print(json.dumps({"error": "no_key_cols",
                           "detail": "source manifest has no key_cols"}),

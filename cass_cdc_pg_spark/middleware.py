@@ -28,11 +28,12 @@ semantics, no web framework:
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 from contextlib import contextmanager
 from typing import Callable
+
+from cass_cdc_pg_spark.durable import write_json
 
 
 def request_id(provided: str | None = None) -> str:
@@ -54,9 +55,10 @@ class RateLimiter:
     """Fixed-window rate limiter with file-backed windows.
 
     ``limits`` is a list of (max_calls, window_seconds); a call must
-    fit EVERY window.  Window state is one tiny JSON dict; read-modify-
-    write through ``os.replace`` so a crash never corrupts it.  This is
-    driver-side control-plane plumbing — never on a data path.
+    fit EVERY window.  Window state is one tiny JSON dict, read-modify-
+    written through ``durable.write_json`` so a crash never corrupts
+    it.  This is driver-side control-plane plumbing — never on a data
+    path.
     """
 
     DEFAULT_LIMITS = ((100, 60), (1000, 3600))  # 100/minute, 1000/hour
@@ -85,10 +87,7 @@ class RateLimiter:
         if self.state_path is None:
             self._mem = state
             return
-        tmp = f"{self.state_path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.replace(tmp, self.state_path)
+        write_json(self.state_path, state)
 
     def check(self, key: str) -> None:
         """Record one call for *key*; raise ``RateLimitExceeded`` if any

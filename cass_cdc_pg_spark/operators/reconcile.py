@@ -205,31 +205,15 @@ def incremental_checksum_diff(
     if changes is None:
         return None
     keys = changes.select(*pk).distinct()
-    # xxhash64 is argument-ORDER-sensitive: each side's buckets must be
-    # hashed with that side's own persisted key order, or live target
-    # rows land in unpruned buckets and are falsely MISSING_IN_TARGET.
-    bucket_of = lambda t: F.pmod(  # noqa: E731
-        F.xxhash64(*t.key_cols), F.lit(t.num_buckets)
-    )
-    src_buckets = [
-        r[0]
-        for r in keys.select(bucket_of(src_table).alias("_b"))
-        .distinct()
-        .collect()
-    ]
-    if (
+    # each side prunes with its own bucket ids (its own persisted key
+    # order and bucket count); one discovery job covers both sides in
+    # the common same-layout case
+    src_buckets = src_table.bucket_ids(keys)
+    same_layout = (
         src_table.num_buckets == tgt_table.num_buckets
         and list(tgt_table.key_cols) == pk
-    ):
-        # one discovery job covers both sides (the common same-layout case)
-        tgt_buckets = src_buckets
-    else:
-        tgt_buckets = [
-            r[0]
-            for r in keys.select(bucket_of(tgt_table).alias("_b"))
-            .distinct()
-            .collect()
-        ]
+    )
+    tgt_buckets = src_buckets if same_layout else tgt_table.bucket_ids(keys)
     src = src_table.read(buckets=src_buckets)
     tgt = tgt_table.read(buckets=tgt_buckets) if tgt_table.exists() else None
     src = src.filter(~F.col("_cdc_deleted")).join(keys, pk, "left_semi")

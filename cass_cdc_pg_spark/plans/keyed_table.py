@@ -36,12 +36,21 @@ touched bucket per commit, written straight into a fresh uuid dir
 (``_write`` is the one writer; nothing is ever overwritten in place).
 Snappy files from older commits read and compact alongside them.
 
-Writes are atomic-by-manifest: delta/base dirs are written first, then
-the fsync'd manifest swaps in one ``os.replace`` — a crash mid-merge
-leaves the previous manifest (and thus the previous snapshot) intact,
-which is what makes ``foreachBatch`` replays idempotent (C5 / crash
-tests ``test_crash_recovery.py:41-343``).  Orphaned dirs from crashed
-writes are garbage-collected on the next successful commit.
+One commit path: every commit doc (the ``_manifest.json`` pointer and
+its ``_log/manifest.v{N}.json`` copy) is read through ``_doc`` and
+written through ``_commit``; no other module opens these files.  A
+writer reads the current doc once, writes its data dirs, then hands
+the modified doc to ``_commit``, which numbers the new version from
+that same doc, swaps ``_manifest.json`` with one fsync'd
+``os.replace`` (``durable.write_json``), writes the log copy and runs
+one GC pass.  A crash before the swap leaves the previous snapshot
+intact, which is what makes ``foreachBatch`` replays idempotent (C5;
+``tests/test_plan_shapes.py`` crashes between the data write and the
+commit); a crash after it can lose only the log copy, and ``_doc``
+lets the current doc answer for its own version.  Orphaned dirs from
+crashed writes are garbage-collected on the next commit.  Concurrent
+writers are not supported: the version check a second writer would
+need is not made.
 
 Filesystem note: commit atomicity relies on POSIX ``os.replace`` of
 the single manifest file (data dirs are immutable once written, so
@@ -64,6 +73,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cass_cdc_pg_spark.durable import write_json
 from cass_cdc_pg_spark.operators.lww import lww_latest
 
 #: Codec of every parquet file the table writes (see ``KeyedTable._write``).
@@ -75,6 +85,15 @@ META_COLS = (
     "_last_event_id",
     "_ttl_expiry_timestamp_us",
 )
+
+
+def committed_layout(path: str) -> tuple[list[str], int] | None:
+    """``(key_cols, num_buckets)`` of the keyed table committed at
+    *path*, or None when nothing is committed there — the catalog probe
+    (``streaming.ingest.discover_cdc_tables``).  It opens the table's
+    commit doc only, so it needs no Spark session and creates nothing."""
+    t = KeyedTable(None, path, [])
+    return (t.key_cols, t.num_buckets) if t.exists() else None
 
 
 class KeyedTable:
@@ -95,100 +114,96 @@ class KeyedTable:
         self.num_buckets = num_buckets
         self.compact_threshold = compact_threshold
         self.keep_versions = keep_versions
-        os.makedirs(self.path, exist_ok=True)
-        # bucket count is a property of the TABLE, fixed at creation
-        # (like any hash-bucketing scheme) — an existing manifest
-        # overrides the constructor arg, so opening a table with the
-        # wrong count can't mis-prune reads or mis-route merges
-        try:
-            with open(self._manifest_path) as f:
-                m = json.load(f)
-            if m.get("num_buckets"):
-                self.num_buckets = m["num_buckets"]
-            # key columns are likewise a fixed property of the table;
-            # the persisted value is what discovery reports and what
-            # reopening with a mismatched ctor arg must not corrupt
-            if m.get("key_cols"):
-                self.key_cols = list(m["key_cols"])
-        except FileNotFoundError:
-            pass
+        # bucket count and key columns are properties of the TABLE,
+        # fixed at creation (like any hash-bucketing scheme) — the
+        # committed values override the constructor args, so opening a
+        # table with the wrong ones can't mis-prune reads or mis-route
+        # merges.  Opening creates nothing: the first commit makes the
+        # directory, so ``KeyedTable(...).exists()`` is a safe probe.
+        doc = self._doc()
+        self.num_buckets = doc.get("num_buckets") or self.num_buckets
+        self.key_cols = list(doc.get("key_cols") or self.key_cols)
 
-    # -- manifest -----------------------------------------------------------
+    # -- the commit protocol -------------------------------------------------
 
     @property
     def _manifest_path(self) -> str:
         return f"{self.path}/_manifest.json"
 
-    def _read_manifest(self) -> dict[str, dict]:
-        """bucket-id (str) → {"base": dir|None, "deltas": [dir, ...]}."""
+    @property
+    def _log_dir(self) -> str:
+        return f"{self.path}/_log"
+
+    def _log_path(self, version: int) -> str:
+        return f"{self._log_dir}/manifest.v{version:012d}.json"
+
+    def _doc(self, version: int | None = None) -> dict:
+        """The commit doc of *version* (default: the current one) — the
+        one reader of the table's commit files.  ``buckets`` maps
+        bucket-id (str) → {"base": dir|None, "deltas": [dir, ...]}.
+
+        A retained version comes from ``_log/``; the current doc also
+        answers for its own version when the crash window after the
+        pointer swap ate its log copy; anything else raises
+        FileNotFoundError.  A path with no commit reads as version 0
+        with no buckets."""
+        if version is not None:
+            try:
+                with open(self._log_path(version)) as f:
+                    return json.load(f)
+            except FileNotFoundError:
+                pass
         try:
             with open(self._manifest_path) as f:
-                buckets = json.load(f)["buckets"]
+                doc = json.load(f)
         except FileNotFoundError:
-            return {}
-        # migrate the pre-LSM format (bucket → snapshot dir string)
-        return {
-            b: (e if isinstance(e, dict) else {"base": e, "deltas": []})
-            for b, e in buckets.items()
-        }
+            doc = {"buckets": {}, "version": 0}
+        if version is None or version == doc["version"]:
+            return doc
+        raise FileNotFoundError(
+            f"version {version} not retained at {self.path} "
+            f"(keep_versions={self.keep_versions}, current={doc['version']})"
+        )
 
-    def _write_manifest(
-        self,
-        buckets: dict[str, dict],
-        op: str = "unknown",
-        added: list[str] | None = None,
+    def _commit(
+        self, base_doc: dict, buckets: dict[str, dict], op: str, added: list[str]
     ) -> None:
-        version = self._current_version() + 1
+        """Commit *buckets* as the version after *base_doc* — the doc
+        the caller read and modified, so the version number needs no
+        second read.  The ``_manifest.json`` swap is the commit point;
+        the log copy follows it (a crash in between costs only that
+        copy, see ``_doc``), then one GC pass.  ``op`` and ``added``
+        are the change-feed provenance: what kind of commit this was
+        and which data dirs it ADDED (see ``read_changes``)."""
         doc = {
             "buckets": buckets,
             "num_buckets": self.num_buckets,
             "key_cols": self.key_cols,
             "updated_at": time.time(),
-            "version": version,
-            # change-feed provenance: what kind of commit this was and
-            # which data dirs it ADDED (see read_changes)
+            "version": base_doc["version"] + 1,
             "op": op,
-            "added": list(added or ()),
+            "added": added,
         }
-        tmp = f"{self._manifest_path}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path)
-        # version log AFTER the pointer swap: the swap is the commit;
-        # a crash here costs only this version's history entry (reads
-        # of the CURRENT version never consult the log), never
-        # correctness of the committed snapshot
         os.makedirs(self._log_dir, exist_ok=True)
-        log_tmp = f"{self._log_dir}/.tmp.{uuid.uuid4().hex}"
-        with open(log_tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(log_tmp, f"{self._log_dir}/manifest.v{version:012d}.json")
+        write_json(self._manifest_path, doc)
+        write_json(self._log_path(doc["version"]), doc)
+        self._gc(doc)
 
     # -- versioned history / time travel ------------------------------------
 
-    @property
-    def _log_dir(self) -> str:
-        return f"{self.path}/_log"
-
     def _current_version(self) -> int:
-        try:
-            with open(self._manifest_path) as f:
-                return int(json.load(f).get("version", 0))
-        except FileNotFoundError:
-            return 0
+        return self._doc()["version"]
 
-    def _log_versions(self) -> dict[int, str]:
+    def _log_versions(self) -> list[int]:
         try:
             names = os.listdir(self._log_dir)
         except FileNotFoundError:
-            return {}
-        out = {}
-        for n in names:
-            if n.startswith("manifest.v") and n.endswith(".json"):
-                out[int(n[len("manifest.v"):-len(".json")])] = f"{self._log_dir}/{n}"
-        return out
+            return []
+        return sorted(
+            int(n[len("manifest.v"):-len(".json")])
+            for n in names
+            if n.startswith("manifest.v") and n.endswith(".json")
+        )
 
     def history(self) -> list[dict]:
         """Retained versions, ascending: version, updated_at,
@@ -198,53 +213,19 @@ class KeyedTable:
         (``src/services/audit_service.py``) — same operational need,
         storage-level here so reads can actually bind to a version."""
         out = []
-        for v, p in sorted(self._log_versions().items()):
+        for v in self._log_versions():
             try:
-                with open(p) as f:
-                    doc = json.load(f)
+                doc = self._doc(v)
             except (FileNotFoundError, json.JSONDecodeError):
                 continue
             out.append(
                 {
                     "version": v,
                     "updated_at": doc.get("updated_at"),
-                    "n_buckets": len(doc.get("buckets", {})),
+                    "n_buckets": len(doc["buckets"]),
                 }
             )
         return out
-
-    def _manifest_at(self, version: int) -> dict[str, dict]:
-        cur = self._current_version()
-        if version == cur:
-            return self._read_manifest()
-        path = self._log_versions().get(version)
-        if path is None:
-            raise FileNotFoundError(
-                f"version {version} not retained at {self.path} "
-                f"(keep_versions={self.keep_versions}, current={cur})"
-            )
-        with open(path) as f:
-            buckets = json.load(f)["buckets"]
-        return {
-            b: (e if isinstance(e, dict) else {"base": e, "deltas": []})
-            for b, e in buckets.items()
-        }
-
-    def _version_doc(self, version: int) -> dict:
-        path = self._log_versions().get(version)
-        if path is not None:
-            with open(path) as f:
-                return json.load(f)
-        if version == self._current_version():
-            # the pointer swap committed but the crash window ate the
-            # log copy — the manifest itself carries the same doc
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        raise FileNotFoundError(
-            f"version {version} not retained at {self.path} "
-            f"(keep_versions={self.keep_versions}, "
-            f"current={self._current_version()})"
-        )
 
     def read_changes(
         self, since_version: int, to_version: int | None = None
@@ -276,7 +257,7 @@ class KeyedTable:
         )
         dirs: list[tuple[str, int]] = []
         for v in range(since_version + 1, to_version + 1):
-            doc = self._version_doc(v)
+            doc = self._doc(v)
             op = doc.get("op", "unknown")
             if op == "compact":
                 continue
@@ -327,7 +308,13 @@ class KeyedTable:
         return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.num_buckets))
 
     def exists(self) -> bool:
-        return bool(self._read_manifest())
+        return bool(self._doc()["buckets"])
+
+    def bucket_ids(self, df: DataFrame) -> list[int]:
+        """Distinct bucket ids of the keys in *df* (one Spark job) — the
+        bucket hash stays private to this table; callers prune their
+        ``read(buckets=...)`` with the ids it returns."""
+        return [r[0] for r in df.select(self._bucket_col()).distinct().collect()]
 
     def _bucket_dirs(self, b: str, entry: dict) -> list[str]:
         dirs = []
@@ -357,11 +344,7 @@ class KeyedTable:
 
         Merge-on-read: buckets carrying deltas are LWW-reduced; a
         fully-compacted table is a plain parquet scan."""
-        manifest = (
-            self._read_manifest()
-            if version is None
-            else self._manifest_at(version)
-        )
+        manifest = self._doc(version)["buckets"]
         if not manifest:
             raise FileNotFoundError(f"empty keyed table at {self.path}")
         wanted = (
@@ -420,13 +403,12 @@ class KeyedTable:
         if not touched:
             shutil.rmtree(f"{self.path}/{delta}", ignore_errors=True)
             return
-        manifest = self._read_manifest()
+        doc = self._doc()
+        manifest = doc["buckets"]
         for b in touched:
-            entry = manifest.setdefault(b, {"base": None, "deltas": []})
-            entry["deltas"].append(delta)
-        self._write_manifest(manifest, op="merge", added=[delta])
+            manifest.setdefault(b, {"base": None, "deltas": []})["deltas"].append(delta)
+        self._commit(doc, manifest, "merge", [delta])
         self._compact_if_needed(manifest)
-        self._gc(self._read_manifest())
 
     def upsert(self, rows: DataFrame, now_us: int | None = None) -> None:
         """Q14 unconditional upsert (``postgresql_repository.py:179-247``,
@@ -477,7 +459,7 @@ class KeyedTable:
     def compact(self, buckets: list[int] | None = None) -> int:
         """Fold deltas into a new base for *buckets* (default: every
         bucket carrying deltas).  Returns number of buckets compacted."""
-        manifest = self._read_manifest()
+        manifest = self._doc()["buckets"]
         targets = [
             b
             for b, e in manifest.items()
@@ -498,8 +480,8 @@ class KeyedTable:
         self, df_with_bucket: DataFrame, buckets: list, op: str = "rewrite"
     ) -> None:
         """Write *df_with_bucket* as the new **base** of *buckets*
-        (deltas cleared) and swap the manifest atomically.  A bucket
-        that ends up empty gets an empty-schema marker dir."""
+        (deltas cleared) and commit it.  A bucket that ends up empty
+        gets an empty-schema marker dir."""
         snap_name = f"snap-{uuid.uuid4().hex[:12]}"
         snap = f"{self.path}/{snap_name}"
         written = set(
@@ -507,13 +489,13 @@ class KeyedTable:
                 df_with_bucket.repartition(max(len(buckets), 1), "_bucket"), snap
             )
         )
-        manifest = self._read_manifest()
+        doc = self._doc()
+        manifest = doc["buckets"]
         for b in map(str, buckets):
             if b not in written:
                 self._write(df_with_bucket.drop("_bucket").limit(0), f"{snap}/bucket={b}")
             manifest[b] = {"base": snap_name, "deltas": []}
-        self._write_manifest(manifest, op=op, added=[snap_name])
-        self._gc(manifest)
+        self._commit(doc, manifest, op, [snap_name])
 
     def _write(self, df: DataFrame, dest: str) -> list[str]:
         """Write *df* into the fresh directory *dest* — every data file
@@ -541,38 +523,33 @@ class KeyedTable:
                 touched.append(b)
         return touched
 
-    def _gc(self, manifest: dict[str, dict]) -> None:
+    def _gc(self, doc: dict) -> None:
         """Drop snapshot/delta dirs nothing points at anymore — where
-        "anything" includes the retained version log: a dir referenced
-        only by a historical version stays until that version ages
-        past *keep_versions* (so time travel keeps working), exactly
-        the retention/VACUUM contract of manifest-pointer formats.
-        Log files older than the retention window are pruned first,
-        which is what releases their dirs."""
-        cur = self._current_version()
-        for v, p in self._log_versions().items():
+        "anything" is the just-committed *doc* plus the retained
+        version log: a dir referenced only by a historical version
+        stays until that version ages past *keep_versions* (so time
+        travel keeps working), exactly the retention/VACUUM contract of
+        manifest-pointer formats.  Log files older than the retention
+        window are pruned, which is what releases their dirs."""
+        cur = doc["version"]
+        docs = [doc]
+        for v in self._log_versions():
             if v <= cur - self.keep_versions:
                 try:
-                    os.remove(p)
+                    os.remove(self._log_path(v))
                 except OSError:
                     pass
+            elif v != cur:
+                try:
+                    docs.append(self._doc(v))
+                except (OSError, ValueError):
+                    continue
         live = set()
-        for e in manifest.values():
-            if e.get("base"):
-                live.add(e["base"])
-            live.update(e.get("deltas", ()))
-        for v, p in self._log_versions().items():
-            try:
-                with open(p) as f:
-                    for e in json.load(f)["buckets"].values():
-                        if isinstance(e, dict):
-                            if e.get("base"):
-                                live.add(e["base"])
-                            live.update(e.get("deltas", ()))
-                        else:
-                            live.add(e)
-            except (OSError, json.JSONDecodeError, KeyError):
-                continue
+        for d in docs:
+            for e in d["buckets"].values():
+                if e["base"]:
+                    live.add(e["base"])
+                live.update(e["deltas"])
         for d in os.listdir(self.path):
             if (d.startswith("snap-") or d.startswith("delta-")) and d not in live:
                 shutil.rmtree(f"{self.path}/{d}", ignore_errors=True)
@@ -589,9 +566,8 @@ class KeyedTable:
 
         Returns number of rows removed."""
         hit = F.coalesce(predicate, F.lit(False))
-        df = self.read().withColumn("_bucket", self._bucket_col())
-        hits = df.filter(hit)
-        touched = [r[0] for r in hits.select("_bucket").distinct().collect()]
+        hits = self.read().filter(hit)
+        touched = self.bucket_ids(hits)
         if not touched:
             return 0
         n = hits.count()
@@ -639,7 +615,7 @@ class KeyedTable:
             )
             .drop("_trunc_win")
         )
-        self._publish(updated, list(self._read_manifest()))
+        self._publish(updated, list(self._doc()["buckets"]))
         return n
 
     def expire_ttl(self, now_us: int | None = None) -> int:

@@ -41,6 +41,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from cass_cdc_pg_spark.durable import write_json
 from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
 
 
@@ -61,7 +62,7 @@ class ChangeFeedFollower:
         os.makedirs(target.path, exist_ok=True)
         self.cursor_path = cursor_path or f"{target.path}/_follower_cursor.json"
 
-    # -- cursor (atomic, same replace discipline as the manifests) ----------
+    # -- cursor (replaced whole through durable.write_json) ----------------
 
     def _cursor(self) -> int | None:
         """Stored version, or ``None`` when the cursor belongs to a
@@ -81,10 +82,7 @@ class ChangeFeedFollower:
         return int(state["version"])
 
     def _write_cursor(self, version: int) -> None:
-        tmp = f"{self.cursor_path}.tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version, "source": self.source.path}, f)
-        os.replace(tmp, self.cursor_path)
+        write_json(self.cursor_path, {"version": version, "source": self.source.path})
 
     # -- the one verb -------------------------------------------------------
 

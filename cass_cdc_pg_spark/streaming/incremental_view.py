@@ -53,6 +53,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cass_cdc_pg_spark.durable import write_json
 from cass_cdc_pg_spark.operators.lww import lww_latest
 from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
 
@@ -94,10 +95,7 @@ class IncrementalAggView:
             return {"base": None, "deltas": []}
 
     def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self._manifest_path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._manifest_path)
+        write_json(self._manifest_path, m)
 
     # -- delta computation --------------------------------------------------
 
@@ -155,14 +153,7 @@ class IncrementalAggView:
             tiebreak_col="_last_event_id",
         )
         keys = reduced.select(*self.table.key_cols)
-        buckets = [
-            r[0]
-            for r in reduced.select(
-                self.table._bucket_col().alias("_b")
-            )
-            .distinct()
-            .collect()
-        ]
+        buckets = self.table.bucket_ids(reduced)
         old = (
             self.table.read(buckets=buckets)
             if self.table.exists()

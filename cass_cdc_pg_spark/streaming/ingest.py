@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cass_cdc_pg_spark.monitoring import METRICS
-from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+from cass_cdc_pg_spark.plans.keyed_table import META_COLS, KeyedTable, committed_layout
 from cass_cdc_pg_spark.schema import CHANGE_EVENT_SCHEMA
 from cass_cdc_pg_spark.streaming import transforms
 from cass_cdc_pg_spark.streaming.reliability import CircuitBreaker, retry_with_backoff
@@ -90,13 +90,12 @@ def discover_cdc_tables(warehouse: str) -> dict[str, dict]:
     introspect key columns + bucket count from the table manifest and
     payload columns from the schema registry.
 
-    Driver-side metadata reads only (two small JSON files per table);
-    returns ``name → {key_cols, num_buckets, columns}`` where
-    ``columns`` is the registered payload schema as ``col → ddl-type``
-    (empty if the table was never registered).
+    Driver-side metadata reads only (the table's commit doc through
+    ``committed_layout`` and the schema registry); returns
+    ``name → {key_cols, num_buckets, columns}`` where ``columns`` is the
+    registered payload schema as ``col → ddl-type`` (empty if the table
+    was never registered).
     """
-    import json as _json
-
     from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
 
     warehouse = warehouse.rstrip("/")
@@ -109,30 +108,43 @@ def discover_cdc_tables(warehouse: str) -> dict[str, dict]:
     for d in entries:
         if not d.startswith("cdc_"):
             continue
-        manifest = f"{warehouse}/{d}/_manifest.json"
         try:
-            with open(manifest) as fh:
-                m = _json.load(fh)
-        except (FileNotFoundError, ValueError):
-            continue  # dir exists but no manifest -> not cdc-live
+            layout = committed_layout(f"{warehouse}/{d}")
+        except ValueError:  # unreadable commit doc
+            continue
+        if layout is None:
+            continue  # dir exists but nothing committed -> not cdc-live
         name = d[len("cdc_"):]
         try:
             columns = registry.current_columns(name)
         except KeyError:
             columns = {}
         out[name] = {
-            "key_cols": list(m.get("key_cols") or []),
-            "num_buckets": m.get("num_buckets"),
+            "key_cols": layout[0],
+            "num_buckets": layout[1],
             "columns": columns,
         }
     return out
+
+
+def dlq_table(spark: SparkSession, warehouse: str) -> KeyedTable:
+    """The DLQ as a keyed table (S5/S12 storage) — its one definition,
+    shared by the ingest, the API and the CLI.  Status changes are
+    atomic LWW merges, never full-file rewrites — a crash mid-replay
+    can only lose the *pending* status flip, never DLQ records (the
+    never-lose-errors guarantee)."""
+    return KeyedTable(
+        spark, f"{warehouse.rstrip('/')}/dlq_records", ["dlq_id"], num_buckets=8
+    )
 
 
 class CdcIngest:
     """Assembles and runs the ingest pipeline for a set of tables.
 
     ``table_schemas``: per-table pinned payload StructType (schema
-    registry stand-in, §1.2).
+    registry stand-in, §1.2).  Schemas register under BACKWARD
+    compatibility, and unseen payload keys are auto-evolved in as
+    nullable string columns (``postgres-sink.json:13-14``).
     """
 
     def __init__(
@@ -142,8 +154,6 @@ class CdcIngest:
         table_schemas: dict[str, T.StructType],
         key_cols: dict[str, list[str]],
         num_buckets: int = 32,
-        auto_evolve: bool = True,
-        compatibility: str = "BACKWARD",
     ) -> None:
         from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
 
@@ -152,12 +162,11 @@ class CdcIngest:
         self.table_schemas = dict(table_schemas)
         self.key_cols = key_cols
         self.num_buckets = num_buckets
-        self.auto_evolve = auto_evolve
         self.breaker = CircuitBreaker()
         os.makedirs(self.warehouse, exist_ok=True)
         self.schema_registry = SchemaRegistry(f"{self.warehouse}/_schema_meta")
         for name, schema in self.table_schemas.items():
-            self.schema_registry.register(name, schema, compatibility)
+            self.schema_registry.register(name, schema)
         self._views: dict[str, list] = {}
 
     # -- incremental materialized views -------------------------------------
@@ -249,20 +258,29 @@ class CdcIngest:
             keys[name] = info["key_cols"]
         return cls(spark, warehouse, schemas, keys, **kwargs)
 
+    @classmethod
+    def from_config(
+        cls, spark: SparkSession, warehouse: str, config: dict
+    ) -> "CdcIngest":
+        """Construct an ingest pipeline from the table-config JSON (the
+        connector-config analog the API and the CLI load):
+        ``{"tables": {name: {"ddl": "<payload DDL>", "keys": [...]}}}``."""
+        tables = config["tables"]
+        return cls(
+            spark,
+            warehouse,
+            {n: T.StructType.fromDDL(c["ddl"]) for n, c in tables.items()},
+            {n: c["keys"] for n, c in tables.items()},
+        )
+
     @property
     def dlq_path(self) -> str:
-        return f"{self.warehouse}/dlq_records"
+        return self.dlq_table().path
 
     def dlq_table(self) -> KeyedTable:
-        """The DLQ as a keyed table (S5/S12 storage): status changes
-        are atomic LWW merges, never full-file rewrites — a crash
-        mid-replay can only lose the *pending* status flip, never DLQ
-        records (the never-lose-errors guarantee)."""
-        return KeyedTable(self.spark, self.dlq_path, ["dlq_id"], num_buckets=8)
+        return dlq_table(self.spark, self.warehouse)
 
     def dlq(self) -> DataFrame:
-        from cass_cdc_pg_spark.plans.keyed_table import META_COLS
-
         return self.dlq_table().read_live().drop(*META_COLS)
 
     def seed_snapshot(
@@ -315,32 +333,27 @@ class CdcIngest:
             int(_time.time() * 1_000_000),
         ).persist()
         try:
-            aggs = [
-                F.count(F.lit(1)).alias("n"),
-                F.max(F.struct("timestamp_micros", "event_id")).alias("mx"),
-            ]
-            if self.auto_evolve:
-                # schema-change detection costs one more agg expression
-                # in the same pass — skipped entirely when evolution is
-                # pinned off
-                aggs.append(
+            # schema-change detection (auto.evolve) is one more agg
+            # expression in the same pass: the payload keys seen
+            stats = (
+                tagged.groupBy("source_table", "operation_type", "_error_type")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.max(F.struct("timestamp_micros", "event_id")).alias("mx"),
                     F.array_distinct(
                         F.flatten(
                             F.collect_set(
                                 F.map_keys(F.coalesce(F.col("after"), F.col("before")))
                             )
                         )
-                    ).alias("payload_keys")
+                    ).alias("payload_keys"),
                 )
-            stats = (
-                tagged.groupBy("source_table", "operation_type", "_error_type")
-                .agg(*aggs)
                 .collect()
             )
             any_bad = any(r["_error_type"] is not None for r in stats)
-            row_tables: set[str] = set()
             truncates: dict[str, tuple[int, str]] = {}
-            seen_keys: dict[str, set[str]] = {}
+            # tables with rows to merge → the payload keys they carry
+            row_tables: dict[str, set[str]] = {}
             for r in stats:
                 if r["_error_type"] is not None:
                     METRICS.inc(
@@ -363,11 +376,9 @@ class CdcIngest:
                     if r["source_table"] not in truncates or cand > truncates[r["source_table"]]:
                         truncates[r["source_table"]] = cand
                 else:
-                    row_tables.add(r["source_table"])
-                    if self.auto_evolve:
-                        seen_keys.setdefault(r["source_table"], set()).update(
-                            r["payload_keys"] or ()
-                        )
+                    row_tables.setdefault(r["source_table"], set()).update(
+                        r["payload_keys"] or ()
+                    )
 
             # schema-change detection (auto.evolve): unseen payload keys
             # of merging events advance the pinned schema through the
@@ -375,12 +386,10 @@ class CdcIngest:
             # classifying after would: the added columns are nullable
             # strings, which no compatibility mode rejects and no value
             # fails to convert to.
-            if self.auto_evolve:
-                for name in row_tables:
-                    known = {f.name for f in self.table_schemas[name].fields}
-                    unknown = seen_keys.get(name, set()) - known
-                    if unknown:
-                        self._auto_add_columns(name, sorted(unknown))
+            for name, keys in row_tables.items():
+                unknown = keys - {f.name for f in self.table_schemas[name].fields}
+                if unknown:
+                    self._auto_add_columns(name, sorted(unknown))
 
             for name, payload_schema in self.table_schemas.items():
                 if name in row_tables:

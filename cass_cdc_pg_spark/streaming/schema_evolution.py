@@ -32,9 +32,10 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 
 from pyspark.sql import types as T
+
+from cass_cdc_pg_spark.durable import write_json
 
 ADD_COLUMN = "ADD_COLUMN"
 DROP_COLUMN = "DROP_COLUMN"
@@ -147,12 +148,7 @@ class SchemaRegistry:
             return {"tables": {}}
 
     def _save(self, data: dict) -> None:
-        tmp = f"{self._manifest}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(data, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest)
+        write_json(self._manifest, data)
 
     # -- API ----------------------------------------------------------------
 

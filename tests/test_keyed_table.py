@@ -185,7 +185,7 @@ def test_compaction_folds_deltas_and_preserves_state(spark, tmp_path):
     assert before == after
     assert after[0]["_cdc_timestamp_micros"] == 3000
     # post-compaction manifest carries no deltas
-    assert all(not e["deltas"] for e in t._read_manifest().values())
+    assert all(not e["deltas"] for e in t._doc()["buckets"].values())
 
 
 def test_snappy_files_read_merge_and_compact_to_zstd(spark, tmp_path):
@@ -249,7 +249,7 @@ def test_snappy_files_read_merge_and_compact_to_zstd(spark, tmp_path):
 
     def codecs_of_last_commit():  # footer codecs of the dirs the last commit added
         out = set()
-        for d in t._version_doc(t._current_version())["added"]:
+        for d in t._doc(t._current_version())["added"]:
             for root, _, files in os.walk(path / d):
                 for f in files:
                     if f.endswith(".parquet"):
@@ -269,7 +269,7 @@ def test_snappy_files_read_merge_and_compact_to_zstd(spark, tmp_path):
     assert codecs_of_last_commit() == {"ZSTD"}
     # compaction folded every snappy file away
     assert all(e["base"] != "snap-legacy00000" and not e["deltas"]
-               for e in t._read_manifest().values())
+               for e in t._doc()["buckets"].values())
 
 
 def test_auto_compaction_triggers_at_threshold(spark, tmp_path):
@@ -350,6 +350,45 @@ def test_bucket_count_persisted_in_manifest(spark, tmp_path):
 
     assert reopened.delete_where(F.col("id") == "7") == 1
     assert reopened.read().count() == 19
+
+
+def test_opening_a_missing_table_creates_nothing(spark, tmp_path):
+    """Opening is a read: a path with no table stays absent, so
+    ``KeyedTable(...).exists()`` is a safe probe (a misspelled table
+    name must not leave an empty directory behind)."""
+    import os
+
+    path = tmp_path / "wh" / "cdc_nope"
+    t = KeyedTable(spark, str(path), ["id"], num_buckets=4)
+    assert t.exists() is False
+    assert t._current_version() == 0
+    assert not os.path.exists(tmp_path / "wh")
+    # the first commit creates it
+    t.merge(_batch(spark, [("a", "v1", False, 100, "e1", None)]))
+    assert t.exists() and _state(t) == {"a": ("v1", False, 100)}
+
+
+def test_current_version_survives_a_lost_log_copy(spark, tmp_path):
+    """Crash window after the pointer swap: the commit's
+    ``_log/manifest.v*.json`` copy was never written.  The current doc
+    answers for its own version, so time travel to it and the change
+    feed into it still return that commit's rows."""
+    import os
+
+    t = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=4)
+    t.merge(_batch(spark, [("a", "v1", False, 100, "e1", None)]))
+    t.merge(_batch(spark, [("a", "v2", False, 200, "e2", None),
+                           ("b", "w1", False, 200, "e3", None)]))
+    cur = t._current_version()
+    os.remove(f"{t.path}/_log/manifest.v{cur:012d}.json")
+
+    at = {r["id"]: r["val"] for r in t.read(version=cur).collect()}
+    assert at == {"a": "v2", "b": "w1"}
+    ch = {(r["id"], r["val"], r["_change_version"])
+          for r in t.read_changes(cur - 1).collect()}
+    assert ch == {("a", "v2", cur), ("b", "w1", cur)}
+    # an older version is still served from its own log copy
+    assert {r["val"] for r in t.read(version=cur - 1).collect()} == {"v1"}
 
 
 def test_time_travel_reads_prior_versions(spark, tmp_path):
