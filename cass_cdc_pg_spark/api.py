@@ -1,10 +1,11 @@
-"""HTTP service surface on the stdlib ``http.server`` — the actual
-listener for the route surface the CLI facade (``cli.py``) already
-maps 1:1.  The reference serves these over FastAPI/uvicorn
-(``src/api/main.py:79-83``); no web framework ships in this
-container, so the server is a ``ThreadingHTTPServer`` with a small
-regex router, which keeps the dependency surface at zero while the
-request/response contracts stay reference-shaped.
+"""The control plane: ``CdcApiService`` (one method per route) and its
+HTTP transport on the stdlib ``http.server``.  The CLI (``cli.py``) is
+the second transport: its verbs that mirror a route call the same
+service method and print what it returns.  The reference serves these
+over FastAPI/uvicorn (``src/api/main.py:79-83``); no web framework
+ships in this container, so the server is a ``ThreadingHTTPServer``
+with a small regex router, which keeps the dependency surface at zero
+while the request/response contracts stay reference-shaped.
 
 Routes (reference ``src/api/routes/*``):
 
@@ -60,6 +61,22 @@ MISMATCH_DDL = (
 
 RESOLUTION_STATUSES = ("PENDING", "MANUAL_RESOLVED", "AUTO_RESOLVED", "IGNORED")
 
+#: reconciliation strategy → the ``registry`` query that runs it; the
+#: one list of strategies, for the trigger route and ``reconcile run``
+RECONCILE_STRATEGIES = {
+    "row_count": "q1_row_count",
+    "checksum": "q3_checksum_diff",
+    "timestamp_range": "q5_range_diff",
+    "sample": "q6_sample",
+}
+
+
+def reconcile_query(spark, strategy: str, sf_dir: str):
+    """The DataFrame of reconciliation *strategy* over *sf_dir*."""
+    from cass_cdc_pg_spark import registry
+
+    return getattr(registry, RECONCILE_STRATEGIES[strategy])(spark, sf_dir)
+
 
 class ApiError(Exception):
     """Maps to an HTTP status + FastAPI-style ``{"detail": ...}`` body."""
@@ -79,8 +96,8 @@ def _validate_identifier(value: str, kind: str) -> str:
 
 
 class CdcApiService:
-    """Engine-facing handlers, one method per route; transport-free so
-    tests can call them directly and the HTTP layer stays thin."""
+    """Engine-facing handlers, one method per route; transport-free, so
+    the HTTP server, the CLI and tests all call the same methods."""
 
     def __init__(
         self,
@@ -200,10 +217,11 @@ class CdcApiService:
 
     def _health_service(self):
         from cass_cdc_pg_spark.monitoring import HealthCheckService
+        from cass_cdc_pg_spark.streaming.ingest import schema_registry_path
         from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
 
         reg = (
-            SchemaRegistry(f"{self.warehouse}/_schema_meta")
+            SchemaRegistry(schema_registry_path(self.warehouse))
             if self.warehouse
             else None
         )
@@ -250,7 +268,10 @@ class CdcApiService:
         from cass_cdc_pg_spark.operators.listings import listing
         from cass_cdc_pg_spark.plans.keyed_table import META_COLS
 
-        df = self._dlq_table().read_live().drop(*META_COLS)
+        t = self._dlq_table()
+        if not t.exists():  # nothing was ever routed to the DLQ
+            return []
+        df = t.read_live().drop(*META_COLS)
         preds = []
         for qp, col in (
             ("error_type", "error_type"),
@@ -274,11 +295,12 @@ class CdcApiService:
     def _dlq_stats_compute(self) -> dict:
         # ONE Spark action: group on the full dim triple (bounded by
         # distinct error/status/table combinations, tiny by contract)
-        # and marginalize driver-side — was 4 actions (3 groupBys +
-        # count), i.e. 4 job latencies per request under load
-        df = self._dlq_table().read_live()
+        # and marginalize driver-side; an empty DLQ has zero totals
+        t = self._dlq_table()
         dims = ("error_type", "resolution_status", "source_table")
-        rows = df.groupBy(*dims).count().collect()
+        rows = (
+            t.read_live().groupBy(*dims).count().collect() if t.exists() else []
+        )
         by: dict = {dim: {} for dim in dims}
         total = 0
         for r in rows:
@@ -300,8 +322,6 @@ class CdcApiService:
 
     # -- reconciliation -----------------------------------------------------
 
-    _STRATEGIES = ("row_count", "checksum", "timestamp_range", "sample")
-
     def reconciliation_trigger(self, body: dict) -> dict:
         """Sync by default (job completes in-request; the CLI/test
         contract).  ``{"async": true}`` matches the REFERENCE contract
@@ -311,7 +331,7 @@ class CdcApiService:
         response returns at registration latency instead of
         Spark-job latency."""
         strategy = body.get("strategy", "row_count")
-        if strategy not in self._STRATEGIES:
+        if strategy not in RECONCILE_STRATEGIES:
             raise ApiError(422, f"unknown strategy: {strategy}")
         sf_dir = body.get("sf_dir") or self.sf_dir
         if not sf_dir:
@@ -352,36 +372,21 @@ class CdcApiService:
     def _run_reconciliation(
         self, job_id: str, strategy: str, sf_dir: str, limit: int
     ) -> dict:
-        from cass_cdc_pg_spark import registry
-
-        q = {
-            "row_count": registry.q1_row_count,
-            "checksum": registry.q3_checksum_diff,
-            "timestamp_range": registry.q5_range_diff,
-            "sample": registry.q6_sample,
-        }[strategy]
-        rows = [r.asDict() for r in q(self.spark, sf_dir).limit(limit).collect()]
+        df = reconcile_query(self.spark, strategy, sf_dir)
+        rows = [r.asDict() for r in df.limit(limit).collect()]
         # checksum / timestamp_range rows each name a divergent key →
         # durable mismatch records through the real LSM merge path;
         # id = content digest so re-triggering upserts, not duplicates
-        if strategy in ("checksum", "timestamp_range") and rows:
+        mismatches = rows if strategy in ("checksum", "timestamp_range") else []
+        if mismatches:
             import hashlib
 
-            def _mid(r: dict) -> str:
-                detail = json.dumps(r, default=str, sort_keys=True)
-                return f"{strategy}:{hashlib.sha1(detail.encode()).hexdigest()[:16]}"
-
+            details = [json.dumps(r, default=str, sort_keys=True) for r in mismatches]
             mm = self.spark.createDataFrame(
                 [
-                    (
-                        _mid(r),
-                        job_id,
-                        strategy,
-                        json.dumps(r, default=str, sort_keys=True),
-                        "PENDING",
-                        None,
-                    )
-                    for r in rows
+                    (f"{strategy}:{hashlib.sha1(d.encode()).hexdigest()[:16]}",
+                     job_id, strategy, d, "PENDING", None)
+                    for d in details
                 ],
                 MISMATCH_DDL,
             )
@@ -391,9 +396,7 @@ class CdcApiService:
             "strategy": strategy,
             "status": "completed",
             "row_count": len(rows),
-            "mismatch_count": len(rows)
-            if strategy in ("checksum", "timestamp_range")
-            else 0,
+            "mismatch_count": len(mismatches),
             "rows": rows[: min(limit, 20)],
         }
         with self._jobs_lock:
@@ -462,6 +465,7 @@ class CdcApiService:
     def gdpr_delete(self, keyspace: str, table: str, primary_key: str) -> dict:
         from cass_cdc_pg_spark.ops import AuditLog, GdprService
         from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+        from cass_cdc_pg_spark.streaming.ingest import audit_log_path, cdc_table_path
 
         _validate_identifier(keyspace, "keyspace")
         _validate_identifier(table, "table")
@@ -470,8 +474,8 @@ class CdcApiService:
         if cfg is None:
             raise ApiError(404, f"unknown table: {table}")
         wh = self._require_warehouse()
-        src = KeyedTable(self.spark, f"{wh}/cdc_{table}", cfg["keys"])
-        audit = AuditLog(self.spark, f"{wh}/_cdc_audit_log")
+        src = KeyedTable(self.spark, cdc_table_path(wh, table), cfg["keys"])
+        audit = AuditLog(self.spark, audit_log_path(wh))
         key_col = cfg["keys"][0]
         pred = F.col(key_col).cast("string") == primary_key
         try:
@@ -482,7 +486,6 @@ class CdcApiService:
             raise ApiError(404, str(e)) from e
         self._invalidate_cache("health", "tables")
         return out
-
 
     def table_history(self, table: str) -> list[dict]:
         _validate_identifier(table, "table")
@@ -516,12 +519,14 @@ class CdcApiService:
 
     def _keyed_table_or_404(self, table: str):
         from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+        from cass_cdc_pg_spark.streaming.ingest import cdc_table_path
 
         cfg = self.table_config["tables"].get(table)
         if cfg is None:
             raise ApiError(404, f"unknown table: {table}")
-        wh = self._require_warehouse()
-        t = KeyedTable(self.spark, f"{wh}/cdc_{table}", cfg["keys"])
+        t = KeyedTable(
+            self.spark, cdc_table_path(self._require_warehouse(), table), cfg["keys"]
+        )
         if not t.exists():
             raise ApiError(404, f"table {table} has no data yet")
         return t

@@ -1,27 +1,31 @@
-"""Thin service facade: the reference's HTTP route surface as CLI
-subcommands over the existing engine functions (no web framework).
+"""The CLI: a second transport over ``api.CdcApiService``, plus the
+storage verbs that have no HTTP route.
 
-Maps ``src/api/routes/*``:
+A verb that mirrors a route (reference ``src/api/routes/*``) builds one
+uncached service, calls the route's method and prints what it returns
+as JSON — one line per object or list element; a service ``ApiError``
+becomes one stderr JSON line and exit 1:
 
-- ``reconcile run``      → POST /reconciliation/trigger
-  (``reconciliation.py:73-119``) — runs the chosen validation strategy
-  and prints the job row / mismatch rows.
-- ``dlq list``           → GET /dlq/records (``dlq.py:117-225``)
-- ``dlq stats``          → GET /dlq/stats (``dlq.py:227-...``)
-- ``dlq replay``         → POST /dlq/replay (``dlq.py:67-114``)
-- ``dlq resolve``        → POST resolve (``dlq_service.py:246-255``)
-- ``gdpr erase``         → DELETE /gdpr/users/{id} (``gdpr.py:37-216``)
-- ``health``             → GET /health (``routes/health.py``)
-- ``metrics dump``       → GET /metrics (``routes/metrics.py``)
+- ``dlq list``           → GET /dlq/records  (``dlq_records``)
+- ``dlq stats``          → GET /dlq/stats    (``dlq_stats``)
+- ``dlq replay``         → POST /dlq/replay  (``dlq_replay``)
+- ``health``             → GET /health       (``health``)
+- ``metrics dump``       → GET /metrics      (``metrics``)
+- ``reconcile run``      → the trigger route's strategy table
+  (``api.RECONCILE_STRATEGIES``); prints the result rows and persists
+  no mismatches, so it needs no warehouse.
 
-Beyond the reference surface (storage-level features the reference's
-Postgres target gets from the database itself):
+CLI-local verbs:
 
+- ``dlq resolve``        → status flip without replay (``dlq_service.py:246-255``)
+- ``gdpr erase``         → the erasure cascade with ``--target-warehouse``
+  (``gdpr.py:37-216``)
 - ``table history``      → retained snapshot versions of a keyed table
 - ``table read``         → current or ``--version`` time-travel read
 - ``table changes``      → change feed between retained versions (CDF)
 - ``table compact``      → fold LSM deltas into fresh bases (OPTIMIZE)
 - ``table sync``         → follow a change feed into a derived table (auto-resync)
+- ``serve``              → run the HTTP listener
 
 Table metadata comes from a config JSON (the connector-config analog):
 
@@ -34,23 +38,22 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
-import uuid
 
 from pyspark.sql import functions as F
+
+from cass_cdc_pg_spark.api import (
+    RECONCILE_STRATEGIES,
+    RESOLUTION_STATUSES,
+    ApiError,
+    CdcApiServer,
+    CdcApiService,
+    reconcile_query,
+)
 
 
 def _load_config(path: str) -> dict:
     with open(path) as fh:
         return json.load(fh)
-
-
-def _dlq_df(spark, warehouse: str):
-    from cass_cdc_pg_spark.plans.keyed_table import META_COLS
-    from cass_cdc_pg_spark.streaming.ingest import dlq_table
-
-    t = dlq_table(spark, warehouse)
-    return t, t.read_live().drop(*META_COLS)
 
 
 def _emit(rows) -> None:
@@ -59,81 +62,58 @@ def _emit(rows) -> None:
                          default=str, sort_keys=True))
 
 
-def cmd_reconcile_run(args, spark) -> int:
-    from cass_cdc_pg_spark import registry
+def _service(args, spark) -> CdcApiService:
+    """The route handlers, uncached: one CLI call is one request."""
+    config = getattr(args, "config", None)
+    return CdcApiService(
+        spark,
+        sf_dir=getattr(args, "sf_dir", None),
+        warehouse=getattr(args, "warehouse", None),
+        table_config=_load_config(config) if config else None,
+        cache_ttl=0,
+    )
 
-    q = {
-        "row_count": registry.q1_row_count,
-        "checksum": registry.q3_checksum_diff,
-        "timestamp_range": registry.q5_range_diff,
-        "sample": registry.q6_sample,
-    }[args.strategy]
-    _emit(q(spark, args.sf_dir).limit(args.limit).collect())
+
+def cmd_reconcile_run(args, spark) -> int:
+    _emit(reconcile_query(spark, args.strategy, args.sf_dir).limit(args.limit).collect())
     return 0
 
 
 def cmd_dlq_list(args, spark) -> int:
-    from cass_cdc_pg_spark.operators.listings import listing
-
-    _, df = _dlq_df(spark, args.warehouse)
-    preds = []
-    if args.error_type:
-        preds.append(F.col("error_type") == args.error_type)
-    if args.status:
-        preds.append(F.col("resolution_status") == args.status)
-    if args.table:
-        preds.append(F.col("source_table") == args.table)
-    out = listing(
-        df,
-        preds,
-        [F.desc("first_failed_at_us"), F.asc("dlq_id")],
-        limit=args.limit,
-        offset=args.offset,
-    )
-    _emit(out.collect())
+    # the option dests are the route's query-parameter names
+    params = ("error_type", "status", "table", "limit", "offset")
+    _emit(_service(args, spark).dlq_records({k: getattr(args, k) for k in params}))
     return 0
 
 
 def cmd_dlq_stats(args, spark) -> int:
-    _, df = _dlq_df(spark, args.warehouse)
-    for dim in ("error_type", "resolution_status", "source_table"):
-        for r in df.groupBy(dim).count().orderBy(dim).collect():
-            print(json.dumps({"by": dim, dim: r[dim], "count": r["count"]},
-                             sort_keys=True))
-    print(json.dumps({"total": df.count()}))
+    _emit([_service(args, spark).dlq_stats()])
     return 0
 
 
 def cmd_dlq_replay(args, spark) -> int:
-    from cass_cdc_pg_spark.streaming.ingest import CdcIngest
-
-    ingest = CdcIngest.from_config(spark, args.warehouse, _load_config(args.config))
-    n = ingest.replay_dlq(args.ids)
-    print(json.dumps({"replayed": n, "resolution_status": "MANUAL_RESOLVED"}))
+    _emit([_service(args, spark).dlq_replay({"event_ids": args.ids})])
     return 0
 
 
 def cmd_dlq_resolve(args, spark) -> int:
-    """Status update without replay (``dlq_service.py:246-255``): an
-    atomic keyed merge stamped with wall time (outranks the
+    """Status flip without replay (``dlq_service.py:246-255``): one
+    ``KeyedTable.upsert``, stamped with wall time (outranks the
     deterministic failure timestamp, so the flip always wins)."""
-    t, df = _dlq_df(spark, args.warehouse)
-    row = df.filter(F.col("dlq_id") == args.id).collect()
-    if not row:
+    from cass_cdc_pg_spark.plans.keyed_table import META_COLS
+    from cass_cdc_pg_spark.streaming.ingest import dlq_table
+
+    t = dlq_table(spark, args.warehouse)
+    hit = (
+        t.read_live().drop(*META_COLS).filter(F.col("dlq_id") == args.id)
+        if t.exists()
+        else None
+    )
+    if hit is None or not hit.take(1):
         print(json.dumps({"error": f"dlq_id {args.id} not found"}),
               file=sys.stderr)
         return 1
-    now_us = int(time.time() * 1_000_000)
-    updated = df.filter(F.col("dlq_id") == args.id).withColumns(
-        {
-            "resolution_status": F.lit(args.status),
-            "_cdc_deleted": F.lit(False),
-            "_cdc_timestamp_micros": F.lit(now_us),
-            "_last_event_id": F.lit(f"resolve-{uuid.uuid4().hex[:8]}"),
-            "_ttl_expiry_timestamp_us": F.lit(None).cast("long"),
-        }
-    )
-    t.merge(updated)
+    t.upsert(hit.withColumn("resolution_status", F.lit(args.status)))
     print(json.dumps({"dlq_id": args.id, "resolution_status": args.status}))
     return 0
 
@@ -141,49 +121,32 @@ def cmd_dlq_resolve(args, spark) -> int:
 def cmd_gdpr_erase(args, spark) -> int:
     from cass_cdc_pg_spark.ops import AuditLog, GdprService
     from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+    from cass_cdc_pg_spark.streaming.ingest import audit_log_path, cdc_table_path
 
-    cfg = _load_config(args.config)["tables"][args.table]
-    wh = args.warehouse.rstrip("/")
-    src = KeyedTable(spark, f"{wh}/cdc_{args.table}", cfg["keys"])
+    keys = _load_config(args.config)["tables"][args.table]["keys"]
+    src = KeyedTable(spark, cdc_table_path(args.warehouse, args.table), keys)
     tgt = (
-        KeyedTable(spark, f"{args.target_warehouse.rstrip('/')}/cdc_{args.table}",
-                   cfg["keys"])
+        KeyedTable(spark, cdc_table_path(args.target_warehouse, args.table), keys)
         if args.target_warehouse
         else src
     )
-    audit = AuditLog(spark, f"{wh}/_cdc_audit_log")
-    key_col, key_val = cfg["keys"][0], args.id
-    pred = F.col(key_col).cast("string") == key_val
+    audit = AuditLog(spark, audit_log_path(args.warehouse))
+    pred = F.col(keys[0]).cast("string") == args.id
     result = GdprService(spark, audit).erase(
-        src, tgt, pred, args.table, key_val, requester=args.requester
+        src, tgt, pred, args.table, args.id, requester=args.requester
     )
     print(json.dumps(result, default=str, sort_keys=True))
     return 0 if result["status"] == "success" else 1
 
 
 def cmd_health(args, spark) -> int:
-    from cass_cdc_pg_spark.monitoring import HealthCheckService
-    from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
-
-    reg = (
-        SchemaRegistry(f"{args.warehouse.rstrip('/')}/_schema_meta")
-        if args.warehouse
-        else None
-    )
-    out = HealthCheckService(
-        spark,
-        source_path=args.sf_dir,
-        target_warehouse=args.warehouse,
-        schema_registry=reg,
-    ).check_all()
-    print(json.dumps(out, sort_keys=True))
-    return 0 if out["status"] != "unhealthy" else 1
+    status, out = _service(args, spark).health()
+    _emit([out])
+    return 0 if status == 200 else 1
 
 
 def cmd_metrics_dump(args, spark) -> int:
-    from cass_cdc_pg_spark.monitoring import METRICS
-
-    sys.stdout.write(METRICS.render_prometheus())
+    sys.stdout.write(_service(args, spark).metrics())
     return 0
 
 
@@ -312,8 +275,6 @@ def cmd_table_sync(args, spark) -> int:
 def cmd_serve(args, spark) -> int:
     """Run the HTTP listener (``api.py``) — the uvicorn analog
     (``src/api/main.py``).  Blocks until interrupted."""
-    from cass_cdc_pg_spark.api import CdcApiServer, CdcApiService
-
     service = CdcApiService(
         spark,
         sf_dir=args.sf_dir,
@@ -349,7 +310,7 @@ def build_parser() -> argparse.ArgumentParser:
     run = rec.add_parser("run")
     run.add_argument("--sf-dir", required=True)
     run.add_argument("--strategy", default="row_count",
-                     choices=["row_count", "checksum", "timestamp_range", "sample"])
+                     choices=list(RECONCILE_STRATEGIES))
     run.add_argument("--limit", type=int, default=100)
     run.set_defaults(fn=cmd_reconcile_run)
 
@@ -374,8 +335,7 @@ def build_parser() -> argparse.ArgumentParser:
     rs.add_argument("--warehouse", required=True)
     rs.add_argument("--id", required=True)
     rs.add_argument("--status", default="MANUAL_RESOLVED",
-                    choices=["MANUAL_RESOLVED", "AUTO_RESOLVED", "IGNORED",
-                             "PENDING"])
+                    choices=list(RESOLUTION_STATUSES))
     rs.set_defaults(fn=cmd_dlq_resolve)
 
     gd = sub.add_parser("gdpr").add_subparsers(dest="sub", required=True)
@@ -460,10 +420,15 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
         spark = get_spark(app_name="cass-cdc-pg-spark-cli")
     tracer = middleware.Tracer()
-    with tracer.span(f"cli.{args.cmd}", trace_id=rid.replace("-", "")
-                     if args.request_id else None,
-                     command=args.cmd, request_id=rid):
-        rc = args.fn(args, spark)
+    try:
+        with tracer.span(f"cli.{args.cmd}", trace_id=rid.replace("-", "")
+                         if args.request_id else None,
+                         command=args.cmd, request_id=rid):
+            rc = args.fn(args, spark)
+    except ApiError as e:
+        print(json.dumps({"status": e.status, "detail": e.detail,
+                          "request_id": rid}), file=sys.stderr)
+        rc = 1
     if args.trace:
         for sp in tracer.spans:
             print(json.dumps({"span": sp}, default=str), file=sys.stderr)

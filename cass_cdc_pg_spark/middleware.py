@@ -1,9 +1,10 @@
-"""Service-facade middleware analogs: request IDs, rate limiting,
+"""Control-plane middleware analogs: request IDs, rate limiting,
 tracing.
 
 The reference wraps its FastAPI app with three pieces of plumbing;
-this module re-expresses each for the CLI facade (``cli.py``) — same
-semantics, no web framework:
+this module re-expresses each once, for both transports over
+``api.CdcApiService`` — the HTTP server (``api.py``) and the CLI
+(``cli.py``) — same semantics, no web framework:
 
 - ``request_id``  → ``src/middleware/request_id.py``: honor a
   caller-supplied ID (the ``X-Request-ID`` header analog is the
@@ -20,20 +21,27 @@ semantics, no web framework:
   and parent-based ratio sampling where errors are ALWAYS sampled
   (the reference configures ``ParentBasedTraceIdRatio`` plus 100 %
   error sampling).  Export is a pluggable callable; the default
-  collects in memory (the Jaeger exporter has no in-container
-  analog).  Spark's own UI covers executor-side timing; these spans
+  keeps the most recent ``MAX_SPANS`` in memory (the Jaeger exporter
+  has no in-container analog).  The span stack is per thread, so the
+  threaded HTTP server's concurrent requests each get their own root
+  span.  Spark's own UI covers executor-side timing; these spans
   cover the service layer above it.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 import time
 import uuid
 from contextlib import contextmanager
 from typing import Callable
 
 from cass_cdc_pg_spark.durable import write_json
+
+#: spans the default in-memory exporter retains (a long-running server
+#: must not grow per request), like ``monitoring.OBSERVATION_WINDOW``
+MAX_SPANS = 1024
 
 
 def request_id(provided: str | None = None) -> str:
@@ -124,9 +132,14 @@ class Tracer:
         self.service_name = service_name
         self.sampling_ratio = sampling_ratio
         self.spans: list[dict] = []
-        self.exporter = exporter or self.spans.append
+        self.exporter = exporter or self._keep
         self.clock = clock
-        self._stack: list[dict] = []
+        self._local = threading.local()  # .stack: this thread's open spans
+
+    def _keep(self, sp: dict) -> None:
+        self.spans.append(sp)
+        if len(self.spans) > MAX_SPANS:
+            del self.spans[:-MAX_SPANS]
 
     def _sampled(self, trace_id: str) -> bool:
         # deterministic trace-id ratio: hash the id into [0, 1).
@@ -139,7 +152,8 @@ class Tracer:
 
     @contextmanager
     def span(self, name: str, trace_id: str | None = None, **attrs):
-        parent = self._stack[-1] if self._stack else None
+        stack = self._local.__dict__.setdefault("stack", [])
+        parent = stack[-1] if stack else None
         tid = (
             parent["trace_id"]
             if parent
@@ -155,7 +169,7 @@ class Tracer:
             "attributes": attrs,
             "status": "ok",
         }
-        self._stack.append(sp)
+        stack.append(sp)
         try:
             yield sp
         except BaseException as e:
@@ -164,7 +178,7 @@ class Tracer:
             raise
         finally:
             sp["duration_ms"] = round((self.clock() - sp["start"]) * 1000, 3)
-            self._stack.pop()
+            stack.pop()
             # parent-based: child follows root decision; errors always kept
             if sp["status"] == "error" or self._sampled(sp["trace_id"]):
                 self.exporter(sp)

@@ -140,7 +140,9 @@ class GdprService:
         The backup is collected (erasure targets one identity — a
         bounded row set by construction); on target-delete failure the
         source rows are re-merged from the backup (compensating
-        transaction) and the erasure reports failure."""
+        transaction) and the erasure reports failure.  When *target* is
+        *source* (same path: no separate target warehouse), the source
+        delete already covers it and the target step is skipped."""
         backup_rows = source.read().filter(predicate).collect()
         if not backup_rows:
             raise KeyError(
@@ -154,7 +156,7 @@ class GdprService:
             source.delete_where(predicate)
             deleted_src = True
             try:
-                if target.exists():
+                if target.path != source.path and target.exists():
                     target.delete_where(predicate)
                 deleted_tgt = True
             except Exception:

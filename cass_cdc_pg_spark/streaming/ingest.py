@@ -99,7 +99,7 @@ def discover_cdc_tables(warehouse: str) -> dict[str, dict]:
     from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
 
     warehouse = warehouse.rstrip("/")
-    registry = SchemaRegistry(f"{warehouse}/_schema_meta")
+    registry = SchemaRegistry(schema_registry_path(warehouse))
     out: dict[str, dict] = {}
     try:
         entries = sorted(os.listdir(warehouse))
@@ -125,6 +125,21 @@ def discover_cdc_tables(warehouse: str) -> dict[str, dict]:
             "columns": columns,
         }
     return out
+
+
+def schema_registry_path(warehouse: str) -> str:
+    """Where a warehouse keeps its schema registry."""
+    return f"{warehouse.rstrip('/')}/_schema_meta"
+
+
+def cdc_table_path(warehouse: str, name: str) -> str:
+    """Where a warehouse keeps the keyed table of source table *name*."""
+    return f"{warehouse.rstrip('/')}/cdc_{name}"
+
+
+def audit_log_path(warehouse: str) -> str:
+    """Where a warehouse keeps its audit log (``ops.AuditLog``)."""
+    return f"{warehouse.rstrip('/')}/_cdc_audit_log"
 
 
 def dlq_table(spark: SparkSession, warehouse: str) -> KeyedTable:
@@ -164,7 +179,7 @@ class CdcIngest:
         self.num_buckets = num_buckets
         self.breaker = CircuitBreaker()
         os.makedirs(self.warehouse, exist_ok=True)
-        self.schema_registry = SchemaRegistry(f"{self.warehouse}/_schema_meta")
+        self.schema_registry = SchemaRegistry(schema_registry_path(self.warehouse))
         for name, schema in self.table_schemas.items():
             self.schema_registry.register(name, schema)
         self._views: dict[str, list] = {}
@@ -234,7 +249,7 @@ class CdcIngest:
     def table(self, name: str) -> KeyedTable:
         return KeyedTable(
             self.spark,
-            f"{self.warehouse}/cdc_{name}",
+            cdc_table_path(self.warehouse, name),
             self.key_cols[name],
             self.num_buckets,
         )
@@ -272,10 +287,6 @@ class CdcIngest:
             {n: T.StructType.fromDDL(c["ddl"]) for n, c in tables.items()},
             {n: c["keys"] for n, c in tables.items()},
         )
-
-    @property
-    def dlq_path(self) -> str:
-        return self.dlq_table().path
 
     def dlq_table(self) -> KeyedTable:
         return dlq_table(self.spark, self.warehouse)
@@ -455,22 +466,21 @@ class CdcIngest:
 
     def replay_dlq(self, dlq_ids: list[str]) -> int:
         """Re-run selected DLQ events through the pipeline, then mark
-        them MANUAL_RESOLVED via an atomic status merge.
+        them MANUAL_RESOLVED with one ``KeyedTable.upsert``.
 
         Replay is safe end-to-end: the table merge is idempotent (C5);
-        the status flip is a keyed merge stamped with wall time, which
-        outranks the deterministic failure timestamp — so even if the
-        replayed event fails again (same dlq_id re-merged), the final
-        state is a single MANUAL_RESOLVED row with retry_count bumped,
-        not a duplicate PENDING.  A crash between replay and status
-        merge leaves the DLQ fully readable with the rows still
-        PENDING — re-running the replay converges."""
-        import time as _time
-
+        the status flip is stamped with wall time, which outranks the
+        deterministic failure timestamp — so even if the replayed event
+        fails again (same dlq_id re-merged), the final state is a single
+        MANUAL_RESOLVED row with retry_count bumped, not a duplicate
+        PENDING.  A crash between replay and status flip leaves the DLQ
+        fully readable with the rows still PENDING — re-running the
+        replay converges."""
         dt = self.dlq_table()
+        live = dt.read_live().drop(*META_COLS)
         # small, bounded selection (explicit id list) — materialize it
         # before process_batch re-merges the DLQ underneath the plan
-        selected = dt.read_live().filter(F.col("dlq_id").isin(dlq_ids)).collect()
+        selected = live.filter(F.col("dlq_id").isin(dlq_ids)).collect()
         if not selected:
             return 0
         events = self.spark.createDataFrame(
@@ -481,33 +491,16 @@ class CdcIngest:
         self.process_batch(events)
 
         now_us = int(_time.time() * 1_000_000)
-        resolved = self.spark.createDataFrame(
-            [
-                (
-                    r["dlq_id"],
-                    r["source_table"],
-                    r["original_event"],
-                    r["error_type"],
-                    r["error_message"],
-                    r["retry_count"] + 1,
-                    r["first_failed_at_us"],
-                    now_us,
-                    "MANUAL_RESOLVED",
-                    False,
-                    now_us,
-                    r["_last_event_id"],
-                    None,
-                )
-                for r in selected
-            ],
-            "dlq_id string, source_table string, original_event string, "
-            "error_type string, error_message string, retry_count int, "
-            "first_failed_at_us long, last_retry_at_us long, "
-            "resolution_status string, _cdc_deleted boolean, "
-            "_cdc_timestamp_micros long, _last_event_id string, "
-            "_ttl_expiry_timestamp_us long",
+        dt.upsert(
+            self.spark.createDataFrame(selected, live.schema).withColumns(
+                {
+                    "retry_count": F.col("retry_count") + 1,
+                    "last_retry_at_us": F.lit(now_us),
+                    "resolution_status": F.lit("MANUAL_RESOLVED"),
+                }
+            ),
+            now_us,
         )
-        dt.merge(resolved)
         for r in selected:
             METRICS.inc(
                 "cdc_dlq_replay_success_total", {"table": r["source_table"]}

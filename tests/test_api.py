@@ -327,3 +327,36 @@ def test_api_async_reconciliation_trigger(spark, tmp_path):
             _time.sleep(0.5)
         assert got["status"] == "completed", got
         assert {"src_count", "tgt_count", "severity"} <= set(got["rows"][0])
+
+
+def test_api_empty_dlq_is_200(spark, tmp_path):
+    """A warehouse where no event was ever routed to the DLQ lists no
+    records and reports zero totals — a 200, not an engine error."""
+    wh = tmp_path / "wh"
+    wh.mkdir()
+    with _server(spark, wh=str(wh)) as base:
+        st, _, recs = _req(base, "GET", "/dlq/records")
+        assert st == 200 and recs == []
+        st, _, stats = _req(base, "GET", "/dlq/stats")
+        assert st == 200
+        assert stats == {"error_type": {}, "resolution_status": {},
+                         "source_table": {}, "total": 0}
+
+
+def test_api_gdpr_delete_deletes_once(spark, tmp_path, monkeypatch):
+    """Over the API the target is the source table itself, so the
+    erasure runs one delete, not a second full-table pass."""
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+
+    wh = str(tmp_path / "wh")
+    _seed_warehouse(spark, wh)
+    cfg = {"tables": {"users": {"ddl": USERS_DDL, "keys": ["id"]}}}
+    calls = []
+    orig = KeyedTable.delete_where
+    monkeypatch.setattr(KeyedTable, "delete_where",
+                        lambda t, pred: calls.append(t.path) or orig(t, pred))
+    svc = CdcApiService(spark, warehouse=wh, table_config=cfg)
+    out = svc.gdpr_delete("cdc", "users", U1)
+    assert out["status"] == "success" and out["deleted_from_target"] is True
+    assert calls == [f"{wh}/cdc_users"]
+    assert KeyedTable(spark, f"{wh}/cdc_users", ["id"]).read_live().count() == 0

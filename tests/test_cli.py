@@ -134,6 +134,162 @@ def test_rate_limiter_windows_and_persistence(tmp_path):
     assert ei2.value.window_sec == 3600
 
 
+def _lines(out: str) -> list:
+    return [json.loads(x) for x in out.strip().splitlines()]
+
+
+def _no_latency(x):
+    """*x* without the probes' wall-clock ``latency_ms`` fields."""
+    if isinstance(x, dict):
+        return {k: _no_latency(v) for k, v in x.items() if k != "latency_ms"}
+    return x
+
+
+def test_cli_prints_what_the_service_returns(spark, tmp_path, capsys):
+    """The CLI verbs that mirror a route print exactly the service's
+    answer for the same arguments."""
+    from cass_cdc_pg_spark.api import CdcApiService
+
+    sf = "/root/testdata/sf0.001"
+    wh = str(tmp_path / "wh")
+    _seed_warehouse(spark, wh)
+    svc = CdcApiService(spark, sf_dir=sf, warehouse=wh, cache_ttl=0)
+
+    assert main(["dlq", "list", "--warehouse", wh], spark) == 0
+    assert _lines(capsys.readouterr().out) == json.loads(
+        json.dumps(svc.dlq_records({}), default=str))
+    assert main(["dlq", "list", "--warehouse", wh, "--status", "IGNORED"],
+                spark) == 0
+    assert capsys.readouterr().out == ""
+    assert svc.dlq_records({"status": "IGNORED"}) == []
+
+    assert main(["dlq", "stats", "--warehouse", wh], spark) == 0
+    assert _lines(capsys.readouterr().out) == [svc.dlq_stats()]
+
+    assert main(["health", "--sf-dir", sf, "--warehouse", wh], spark) == 0
+    (printed,) = _lines(capsys.readouterr().out)
+    status, out = svc.health()
+    assert status == 200
+    assert _no_latency(printed) == _no_latency(out)
+
+
+def test_cli_dlq_stats_runs_no_more_jobs_than_the_service(spark, tmp_path, capsys):
+    """`dlq stats` is the route's one grouped pass, not a query per
+    dimension plus a count."""
+    from cass_cdc_pg_spark.api import CdcApiService
+
+    wh = str(tmp_path / "wh")
+    _seed_warehouse(spark, wh)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    svc = CdcApiService(spark, warehouse=wh, cache_ttl=0)
+    api_jobs = jobs("api-dlq-stats", svc.dlq_stats)
+    cli_jobs = jobs("cli-dlq-stats",
+                    lambda: main(["dlq", "stats", "--warehouse", wh], spark))
+    capsys.readouterr()
+    assert 0 < cli_jobs <= api_jobs, (cli_jobs, api_jobs)
+
+
+def test_cli_empty_dlq(spark, tmp_path, capsys):
+    """No event ever routed to the DLQ: `dlq list` prints nothing and
+    `dlq stats` prints zero totals, both exit 0."""
+    wh = tmp_path / "wh"
+    wh.mkdir()
+    assert main(["dlq", "list", "--warehouse", str(wh)], spark) == 0
+    assert capsys.readouterr().out == ""
+    assert main(["dlq", "stats", "--warehouse", str(wh)], spark) == 0
+    assert _lines(capsys.readouterr().out) == [
+        {"error_type": {}, "resolution_status": {}, "source_table": {},
+         "total": 0}
+    ]
+
+
+def test_cli_service_error_is_one_stderr_line(spark, tmp_path, capsys):
+    """A route's ApiError reaches the CLI as one JSON line on stderr
+    and exit 1, never a traceback."""
+    cfg = tmp_path / "cfg.json"
+    cfg.write_text(json.dumps({"tables": {}}))
+    assert main(["dlq", "replay", "--warehouse", str(tmp_path / "wh"),
+                 "--config", str(cfg), "--ids", "x"], spark) == 1
+    (err,) = _lines(capsys.readouterr().err)
+    assert err["status"] == 503 and "table config" in err["detail"]
+
+
+def test_tracer_stack_is_per_thread():
+    """Overlapping spans on two threads (the threaded HTTP server's
+    concurrent requests) are two traces, each with a root span."""
+    import threading
+
+    from cass_cdc_pg_spark.middleware import Tracer
+
+    tr = Tracer()
+    opened, closed = threading.Event(), threading.Event()
+
+    def first():
+        with tr.span("first"):
+            opened.set()
+            closed.wait(10)
+
+    t = threading.Thread(target=first)
+    t.start()
+    assert opened.wait(10)
+    with tr.span("second"):
+        pass
+    closed.set()
+    t.join(10)
+    by_name = {s["name"]: s for s in tr.spans}
+    assert set(by_name) == {"first", "second"}
+    assert by_name["second"]["parent_span_id"] is None
+    assert by_name["first"]["parent_span_id"] is None
+    assert by_name["first"]["trace_id"] != by_name["second"]["trace_id"]
+
+
+def test_tracer_keeps_a_bounded_window_of_spans():
+    """The in-memory exporter keeps only the newest MAX_SPANS spans,
+    also while more request threads than cores export at once, and
+    nesting never crosses threads."""
+    import sys
+    import threading
+
+    from cass_cdc_pg_spark.middleware import MAX_SPANS, Tracer
+
+    tr = Tracer()
+
+    def work(t):
+        for _ in range(200):
+            with tr.span("outer", t=t):
+                with tr.span("inner", t=t):
+                    pass
+
+    threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert len(tr.spans) == MAX_SPANS  # of 3200 exported
+    by_id = {s["span_id"]: s for s in tr.spans}
+    for s in tr.spans:
+        assert (s["name"] == "outer") == (s["parent_span_id"] is None)
+        parent = by_id.get(s["parent_span_id"])
+        if parent is not None:
+            assert parent["attributes"]["t"] == s["attributes"]["t"]
+
+
 def test_tracer_nesting_and_error_sampling():
     """Child spans share the trace id and point at their parent;
     errors are exported even at sampling ratio 0."""

@@ -170,7 +170,7 @@ def test_clean_ingest_batch_skips_the_dlq(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 5, sorted(jobs)
-    assert not os.path.exists(f"{ingest.dlq_path}/_manifest.json")
+    assert not os.path.exists(f"{ingest.dlq_table().path}/_manifest.json")
     assert ingest.table("users").read_live().count() == 50
 
     ingest.process_batch(spark.createDataFrame(
