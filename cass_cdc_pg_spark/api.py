@@ -31,11 +31,11 @@ generated), an optional fixed-window rate limiter returns 429 with
 ``Retry-After``, and each request runs inside a tracing span.  Errors
 use FastAPI's ``{"detail": ...}`` envelope.
 
-Persistence: reconciliation jobs live in an in-process registry (the
-reference keeps them in Postgres; a server-lifetime store is the
-single-process analog).  Mismatches are durable — written through the
-LSM ``KeyedTable`` merge path under ``{warehouse}/recon_mismatches``
-so resolve survives restarts and exercises the real upsert engine.
+Persistence: the ``MAX_JOBS`` most recent reconciliation jobs live in
+an in-process registry (the reference keeps them in Postgres).
+Mismatches are durable — written through the LSM ``KeyedTable`` merge
+path under ``{warehouse}/recon_mismatches`` so resolve survives
+restarts and exercises the real upsert engine.
 """
 
 from __future__ import annotations
@@ -53,6 +53,9 @@ from pyspark.sql import functions as F
 from cass_cdc_pg_spark import middleware
 
 _IDENT_RE = re.compile(r"^[A-Za-z0-9_.\-:]{1,128}$")
+
+#: Most recent reconciliation jobs a ``CdcApiService`` keeps in memory.
+MAX_JOBS = 256
 
 MISMATCH_DDL = (
     "mismatch_id string, job_id string, strategy string, detail string, "
@@ -347,23 +350,13 @@ class CdcApiService:
                 "mismatch_count": None,
                 "rows": [],
             }
-            with self._jobs_lock:
-                self._jobs[job_id] = job
+            self._keep_job(job)
 
             def _worker() -> None:
                 try:
                     self._run_reconciliation(job_id, strategy, sf_dir, limit)
                 except Exception as e:  # surface via job status, not a socket
-                    with self._jobs_lock:
-                        self._jobs[job_id] = {
-                            "job_id": job_id,
-                            "strategy": strategy,
-                            "status": "failed",
-                            "detail": str(e),
-                            "row_count": None,
-                            "mismatch_count": None,
-                            "rows": [],
-                        }
+                    self._keep_job({**job, "status": "failed", "detail": str(e)})
 
             threading.Thread(target=_worker, daemon=True).start()
             return dict(job)
@@ -399,13 +392,19 @@ class CdcApiService:
             "mismatch_count": len(mismatches),
             "rows": rows[: min(limit, 20)],
         }
-        with self._jobs_lock:
-            self._jobs[job_id] = job
+        self._keep_job(job)
         # job listings and mismatch reads are served uncached (jobs
         # live in-memory; mismatches hit the LSM table directly), so
         # there is nothing to invalidate here today — revisit if those
         # routes ever gain cache entries
         return job
+
+    def _keep_job(self, job: dict) -> None:
+        """Store *job*, forgetting the oldest jobs past ``MAX_JOBS``."""
+        with self._jobs_lock:
+            self._jobs[job["job_id"]] = job
+            for old in list(self._jobs)[:-MAX_JOBS]:
+                del self._jobs[old]
 
     def reconciliation_jobs(self) -> list[dict]:
         with self._jobs_lock:

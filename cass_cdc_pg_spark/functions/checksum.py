@@ -69,7 +69,6 @@ def _canon_sql(col: str, dt: T.DataType) -> str:
 
 def canonical_cols(df: DataFrame, cols: list[str] | None = None) -> list[Column]:
     """Canonical string Columns for *cols* (default: all), sorted by name."""
-    types = dict(df.dtypes)  # noqa: F841  (names only; schema gives types)
     schema = {f.name: f.dataType for f in df.schema.fields}
     names = sorted(cols if cols is not None else schema.keys())
     return [_canon_spark(n, schema[n]) for n in names]

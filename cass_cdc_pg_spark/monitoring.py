@@ -33,6 +33,8 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from cass_cdc_pg_spark.operators import reconcile
+
 # ---------------------------------------------------------------------------
 # metrics registry
 # ---------------------------------------------------------------------------
@@ -355,27 +357,28 @@ class HealthCheckService:
 # ---------------------------------------------------------------------------
 
 
+#: Most recent alerts an ``AlertService`` keeps in its local log.
+MAX_ALERTS = 1024
+
+
 class AlertService:
     """Drift alerting (``alert_service.py:135-210``): severity
-    thresholds, local alert log, pluggable push."""
+    thresholds (``reconcile.DRIFT_*_PCT``), a local log of the
+    ``MAX_ALERTS`` most recent alerts, pluggable push."""
 
     def __init__(
         self,
-        warning_threshold: float = 1.0,
-        critical_threshold: float = 5.0,
         pusher: Callable[[dict], None] | None = None,
         metrics: MetricsCollector | None = None,
     ) -> None:
-        self.warning_threshold = warning_threshold
-        self.critical_threshold = critical_threshold
         self.pusher = pusher
         self.metrics = metrics or METRICS
         self.alerts: list[dict] = []
 
     def determine_severity(self, drift_percentage: float) -> str | None:
-        if drift_percentage >= self.critical_threshold:
+        if drift_percentage >= reconcile.DRIFT_CRITICAL_PCT:
             return "critical"
-        if drift_percentage >= self.warning_threshold:
+        if drift_percentage >= reconcile.DRIFT_WARNING_PCT:
             return "warning"
         return None
 
@@ -395,6 +398,7 @@ class AlertService:
             "fired_at": time.time(),
         }
         self.alerts.append(alert)
+        del self.alerts[:-MAX_ALERTS]
         self.metrics.inc("cdc_reconciliation_alerts_total",
                          {"table": table, "severity": severity})
         if self.pusher is not None:
@@ -446,12 +450,9 @@ class ReconciliationScheduler:
                 return None
             self._running.add(table)
         try:
-            from cass_cdc_pg_spark.operators.reconcile import row_count_validation
-
             started = time.time()
             src_df, tgt_df = self.table_sources[table]()
-            row = row_count_validation(src_df, tgt_df).collect()[0]
-            severity = self.alerts.determine_severity(row["drift_pct"])
+            row = reconcile.row_count_validation(src_df, tgt_df).collect()[0]
             job = {
                 "job_id": str(uuid.uuid4()),
                 "table_name": table,
@@ -462,7 +463,7 @@ class ReconciliationScheduler:
                 "mismatch_count": row["mismatch_count"],
                 "drift_percentage": float(row["drift_pct"]),
                 "status": "COMPLETED",
-                "alert_fired": severity is not None,
+                "alert_fired": row["severity"] != "ok",
                 "started_at": started,
                 "completed_at": time.time(),
             }

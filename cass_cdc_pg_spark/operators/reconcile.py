@@ -34,6 +34,10 @@ MISSING_IN_TARGET = "MISSING_IN_TARGET"
 MISSING_IN_SOURCE = "MISSING_IN_SOURCE"
 DATA_MISMATCH = "DATA_MISMATCH"
 
+#: Drift-% severity thresholds of every severity path (``alert_service.py:135-151``).
+DRIFT_WARNING_PCT = 1.0
+DRIFT_CRITICAL_PCT = 5.0
+
 
 def drift_pct(src_count: Column, tgt_count: Column) -> Column:
     """|a-b|/a*100 rounded to 2 dp (``reconciliation_engine.py:107-119``)."""
@@ -42,11 +46,11 @@ def drift_pct(src_count: Column, tgt_count: Column) -> Column:
     )
 
 
-def drift_severity(drift: Column, warning: float = 1.0, critical: float = 5.0) -> Column:
-    """Threshold classification (``src/services/alert_service.py:135-151``)."""
+def drift_severity(drift: Column) -> Column:
+    """Threshold classification of a drift percentage."""
     return (
-        F.when(drift >= critical, F.lit("critical"))
-        .when(drift >= warning, F.lit("warning"))
+        F.when(drift >= DRIFT_CRITICAL_PCT, F.lit("critical"))
+        .when(drift >= DRIFT_WARNING_PCT, F.lit("warning"))
         .otherwise(F.lit("ok"))
     )
 
@@ -103,8 +107,8 @@ def row_count_validation_from_counts(
         f"SELECT CAST({a} AS BIGINT) AS src_count, CAST({b} AS BIGINT) AS tgt_count, "
         f"ABS(CAST({a} AS BIGINT) - CAST({b} AS BIGINT)) AS mismatch_count, "
         f"CAST({drift} AS DOUBLE) AS drift_pct, "
-        f"CASE WHEN {drift} >= 5 THEN 'critical' WHEN {drift} >= 1 THEN 'warning' "
-        f"ELSE 'ok' END AS severity"
+        f"CASE WHEN {drift} >= {DRIFT_CRITICAL_PCT} THEN 'critical' "
+        f"WHEN {drift} >= {DRIFT_WARNING_PCT} THEN 'warning' ELSE 'ok' END AS severity"
     )
     _ROW_COUNT_DF_CACHE[key] = df
     return df

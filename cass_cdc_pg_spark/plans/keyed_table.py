@@ -566,18 +566,18 @@ class KeyedTable:
 
         Returns number of rows removed."""
         hit = F.coalesce(predicate, F.lit(False))
-        hits = self.read().filter(hit)
-        touched = self.bucket_ids(hits)
-        if not touched:
+        # one grouped scan finds the touched buckets and their hit counts
+        per_bucket = self.read().filter(hit).groupBy(self._bucket_col()).count().collect()
+        if not per_bucket:
             return 0
-        n = hits.count()
+        touched = [r[0] for r in per_bucket]
         keep = (
             self.read(buckets=touched)
             .withColumn("_bucket", self._bucket_col())
             .filter(~hit)
         )
         self._publish(keep, touched)
-        return n
+        return sum(r["count"] for r in per_bucket)
 
     def soft_delete_all(self, ts_us: int, event_id: str = "") -> int:
         """TRUNCATE semantics (``change_event.py:115``): soft-delete

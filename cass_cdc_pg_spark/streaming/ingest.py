@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 import time as _time
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +36,7 @@ from cass_cdc_pg_spark.plans.keyed_table import META_COLS, KeyedTable, committed
 from cass_cdc_pg_spark.schema import CHANGE_EVENT_SCHEMA
 from cass_cdc_pg_spark.streaming import transforms
 from cass_cdc_pg_spark.streaming.reliability import CircuitBreaker, retry_with_backoff
+from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
 
 
 def jsonl_stream(
@@ -96,8 +98,6 @@ def discover_cdc_tables(warehouse: str) -> dict[str, dict]:
     registered payload schema as ``col → ddl-type`` (empty if the table
     was never registered).
     """
-    from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
-
     warehouse = warehouse.rstrip("/")
     registry = SchemaRegistry(schema_registry_path(warehouse))
     out: dict[str, dict] = {}
@@ -154,12 +154,13 @@ def dlq_table(spark: SparkSession, warehouse: str) -> KeyedTable:
 
 
 class CdcIngest:
-    """Assembles and runs the ingest pipeline for a set of tables.
+    """Assembles and runs the ingest pipeline for the tables of *key_cols*.
 
-    ``table_schemas``: per-table pinned payload StructType (schema
-    registry stand-in, §1.2).  Schemas register under BACKWARD
-    compatibility, and unseen payload keys are auto-evolved in as
-    nullable string columns (``postgres-sink.json:13-14``).
+    A table's pinned payload schema lives only in the warehouse's
+    ``SchemaRegistry`` (§1.2), which every microbatch reads once:
+    *table_schemas* counts only at a table's first registration, and
+    later changes go through :meth:`evolve_table_schema` (BACKWARD
+    gate) or auto.evolve, from any process on the warehouse.
     """
 
     def __init__(
@@ -170,19 +171,27 @@ class CdcIngest:
         key_cols: dict[str, list[str]],
         num_buckets: int = 32,
     ) -> None:
-        from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
-
         self.spark = spark
         self.warehouse = warehouse.rstrip("/")
-        self.table_schemas = dict(table_schemas)
         self.key_cols = key_cols
         self.num_buckets = num_buckets
         self.breaker = CircuitBreaker()
         os.makedirs(self.warehouse, exist_ok=True)
         self.schema_registry = SchemaRegistry(schema_registry_path(self.warehouse))
-        for name, schema in self.table_schemas.items():
+        for name, schema in table_schemas.items():
             self.schema_registry.register(name, schema)
         self._views: dict[str, list] = {}
+
+    def _pinned(self) -> tuple[dict[str, T.StructType], dict[str, set[int]]]:
+        """One registry read: the served tables' schemas and rejected versions."""
+        schemas, rejected = self.schema_registry.pinned_schemas()
+        served = [n for n in schemas if n in self.key_cols]
+        return {n: schemas[n] for n in served}, {n: rejected[n] for n in served}
+
+    @property
+    def table_schemas(self) -> MappingProxyType:
+        """Read-only view of the served tables' registered payload schemas."""
+        return MappingProxyType(self._pinned()[0])
 
     # -- incremental materialized views -------------------------------------
 
@@ -199,9 +208,9 @@ class CdcIngest:
         (delta cost O(batch), replay-exactly-once via the batch_id
         high-water mark) — the answer the reference recomputes per
         request (`src/api/main.py:79-83` stats routes) stays
-        materialized here.  Registration is per-process, like
-        ``table_schemas``; the view state itself lives in the
-        warehouse and reattaches across restarts."""
+        materialized here.  Registration is per-process; the view
+        state itself lives in the warehouse and reattaches across
+        restarts."""
         from cass_cdc_pg_spark.streaming.incremental_view import (
             IncrementalAggView,
         )
@@ -224,27 +233,12 @@ class CdcIngest:
     ) -> tuple[bool, int, list]:
         """Propose a new payload schema for *name* through the
         compatibility gate.  Accepted (e.g. ADD_COLUMN): the pinned
-        schema advances — new merges carry the column, old buckets
-        backfill NULL via mergeSchema, nothing is rewritten.  Rejected
-        (e.g. MODIFY_COLUMN under BACKWARD): the version is recorded
-        REJECTED and events carrying it are DLQ'd as SCHEMA_MISMATCH."""
-        ok, version, changes = self.schema_registry.evolve(name, new_schema)
-        if ok:
-            self.table_schemas[name] = new_schema
-        return ok, version, changes
-
-    def _auto_add_columns(self, name: str, unknown_keys: list[str]) -> None:
-        """auto.evolve (``postgres-sink.json:13-14``): unseen payload
-        keys become nullable string columns (the map transport carries
-        no richer type).  Retyping one later is a MODIFY_COLUMN, which
-        the BACKWARD gate rejects by design (FR-017) — it requires
-        registering the table's schema with compatibility NONE, exactly
-        as a manual ``ALTER`` on the reference's target would."""
-        schema = self.table_schemas[name]
-        fields = list(schema.fields) + [
-            T.StructField(k, T.StringType(), True) for k in sorted(unknown_keys)
-        ]
-        self.evolve_table_schema(name, T.StructType(fields))
+        schema advances for every process on the warehouse — new
+        merges carry the column, old buckets backfill NULL via
+        mergeSchema, nothing is rewritten.  Rejected (e.g.
+        MODIFY_COLUMN under BACKWARD): the version is recorded REJECTED
+        and events carrying it are DLQ'd as SCHEMA_MISMATCH."""
+        return self.schema_registry.evolve(name, new_schema)
 
     def table(self, name: str) -> KeyedTable:
         return KeyedTable(
@@ -259,19 +253,15 @@ class CdcIngest:
         cls, spark: SparkSession, warehouse: str, **kwargs
     ) -> "CdcIngest":
         """Construct an ingest pipeline from warehouse discovery alone
-        (S9): table set, key columns, and payload schemas all come from
-        the catalog — the config-dict parameters of ``__init__`` are
-        the connector-config path; this is the
-        ``get_cdc_enabled_tables`` path."""
-        found = discover_cdc_tables(warehouse)
-        schemas, keys = {}, {}
-        for name, info in found.items():
-            if not info["key_cols"] or not info["columns"]:
-                continue  # never merged / never registered — not live
-            ddl = ", ".join(f"{c} {t}" for c, t in info["columns"].items())
-            schemas[name] = T.StructType.fromDDL(ddl)
-            keys[name] = info["key_cols"]
-        return cls(spark, warehouse, schemas, keys, **kwargs)
+        (S9): table set and key columns come from the catalog, payload
+        schemas from the registry — the config-dict parameters of
+        ``__init__`` are the connector-config path; this is the
+        ``get_cdc_enabled_tables`` path.  Tables never merged or never
+        registered are not live."""
+        keys = {name: info["key_cols"]
+                for name, info in discover_cdc_tables(warehouse).items()
+                if info["key_cols"] and info["columns"]}
+        return cls(spark, warehouse, {}, keys, **kwargs)
 
     @classmethod
     def from_config(
@@ -279,7 +269,8 @@ class CdcIngest:
     ) -> "CdcIngest":
         """Construct an ingest pipeline from the table-config JSON (the
         connector-config analog the API and the CLI load):
-        ``{"tables": {name: {"ddl": "<payload DDL>", "keys": [...]}}}``."""
+        ``{"tables": {name: {"ddl": "<payload DDL>", "keys": [...]}}}``.
+        A table's DDL counts only at its first registration."""
         tables = config["tables"]
         return cls(
             spark,
@@ -303,9 +294,7 @@ class CdcIngest:
         — including ones captured concurrently with the snapshot scan —
         wins over its seed row by LWW, which is exactly why
         snapshot-then-stream converges without coordination."""
-        from cass_cdc_pg_spark.streaming.transforms import check_payload_schema
-
-        check_payload_schema(self.table_schemas[name])
+        transforms.check_payload_schema(self.table_schemas[name])
         stamped = snapshot.withColumns(
             {
                 "_cdc_deleted": F.lit(False),
@@ -336,12 +325,11 @@ class CdcIngest:
         # T3 addEventId runs before validation, as in the reference's
         # source connector (cassandra-source.json:48-50)
         events = transforms.add_event_id(events)
+        # the batch's one registry read: classify, auto.evolve and
+        # unwrap all use these schemas
+        schemas, rejected = self._pinned()
         tagged = transforms.classify(
-            events,
-            self.table_schemas,
-            {name: self.schema_registry.rejected_versions(name)
-             for name in self.table_schemas},
-            int(_time.time() * 1_000_000),
+            events, schemas, rejected, int(_time.time() * 1_000_000)
         ).persist()
         try:
             # schema-change detection (auto.evolve) is one more agg
@@ -391,18 +379,21 @@ class CdcIngest:
                         r["payload_keys"] or ()
                     )
 
-            # schema-change detection (auto.evolve): unseen payload keys
-            # of merging events advance the pinned schema through the
-            # compatibility gate.  Classifying first routes events as
-            # classifying after would: the added columns are nullable
-            # strings, which no compatibility mode rejects and no value
-            # fails to convert to.
+            # auto.evolve (postgres-sink.json:13-14): unseen payload
+            # keys of merging events become nullable string columns (the
+            # map transport carries no richer type; retyping one later
+            # is a MODIFY_COLUMN, FR-017) and the merge uses the schema
+            # the registry accepted.  Classifying first routes events as
+            # classifying after would: such columns no compatibility
+            # mode rejects and no value fails to convert to.
             for name, keys in row_tables.items():
-                unknown = keys - {f.name for f in self.table_schemas[name].fields}
-                if unknown:
-                    self._auto_add_columns(name, sorted(unknown))
+                unknown = sorted(keys - set(schemas[name].fieldNames()))
+                evolved = T.StructType([*schemas[name].fields, *(
+                    T.StructField(k, T.StringType()) for k in unknown)])
+                if unknown and self.evolve_table_schema(name, evolved)[0]:
+                    schemas[name] = evolved
 
-            for name, payload_schema in self.table_schemas.items():
+            for name, payload_schema in schemas.items():
                 if name in row_tables:
                     ok = tagged.filter(
                         (F.col("source_table") == name)

@@ -10,7 +10,8 @@ Mirrors the reference's schema service semantics
 
 - **detect**: diff two column sets → ADD_COLUMN / DROP_COLUMN /
   MODIFY_COLUMN change records;
-- **compatibility** (per table mode, default BACKWARD):
+- **compatibility** (``check_compatibility``; the registry gates every
+  table BACKWARD):
   - BACKWARD: adds must be nullable-or-defaulted; drops OK; type
     changes never compatible;
   - FORWARD: adds OK; type changes never compatible;
@@ -21,10 +22,12 @@ Mirrors the reference's schema service semantics
   recorded REJECTED and events carrying its ``schema_version`` are
   DLQ'd as SCHEMA_MISMATCH by the ingest loop.
 
-The registry itself is metadata (a handful of versions per table — the
-reference keeps it in a Postgres table ``_cdc_schema_metadata``,
-``docker/postgres/init-db.sql:4-22``); it lives in one fsync'd JSON
-manifest, same durability model as the KeyedTable manifest.
+The registry is the one holder of a table's pinned payload schema:
+``CdcIngest`` keeps no copy and reads :meth:`SchemaRegistry.pinned_schemas`
+once per microbatch.  It is metadata (a handful of versions per table —
+the reference keeps it in a Postgres table ``_cdc_schema_metadata``,
+``docker/postgres/init-db.sql:4-22``) in one fsync'd JSON manifest,
+same durability model as the KeyedTable manifest.
 """
 
 from __future__ import annotations
@@ -47,17 +50,9 @@ FULL = "FULL"
 NONE = "NONE"
 
 
-class SchemaCompatibilityError(ValueError):
-    """Raised when an evolution violates the table's compatibility mode."""
-
-
-def canonical_type(dt: T.DataType) -> str:
-    """Engine-portable type name (Spark ``simpleString``)."""
-    return dt.simpleString()
-
-
 def struct_columns(st: T.StructType) -> dict[str, str]:
-    return {f.name: canonical_type(f.dataType) for f in st.fields}
+    """{column → engine-portable type name (Spark ``simpleString``)}."""
+    return {f.name: f.dataType.simpleString() for f in st.fields}
 
 
 def detect_changes(
@@ -125,12 +120,30 @@ def check_compatibility(
     return True, None
 
 
+def _version(number: int, schema: T.StructType, changes: list,
+             status: str = "ACTIVE", reason: str | None = None) -> dict:
+    """One entry of a table's version list."""
+    return {
+        "version": number,
+        "columns": struct_columns(schema),
+        "nullable": {f.name: f.nullable for f in schema.fields},
+        "changes": changes,
+        "status": status,
+        "reason": reason,
+        "registered_at": time.time(),
+    }
+
+
+def _rejected(entry: dict) -> set[int]:
+    return {v["version"] for v in entry["versions"] if v["status"] == "REJECTED"}
+
+
 class SchemaRegistry:
     """Versioned per-table schema metadata (S8 + SchemaMetadata).
 
     One JSON manifest holding, per table: the version list (columns,
-    change records, ACTIVE/REJECTED status, registration time) and the
-    compatibility mode."""
+    nullability, change records, ACTIVE/REJECTED status, registration
+    time) and the compatibility mode."""
 
     def __init__(self, path: str) -> None:
         self.path = path.rstrip("/")
@@ -152,27 +165,15 @@ class SchemaRegistry:
 
     # -- API ----------------------------------------------------------------
 
-    def register(
-        self, table: str, schema: T.StructType, compatibility: str = BACKWARD
-    ) -> int:
-        """Idempotently register schema v1 for *table* (INITIAL)."""
+    def register(self, table: str, schema: T.StructType) -> int:
+        """Idempotently register schema v1 for *table* (INITIAL); a
+        table already registered keeps its versions."""
         data = self._load()
         if table in data["tables"]:
-            return self.current_version(table)
-        data["tables"][table] = {
-            "compatibility": compatibility,
-            "versions": [
-                {
-                    "version": 1,
-                    "columns": struct_columns(schema),
-                    "nullable": {f.name: f.nullable for f in schema.fields},
-                    "changes": [{"type": "INITIAL", "column": None,
-                                 "old_type": None, "new_type": None}],
-                    "status": "ACTIVE",
-                    "registered_at": time.time(),
-                }
-            ],
-        }
+            return self._active(data["tables"][table])["version"]
+        initial = {"type": "INITIAL", "column": None, "old_type": None, "new_type": None}
+        data["tables"][table] = {"compatibility": BACKWARD,
+                                 "versions": [_version(1, schema, [initial])]}
         self._save(data)
         return 1
 
@@ -191,9 +192,23 @@ class SchemaRegistry:
 
     def rejected_versions(self, table: str) -> set[int]:
         entry = self._load()["tables"].get(table)
-        if not entry:
-            return set()
-        return {v["version"] for v in entry["versions"] if v["status"] == "REJECTED"}
+        return _rejected(entry) if entry else set()
+
+    def pinned_schemas(self) -> tuple[dict[str, T.StructType], dict[str, set[int]]]:
+        """From one manifest read: each table's ACTIVE payload schema,
+        rebuilt from the version's ``columns`` and ``nullable``, and its
+        REJECTED version numbers.  Nested fields come back nullable (only
+        top-level nullability is stored).  Needs an active Spark session
+        (the column types are parsed as DDL)."""
+        schemas, rejected = {}, {}
+        for table, entry in self._load()["tables"].items():
+            v = self._active(entry)
+            schemas[table] = T.StructType.fromDDL(", ".join(
+                "`{}` {}{}".format(c.replace("`", "``"), t,
+                                   "" if v["nullable"][c] else " NOT NULL")
+                for c, t in v["columns"].items()))
+            rejected[table] = _rejected(entry)
+        return schemas, rejected
 
     def evolve(self, table: str, new_schema: T.StructType) -> tuple[bool, int, list]:
         """Propose *new_schema* as the next version.
@@ -204,8 +219,7 @@ class SchemaRegistry:
         data = self._load()
         entry = data["tables"][table]
         active = self._active(entry)
-        new_cols = struct_columns(new_schema)
-        changes = detect_changes(active["columns"], new_cols)
+        changes = detect_changes(active["columns"], struct_columns(new_schema))
         if not changes:
             return True, active["version"], []
         ok, reason = check_compatibility(
@@ -214,17 +228,8 @@ class SchemaRegistry:
             {f.name: f.nullable for f in new_schema.fields},
         )
         version = entry["versions"][-1]["version"] + 1
-        entry["versions"].append(
-            {
-                "version": version,
-                "columns": new_cols,
-                "nullable": {f.name: f.nullable for f in new_schema.fields},
-                "changes": changes,
-                "status": "ACTIVE" if ok else "REJECTED",
-                "reason": reason,
-                "registered_at": time.time(),
-            }
-        )
+        entry["versions"].append(_version(
+            version, new_schema, changes, "ACTIVE" if ok else "REJECTED", reason))
         self._save(data)
         return ok, version, changes
 

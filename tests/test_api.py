@@ -9,6 +9,7 @@ import json
 import urllib.error
 import urllib.request
 
+import pytest
 from pyspark.sql import types as T
 
 from cass_cdc_pg_spark.api import CdcApiServer, CdcApiService
@@ -360,3 +361,19 @@ def test_api_gdpr_delete_deletes_once(spark, tmp_path, monkeypatch):
     assert out["status"] == "success" and out["deleted_from_target"] is True
     assert calls == [f"{wh}/cdc_users"]
     assert KeyedTable(spark, f"{wh}/cdc_users", ["id"]).read_live().count() == 0
+
+
+def test_api_job_registry_keeps_only_the_most_recent(spark, monkeypatch):
+    """A long-running server keeps the ``MAX_JOBS`` most recent
+    reconciliation jobs; older ones answer 404."""
+    from cass_cdc_pg_spark import api
+
+    monkeypatch.setattr(api, "MAX_JOBS", 2)
+    svc = CdcApiService(spark, sf_dir=SF)
+    ids = [svc.reconciliation_trigger({"strategy": "row_count"})["job_id"]
+           for _ in range(3)]
+    assert [j["job_id"] for j in svc.reconciliation_jobs()] == ids[1:]
+    assert svc.reconciliation_job(ids[2])["status"] == "completed"
+    with pytest.raises(api.ApiError) as e:
+        svc.reconciliation_job(ids[0])
+    assert e.value.status == 404

@@ -69,6 +69,19 @@ def test_alert_severity_thresholds():
     assert a.determine_severity(5.0) == "critical"
 
 
+def test_alert_log_keeps_only_the_most_recent(monkeypatch):
+    """The local alert log of a long-running service is bounded: past
+    ``MAX_ALERTS`` the oldest alerts are forgotten, and it stays a list."""
+    from cass_cdc_pg_spark import monitoring
+
+    monkeypatch.setattr(monitoring, "MAX_ALERTS", 3)
+    a = AlertService(metrics=MetricsCollector())
+    for i in range(5):
+        a.send_reconciliation_alert("t", 7.0, i, f"job-{i}")
+    assert isinstance(a.alerts, list)
+    assert [x["job_id"] for x in a.alerts] == ["job-2", "job-3", "job-4"]
+
+
 def test_drift_5pct_fires_critical_alert(spark, tmp_path):
     """VERDICT r1 'done' criterion: a drift-5% run emits a critical
     alert record."""

@@ -136,6 +136,42 @@ def test_keyed_table_merge_shuffles_once(spark, tmp_path):
     assert t.read().count() == 200
 
 
+def test_delete_where_finds_buckets_and_count_in_one_pass(spark, tmp_path):
+    """``delete_where`` learns the touched buckets and the hit count
+    from one grouped scan, then rewrites only those buckets: at most 8
+    Spark jobs on an 8-bucket, 1000-row table with one delta (two
+    separate merge-on-read scans for the two values took 10), for one
+    key or 20 alike.  A NULL predicate result keeps the row."""
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+
+    def batch(n, ts):
+        return spark.range(n).selectExpr(
+            "CAST(id AS STRING) AS id", "IF(id = 7, NULL, id) AS v",
+            "false AS _cdc_deleted", f"CAST({ts} AS LONG) AS _cdc_timestamp_micros",
+            "'' AS _last_event_id", "CAST(NULL AS LONG) AS _ttl_expiry_timestamp_us")
+
+    sc = spark.sparkContext
+    for nkeys in (1, 20):
+        t = KeyedTable(spark, str(tmp_path / f"kt{nkeys}"), ["id"], num_buckets=8)
+        t.merge(batch(1000, 1))
+        t.merge(batch(100, 2))  # one delta over the base
+        group = f"delete-where-{nkeys}"
+        sc.setJobGroup(group, "delete_where job budget")
+        try:
+            # ids 0..nkeys-1 hit; id 7 has v NULL, so the predicate is
+            # NULL there and the row stays
+            n = t.delete_where(F.col("id").isin([str(i) for i in range(nkeys)])
+                               & (F.col("v") >= 0))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= 8, sorted(jobs)
+        expect = nkeys - (1 if nkeys > 7 else 0)
+        assert n == expect
+        assert t.read().count() == 1000 - expect
+
+
 def test_clean_ingest_batch_skips_the_dlq(spark, tmp_path):
     """A microbatch with no bad event classifies once and never touches
     the DLQ: at most 5 Spark jobs under its job group (the summary

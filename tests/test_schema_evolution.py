@@ -176,3 +176,92 @@ def test_drop_column_is_compatible(spark, ingest):
     rows = {r["id"]: r.asDict() for r in ingest.table("users").read().collect()}
     assert rows[U1]["age"] == 30       # mergeSchema keeps the old column
     assert rows[U2]["username"] == "b"
+
+
+# -- the registry is the one schema authority -------------------------------
+
+USERS_CFG = {"tables": {"users": {"ddl": "id string, username string, age int",
+                                  "keys": ["id"]}}}
+
+
+def _unwrap_schemas(monkeypatch) -> list:
+    """Record the payload schema of every unwrap the ingest runs."""
+    from cass_cdc_pg_spark.streaming import transforms
+
+    seen, orig = [], transforms.unwrap
+    monkeypatch.setattr(transforms, "unwrap",
+                        lambda ev, pt: seen.append(pt) or orig(ev, pt))
+    return seen
+
+
+def test_config_built_ingest_merges_with_the_evolved_schema(spark, tmp_path):
+    """A second ingest built from the same config (as every DLQ replay
+    and restarted stream is) extracts with the registry's evolved
+    schema: a typed ADD of ``score double`` merges 2.5 as a double, and
+    no bogus string MODIFY is registered as a third version."""
+    wh = str(tmp_path / "wh")
+    first = CdcIngest.from_config(spark, wh, USERS_CFG)
+    ok, ver, _ = first.evolve_table_schema(
+        "users", T.StructType([*V1.fields, T.StructField("score", T.DoubleType())]))
+    assert ok and ver == 2
+    first.process_batch(spark.createDataFrame(
+        [_ev(1, 1000, {"id": U1, "username": "a", "age": "30", "score": "1.5"},
+             version=2)], CHANGE_EVENT_DDL))
+
+    second = CdcIngest.from_config(spark, wh, USERS_CFG)
+    second.process_batch(spark.createDataFrame(
+        [_ev(2, 2000, {"id": U2, "username": "b", "age": "31", "score": "2.5"},
+             version=2)], CHANGE_EVENT_DDL))
+    rows = {r["id"]: r for r in second.table("users").read_live().collect()}
+    assert rows[U1]["score"] == 1.5 and rows[U2]["score"] == 2.5
+    assert [v["status"] for v in second.schema_registry.history("users")] == [
+        "ACTIVE", "ACTIVE"]
+    assert second.schema_registry.rejected_versions("users") == set()
+
+
+@pytest.mark.parametrize("name", ["USERS_SCHEMA", "EXOTIC_SCHEMA"])
+def test_registry_round_trips_the_registered_schema(spark, tmp_path, monkeypatch, name):
+    """The schema rebuilt from the registry's stored columns and
+    nullability equals the registered StructType — for a config-built
+    ingest, for what its merge unwraps with, and for discovery."""
+    from test_ingest_regressions import USERS_SCHEMA
+    from test_type_matrix import EXOTIC_SCHEMA
+
+    schema = {"USERS_SCHEMA": USERS_SCHEMA, "EXOTIC_SCHEMA": EXOTIC_SCHEMA}[name]
+    wh = str(tmp_path / "wh")
+    cfg = {"tables": {"users": {"ddl": schema.toDDL(), "keys": ["id"]}}}
+    ing = CdcIngest.from_config(spark, wh, cfg)
+    assert ing.schema_registry.pinned_schemas()[0]["users"] == schema
+    assert ing.table_schemas["users"] == schema
+    seen = _unwrap_schemas(monkeypatch)
+    ing.process_batch(spark.createDataFrame(
+        [_ev(1, 1000, {"id": U1})], CHANGE_EVENT_DDL))
+    assert seen == [schema]
+    assert CdcIngest.discover(spark, wh).table_schemas["users"] == schema
+
+
+def test_config_built_ingest_honours_an_accepted_drop(spark, ingest, monkeypatch):
+    """After an accepted DROP_COLUMN, an ingest built from the original
+    config no longer extracts the dropped column: the config DDL counts
+    only at the table's first registration."""
+    ingest.process_batch(spark.createDataFrame(
+        [_ev(1, 1000, {"id": U1, "username": "a", "age": "30"})], CHANGE_EVENT_DDL))
+    narrowed = T.StructType(V1.fields[:2])
+    ok, ver, _ = ingest.evolve_table_schema("users", narrowed)
+    assert ok
+
+    again = CdcIngest.from_config(spark, ingest.warehouse, USERS_CFG)
+    assert again.table_schemas["users"] == narrowed
+    seen = _unwrap_schemas(monkeypatch)
+    again.process_batch(spark.createDataFrame(
+        [_ev(2, 2000, {"id": U2, "username": "b"}, version=ver)], CHANGE_EVENT_DDL))
+    assert seen == [narrowed]
+    rows = {r["id"]: r.asDict() for r in again.table("users").read().collect()}
+    assert rows[U1]["age"] == 30 and rows[U2]["age"] is None
+    assert len(again.schema_registry.history("users")) == 2
+
+
+def test_table_schemas_is_a_read_only_view(ingest):
+    with pytest.raises(TypeError):
+        ingest.table_schemas["users"] = V1
+    assert dict(ingest.table_schemas) == {"users": V1}
