@@ -1,8 +1,22 @@
 """SparkSession construction and runtime configuration.
 
-The driver may hand us an already-built session, so every conf we
-depend on must be runtime-settable; ``configure()`` is idempotent and
-called from every public entry point.
+The driver may hand us an already-built session, so every conf the
+engine's *results* depend on is runtime-settable (``_RUNTIME_CONF``);
+``configure()`` is idempotent and called from every public entry point.
+
+One static conf is set only in :func:`get_spark`'s builder:
+``spark.python.sql.dataFrameDebugging.enabled=false``.  With it on
+(PySpark's default), every classic ``Column`` method and ``F.*``
+function runs under ``pyspark.errors.utils._with_origin``, which per
+call looks up the active session, reads a conf, sets and clears the
+JVM call-site origin over py4j, and walks the Python stack, importing
+``IPython`` if it is installed.  Turning it off halves the py4j round
+trips of a microbatch and keeps IPython out of the driver.  What it
+gives up: the Python ``file:line`` in a DataFrame error's query
+context; the error message itself is unchanged.  The conf is static
+(``spark.conf.isModifiable`` is False), so ``configure()`` cannot
+apply it: a session the driver hands us keeps PySpark's default and
+is slower to build plans in, but not wrong.
 """
 
 from __future__ import annotations
@@ -102,6 +116,8 @@ def get_spark(app_name: str = "cass-cdc-pg-spark", shuffle_partitions: int | Non
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
+        # static, so builder-only: see the module docstring
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

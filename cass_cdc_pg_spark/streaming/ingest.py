@@ -182,11 +182,14 @@ class CdcIngest:
             self.schema_registry.register(name, schema)
         self._views: dict[str, list] = {}
 
-    def _pinned(self) -> tuple[dict[str, T.StructType], dict[str, set[int]]]:
-        """One registry read: the served tables' schemas and rejected versions."""
-        schemas, rejected = self.schema_registry.pinned_schemas()
-        served = [n for n in schemas if n in self.key_cols]
-        return {n: schemas[n] for n in served}, {n: rejected[n] for n in served}
+    def _pinned(self) -> tuple[
+        dict[str, T.StructType], dict[str, set[int]], dict[str, T.StructType]
+    ]:
+        """One registry read: the served tables' schemas, rejected
+        versions and retired columns (:meth:`SchemaRegistry.pinned_schemas`)."""
+        read = self.schema_registry.pinned_schemas()
+        served = [n for n in read[0] if n in self.key_cols]
+        return tuple({n: part[n] for n in served} for part in read)
 
     @property
     def table_schemas(self) -> MappingProxyType:
@@ -327,9 +330,13 @@ class CdcIngest:
         events = transforms.add_event_id(events)
         # the batch's one registry read: classify, auto.evolve and
         # unwrap all use these schemas
-        schemas, rejected = self._pinned()
+        schemas, rejected, retired = self._pinned()
+        # a retired column's values are checked against the type it
+        # last had: auto.evolve below re-adds it with that type
+        probed = {n: T.StructType([*s.fields, *retired[n].fields])
+                  for n, s in schemas.items()}
         tagged = transforms.classify(
-            events, schemas, rejected, int(_time.time() * 1_000_000)
+            events, probed, rejected, int(_time.time() * 1_000_000)
         ).persist()
         try:
             # schema-change detection (auto.evolve) is one more agg
@@ -380,16 +387,20 @@ class CdcIngest:
                     )
 
             # auto.evolve (postgres-sink.json:13-14): unseen payload
-            # keys of merging events become nullable string columns (the
-            # map transport carries no richer type; retyping one later
-            # is a MODIFY_COLUMN, FR-017) and the merge uses the schema
-            # the registry accepted.  Classifying first routes events as
-            # classifying after would: such columns no compatibility
-            # mode rejects and no value fails to convert to.
+            # keys of merging events become nullable columns and the
+            # merge uses the schema the registry accepted.  A retired
+            # column comes back with the type it last had (older files
+            # still hold it; another type fails every later read with
+            # CANNOT_MERGE_SCHEMAS); any other key is a string (the map
+            # transport carries no richer type; retyping one later is a
+            # MODIFY_COLUMN, FR-017).  Classifying first routes events
+            # as classifying after would: such columns no compatibility
+            # mode rejects, and classify probed the retired types.
             for name, keys in row_tables.items():
                 unknown = sorted(keys - set(schemas[name].fieldNames()))
+                past = {f.name: f for f in retired[name].fields}
                 evolved = T.StructType([*schemas[name].fields, *(
-                    T.StructField(k, T.StringType()) for k in unknown)])
+                    past.get(k, T.StructField(k, T.StringType())) for k in unknown)])
                 if unknown and self.evolve_table_schema(name, evolved)[0]:
                     schemas[name] = evolved
 

@@ -134,6 +134,15 @@ def _version(number: int, schema: T.StructType, changes: list,
     }
 
 
+def _struct(columns: dict[str, str], nullable: dict[str, bool]) -> T.StructType:
+    """A stored ``{column → type}`` map as a StructType (a column absent
+    from *nullable* is nullable)."""
+    return T.StructType.fromDDL(", ".join(
+        "`{}` {}{}".format(c.replace("`", "``"), t,
+                           "" if nullable.get(c, True) else " NOT NULL")
+        for c, t in columns.items()))
+
+
 def _rejected(entry: dict) -> set[int]:
     return {v["version"] for v in entry["versions"] if v["status"] == "REJECTED"}
 
@@ -194,21 +203,29 @@ class SchemaRegistry:
         entry = self._load()["tables"].get(table)
         return _rejected(entry) if entry else set()
 
-    def pinned_schemas(self) -> tuple[dict[str, T.StructType], dict[str, set[int]]]:
+    def pinned_schemas(self) -> tuple[
+        dict[str, T.StructType], dict[str, set[int]], dict[str, T.StructType]
+    ]:
         """From one manifest read: each table's ACTIVE payload schema,
-        rebuilt from the version's ``columns`` and ``nullable``, and its
-        REJECTED version numbers.  Nested fields come back nullable (only
-        top-level nullability is stored).  Needs an active Spark session
-        (the column types are parsed as DDL)."""
-        schemas, rejected = {}, {}
+        rebuilt from the version's ``columns`` and ``nullable``, its
+        REJECTED version numbers, and its *retired* columns — each
+        column an earlier ACTIVE version held and the current one does
+        not, nullable, with the type it last had (the type older data
+        files still carry, so a re-add must use it).  Nested fields come
+        back nullable (only top-level nullability is stored).  Needs an
+        active Spark session (the column types are parsed as DDL)."""
+        schemas, rejected, retired = {}, {}, {}
         for table, entry in self._load()["tables"].items():
             v = self._active(entry)
-            schemas[table] = T.StructType.fromDDL(", ".join(
-                "`{}` {}{}".format(c.replace("`", "``"), t,
-                                   "" if v["nullable"][c] else " NOT NULL")
-                for c, t in v["columns"].items()))
+            schemas[table] = _struct(v["columns"], v["nullable"])
             rejected[table] = _rejected(entry)
-        return schemas, rejected
+            last: dict[str, str] = {}
+            for old in entry["versions"]:
+                if old["status"] == "ACTIVE":
+                    last.update(old["columns"])
+            gone = {c: t for c, t in last.items() if c not in v["columns"]}
+            retired[table] = _struct(gone, {}) if gone else T.StructType()
+        return schemas, rejected, retired
 
     def evolve(self, table: str, new_schema: T.StructType) -> tuple[bool, int, list]:
         """Propose *new_schema* as the next version.

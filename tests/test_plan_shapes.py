@@ -216,6 +216,54 @@ def test_clean_ingest_batch_skips_the_dlq(spark, tmp_path):
     assert [r["error_type"] for r in dlq] == ["TYPE_CONVERSION_ERROR"]
 
 
+def test_ingest_plan_building_round_trips(spark, monkeypatch):
+    """Building (not running) a microbatch's transform chain for one
+    table stays under 1,000 py4j gateway commands.  With PySpark's
+    per-Column call-site capture on (its default), every Column method
+    and ``F.*`` call adds a conf read and a set and clear of the JVM
+    origin, and the same chain takes about 2,900; ``get_spark`` turns
+    it off."""
+    import time
+
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.sql import types as T
+
+    from cass_cdc_pg_spark.streaming import transforms
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    schema = T.StructType([
+        T.StructField("id", T.StringType(), False),
+        T.StructField("username", T.StringType()),
+        T.StructField("age", T.IntegerType()),
+    ])
+    events = spark.createDataFrame(
+        [], "event_id string, source_table string, operation_type string, "
+            "timestamp_micros long, before map<string,string>, "
+            "after map<string,string>, schema_version int, ttl_seconds int, "
+            "is_tombstone boolean")
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    def build():
+        tagged = transforms.classify(
+            transforms.add_event_id(events), {"users": schema},
+            {"users": {3}}, int(time.time() * 1_000_000))
+        ok = tagged.filter(F.col("_error_type").isNull())
+        transforms.add_cdc_metadata(transforms.unwrap(ok, schema))
+
+    # the first build also pays py4j's one-time JVM class and method
+    # lookups; every later microbatch pays only what the second does
+    build()
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    build()
+    monkeypatch.undo()
+    assert sent[0] <= 1000, sent[0]
+
+
 def test_crash_between_delta_write_and_manifest_is_invisible(spark, tmp_path):
     """LSM durability: a delta directory written without a manifest
     swap (crash window) is ignored by reads and GC'd by the next

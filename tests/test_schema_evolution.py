@@ -265,3 +265,33 @@ def test_table_schemas_is_a_read_only_view(ingest):
     with pytest.raises(TypeError):
         ingest.table_schemas["users"] = V1
     assert dict(ingest.table_schemas) == {"users": V1}
+
+
+def test_readded_column_takes_its_last_registered_type(spark, ingest):
+    """After an accepted DROP_COLUMN of ``age int``, an event whose
+    payload still carries ``age`` re-adds it as ``int`` (its type in the
+    version history), not ``string``: older files hold ``age`` as int,
+    so a string re-add fails every later read with CANNOT_MERGE_SCHEMAS.
+    A value that does not convert to the old type goes to the DLQ."""
+    ingest.process_batch(spark.createDataFrame(
+        [_ev(1, 1000, {"id": U1, "username": "a", "age": "30"})], CHANGE_EVENT_DDL))
+    ok, ver, changes = ingest.evolve_table_schema("users", T.StructType(V1.fields[:2]))
+    assert ok and changes[0]["type"] == DROP_COLUMN
+    ingest.process_batch(spark.createDataFrame(
+        [_ev(2, 2000, {"id": U2, "username": "b", "age": "31"}, version=ver),
+         _ev(3, 3000, {"id": "x", "username": "c", "age": "old"}, version=ver)],
+        CHANGE_EVENT_DDL))
+
+    history = ingest.schema_registry.history("users")
+    assert [v["status"] for v in history] == ["ACTIVE"] * 3
+    assert history[-1]["columns"]["age"] == "int"
+    live = ingest.table("users").read_live()
+    assert live.schema["age"].dataType == T.IntegerType()
+    assert {r["id"]: r["age"] for r in live.collect()} == {U1: 30, U2: 31}
+    assert [r["error_type"] for r in ingest.dlq().collect()] == [
+        "TYPE_CONVERSION_ERROR"]
+    # a later batch still merges into and reads the table
+    ingest.process_batch(spark.createDataFrame(
+        [_ev(4, 4000, {"id": U1, "username": "a2", "age": "32"}, version=3)],
+        CHANGE_EVENT_DDL))
+    assert ingest.table("users").read_live().filter(F.col("id") == U1).first()["age"] == 32
