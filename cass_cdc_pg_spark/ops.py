@@ -15,14 +15,13 @@ Ports the reference's operational write paths:
 from __future__ import annotations
 
 import json
-import os
-import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+from cass_cdc_pg_spark.plans.keyed_table import META_COLS, KeyedTable
 
 AUDIT_SCHEMA_DDL = (
     "audit_id string, event_type string, event_timestamp_us long, "
@@ -32,36 +31,17 @@ AUDIT_SCHEMA_DDL = (
 
 
 class AuditLog:
-    """Append-only audit sink (S12) with retention sweep (Q19).
-
-    Layout: ``{path}/v-*/`` parquet dirs + an ``_CURRENT`` pointer
-    file naming the active one.  The retention sweep writes survivors
-    to a fresh version dir and flips the pointer with ``os.replace``
-    (atomic), so there is no instant at which the audit path is
-    unreadable — the never-lose-the-audit-log guarantee holds across a
-    crash at any point (ADVICE r2).  Single writer assumed, like the
-    reference's SQL cleanup function (``init-db.sql:87-92``)."""
+    """Append-only audit sink (S12) with retention sweep (Q19), stored
+    as a ``KeyedTable`` keyed on ``audit_id``: an append is one merge
+    and the sweep one ``delete_where``, so both commit through the
+    table's one atomic commit path and the log is readable at every
+    instant, across a crash at any point (ADVICE r2).  Single writer
+    assumed, like the reference's SQL cleanup function
+    (``init-db.sql:87-92``)."""
 
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
-        self.path = path.rstrip("/")
-
-    def _pointer(self) -> str:
-        return f"{self.path}/_CURRENT"
-
-    def _data_dir(self) -> str:
-        try:
-            with open(self._pointer()) as fh:
-                return f"{self.path}/{fh.read().strip()}"
-        except FileNotFoundError:
-            return f"{self.path}/v-0"
-
-    def _flip_pointer(self, version: str) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = f"{self.path}/_CURRENT.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, self._pointer())
+        self.table = KeyedTable(spark, path, ["audit_id"], num_buckets=1)
 
     def append(
         self,
@@ -74,10 +54,11 @@ class AuditLog:
         details: dict | None = None,
     ) -> str:
         audit_id = str(uuid.uuid4())
+        now_us = int(time.time() * 1_000_000)
         row = (
             audit_id,
             event_type,
-            int(time.time() * 1_000_000),
+            now_us,
             requester,
             table_name,
             record_identifier,
@@ -85,36 +66,24 @@ class AuditLog:
             reason,
             json.dumps(details or {}, sort_keys=True),
         )
-        data = self._data_dir()
-        if not os.path.exists(self._pointer()):
-            self._flip_pointer(os.path.basename(data))
-        self.spark.createDataFrame([row], AUDIT_SCHEMA_DDL).write.mode(
-            "append"
-        ).parquet(data)
+        self.table.upsert(
+            self.spark.createDataFrame([row], AUDIT_SCHEMA_DDL), now_us
+        )
         return audit_id
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self._data_dir())
+        return self.table.read_live().drop(*META_COLS)
 
     def purge_old(self, retention_days: int = 365, now_us: int | None = None) -> int:
-        """1-year retention (``init-db.sql:87-92``): write survivors to
-        a fresh version dir, atomically flip the pointer, drop the old
-        dir; returns rows removed."""
+        """1-year retention (``init-db.sql:87-92``): hard-delete entries
+        older than the window in one rewrite commit; returns rows
+        removed."""
         if now_us is None:
             now_us = int(time.time() * 1_000_000)
         cutoff = now_us - retention_days * 86_400 * 1_000_000
-        old_dir = self._data_dir()
-        df = self.read()
-        total = df.count()
-        kept = df.filter(df.event_timestamp_us >= cutoff)
-        n_kept = kept.count()
-        if n_kept == total:
+        if not self.table.exists():
             return 0
-        version = f"v-{uuid.uuid4().hex[:8]}"
-        kept.write.mode("overwrite").parquet(f"{self.path}/{version}")
-        self._flip_pointer(version)
-        shutil.rmtree(old_dir, ignore_errors=True)
-        return total - n_kept
+        return self.table.delete_where(F.col("event_timestamp_us") < F.lit(cutoff))
 
 
 class GdprService:

@@ -19,6 +19,9 @@ merge-on-read:
   rewritten.  The batch is shuffled once, by bucket; the LWW aggregate
   reuses that clustering, so a merge is two Spark jobs (the shuffle
   stage, then the reduce-and-write);
+- a TRUNCATE is a merge too: ``truncate_tombstones`` turns it into a
+  soft-delete tombstone per key it beats, merged in the same commit as
+  the batch's row events, so the change feed carries it like a DELETE;
 - reads union base+deltas and LWW-reduce per key (merge-on-read);
   buckets with no deltas skip the reduce;
 - a bucket whose delta count exceeds ``compact_threshold`` is
@@ -241,7 +244,9 @@ class KeyedTable:
         snapshot diff, no shuffle (the reader applies its own LWW
         fold if it needs net-effect rather than per-commit rows).
         Deletes arrive as rows with ``_cdc_deleted = true`` (the
-        tombstone contract of the merge path), so the feed is
+        tombstone contract of the merge path), and so does a TRUNCATE:
+        it commits as a merge of one tombstone per row it beats
+        (``truncate_tombstones``).  The feed is therefore
         self-contained for downstream state maintenance.
 
         Compaction commits are skipped (they rewrite bytes, not
@@ -410,6 +415,40 @@ class KeyedTable:
         self._commit(doc, manifest, "merge", [delta])
         self._compact_if_needed(manifest)
 
+    def truncate_tombstones(
+        self, rows: DataFrame | None, ts_us: int, event_id: str
+    ) -> DataFrame | None:
+        """A TRUNCATE at (*ts_us*, *event_id*) as rows to merge
+        (``change_event.py:115``): one tombstone for every key whose
+        LWW winner over the table state plus *rows* (the batch's row
+        events, or None) the truncate beats.  A tombstone is that
+        winner, payload kept, stamped ``_cdc_deleted = true`` with the
+        truncate's (ts, event_id) — the same soft delete a DELETE
+        merges (C4).  Rows already deleted are restamped too, so an
+        event older than the truncate that arrives after it cannot
+        resurrect their key; winners newer than the truncate get no
+        tombstone, so out-of-order delivery converges as C1-C4 do.
+        None when neither state nor *rows* exist."""
+        parts = [df for df in (self.read() if self.exists() else None, rows)
+                 if df is not None]
+        if not parts:
+            return None
+        # allowMissingColumns: state files may still hold retired
+        # columns the batch rows no longer carry
+        both = parts[0] if len(parts) == 1 else parts[0].unionByName(
+            parts[1], allowMissingColumns=True)
+        beaten = (F.col("_cdc_timestamp_micros") < F.lit(ts_us)) | (
+            (F.col("_cdc_timestamp_micros") == F.lit(ts_us))
+            & (F.col("_last_event_id") < F.lit(event_id))
+        )
+        return self._reduce(both).filter(F.coalesce(beaten, F.lit(False))).withColumns(
+            {
+                "_cdc_deleted": F.lit(True),
+                "_cdc_timestamp_micros": F.lit(ts_us).cast("long"),
+                "_last_event_id": F.lit(event_id),
+            }
+        )
+
     def upsert(self, rows: DataFrame, now_us: int | None = None) -> None:
         """Q14 unconditional upsert (``postgresql_repository.py:179-247``,
         ``INSERT … ON CONFLICT DO UPDATE`` with no guard): the incoming
@@ -419,7 +458,8 @@ class KeyedTable:
         — the same effective semantics as the reference's last-writer
         unconditional form.  *rows* carries key + payload columns only;
         metadata is stamped here."""
-        now_us = now_us or int(time.time() * 1_000_000)
+        if now_us is None:
+            now_us = int(time.time() * 1_000_000)
         stamped = rows.withColumns(
             {
                 "_cdc_deleted": F.lit(False),
@@ -579,48 +619,10 @@ class KeyedTable:
         self._publish(keep, touched)
         return sum(r["count"] for r in per_bucket)
 
-    def soft_delete_all(self, ts_us: int, event_id: str = "") -> int:
-        """TRUNCATE semantics (``change_event.py:115``): soft-delete
-        every current row the truncate event wins over by LWW order
-        ((ts, event_id) strictly greater than the row's).  Losing rows
-        (written after the truncate) are untouched, so out-of-order
-        delivery converges exactly like C1-C4.
-
-        Returns number of rows tombstoned."""
-        if not self.exists():
-            return 0
-        wins = (F.col("_cdc_timestamp_micros") < F.lit(ts_us)) | (
-            (F.col("_cdc_timestamp_micros") == F.lit(ts_us))
-            & (F.col("_last_event_id") < F.lit(event_id))
-        )
-        df = self.read().withColumn("_bucket", self._bucket_col())
-        df = df.withColumn("_trunc_win", F.coalesce(wins, F.lit(False)))
-        n = df.filter(F.col("_trunc_win") & ~F.col("_cdc_deleted")).count()
-        updated = (
-            df.withColumn(
-                "_cdc_deleted",
-                F.when(F.col("_trunc_win"), F.lit(True)).otherwise(F.col("_cdc_deleted")),
-            )
-            .withColumn(
-                "_cdc_timestamp_micros",
-                F.when(F.col("_trunc_win"), F.lit(ts_us)).otherwise(
-                    F.col("_cdc_timestamp_micros")
-                ),
-            )
-            .withColumn(
-                "_last_event_id",
-                F.when(F.col("_trunc_win"), F.lit(event_id)).otherwise(
-                    F.col("_last_event_id")
-                ),
-            )
-            .drop("_trunc_win")
-        )
-        self._publish(updated, list(self._doc()["buckets"]))
-        return n
-
     def expire_ttl(self, now_us: int | None = None) -> int:
         """TTL sweep (T10): hard-delete rows whose expiry passed."""
-        now_us = now_us or int(time.time() * 1_000_000)
+        if now_us is None:
+            now_us = int(time.time() * 1_000_000)
         return self.delete_where(
             F.col("_ttl_expiry_timestamp_us").isNotNull()
             & (F.col("_ttl_expiry_timestamp_us") < F.lit(now_us))

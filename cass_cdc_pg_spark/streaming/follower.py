@@ -3,7 +3,9 @@ half of the CDF rewrite contract.
 
 ``KeyedTable.read_changes`` refuses ranges that cross a rewrite commit
 (retention / GDPR / TTL sweeps change state without per-row deltas),
-and the HTTP surface turns that into 409 Conflict.  Until r7 the
+and the HTTP surface turns that into 409 Conflict.  A TRUNCATE is not
+a rewrite: it commits as a merge of soft-delete tombstones, so the
+feed carries it and the follower applies it incrementally.  Until r7 the
 "resync from a snapshot" step was the caller's problem; this module
 closes the loop: ``ChangeFeedFollower.sync()`` applies ordinary merge
 commits incrementally and, when the feed raises (rewrite in range, or

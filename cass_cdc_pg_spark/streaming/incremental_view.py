@@ -21,7 +21,10 @@ touched keys:
 If an out-of-order batch row loses, ``winners`` equals the old state
 and its delta contribution cancels to zero — no drift, no special
 case.  Soft-deleted rows (tombstones) contribute nothing, so DELETE
-retracts and a re-create re-adds.  TTL expiry is intentionally NOT
+retracts and a re-create re-adds.  A TRUNCATE reaches the view the
+same way: the ingest merges it as one tombstone per row it beats
+(``KeyedTable.truncate_tombstones``), and ``apply_batch`` folds those
+like any other batch rows.  TTL expiry is intentionally NOT
 part of the view (it is wall-clock-dependent, which would make the
 materialized state nondeterministic); the view converges to
 ``GROUP BY`` over ``table.read()`` filtered on ``~_cdc_deleted``.
@@ -31,8 +34,9 @@ but with a SUM-reduce instead of an LWW-reduce: each ``apply_batch``
 appends one small parquet of per-group deltas (``d_count``,
 ``d_sum``); ``read()`` folds the log with one tiny groupBy (sums are
 exact BIGINT micros, so folding order is irrelevant); ``compact()``
-rolls the log into a single base atomically (temp dir + manifest
-pointer swap, crash-safe the same way ``KeyedTable._publish`` is).
+rolls the log into a single base atomically (fresh dir + manifest
+pointer swap, crash-safe the same way ``KeyedTable._publish`` is) and
+removes every log dir the new manifest does not name.
 The log depth is bounded by ``compact_threshold``, so read cost never
 grows unboundedly between compactions.
 
@@ -115,10 +119,11 @@ class IncrementalAggView:
         )
 
     def apply_batch(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        """Fold one CDC batch (key cols + META_COLS + payload) into
-        the view, BEFORE the corresponding ``table.merge(batch)`` —
-        the "old state" read must not already contain the batch, or
-        its contribution would double-count.
+        """Fold one CDC batch (key cols + META_COLS + payload; a
+        TRUNCATE's tombstones are batch rows too) into the view,
+        BEFORE the corresponding ``table.merge(batch)`` — the "old
+        state" read must not already contain the batch, or its
+        contribution would double-count.
 
         Replay safety: additive deltas are NOT idempotent the way the
         table's LWW merge is, so streaming callers pass the
@@ -223,9 +228,11 @@ class IncrementalAggView:
 
     def compact(self) -> None:
         """Roll the delta log into one base.  Crash-safe: the new base
-        is fully written before the manifest pointer swaps; a failure
-        in between leaves the old manifest (and a dangling dir that
-        the next compact's GC removes)."""
+        is fully written before the manifest pointer swaps (keeping the
+        batch_id high-water mark); a failure in between leaves the old
+        manifest and a dir it does not name.  After the swap every
+        ``vdelta-``/``vbase-`` dir but the new base goes: the folded
+        log and any dir a crashed write left behind."""
         m = self._read_manifest()
         folded = self.read()
         if folded is None:
@@ -236,40 +243,12 @@ class IncrementalAggView:
             F.col("n_rows").alias("d_count"),
             F.col("sum_micros").alias("d_sum"),
         ).coalesce(1).write.parquet(f"{self.path}/{name}")
-        old_dirs = ([m["base"]] if m["base"] else []) + list(m["deltas"])
-        self._write_manifest({"base": name, "deltas": []})
-        for d in old_dirs:
-            shutil.rmtree(f"{self.path}/{d}", ignore_errors=True)
+        self._write_manifest({**m, "base": name, "deltas": []})
+        for d in os.listdir(self.path):
+            if d.startswith(("vdelta-", "vbase-")) and d != name:
+                shutil.rmtree(f"{self.path}/{d}", ignore_errors=True)
 
     # -- verification -------------------------------------------------------
-
-    def rebuild(self, batch_id: int | None = None) -> None:
-        """Reset the view to a fresh full recompute — the escape hatch
-        for table-level operations that bypass the batch path
-        (TRUNCATE applies as an LWW soft-delete-all inside
-        ``KeyedTable``, with per-row winners the delta path can't see
-        without re-reading every bucket anyway).  Atomic the same way
-        ``compact`` is; the batch_id high-water mark is preserved (or
-        advanced) so a replayed batch can't double-apply after the
-        rebuild."""
-        m = self._read_manifest()
-        authoritative = self.recompute()
-        name = None
-        if authoritative is not None:
-            name = f"vbase-{uuid.uuid4().hex[:12]}"
-            authoritative.select(
-                *self.group_cols,
-                F.col("n_rows").alias("d_count"),
-                F.col("sum_micros").alias("d_sum"),
-            ).coalesce(1).write.parquet(f"{self.path}/{name}")
-        old_dirs = ([m["base"]] if m["base"] else []) + list(m["deltas"])
-        new_m = {"base": name, "deltas": []}
-        hw = max(m.get("last_batch_id", -1), batch_id if batch_id is not None else -1)
-        if hw >= 0:
-            new_m["last_batch_id"] = hw
-        self._write_manifest(new_m)
-        for d in old_dirs:
-            shutil.rmtree(f"{self.path}/{d}", ignore_errors=True)
 
     def recompute(self) -> DataFrame | None:
         """The authoritative batch answer (full rescan) the view must

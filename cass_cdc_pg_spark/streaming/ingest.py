@@ -323,6 +323,10 @@ class CdcIngest:
         configured table count, and a clean batch never writes the DLQ.
         The same pass feeds the RED metrics (``monitoring.METRICS``) at
         zero extra job cost.
+
+        Every touched table gets one ``merge`` commit (plus any
+        compaction it triggers): its row events and, for a TRUNCATE,
+        the tombstones of :meth:`KeyedTable.truncate_tombstones`.
         """
         _t0 = _time.time()
         # T3 addEventId runs before validation, as in the reference's
@@ -405,32 +409,35 @@ class CdcIngest:
                     schemas[name] = evolved
 
             for name, payload_schema in schemas.items():
+                if name not in row_tables and name not in truncates:
+                    continue
+                target = self.table(name)
+                rows = None
                 if name in row_tables:
                     ok = tagged.filter(
                         (F.col("source_table") == name)
                         & (F.col("operation_type") != "TRUNCATE")
                         & F.col("_error_type").isNull()
                     )
-                    rows = transforms.unwrap(ok, payload_schema)
-                    rows = transforms.add_cdc_metadata(rows)
-                    target = self.table(name)
-                    # materialized views fold the batch BEFORE the
-                    # table merge (their old-state read must not
-                    # already include it); the batch_id high-water
-                    # mark makes crash-replay exactly-once
-                    for view in self._views.get(name, ()):
-                        view.apply_batch(rows, batch_id=batch_id)
-                    commit = lambda r=rows, t=target: t.merge(r)  # noqa: E731
-                    self.breaker.call(lambda: retry_with_backoff(commit, max_attempts=3))
-                # TRUNCATE: table-level operation, applied via LWW
-                # soft-delete-all — never merged as a row (ADVICE r1).
+                    rows = transforms.add_cdc_metadata(
+                        transforms.unwrap(ok, payload_schema))
                 if name in truncates:
-                    ts_us, eid = truncates[name]
-                    self.table(name).soft_delete_all(ts_us, eid)
-                    # table-level ops bypass the delta path; reconcile
-                    # attached views with a full rebuild (rare event)
-                    for view in self._views.get(name, ()):
-                        view.rebuild(batch_id=batch_id)
+                    # TRUNCATE: never a row (ADVICE r1) but tombstones
+                    # for the rows it beats, merged with the batch's
+                    # rows in the same commit
+                    tombs = target.truncate_tombstones(rows, *truncates[name])
+                    rows = tombs if rows is None else rows.unionByName(
+                        tombs, allowMissingColumns=True)
+                    if rows is None:
+                        continue  # nothing to truncate
+                # materialized views fold the batch BEFORE the table
+                # merge (their old-state read must not already include
+                # it); the batch_id high-water mark makes crash-replay
+                # exactly-once
+                for view in self._views.get(name, ()):
+                    view.apply_batch(rows, batch_id=batch_id)
+                commit = lambda r=rows, t=target: t.merge(r)  # noqa: E731
+                self.breaker.call(lambda: retry_with_backoff(commit, max_attempts=3))
 
             if any_bad:
                 # DLQ merge (S5): deterministic dlq_id + LWW merge make

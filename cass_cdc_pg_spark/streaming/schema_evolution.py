@@ -10,12 +10,9 @@ Mirrors the reference's schema service semantics
 
 - **detect**: diff two column sets → ADD_COLUMN / DROP_COLUMN /
   MODIFY_COLUMN change records;
-- **compatibility** (``check_compatibility``; the registry gates every
-  table BACKWARD):
-  - BACKWARD: adds must be nullable-or-defaulted; drops OK; type
-    changes never compatible;
-  - FORWARD: adds OK; type changes never compatible;
-  - FULL: both; NONE: everything passes;
+- **compatibility** (``check_compatibility``, the BACKWARD rule the
+  registry gates every table with): adds must be nullable-or-defaulted;
+  drops OK; type changes never compatible;
 - **evolve**: a compatible new schema becomes the next ACTIVE version
   (ADD_COLUMN rides the keyed table's ``mergeSchema`` read — old
   buckets backfill NULL, nothing is rewritten); an incompatible one is
@@ -43,11 +40,6 @@ from cass_cdc_pg_spark.durable import write_json
 ADD_COLUMN = "ADD_COLUMN"
 DROP_COLUMN = "DROP_COLUMN"
 MODIFY_COLUMN = "MODIFY_COLUMN"
-
-BACKWARD = "BACKWARD"
-FORWARD = "FORWARD"
-FULL = "FULL"
-NONE = "NONE"
 
 
 def struct_columns(st: T.StructType) -> dict[str, str]:
@@ -90,17 +82,14 @@ def detect_changes(
 
 def check_compatibility(
     changes: list[dict[str, str | None]],
-    mode: str = BACKWARD,
     new_nullable: dict[str, bool] | None = None,
 ) -> tuple[bool, str | None]:
-    """(compatible?, reason-if-not) under *mode*.
+    """(compatible?, reason-if-not) under the BACKWARD rule.
 
-    *new_nullable*: nullability of added columns (BACKWARD requires
-    adds be nullable or defaulted; absent → assumed nullable, which is
-    how map-sourced CDC payloads arrive).
+    *new_nullable*: nullability of added columns (adds must be nullable
+    or defaulted; absent → assumed nullable, which is how map-sourced
+    CDC payloads arrive).
     """
-    if mode == NONE:
-        return True, None
     for ch in changes:
         if ch["type"] == MODIFY_COLUMN:
             return False, (
@@ -109,7 +98,6 @@ def check_compatibility(
             )
         if (
             ch["type"] == ADD_COLUMN
-            and mode in (BACKWARD, FULL)
             and new_nullable is not None
             and not new_nullable.get(ch["column"], True)
         ):
@@ -150,9 +138,10 @@ def _rejected(entry: dict) -> set[int]:
 class SchemaRegistry:
     """Versioned per-table schema metadata (S8 + SchemaMetadata).
 
-    One JSON manifest holding, per table: the version list (columns,
+    One JSON manifest holding, per table, the version list (columns,
     nullability, change records, ACTIVE/REJECTED status, registration
-    time) and the compatibility mode."""
+    time).  Manifests written before BACKWARD became the only rule
+    also carry a ``"compatibility"`` field, which is ignored."""
 
     def __init__(self, path: str) -> None:
         self.path = path.rstrip("/")
@@ -181,8 +170,7 @@ class SchemaRegistry:
         if table in data["tables"]:
             return self._active(data["tables"][table])["version"]
         initial = {"type": "INITIAL", "column": None, "old_type": None, "new_type": None}
-        data["tables"][table] = {"compatibility": BACKWARD,
-                                 "versions": [_version(1, schema, [initial])]}
+        data["tables"][table] = {"versions": [_version(1, schema, [initial])]}
         self._save(data)
         return 1
 
@@ -240,9 +228,7 @@ class SchemaRegistry:
         if not changes:
             return True, active["version"], []
         ok, reason = check_compatibility(
-            changes,
-            entry["compatibility"],
-            {f.name: f.nullable for f in new_schema.fields},
+            changes, {f.name: f.nullable for f in new_schema.fields}
         )
         version = entry["versions"][-1]["version"] + 1
         entry["versions"].append(_version(

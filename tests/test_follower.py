@@ -80,6 +80,47 @@ def test_follower_bootstraps_via_snapshot_when_history_pruned(spark, tmp_path):
     assert _live(b) == {("k", "v5")}
 
 
+def test_follower_applies_truncate_incrementally(spark, tmp_path):
+    """A TRUNCATE commits as a merge of tombstones, so the follower
+    replays it from the feed: no snapshot resync, and the target
+    equals the source row for row."""
+    import uuid
+
+    from pyspark.sql import types as T
+
+    from cass_cdc_pg_spark.streaming.ingest import CdcIngest
+
+    ing = CdcIngest(
+        spark, str(tmp_path / "wh"),
+        {"users": T.StructType([T.StructField("id", T.StringType()),
+                                T.StructField("val", T.StringType())])},
+        {"users": ["id"]}, num_buckets=2,
+    )
+
+    def ev(n, op, ts, after=None):
+        return (str(uuid.UUID(int=n)), "users", op, ts, None, after, 1, None, False)
+
+    def process(*events):
+        ing.process_batch(spark.createDataFrame(
+            list(events),
+            "event_id string, source_table string, operation_type string, "
+            "timestamp_micros long, before map<string,string>, "
+            "after map<string,string>, schema_version int, ttl_seconds int, "
+            "is_tombstone boolean"))
+
+    a = ing.table("users")
+    b = KeyedTable(spark, str(tmp_path / "b"), ["id"], num_buckets=4)
+    f = ChangeFeedFollower(spark, a, b)
+    process(ev(1, "CREATE", 100, {"id": "x", "val": "v1"}),
+            ev(2, "CREATE", 300, {"id": "y", "val": "w1"}))
+    assert f.sync()["resynced"] is False
+    process(ev(3, "TRUNCATE", 200))
+    assert f.sync()["resynced"] is False
+    assert (sorted((r.asDict() for r in b.read().collect()), key=lambda d: d["id"])
+            == sorted((r.asDict() for r in a.read().collect()), key=lambda d: d["id"]))
+    assert _live(b) == {("y", "w1")}
+
+
 def test_follower_crash_between_merge_and_cursor_is_idempotent(spark, tmp_path):
     """Replaying a range after a crash (cursor not advanced) converges
     to the same state — merge is LWW-idempotent."""

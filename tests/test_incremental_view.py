@@ -130,6 +130,35 @@ def test_compaction_bounds_log_depth_and_preserves_answer(setup, spark):
     assert _snap(view.read())["g0"] == (4, (0 + 2 + 4 + 6) * 1_000_000)
 
 
+def test_compaction_removes_orphaned_log_dirs(setup, spark):
+    """A ``vdelta-``/``vbase-`` dir a crash left between its write and
+    the manifest swap is named by no manifest; compaction removes it."""
+    import os
+
+    table, view = setup
+    _apply(table, view, spark, [("a", "g1", 1.0, False, 100, "e1", None)])
+    for orphan in ("vdelta-0rphan000000", "vbase-0rphan0000000"):
+        _batch(spark, [("z", "g9", 9.0, False, 1, "e0", None)]).write.parquet(
+            f"{view.path}/{orphan}")
+    view.compact()
+    m = view._read_manifest()
+    assert [d for d in os.listdir(view.path) if d.startswith("v")] == [m["base"]]
+    assert _snap(view.read()) == {"g1": (1, 1_000_000)}
+
+
+def test_compaction_keeps_the_batch_high_water_mark(setup, spark):
+    """A crash after the view folded batch 5 and compacted, but before
+    the table merge: the replayed batch 5 must still be skipped."""
+    table, view = setup
+    b = _batch(spark, [("a", "g1", 1.0, False, 100, "e1", None)])
+    view.apply_batch(b, batch_id=5)
+    view.compact()
+    view.apply_batch(b, batch_id=5)  # the replay
+    table.merge(b)
+    assert _snap(view.read()) == {"g1": (1, 1_000_000)}
+    _assert_converged(view)
+
+
 def test_random_interleaving_converges(setup, spark):
     """Deterministic pseudo-random CDC soup: every prefix of the
     stream leaves view == recompute."""

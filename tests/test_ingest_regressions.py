@@ -148,6 +148,60 @@ def test_truncate_is_idempotent(spark, users_ingest):
     assert first == second
 
 
+def test_truncate_reaches_the_change_feed(spark, users_ingest):
+    """A TRUNCATE commits as a merge of tombstones, so the change feed
+    carries them with their ``_change_version``, as it carries a
+    DELETE — no resync-required error."""
+    users_ingest.process_batch(_df(spark, [
+        _event(_eid(1), "CREATE", 1000, after={"id": U1, "username": "a", "age": "1"}),
+        _event(_eid(2), "CREATE", 1500, after={"id": U2, "username": "b", "age": "2"}),
+    ]))
+    t = users_ingest.table("users")
+    mark = t._current_version()
+    users_ingest.process_batch(_df(spark, [_event(_eid(3), "TRUNCATE", 2000)]))
+    rows = {r["id"]: r.asDict() for r in t.read_changes(mark).collect()}
+    assert set(rows) == {U1, U2}
+    assert {(r["_cdc_deleted"], r["_cdc_timestamp_micros"], r["_last_event_id"],
+             r["_change_version"]) for r in rows.values()} == {(True, 2000, _eid(3), mark + 1)}
+    assert rows[U1]["username"] == "a"  # the winner's payload is kept
+
+
+def test_rows_and_truncate_commit_once(spark, users_ingest):
+    """A batch holding row events and a TRUNCATE adds exactly one
+    version, a merge."""
+    users_ingest.process_batch(_df(spark, [
+        _event(_eid(1), "CREATE", 1000, after={"id": U1, "username": "a", "age": "1"}),
+    ]))
+    t = users_ingest.table("users")
+    before = t._current_version()
+    users_ingest.process_batch(_df(spark, [
+        _event(_eid(2), "CREATE", 3000, after={"id": U2, "username": "b", "age": "2"}),
+        _event(_eid(3), "TRUNCATE", 2000),
+    ]))
+    assert t._current_version() == before + 1
+    assert t._doc()["op"] == "merge"
+    assert {r["id"] for r in t.read_live().collect()} == {U2}
+
+
+def test_truncate_restamps_deleted_rows_against_resurrection(spark, users_ingest):
+    """DELETE k at 100, TRUNCATE at 200, then a late CREATE of k at
+    150: k stays deleted.  The truncate restamps rows already deleted
+    with its own (ts, event_id), so the late CREATE loses to it."""
+    users_ingest.process_batch(_df(spark, [
+        _event(_eid(1), "CREATE", 50, after={"id": U1, "username": "a", "age": "1"}),
+        _event(_eid(2), "DELETE", 100, before={"id": U1, "username": "a", "age": "1"},
+               tomb=True),
+    ]))
+    users_ingest.process_batch(_df(spark, [_event(_eid(3), "TRUNCATE", 200)]))
+    users_ingest.process_batch(_df(spark, [
+        _event(_eid(4), "CREATE", 150, after={"id": U1, "username": "late", "age": "9"}),
+    ]))
+    t = users_ingest.table("users")
+    (row,) = t.read().collect()
+    assert (row["id"], row["_cdc_deleted"], row["_cdc_timestamp_micros"]) == (U1, True, 200)
+    assert t.read_live().count() == 0
+
+
 def test_type_conversion_error_routed_to_dlq(spark, users_ingest):
     """CREATE with age='abc' lands in the DLQ as TYPE_CONVERSION_ERROR,
     not as a NULL-aged row (type_mapper.py:88-134 semantics)."""

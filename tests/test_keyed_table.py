@@ -89,6 +89,16 @@ def test_ttl_expiry_sweep(table, spark):
     assert set(_state(table)) == {"b", "c"}
 
 
+def test_expire_ttl_at_epoch_zero_removes_nothing(table, spark):
+    """now_us=0 is an explicit epoch, not 'unset': no expiry lies
+    before it, so the sweep removes nothing (``now_us or time()``
+    swept against the wall clock instead)."""
+    table.merge(_batch(spark, [("a", "v", False, 100, "e1", 1_000)]))
+    assert table.expire_ttl(now_us=0) == 0
+    assert set(_state(table)) == {"a"}
+    assert table.expire_ttl() == 1
+
+
 def test_hard_delete_where(table, spark):
     table.merge(
         _batch(spark, [(f"k{i}", "v", False, 100, f"e{i}", None) for i in range(10)])

@@ -80,14 +80,14 @@ def test_gdpr_missing_record_raises(spark, tmp_path):
 def test_audit_retention_purge(spark, tmp_path):
     audit = AuditLog(spark, str(tmp_path / "audit"))
     audit.append("GDPR_ERASURE", "users", "a", "DELETE")
-    # age the first entry by rewriting its timestamp via a second log
+    # a backdated entry, merged through the audit's own table
     old_us = 1_000_000  # 1970 — definitely past retention
-    spark.createDataFrame(
+    audit.table.upsert(spark.createDataFrame(
         [("old-id", "GDPR_ERASURE", old_us, "x", "users", "b", "DELETE", "", "{}")],
         "audit_id string, event_type string, event_timestamp_us long, "
         "requester string, table_name string, record_identifier string, "
         "action string, reason string, details string",
-    ).write.mode("append").parquet(audit._data_dir())
+    ))
     assert audit.read().count() == 2
     removed = audit.purge_old(retention_days=365)
     assert removed == 1
@@ -95,30 +95,27 @@ def test_audit_retention_purge(spark, tmp_path):
 
 
 def test_audit_purge_swaps_atomically(spark, tmp_path):
-    """The retention sweep never leaves the audit log unreadable: data
-    dirs are versioned and the _CURRENT pointer flips via os.replace,
-    so every intermediate state (old pointer + both dirs, new pointer
-    + both dirs, new pointer + new dir) reads fine.  now_us=0 is a
-    valid explicit epoch, not 'unset'."""
-    import os
-
+    """The retention sweep never leaves the audit log unreadable: it is
+    one atomic commit of the audit's keyed table, and the version
+    before it stays readable (time travel).  now_us=0 is a valid
+    explicit epoch, not 'unset'."""
     audit = AuditLog(spark, str(tmp_path / "audit"))
     audit.append("GDPR_ERASURE", "users", "a", "DELETE")
-    dir_before = audit._data_dir()
+    v_before = audit.table.history()[-1]["version"]
 
-    # now_us=0 → cutoff in the past → nothing removed (regression:
-    # `now_us or time()` treated 0 as unset and purged everything)
+    # now_us=0 → cutoff in the past → nothing removed, nothing committed
+    # (regression: `now_us or time()` treated 0 as unset and purged
+    # everything)
     assert audit.purge_old(retention_days=365, now_us=0) == 0
     assert audit.read().count() == 1
+    assert audit.table.history()[-1]["version"] == v_before
 
-    # a real purge flips to a new version dir and stays readable
+    # a real purge is exactly one new commit and stays readable
     future_us = 10**18
     removed = audit.purge_old(retention_days=365, now_us=future_us)
     assert removed == 1
-    dir_after = audit._data_dir()
-    assert dir_after != dir_before
-    assert not os.path.exists(dir_before)  # old version reclaimed
-    assert os.path.exists(audit._pointer())
+    assert audit.table.history()[-1]["version"] == v_before + 1
+    assert audit.table.read(version=v_before).count() == 1  # old version retained
     assert audit.read().count() == 0  # readable, empty survivor set
 
 

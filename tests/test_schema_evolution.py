@@ -20,11 +20,8 @@ from pyspark.sql import types as T
 from cass_cdc_pg_spark.streaming.ingest import CdcIngest
 from cass_cdc_pg_spark.streaming.schema_evolution import (
     ADD_COLUMN,
-    BACKWARD,
     DROP_COLUMN,
-    FULL,
     MODIFY_COLUMN,
-    NONE,
     SchemaRegistry,
     check_compatibility,
     detect_changes,
@@ -84,12 +81,10 @@ def test_compat_rules():
     modify = [{"type": MODIFY_COLUMN, "column": "x", "old_type": "int", "new_type": "string"}]
     add_nullable = [{"type": ADD_COLUMN, "column": "x", "old_type": None, "new_type": "string"}]
     drop = [{"type": DROP_COLUMN, "column": "x", "old_type": "int", "new_type": None}]
-    assert check_compatibility(modify, BACKWARD)[0] is False
-    assert check_compatibility(modify, FULL)[0] is False
-    assert check_compatibility(modify, NONE)[0] is True
-    assert check_compatibility(add_nullable, BACKWARD, {"x": True})[0] is True
-    assert check_compatibility(add_nullable, BACKWARD, {"x": False})[0] is False
-    assert check_compatibility(drop, BACKWARD)[0] is True
+    assert check_compatibility(modify)[0] is False
+    assert check_compatibility(add_nullable, {"x": True})[0] is True
+    assert check_compatibility(add_nullable, {"x": False})[0] is False
+    assert check_compatibility(drop)[0] is True
 
 
 def test_registry_versions_and_rejection(tmp_path):
@@ -112,6 +107,25 @@ def test_registry_versions_and_rejection(tmp_path):
     assert reg.rejected_versions("users") == {3}
     assert reg.current_version("users") == 2  # active stays at v2
     assert len(reg.history("users")) == 3
+
+
+def test_legacy_manifest_compatibility_field_is_ignored(tmp_path):
+    """A manifest that still stores a per-table ``"compatibility"`` mode
+    loads, and the BACKWARD rule gates it whatever the field says."""
+    import json
+
+    reg = SchemaRegistry(str(tmp_path / "meta"))
+    reg.register("users", V1)
+    with open(reg._manifest) as f:
+        data = json.load(f)
+    data["tables"]["users"]["compatibility"] = "NONE"
+    with open(reg._manifest, "w") as f:
+        json.dump(data, f)
+    assert reg.current_version("users") == 1
+    retyped = T.StructType([*V1.fields[:2], T.StructField("age", T.StringType())])
+    ok, ver, _ = reg.evolve("users", retyped)
+    assert (ok, ver) == (False, 2)
+    assert reg.current_version("users") == 1
 
 
 # -- end-to-end through the ingest loop -------------------------------------
