@@ -55,6 +55,15 @@ crashed writes are garbage-collected on the next commit.  Concurrent
 writers are not supported: the version check a second writer would
 need is not made.
 
+A commit doc also carries ``txn``: ``{consumer_id: source_version}``,
+the position of every change-feed consumer that writes this table
+(Delta's ``SetTransaction``).  A consumer passes its new position as
+``merge(..., txn=...)`` or ``overwrite(..., txn=...)``, so the position
+commits atomically with the state it produced and a crash can never
+leave one without the other.  Every commit carries the previous map
+forward; ``overwrite`` replaces it with the caller's entry alone, since
+the state the other positions described is gone.
+
 Filesystem note: commit atomicity relies on POSIX ``os.replace`` of
 the single manifest file (data dirs are immutable once written, so
 only the pointer swap needs atomicity).  On an object store (S3/GCS)
@@ -169,7 +178,12 @@ class KeyedTable:
         )
 
     def _commit(
-        self, base_doc: dict, buckets: dict[str, dict], op: str, added: list[str]
+        self,
+        base_doc: dict,
+        buckets: dict[str, dict],
+        op: str,
+        added: list[str],
+        txn: dict[str, int] | None = None,
     ) -> None:
         """Commit *buckets* as the version after *base_doc* — the doc
         the caller read and modified, so the version number needs no
@@ -177,7 +191,9 @@ class KeyedTable:
         the log copy follows it (a crash in between costs only that
         copy, see ``_doc``), then one GC pass.  ``op`` and ``added``
         are the change-feed provenance: what kind of commit this was
-        and which data dirs it ADDED (see ``read_changes``)."""
+        and which data dirs it ADDED (see ``read_changes``).  *txn* is
+        the new doc's whole consumer-position map; None carries
+        *base_doc*'s forward."""
         doc = {
             "buckets": buckets,
             "num_buckets": self.num_buckets,
@@ -186,6 +202,7 @@ class KeyedTable:
             "version": base_doc["version"] + 1,
             "op": op,
             "added": added,
+            "txn": base_doc.get("txn", {}) if txn is None else txn,
         }
         os.makedirs(self._log_dir, exist_ok=True)
         write_json(self._manifest_path, doc)
@@ -196,6 +213,12 @@ class KeyedTable:
 
     def _current_version(self) -> int:
         return self._doc()["version"]
+
+    @property
+    def txn(self) -> dict[str, int]:
+        """The committed position of every change-feed consumer that
+        writes this table: ``{consumer_id: source_version}``."""
+        return self._doc().get("txn", {})
 
     def _log_versions(self) -> list[int]:
         try:
@@ -380,7 +403,9 @@ class KeyedTable:
 
     # -- merge --------------------------------------------------------------
 
-    def merge(self, batch: DataFrame) -> None:
+    def merge(
+        self, batch: DataFrame | None, *, txn: dict[str, int] | None = None
+    ) -> None:
         """LWW-upsert *batch* (must carry key cols + META_COLS).
 
         O(batch): the intra-batch LWW reduce (C1a) plus one delta
@@ -388,31 +413,41 @@ class KeyedTable:
         resolution against existing state happens lazily at read time
         and durably at compaction (C1b), both through the same total
         order, so any interleaving/replay converges (C5/C6).
-        """
-        missing = [c for c in (*self.key_cols, *META_COLS) if c not in batch.columns]
-        if missing:
-            raise ValueError(f"merge batch missing columns: {missing}")
 
-        # the one shuffle: cluster by bucket first, and the LWW
-        # aggregate (grouped on keys + _bucket) reuses that clustering,
-        # so the reduce and the per-bucket write run in the same tasks
-        parts = min(self.num_buckets, self.spark.sparkContext.defaultParallelism)
-        reduced = lww_latest(
-            batch.withColumn("_bucket", self._bucket_col()).repartition(parts, "_bucket"),
-            [*self.key_cols, "_bucket"],
-            ts_col="_cdc_timestamp_micros",
-            tiebreak_col="_last_event_id",
-        )
-        delta = f"delta-{uuid.uuid4().hex[:12]}"
-        touched = self._write(reduced, f"{self.path}/{delta}")
-        if not touched:
-            shutil.rmtree(f"{self.path}/{delta}", ignore_errors=True)
+        *txn* sets consumer positions in the same commit (module
+        docstring).  A merge that carries a position commits even when
+        it has no rows (*batch* None or empty): the consumer then moves
+        past a source range that changed nothing.
+        """
+        touched: list[str] = []
+        if batch is not None:
+            missing = [c for c in (*self.key_cols, *META_COLS)
+                       if c not in batch.columns]
+            if missing:
+                raise ValueError(f"merge batch missing columns: {missing}")
+            # the one shuffle: cluster by bucket first, and the LWW
+            # aggregate (grouped on keys + _bucket) reuses that
+            # clustering, so the reduce and the per-bucket write run in
+            # the same tasks
+            parts = min(self.num_buckets, self.spark.sparkContext.defaultParallelism)
+            reduced = lww_latest(
+                batch.withColumn("_bucket", self._bucket_col()).repartition(parts, "_bucket"),
+                [*self.key_cols, "_bucket"],
+                ts_col="_cdc_timestamp_micros",
+                tiebreak_col="_last_event_id",
+            )
+            delta = f"delta-{uuid.uuid4().hex[:12]}"
+            touched = self._write(reduced, f"{self.path}/{delta}")
+            if not touched:
+                shutil.rmtree(f"{self.path}/{delta}", ignore_errors=True)
+        if not touched and txn is None:
             return
         doc = self._doc()
         manifest = doc["buckets"]
         for b in touched:
             manifest.setdefault(b, {"base": None, "deltas": []})["deltas"].append(delta)
-        self._commit(doc, manifest, "merge", [delta])
+        self._commit(doc, manifest, "merge", [delta] if touched else [],
+                     {**doc.get("txn", {}), **(txn or {})})
         self._compact_if_needed(manifest)
 
     def truncate_tombstones(
@@ -470,7 +505,9 @@ class KeyedTable:
         )
         self.merge(stamped)
 
-    def overwrite(self, state: DataFrame) -> None:
+    def overwrite(
+        self, state: DataFrame, *, txn: dict[str, int] | None = None
+    ) -> None:
         """Replace the ENTIRE table state with *state* (key cols +
         META_COLS + payload) in ONE atomic rewrite commit — the
         restore/resync verb (consumer side of the CDF rewrite
@@ -478,12 +515,15 @@ class KeyedTable:
         republished, so rows absent from *state* — e.g. GDPR
         hard-deleted upstream, with no tombstone — are gone afterward,
         which a merge could never do.  Commits as ``op="rewrite"``:
-        this table's OWN feed consumers must resync in turn."""
+        this table's OWN feed consumers must resync in turn.  The
+        commit's consumer positions are *txn* alone: every other
+        position described the state this commit replaces."""
         missing = [c for c in (*self.key_cols, *META_COLS) if c not in state.columns]
         if missing:
             raise ValueError(f"overwrite state missing columns: {missing}")
         reduced = self._reduce(state).withColumn("_bucket", self._bucket_col())
-        self._publish(reduced, list(range(self.num_buckets)), op="rewrite")
+        self._publish(reduced, list(range(self.num_buckets)), op="rewrite",
+                      txn=txn or {})
 
     # -- compaction ---------------------------------------------------------
 
@@ -517,11 +557,15 @@ class KeyedTable:
         return len(targets)
 
     def _publish(
-        self, df_with_bucket: DataFrame, buckets: list, op: str = "rewrite"
+        self,
+        df_with_bucket: DataFrame,
+        buckets: list,
+        op: str = "rewrite",
+        txn: dict[str, int] | None = None,
     ) -> None:
         """Write *df_with_bucket* as the new **base** of *buckets*
-        (deltas cleared) and commit it.  A bucket that ends up empty
-        gets an empty-schema marker dir."""
+        (deltas cleared) and commit it with *txn* (see ``_commit``).
+        A bucket that ends up empty gets an empty-schema marker dir."""
         snap_name = f"snap-{uuid.uuid4().hex[:12]}"
         snap = f"{self.path}/{snap_name}"
         written = set(
@@ -535,7 +579,7 @@ class KeyedTable:
             if b not in written:
                 self._write(df_with_bucket.drop("_bucket").limit(0), f"{snap}/bucket={b}")
             manifest[b] = {"base": snap_name, "deltas": []}
-        self._commit(doc, manifest, op, [snap_name])
+        self._commit(doc, manifest, op, [snap_name], txn)
 
     def _write(self, df: DataFrame, dest: str) -> list[str]:
         """Write *df* into the fresh directory *dest* — every data file

@@ -491,17 +491,17 @@ def stream_hopping_parity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def view_incremental_parity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized-view maintenance as a driver-checked
-    fact (r9 wave 4 — ``IncrementalAggView`` was pytest-only, like
-    the stateful streams before their parity twins): the events
-    fixture replayed as 5 CDC batches against a real ``KeyedTable`` +
-    ``IncrementalAggView`` (count/sum-micros per event_type), with
-    cross-batch UPDATEs injected for every ``event_id % 5 == 0`` key
+    fact: an ``IncrementalAggView`` (count/sum-micros per event_type)
+    synced from a ``KeyedTable``'s change feed after each of 5 CDC
+    batch merges of the events fixture, with cross-batch UPDATEs
+    injected for every ``event_id % 5 == 0`` key
     (group moves to 'updated', value +1, later timestamp — the view
     must RETRACT the old group's contribution) and DELETEs for every
     ``% 17 == 0`` key (tombstone, even later timestamp — full
     retraction; ``% 85`` keys get both in ONE batch, so intra-batch
-    LWW must keep only the delete).  The returned rows are
-    ``view.read()`` — the folded delta log, never a recompute.
+    LWW must keep only the delete).  The view syncs from the table's
+    change feed after every batch; the returned rows are
+    ``view.read()`` — the maintained totals, never a recompute.
 
     Oracle: the closed-form final LWW state aggregated directly from
     the fixture — a hash match states the delta-maintenance ledger
@@ -571,8 +571,8 @@ def view_incremental_parity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch = parts[0]
                 for p in parts[1:]:
                     batch = batch.unionByName(p)
-                view.apply_batch(batch, batch_id=i)
                 table.merge(batch)
+                view.sync()
             slot["view"] = [
                 (r["event_type"], r["n_rows"], r["sum_micros"])
                 for r in view.read().collect()
@@ -690,8 +690,8 @@ def weekly_active_incremental_parity_q(
                 batch = parts[0]
                 for p in parts[1:]:
                     batch = batch.unionByName(p)
-                view.apply_batch(batch, batch_id=i)
                 table.merge(batch)
+                view.sync()
             # the rollup reads the VIEW STATE (one row per active
             # (day, user) pair), never the table or the fixture
             du = view.read().select("day_no", "user_id")

@@ -18,16 +18,23 @@ re-reads the table and rejoins the stream.
 
 Correctness notes:
 
-- Incremental applies go through ``target.merge`` (LWW), so a crash
-  between merge and cursor write replays the same range idempotently.
+- The follower's position is its target's ``txn`` entry for the source
+  path (``KeyedTable`` module docstring): an incremental apply is one
+  ``target.merge(changes, txn=...)`` and a resync one
+  ``target.overwrite(snapshot, txn=...)``, so the position commits with
+  the state it describes and no crash can separate them.
 - Resync uses ``target.overwrite`` — a full atomic state REPLACE, not
   a merge — because rewrite commits can remove rows without
   tombstones (GDPR hard delete); merging a snapshot would resurrect
   nothing but also delete nothing.  The overwrite publishes a
   ``rewrite`` commit on the target, so the contract cascades to the
-  target's own feed consumers.
-- A fresh follower (cursor 0) on a source whose early history aged
-  past ``keep_versions`` bootstraps via the same resync path — the
+  target's own feed consumers, and it keeps only its own position.
+- A target with no position for this source is resynced when it holds
+  state — its rows came from another source (or from before the
+  follower), and trusting any number would either no-op or skip
+  history — and starts from version 0 when it is empty.  A fresh
+  follower on a source whose early history aged past
+  ``keep_versions`` bootstraps via the same resync path — the
   snapshot IS the initial load.
 
 Scale posture: steady state is O(changed rows) per sync (the feed
@@ -38,12 +45,8 @@ non-append commit breaks the stream.
 
 from __future__ import annotations
 
-import json
-import os
+from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql import SparkSession
-
-from cass_cdc_pg_spark.durable import write_json
 from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
 
 
@@ -52,39 +55,11 @@ class ChangeFeedFollower:
     feed; call :meth:`sync` whenever the source may have advanced."""
 
     def __init__(
-        self,
-        spark: SparkSession,
-        source: KeyedTable,
-        target: KeyedTable,
-        cursor_path: str | None = None,
+        self, spark: SparkSession, source: KeyedTable, target: KeyedTable
     ) -> None:
         self.spark = spark
         self.source = source
         self.target = target
-        os.makedirs(target.path, exist_ok=True)
-        self.cursor_path = cursor_path or f"{target.path}/_follower_cursor.json"
-
-    # -- cursor (replaced whole through durable.write_json) ----------------
-
-    def _cursor(self) -> int | None:
-        """Stored version, or ``None`` when the cursor belongs to a
-        DIFFERENT source (r7 ADVICE): its version numbers index the
-        other table's commit log, so trusting it either no-ops (new
-        source's version <= stale cursor) or silently skips the new
-        source's early history — and even merging from 0 would leave
-        the old source's rows in the target.  ``None`` makes sync()
-        take the snapshot-OVERWRITE path, which replaces state."""
-        try:
-            with open(self.cursor_path) as f:
-                state = json.load(f)
-        except FileNotFoundError:
-            return 0
-        if state.get("source") not in (None, self.source.path):
-            return None
-        return int(state["version"])
-
-    def _write_cursor(self, version: int) -> None:
-        write_json(self.cursor_path, {"version": version, "source": self.source.path})
 
     # -- the one verb -------------------------------------------------------
 
@@ -92,32 +67,37 @@ class ChangeFeedFollower:
         """Advance the target to the source's current version.
 
         Returns ``{"from", "to", "resynced"}``; ``resynced`` is True
-        when the range crossed a rewrite (or fell out of retention)
-        and the target was re-seeded from a snapshot instead of
-        replaying per-row deltas."""
+        when the range crossed a rewrite (or fell out of retention, or
+        the target holds state from elsewhere) and the target was
+        re-seeded from a snapshot instead of replaying per-row deltas."""
         hi = self.source._current_version()
-        cur = self._cursor()
-        if cur is None:  # cursor from another source: force re-seed
-            if hi == 0:
-                # new source has no commits yet — nothing to seed
-                # from (and no schema to build an empty snapshot
-                # with).  Leave the stale cursor in place so the
-                # resync fires at the source's first commit.
-                return {"from": 0, "to": 0, "resynced": False}
+        cur = self.target.txn.get(self.source.path)
+        if cur is None and self.target.exists() and hi > 0:
+            # state from elsewhere: no position can be trusted.  A source
+            # with no commits has no snapshot (not even a schema) to
+            # replace it with yet; the resync fires at its first commit
             return self._resync(0, hi)
+        cur = cur or 0
         if hi <= cur:
             return {"from": cur, "to": cur, "resynced": False}
         try:
             changes = self.source.read_changes(cur, hi)
+            rows = None if changes is None else self._rows(changes, cur, hi)
         except (ValueError, FileNotFoundError):
             return self._resync(cur, hi)
-        if changes is not None:
-            self.target.merge(changes.drop("_change_version"))
-        self._write_cursor(hi)
+        self.target.merge(rows, txn={self.source.path: hi})
         return {"from": cur, "to": hi, "resynced": False}
 
     def _resync(self, cur: int, hi: int) -> dict:
-        snapshot = self.source.read(version=hi)
-        self.target.overwrite(snapshot)
-        self._write_cursor(hi)
+        self.target.overwrite(self._snapshot(hi), txn={self.source.path: hi})
         return {"from": cur, "to": hi, "resynced": True}
+
+    # -- what the target holds (``IncrementalAggView`` derives its own) ------
+
+    def _rows(self, changes: DataFrame, cur: int, hi: int) -> DataFrame:
+        """Target rows for the source's *changes* in ``(cur, hi]``."""
+        return changes.drop("_change_version")
+
+    def _snapshot(self, hi: int) -> DataFrame:
+        """The whole target state at source version *hi*."""
+        return self.source.read(version=hi)

@@ -180,7 +180,6 @@ class CdcIngest:
         self.schema_registry = SchemaRegistry(schema_registry_path(self.warehouse))
         for name, schema in table_schemas.items():
             self.schema_registry.register(name, schema)
-        self._views: dict[str, list] = {}
 
     def _pinned(self) -> tuple[
         dict[str, T.StructType], dict[str, set[int]], dict[str, T.StructType]
@@ -195,39 +194,6 @@ class CdcIngest:
     def table_schemas(self) -> MappingProxyType:
         """Read-only view of the served tables' registered payload schemas."""
         return MappingProxyType(self._pinned()[0])
-
-    # -- incremental materialized views -------------------------------------
-
-    def register_view(
-        self,
-        table_name: str,
-        view_name: str,
-        group_cols: list[str],
-        value_col: str,
-        compact_threshold: int = 8,
-    ):
-        """Attach an ``IncrementalAggView`` to *table_name*: every
-        processed microbatch maintains it in the same foreachBatch
-        (delta cost O(batch), replay-exactly-once via the batch_id
-        high-water mark) — the answer the reference recomputes per
-        request (`src/api/main.py:79-83` stats routes) stays
-        materialized here.  Registration is per-process; the view
-        state itself lives in the warehouse and reattaches across
-        restarts."""
-        from cass_cdc_pg_spark.streaming.incremental_view import (
-            IncrementalAggView,
-        )
-
-        view = IncrementalAggView(
-            self.spark,
-            f"{self.warehouse}/{table_name}__view__{view_name}",
-            self.table(table_name),
-            group_cols,
-            value_col,
-            compact_threshold=compact_threshold,
-        )
-        self._views.setdefault(table_name, []).append(view)
-        return view
 
     # -- schema evolution (FR-017, auto.evolve) -----------------------------
 
@@ -327,6 +293,9 @@ class CdcIngest:
         Every touched table gets one ``merge`` commit (plus any
         compaction it triggers): its row events and, for a TRUNCATE,
         the tombstones of :meth:`KeyedTable.truncate_tombstones`.
+        Derived state (``IncrementalAggView``, ``ChangeFeedFollower``)
+        follows those commits through the change feed.  *batch_id* is
+        unused: ``foreachBatch`` passes it.
         """
         _t0 = _time.time()
         # T3 addEventId runs before validation, as in the reference's
@@ -430,12 +399,6 @@ class CdcIngest:
                         tombs, allowMissingColumns=True)
                     if rows is None:
                         continue  # nothing to truncate
-                # materialized views fold the batch BEFORE the table
-                # merge (their old-state read must not already include
-                # it); the batch_id high-water mark makes crash-replay
-                # exactly-once
-                for view in self._views.get(name, ()):
-                    view.apply_batch(rows, batch_id=batch_id)
                 commit = lambda r=rows, t=target: t.merge(r)  # noqa: E731
                 self.breaker.call(lambda: retry_with_backoff(commit, max_attempts=3))
 

@@ -3,6 +3,8 @@ across rewrite commits (the consumer half of the CDF 409 contract)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -121,22 +123,85 @@ def test_follower_applies_truncate_incrementally(spark, tmp_path):
     assert _live(b) == {("y", "w1")}
 
 
-def test_follower_crash_between_merge_and_cursor_is_idempotent(spark, tmp_path):
-    """Replaying a range after a crash (cursor not advanced) converges
-    to the same state — merge is LWW-idempotent."""
+def test_follower_crash_before_target_commit_replays_the_range(
+        spark, tmp_path, monkeypatch):
+    """The position commits with the target's state, so a crash before
+    that commit leaves both where they were: the next sync replays the
+    same range once and converges."""
     a = KeyedTable(spark, str(tmp_path / "a"), ["id"], num_buckets=2,
                    keep_versions=20)
     b = KeyedTable(spark, str(tmp_path / "b"), ["id"], num_buckets=2,
                    keep_versions=20)
     f = ChangeFeedFollower(spark, a, b)
     a.merge(_batch(spark, [("x", "v1", False, 100, "e1", None)]))
-    f.sync()
-    # simulate the crash: rewind the cursor, sync again
-    f._write_cursor(0)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the commit")
+
+    monkeypatch.setattr(b, "_commit", crash)
+    with pytest.raises(RuntimeError):
+        f.sync()
+    monkeypatch.undo()
+    assert b._current_version() == 0 and b.txn == {}
     st = f.sync()
-    assert st["resynced"] is False
+    assert st == {"from": 0, "to": 1, "resynced": False}
     assert _live(b) == {("x", "v1")}
     assert b.read().count() == 1
+    assert b._current_version() == 1
+
+
+def test_follower_incremental_sync_commits_one_version_and_no_cursor_file(
+        spark, tmp_path):
+    """An incremental sync is one target commit that carries the
+    follower's position; nothing else is written beside the table."""
+    a = KeyedTable(spark, str(tmp_path / "a"), ["id"], num_buckets=2,
+                   keep_versions=20)
+    b = KeyedTable(spark, str(tmp_path / "b"), ["id"], num_buckets=2,
+                   keep_versions=20)
+    f = ChangeFeedFollower(spark, a, b)
+    for i in range(3):
+        a.merge(_batch(spark, [(f"k{i}", "v", False, 100 + i, f"e{i}", None)]))
+        before = b._current_version()
+        assert f.sync()["resynced"] is False
+        assert b._current_version() == before + 1
+        assert b.txn == {a.path: a._current_version()}
+    live = {d for e in b._doc()["buckets"].values() for d in e["deltas"]}
+    assert set(os.listdir(b.path)) == {"_log", "_manifest.json", *live}
+    assert not os.path.exists(f"{b.path}/_follower_cursor.json")
+
+
+def test_follower_returning_to_a_source_resyncs(spark, tmp_path):
+    """A → C → A: C's resync overwrite keeps only C's position, so the
+    return to A cannot trust A's old one and resyncs from A."""
+    a = KeyedTable(spark, str(tmp_path / "a"), ["id"], num_buckets=2,
+                   keep_versions=20)
+    b = KeyedTable(spark, str(tmp_path / "b"), ["id"], num_buckets=2,
+                   keep_versions=20)
+    c = KeyedTable(spark, str(tmp_path / "c"), ["id"], num_buckets=2,
+                   keep_versions=20)
+    a.merge(_batch(spark, [("ak", "a1", False, 100, "e1", None)]))
+    c.merge(_batch(spark, [("ck", "c1", False, 100, "e2", None)]))
+    assert ChangeFeedFollower(spark, a, b).sync()["resynced"] is False
+    assert ChangeFeedFollower(spark, c, b).sync()["resynced"] is True
+    assert b.txn == {c.path: 1}
+    assert _live(b) == {("ck", "c1")}
+    st = ChangeFeedFollower(spark, a, b).sync()
+    assert st == {"from": 0, "to": 1, "resynced": True}
+    assert b.txn == {a.path: 1}
+    assert _live(b) == {("ak", "a1")}
+
+
+def test_opening_a_follower_creates_nothing(spark, tmp_path):
+    """Opening is a read: the target dir appears only with the first
+    commit a sync has to make."""
+    a = KeyedTable(spark, str(tmp_path / "a"), ["id"], num_buckets=2)
+    b = KeyedTable(spark, str(tmp_path / "wh" / "b"), ["id"], num_buckets=2)
+    f = ChangeFeedFollower(spark, a, b)
+    assert f.sync() == {"from": 0, "to": 0, "resynced": False}
+    assert not os.path.exists(tmp_path / "wh")
+    a.merge(_batch(spark, [("x", "v1", False, 100, "e1", None)]))
+    assert f.sync()["resynced"] is False
+    assert _live(b) == {("x", "v1")}
 
 
 def test_overwrite_requires_meta_cols(spark, tmp_path):
