@@ -562,7 +562,11 @@ def http_bench(spark, sf_dir: str, wh: str, n_requests: int = 200,
     )
     ingest.process_batch(as_change_events.unionByName(bad))
 
-    svc = CdcApiService(spark, sf_dir=sf_dir, warehouse=wh)
+    # the table reconciles against itself: the source warehouse is wh
+    svc = CdcApiService(spark, warehouse=wh, source_warehouse=wh,
+                        table_config={"tables": {"events": {
+                            "ddl": "event_id long, user_id long, event_type string, value double",
+                            "keys": ["event_id"]}}})
     srv = CdcApiServer(svc)
     host, port = srv.start()
     base = f"http://{host}:{port}"
@@ -577,7 +581,7 @@ def http_bench(spark, sf_dir: str, wh: str, n_requests: int = 200,
         # the client polls /jobs): measures registration latency, the
         # reconcile itself runs on a worker thread
         ("POST", "/reconciliation/trigger",
-         b'{"strategy": "row_count", "async": true}', 1),
+         b'{"table": "events", "strategy": "row_count", "async": true}', 1),
     ]
     plan: list[tuple[str, str, bytes | None]] = []
     while len(plan) < n_requests:

@@ -15,7 +15,8 @@ Routes (reference ``src/api/routes/*``):
 - ``GET    /dlq/records``                     (``dlq.py:118-225``)
 - ``GET    /dlq/stats``                       (``dlq.py:227``)
 - ``POST   /dlq/replay``                      (``dlq.py:67-114``)
-- ``POST   /reconciliation/trigger``          (``reconciliation.py:73-119``)
+- ``POST   /reconciliation/trigger``          (``reconciliation.py:73-119``;
+  body ``{"table", "strategy", "async"}``)
 - ``GET    /reconciliation/jobs``             (``reconciliation.py:123``)
 - ``GET    /reconciliation/jobs/{job_id}``    (``reconciliation.py:169``)
 - ``GET    /reconciliation/mismatches``       (``reconciliation.py:199``)
@@ -31,11 +32,17 @@ generated), an optional fixed-window rate limiter returns 429 with
 ``Retry-After``, and each request runs inside a tracing span.  Errors
 use FastAPI's ``{"detail": ...}`` envelope.
 
-Persistence: the ``MAX_JOBS`` most recent reconciliation jobs live in
-an in-process registry (the reference keeps them in Postgres).
-Mismatches are durable — written through the LSM ``KeyedTable`` merge
-path under ``{warehouse}/recon_mismatches`` so resolve survives
-restarts and exercises the real upsert engine.
+Reconciliation: a job reconciles the CDC table of a configured table
+(``{warehouse}/cdc_{table}``) against the same table under
+``source_warehouse`` with ``reconcile.run_job``.  The trigger route,
+``cli reconcile run`` and ``monitoring.ReconciliationScheduler`` all
+run it through ``reconciliation_trigger``, so every job has one shape
+(the reference's ``reconciliation_jobs`` row), lands in one in-process
+job store (the ``MAX_JOBS`` most recent; the reference keeps them in
+Postgres) and moves the same metrics and alerts.  Mismatches are
+durable — written through the LSM ``KeyedTable`` merge path under
+``{warehouse}/recon_mismatches`` so resolve survives restarts and
+exercises the real upsert engine.
 """
 
 from __future__ import annotations
@@ -51,34 +58,15 @@ from urllib.parse import parse_qs, urlsplit
 from pyspark.sql import functions as F
 
 from cass_cdc_pg_spark import middleware
+from cass_cdc_pg_spark.monitoring import METRICS, AlertService, HealthCheckService
+from cass_cdc_pg_spark.operators import reconcile
 
 _IDENT_RE = re.compile(r"^[A-Za-z0-9_.\-:]{1,128}$")
 
 #: Most recent reconciliation jobs a ``CdcApiService`` keeps in memory.
 MAX_JOBS = 256
 
-MISMATCH_DDL = (
-    "mismatch_id string, job_id string, strategy string, detail string, "
-    "resolution_status string, resolution_notes string"
-)
-
 RESOLUTION_STATUSES = ("PENDING", "MANUAL_RESOLVED", "AUTO_RESOLVED", "IGNORED")
-
-#: reconciliation strategy → the ``registry`` query that runs it; the
-#: one list of strategies, for the trigger route and ``reconcile run``
-RECONCILE_STRATEGIES = {
-    "row_count": "q1_row_count",
-    "checksum": "q3_checksum_diff",
-    "timestamp_range": "q5_range_diff",
-    "sample": "q6_sample",
-}
-
-
-def reconcile_query(spark, strategy: str, sf_dir: str):
-    """The DataFrame of reconciliation *strategy* over *sf_dir*."""
-    from cass_cdc_pg_spark import registry
-
-    return getattr(registry, RECONCILE_STRATEGIES[strategy])(spark, sf_dir)
 
 
 class ApiError(Exception):
@@ -106,17 +94,18 @@ class CdcApiService:
         self,
         spark,
         *,
-        sf_dir: str | None = None,
         warehouse: str | None = None,
+        source_warehouse: str | None = None,
         table_config: dict | None = None,
         secrets=None,
         cache_ttl: float = 2.0,
     ) -> None:
         self.spark = spark
-        self.sf_dir = sf_dir
         self.warehouse = warehouse.rstrip("/") if warehouse else None
+        self.source_warehouse = source_warehouse.rstrip("/") if source_warehouse else None
         self.table_config = table_config or {"tables": {}}
         self.secrets = secrets
+        self.alerts = AlertService()
         self._jobs: dict[str, dict] = {}
         self._jobs_lock = threading.Lock()
         self.cache_ttl = cache_ttl
@@ -219,8 +208,7 @@ class CdcApiService:
     # -- health / metrics ---------------------------------------------------
 
     def _health_service(self):
-        from cass_cdc_pg_spark.monitoring import HealthCheckService
-        from cass_cdc_pg_spark.streaming.ingest import schema_registry_path
+        from cass_cdc_pg_spark.streaming.ingest import cdc_table_path, schema_registry_path
         from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
 
         reg = (
@@ -230,7 +218,9 @@ class CdcApiService:
         )
         return HealthCheckService(
             self.spark,
-            source_path=self.sf_dir,
+            source_tables=[
+                cdc_table_path(self.source_warehouse, t) for t in self.table_config["tables"]
+            ] if self.source_warehouse else None,
             target_warehouse=self.warehouse,
             schema_registry=reg,
             secrets=self.secrets,
@@ -255,8 +245,6 @@ class CdcApiService:
         return (503 if out["status"] == "unhealthy" else 200), out
 
     def metrics(self) -> str:
-        from cass_cdc_pg_spark.monitoring import METRICS
-
         return METRICS.render_prometheus()
 
     # -- dlq ----------------------------------------------------------------
@@ -325,79 +313,103 @@ class CdcApiService:
 
     # -- reconciliation -----------------------------------------------------
 
-    def reconciliation_trigger(self, body: dict) -> dict:
-        """Sync by default (job completes in-request; the CLI/test
-        contract).  ``{"async": true}`` matches the REFERENCE contract
-        (``reconciliation.py:73-119`` returns ``status=RUNNING`` and
-        the client polls ``/jobs/{id}``): the job registers as
-        ``running``, the reconcile runs on a worker thread, and the
-        response returns at registration latency instead of
-        Spark-job latency."""
-        strategy = body.get("strategy", "row_count")
-        if strategy not in RECONCILE_STRATEGIES:
-            raise ApiError(422, f"unknown strategy: {strategy}")
-        sf_dir = body.get("sf_dir") or self.sf_dir
-        if not sf_dir:
-            raise ApiError(503, "sf_dir not configured")
-        limit = int(body.get("limit", 100))
-        job_id = uuid.uuid4().hex
-        if body.get("async"):
-            job = {
-                "job_id": job_id,
-                "strategy": strategy,
-                "status": "running",
-                "row_count": None,
-                "mismatch_count": None,
-                "rows": [],
-            }
-            self._keep_job(job)
-
-            def _worker() -> None:
-                try:
-                    self._run_reconciliation(job_id, strategy, sf_dir, limit)
-                except Exception as e:  # surface via job status, not a socket
-                    self._keep_job({**job, "status": "failed", "detail": str(e)})
-
-            threading.Thread(target=_worker, daemon=True).start()
-            return dict(job)
-        return self._run_reconciliation(job_id, strategy, sf_dir, limit)
-
-    def _run_reconciliation(
-        self, job_id: str, strategy: str, sf_dir: str, limit: int
+    def reconciliation_trigger(
+        self, body: dict, job_type: str = "MANUAL_ONDEMAND"
     ) -> dict:
-        df = reconcile_query(self.spark, strategy, sf_dir)
-        rows = [r.asDict() for r in df.limit(limit).collect()]
-        # checksum / timestamp_range rows each name a divergent key →
-        # durable mismatch records through the real LSM merge path;
-        # id = content digest so re-triggering upserts, not duplicates
-        mismatches = rows if strategy in ("checksum", "timestamp_range") else []
-        if mismatches:
-            import hashlib
+        """Reconcile the CDC table ``body["table"]`` against the same
+        table under ``source_warehouse`` (``reconcile.run_job``);
+        ``strategy`` is ``row_count`` (default) or ``checksum``.  The
+        scheduler's ticks call this with ``job_type="HOURLY_SCHEDULED"``.
 
-            details = [json.dumps(r, default=str, sort_keys=True) for r in mismatches]
-            mm = self.spark.createDataFrame(
-                [
-                    (f"{strategy}:{hashlib.sha1(d.encode()).hexdigest()[:16]}",
-                     job_id, strategy, d, "PENDING", None)
-                    for d in details
-                ],
-                MISMATCH_DDL,
-            )
-            self._mismatch_table().upsert(mm)
+        Sync by default (the job completes in-request).
+        ``{"async": true}`` matches the REFERENCE contract
+        (``reconciliation.py:73-119`` returns ``status=RUNNING`` and
+        the client polls ``/jobs/{id}``): the reconcile runs on a worker
+        thread and the response returns at registration latency."""
+        strategy = body.get("strategy", "row_count")
+        if strategy not in reconcile.STRATEGIES:
+            raise ApiError(422, f"unknown strategy: {strategy}")
+        if not self.source_warehouse:
+            raise ApiError(503, "source_warehouse not configured")
+        table = _validate_identifier(body.get("table", ""), "table")
+        target = self._keyed_table_or_404(table)
+        source = self._keyed_table_or_404(table, self.source_warehouse)
         job = {
-            "job_id": job_id,
-            "strategy": strategy,
-            "status": "completed",
-            "row_count": len(rows),
-            "mismatch_count": len(mismatches),
-            "rows": rows[: min(limit, 20)],
+            "job_id": uuid.uuid4().hex,
+            "table_name": table,
+            "job_type": job_type,
+            "validation_strategy": strategy.upper(),
+            "source_count": None,
+            "target_count": None,
+            "mismatch_count": None,
+            "drift_percentage": None,
+            "status": "RUNNING",
+            "alert_fired": False,
+            "started_at": time.time(),
+            "completed_at": None,
         }
         self._keep_job(job)
-        # job listings and mismatch reads are served uncached (jobs
-        # live in-memory; mismatches hit the LSM table directly), so
-        # there is nothing to invalidate here today — revisit if those
-        # routes ever gain cache entries
-        return job
+        if not body.get("async"):
+            return self._run_job(job, source, target, strategy)
+        # a failure is recorded on the job, and logged by the thread's excepthook
+        threading.Thread(target=self._run_job, daemon=True,
+                         args=(job, source, target, strategy)).start()
+        return dict(job)
+
+    def _run_job(self, job: dict, source, target, strategy: str) -> dict:
+        """Run *job* and record its outcome — the one job path: the
+        drift gauge, the job counter and the drift alert fire here,
+        and mismatches upsert into ``recon_mismatches``."""
+        try:
+            out = reconcile.run_job(source, target, strategy)
+            n = out["mismatch_count"]
+            if out["mismatches"] is not None:
+                n = self._record_mismatches(job, strategy, out["mismatches"])
+        except Exception as e:
+            self._keep_job({**job, "status": "FAILED", "completed_at": time.time(),
+                            "detail": f"{type(e).__name__}: {e}"})
+            raise
+        table, drift = job["table_name"], out["drift_pct"]
+        METRICS.inc("cdc_reconciliation_jobs_total",
+                    {"table": table, "strategy": job["validation_strategy"]})
+        METRICS.set_gauge("cdc_reconciliation_drift_percentage", drift, {"table": table})
+        alert = self.alerts.send_reconciliation_alert(table, drift, n, job["job_id"])
+        done = {
+            **job,
+            "source_count": out["src_count"],
+            "target_count": out["tgt_count"],
+            "mismatch_count": n,
+            "drift_percentage": drift,
+            "status": "COMPLETED",
+            "alert_fired": alert is not None,
+            "completed_at": time.time(),
+        }
+        self._keep_job(done)
+        return done
+
+    def _record_mismatches(self, job: dict, strategy: str, mismatches) -> int:
+        """Upsert one durable mismatch record per row of the
+        *mismatches* DataFrame (its detail: the table and the row as
+        JSON), distributed; id = content digest, so a re-detected
+        mismatch upserts instead of duplicating.  Returns the count."""
+        table = job["table_name"]
+        detail = F.to_json(F.struct(F.lit(table).alias("table"), *mismatches.columns))
+        records = mismatches.select(detail.alias("detail")).select(
+            F.concat(F.lit(f"{table}:"), F.substring(F.sha1("detail"), 1, 16)
+                     ).alias("mismatch_id"),
+            F.lit(job["job_id"]).alias("job_id"),
+            F.lit(strategy).alias("strategy"),
+            "detail",
+            F.lit("PENDING").alias("resolution_status"),
+            F.lit(None).cast("string").alias("resolution_notes"),
+        ).persist()
+        try:
+            n = records.count()
+            if n:
+                self._mismatch_table().upsert(records)
+        finally:
+            records.unpersist()
+        return n
 
     def _keep_job(self, job: dict) -> None:
         """Store *job*, forgetting the oldest jobs past ``MAX_JOBS``."""
@@ -408,10 +420,7 @@ class CdcApiService:
 
     def reconciliation_jobs(self) -> list[dict]:
         with self._jobs_lock:
-            return [
-                {k: v for k, v in j.items() if k != "rows"}
-                for j in self._jobs.values()
-            ]
+            return list(self._jobs.values())
 
     def reconciliation_job(self, job_id: str) -> dict:
         with self._jobs_lock:
@@ -516,16 +525,17 @@ class CdcApiService:
             return []
         return [r.asDict(recursive=True) for r in df.limit(limit).collect()]
 
-    def _keyed_table_or_404(self, table: str):
+    def _keyed_table_or_404(self, table: str, warehouse: str | None = None):
+        """The CDC table of configured *table* in *warehouse* (default:
+        the target warehouse); 404 when unknown or never committed."""
         from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
         from cass_cdc_pg_spark.streaming.ingest import cdc_table_path
 
         cfg = self.table_config["tables"].get(table)
         if cfg is None:
             raise ApiError(404, f"unknown table: {table}")
-        t = KeyedTable(
-            self.spark, cdc_table_path(self._require_warehouse(), table), cfg["keys"]
-        )
+        wh = warehouse or self._require_warehouse()
+        t = KeyedTable(self.spark, cdc_table_path(wh, table), cfg["keys"])
         if not t.exists():
             raise ApiError(404, f"table {table} has no data yet")
         return t

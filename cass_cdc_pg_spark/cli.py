@@ -11,9 +11,9 @@ becomes one stderr JSON line and exit 1:
 - ``dlq replay``         → POST /dlq/replay  (``dlq_replay``)
 - ``health``             → GET /health       (``health``)
 - ``metrics dump``       → GET /metrics      (``metrics``)
-- ``reconcile run``      → the trigger route's strategy table
-  (``api.RECONCILE_STRATEGIES``); prints the result rows and persists
-  no mismatches, so it needs no warehouse.
+- ``reconcile run``      → POST /reconciliation/trigger
+  (``reconciliation_trigger``): ``--table`` of ``--warehouse`` against
+  the same table of ``--source-warehouse``
 
 CLI-local verbs:
 
@@ -25,7 +25,8 @@ CLI-local verbs:
 - ``table changes``      → change feed between retained versions (CDF)
 - ``table compact``      → fold LSM deltas into fresh bases (OPTIMIZE)
 - ``table sync``         → follow a change feed into a derived table (auto-resync)
-- ``serve``              → run the HTTP listener
+- ``serve``              → run the HTTP listener, and with
+  ``--source-warehouse`` the hourly ``ReconciliationScheduler``
 
 Table metadata comes from a config JSON (the connector-config analog):
 
@@ -42,13 +43,12 @@ import sys
 from pyspark.sql import functions as F
 
 from cass_cdc_pg_spark.api import (
-    RECONCILE_STRATEGIES,
     RESOLUTION_STATUSES,
     ApiError,
     CdcApiServer,
     CdcApiService,
-    reconcile_query,
 )
+from cass_cdc_pg_spark.operators.reconcile import STRATEGIES
 
 
 def _load_config(path: str) -> dict:
@@ -67,15 +67,16 @@ def _service(args, spark) -> CdcApiService:
     config = getattr(args, "config", None)
     return CdcApiService(
         spark,
-        sf_dir=getattr(args, "sf_dir", None),
         warehouse=getattr(args, "warehouse", None),
+        source_warehouse=getattr(args, "source_warehouse", None),
         table_config=_load_config(config) if config else None,
         cache_ttl=0,
     )
 
 
 def cmd_reconcile_run(args, spark) -> int:
-    _emit(reconcile_query(spark, args.strategy, args.sf_dir).limit(args.limit).collect())
+    body = {"table": args.table, "strategy": args.strategy}
+    _emit([_service(args, spark).reconciliation_trigger(body)])
     return 0
 
 
@@ -274,20 +275,28 @@ def cmd_table_sync(args, spark) -> int:
 
 def cmd_serve(args, spark) -> int:
     """Run the HTTP listener (``api.py``) — the uvicorn analog
-    (``src/api/main.py``).  Blocks until interrupted."""
+    (``src/api/main.py``) — and, given ``--source-warehouse``, the
+    hourly reconciliation of every configured table.  Blocks until
+    interrupted."""
+    from cass_cdc_pg_spark.monitoring import ReconciliationScheduler
+
     service = CdcApiService(
         spark,
-        sf_dir=args.sf_dir,
         warehouse=args.warehouse,
+        source_warehouse=args.source_warehouse,
         table_config=_load_config(args.config) if args.config else None,
     )
     server = CdcApiServer(service, host=args.host, port=args.port,
                           rate_limit_state=args.rate_limit_state)
+    scheduler = ReconciliationScheduler(service, service.table_config["tables"])
+    if args.source_warehouse:
+        scheduler.start()
     host, port = server.start()
     print(json.dumps({"listening": f"http://{host}:{port}"}))
     try:
         server._thread.join()
     except KeyboardInterrupt:
+        scheduler.stop()
         server.stop()
     return 0
 
@@ -308,10 +317,11 @@ def build_parser() -> argparse.ArgumentParser:
 
     rec = sub.add_parser("reconcile").add_subparsers(dest="sub", required=True)
     run = rec.add_parser("run")
-    run.add_argument("--sf-dir", required=True)
-    run.add_argument("--strategy", default="row_count",
-                     choices=list(RECONCILE_STRATEGIES))
-    run.add_argument("--limit", type=int, default=100)
+    run.add_argument("--warehouse", required=True)
+    run.add_argument("--source-warehouse", required=True)
+    run.add_argument("--config", required=True)
+    run.add_argument("--table", required=True)
+    run.add_argument("--strategy", default="row_count", choices=STRATEGIES)
     run.set_defaults(fn=cmd_reconcile_run)
 
     dlq = sub.add_parser("dlq").add_subparsers(dest="sub", required=True)
@@ -349,8 +359,9 @@ def build_parser() -> argparse.ArgumentParser:
     er.set_defaults(fn=cmd_gdpr_erase)
 
     he = sub.add_parser("health")
-    he.add_argument("--sf-dir")
+    he.add_argument("--source-warehouse")
     he.add_argument("--warehouse")
+    he.add_argument("--config")
     he.set_defaults(fn=cmd_health)
 
     me = sub.add_parser("metrics").add_subparsers(dest="sub", required=True)
@@ -393,7 +404,7 @@ def build_parser() -> argparse.ArgumentParser:
     sv = sub.add_parser("serve")
     sv.add_argument("--host", default="127.0.0.1")
     sv.add_argument("--port", type=int, default=8000)
-    sv.add_argument("--sf-dir")
+    sv.add_argument("--source-warehouse")
     sv.add_argument("--warehouse")
     sv.add_argument("--config")
     sv.set_defaults(fn=cmd_serve)

@@ -10,9 +10,10 @@ Reproduces the reference's observability surface on Spark primitives:
   ``StreamingQueryProgress`` via ``CdcStreamingListener`` instead of
   instrumenting every handler — Spark already measures the pipeline.
 - **Scheduler** (``src/services/reconciliation_scheduler.py:81-211``):
-  interval-driven per-table reconciliation jobs, one instance per
-  table, persisting ReconciliationJob rows and firing alerts above
-  thresholds.
+  interval-driven per-table ROW_COUNT jobs, one instance per table,
+  run through ``api.CdcApiService.reconciliation_trigger`` — the job
+  path of the trigger route, which records the job and fires the
+  alert above thresholds.
 - **Alerts** (``src/services/alert_service.py:135-210``): severity =
   critical at ≥5% drift, warning at ≥1% (``settings.py:98-99``);
   alert records are appended locally and optionally pushed through an
@@ -189,8 +190,8 @@ UNHEALTHY = "unhealthy"
 class HealthCheckService:
     """Deep component probes with latency and an aggregated status —
     the Spark-engine analog of the reference's Cassandra/PG/Kafka/Vault
-    checks (``health_check.py:28-302``): *source readable* (one parquet
-    footer actually opened), *target writable* (a probe file round-trips
+    checks (``health_check.py:28-302``): *source readable* (every source
+    table's commit doc opened), *target writable* (a probe file round-trips
     through the warehouse dir), *stream alive* (active query with
     recent progress), *schema registry readable*.  Unconfigured
     components report ``degraded`` ("Repository not initialized" in
@@ -202,14 +203,14 @@ class HealthCheckService:
     def __init__(
         self,
         spark: SparkSession | None = None,
-        source_path: str | None = None,
+        source_tables: list[str] | None = None,
         target_warehouse: str | None = None,
         schema_registry=None,
         stream_stale_after_sec: float = 60.0,
         secrets=None,
     ) -> None:
         self.spark = spark
-        self.source_path = source_path
+        self.source_tables = source_tables
         self.target_warehouse = target_warehouse
         self.schema_registry = schema_registry
         self.stream_stale_after_sec = stream_stale_after_sec
@@ -241,22 +242,18 @@ class HealthCheckService:
             }
 
     def check_source(self) -> dict:
-        """Source readable: list the parquet dir and open one footer —
-        proves bytes are servable, not just that the path exists."""
+        """Source readable: open the commit doc of every keyed table in
+        *source_tables* (``committed_layout``; no Spark job)."""
 
         def probe() -> dict:
-            import pyarrow.parquet as pq
+            from cass_cdc_pg_spark.plans.keyed_table import committed_layout
 
-            from cass_cdc_pg_spark.sources.tables import _parquet_files
+            missing = [p for p in self.source_tables if committed_layout(p) is None]
+            if missing:
+                raise FileNotFoundError(f"no committed table at {', '.join(missing)}")
+            return {"connected": True, "tables": len(self.source_tables)}
 
-            files = _parquet_files(self.source_path)
-            if not files:
-                raise FileNotFoundError(f"no parquet files under {self.source_path}")
-            meta = pq.ParquetFile(files[0]).metadata
-            return {"connected": True, "files": len(files),
-                    "probe_rows": meta.num_rows}
-
-        return self._probe("source", self.source_path is not None, probe)
+        return self._probe("source", self.source_tables is not None, probe)
 
     def check_target(self) -> dict:
         """Target writable: round-trip a probe file through the
@@ -413,85 +410,34 @@ class AlertService:
 
 class ReconciliationScheduler:
     """Interval-driven per-table reconciliation
-    (``reconciliation_scheduler.py:81-211``): each tick runs ROW_COUNT
-    validation per table (one instance per table — ticks skip tables
-    still running), persists a ReconciliationJob row, and alerts above
-    thresholds.
+    (``reconciliation_scheduler.py:81-211``): each tick runs one
+    ROW_COUNT job per table of *tables* through *service*'s
+    ``reconciliation_trigger`` (an ``api.CdcApiService``), one instance
+    per table — ticks skip tables still running."""
 
-    *table_sources*: ``{table: () -> (src_df, tgt_df)}`` thunks so each
-    run re-reads current state."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        table_sources: dict[str, Callable[[], tuple]],
-        jobs_path: str,
-        alert_service: AlertService | None = None,
-        interval_seconds: float = 3600.0,
-        metrics: MetricsCollector | None = None,
-    ) -> None:
-        self.spark = spark
-        self.table_sources = table_sources
-        self.jobs_path = jobs_path.rstrip("/")
-        self.alerts = alert_service or AlertService()
+    def __init__(self, service, tables: list[str],
+                 interval_seconds: float = 3600.0) -> None:
+        self.service = service
+        self.tables = list(tables)
         self.interval_seconds = interval_seconds
-        self.metrics = metrics or METRICS
         self._running: set[str] = set()
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
-        os.makedirs(self.jobs_path, exist_ok=True)
 
-    def run_once(self, table: str, job_type: str = "HOURLY_SCHEDULED") -> dict | None:
-        """Run one reconciliation job for *table*; returns the job row
+    def run_once(self, table: str) -> dict | None:
+        """Run one reconciliation job for *table*; returns the job
         (None if an instance is already running — max_instances=1)."""
         with self._lock:
             if table in self._running:
                 return None
             self._running.add(table)
         try:
-            started = time.time()
-            src_df, tgt_df = self.table_sources[table]()
-            row = reconcile.row_count_validation(src_df, tgt_df).collect()[0]
-            job = {
-                "job_id": str(uuid.uuid4()),
-                "table_name": table,
-                "job_type": job_type,
-                "validation_strategy": "ROW_COUNT",
-                "source_count": row["src_count"],
-                "target_count": row["tgt_count"],
-                "mismatch_count": row["mismatch_count"],
-                "drift_percentage": float(row["drift_pct"]),
-                "status": "COMPLETED",
-                "alert_fired": row["severity"] != "ok",
-                "started_at": started,
-                "completed_at": time.time(),
-            }
-            self._append_job(job)
-            self.metrics.inc("cdc_reconciliation_jobs_total",
-                             {"table": table, "strategy": "ROW_COUNT"})
-            self.metrics.set_gauge("cdc_reconciliation_drift_percentage",
-                                   job["drift_percentage"], {"table": table})
-            self.alerts.send_reconciliation_alert(
-                table, job["drift_percentage"], job["mismatch_count"], job["job_id"]
-            )
-            return job
+            return self.service.reconciliation_trigger(
+                {"table": table, "strategy": "row_count"}, job_type="HOURLY_SCHEDULED")
         finally:
             with self._lock:
                 self._running.discard(table)
-
-    def _append_job(self, job: dict) -> None:
-        df = self.spark.createDataFrame(
-            [tuple(job.values())],
-            "job_id string, table_name string, job_type string, "
-            "validation_strategy string, source_count long, target_count long, "
-            "mismatch_count long, drift_percentage double, status string, "
-            "alert_fired boolean, started_at double, completed_at double",
-        )
-        df.write.mode("append").parquet(self.jobs_path)
-
-    def jobs(self):
-        return self.spark.read.parquet(self.jobs_path)
 
     # -- loop ---------------------------------------------------------------
 
@@ -502,14 +448,14 @@ class ReconciliationScheduler:
 
         def loop() -> None:
             while not self._stop.wait(self.interval_seconds):
-                for table in list(self.table_sources):
+                for table in self.tables:
                     if self._stop.is_set():
                         return
                     try:
                         self.run_once(table)
                     except Exception:  # noqa: BLE001 — scheduler must survive
-                        self.metrics.inc("cdc_reconciliation_job_errors_total",
-                                         {"table": table})
+                        METRICS.inc("cdc_reconciliation_job_errors_total",
+                                    {"table": table})
 
         self._thread = threading.Thread(target=loop, daemon=True)
         self._thread.start()

@@ -14,6 +14,10 @@ strategy is ONE distributed plan:
 - field diff   → unpivot of the mismatching columns
   (``reconciliation_mismatch.py:134-169``)
 
+``run_job`` composes them into the one reconciliation job over two
+replicated ``KeyedTable``s; the trigger route, ``reconcile run`` and
+the scheduler all run it.
+
 Scale: the join shuffles both sides by PK — at 100 TB enable AQE skew
 join (on by default in our session) and optionally bucket both tables
 by PK so the join is shuffle-free.  Nothing is collected to the
@@ -22,6 +26,7 @@ driver; mismatch rows stay distributed.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 
@@ -29,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cass_cdc_pg_spark.functions.checksum import row_checksum
+from cass_cdc_pg_spark.plans.keyed_table import META_COLS
 
 MISSING_IN_TARGET = "MISSING_IN_TARGET"
 MISSING_IN_SOURCE = "MISSING_IN_SOURCE"
@@ -75,6 +81,11 @@ def row_count_validation(src: DataFrame, tgt: DataFrame) -> DataFrame:
     return _row_count_projection(a.crossJoin(b))
 
 
+#: Most recently used analysed DataFrames ``row_count_validation_from_counts`` keeps.
+ROW_COUNT_CACHE_MAX = 64
+
+
+@functools.lru_cache(maxsize=ROW_COUNT_CACHE_MAX)
 def row_count_validation_from_counts(
     spark, src_count: int, tgt_count: int
 ) -> DataFrame:
@@ -84,8 +95,10 @@ def row_count_validation_from_counts(
     ROUND/severity semantics to the generic path — it is the same
     Catalyst expressions), because building the projection through the
     Column API costs ~70 ms of py4j round-trips per call; the analyzed
-    DataFrame is memoized per (session, counts) so repeat runs pay
-    only the action.
+    DataFrame is memoized per (session, counts) — the
+    ``ROW_COUNT_CACHE_MAX`` most recently used, keyed on the session
+    object, whose ``id()`` could be reused once it is collected — so
+    repeat runs pay only the action.
 
     Floor note (measured local[32], warm): executing *any* one-row
     ``count()`` costs ~70 ms on this box (job scheduling + py4j), vs
@@ -94,27 +107,18 @@ def row_count_validation_from_counts(
     (``spark.createDataFrame`` is deliberately avoided: its pickled-RDD
     path costs ~250 ms per action)."""
     a, b = int(src_count), int(tgt_count)
-    key = (id(spark), a, b)
-    cached = _ROW_COUNT_DF_CACHE.get(key)
-    if cached is not None:
-        return cached
     drift = f"ROUND(ABS(CAST({a} AS BIGINT) - CAST({b} AS BIGINT)) * 100.0 / {a}, 2)"
     # CAST to DOUBLE: the bare SQL literal 100.0 is DECIMAL, so the
     # ROUND would otherwise surface as decimal(27,2) — a type the
     # driver's pandas canonicalizer is not guaranteed to render the
     # way the oracle's DOUBLE renders (tests/test_oracle_dtypes.py).
-    df = spark.sql(
+    return spark.sql(
         f"SELECT CAST({a} AS BIGINT) AS src_count, CAST({b} AS BIGINT) AS tgt_count, "
         f"ABS(CAST({a} AS BIGINT) - CAST({b} AS BIGINT)) AS mismatch_count, "
         f"CAST({drift} AS DOUBLE) AS drift_pct, "
         f"CASE WHEN {drift} >= {DRIFT_CRITICAL_PCT} THEN 'critical' "
         f"WHEN {drift} >= {DRIFT_WARNING_PCT} THEN 'warning' ELSE 'ok' END AS severity"
     )
-    _ROW_COUNT_DF_CACHE[key] = df
-    return df
-
-
-_ROW_COUNT_DF_CACHE: dict[tuple, DataFrame] = {}
 
 
 def with_checksum(df: DataFrame, pk: list[str], compare_cols: list[str]) -> DataFrame:
@@ -270,6 +274,50 @@ def field_diff(
         F.col("d.src_val").alias("src_val"),
         F.col("d.tgt_val").alias("tgt_val"),
     )
+
+
+#: The strategies ``run_job`` runs.
+STRATEGIES = ("row_count", "checksum")
+
+
+def run_job(source, target, strategy: str, since_version: int | None = None) -> dict:
+    """One reconciliation job of the keyed table *target* against its
+    *source* (two ``KeyedTable``s on the same key columns), over their
+    visible rows and the payload columns both sides hold:
+
+    - ``row_count``: Q1.
+    - ``checksum``: Q1 and the Q3 checksum diff, each DATA_MISMATCH key
+      carrying its Q8 field diff.  With *since_version*, the scoped
+      ``incremental_checksum_diff`` over the keys the source's change
+      feed touched after that version replaces the full diff (no
+      field diff).
+
+    Returns the Q1 row (src_count, tgt_count, mismatch_count, drift_pct,
+    severity) with ``mismatches``: None for ``row_count`` and for a
+    scope with no changes, else a DataFrame of one row per divergent
+    key — pk columns, mismatch_type, src_checksum, tgt_checksum and,
+    for the full diff, ``fields`` (array of column, src_val, tgt_val;
+    null unless DATA_MISMATCH).  Only the Q1 row is collected."""
+    if strategy not in STRATEGIES:
+        raise ValueError(f"unknown strategy: {strategy}")
+    pk = list(source.key_cols)
+    src = source.read_live().drop(*META_COLS)
+    tgt = target.read_live().drop(*META_COLS)
+    out = {**row_count_validation(src, tgt).collect()[0].asDict(), "mismatches": None}
+    if strategy == "row_count":
+        return out
+    compare = [c for c in src.columns if c not in pk and c in tgt.columns]
+    if since_version is not None:
+        out["mismatches"] = incremental_checksum_diff(source, target, since_version, compare)
+        return out
+    diff = checksum_diff(src, tgt, pk, compare)
+    dm = diff.filter(F.col("mismatch_type") == DATA_MISMATCH).select(*pk)
+    fields = field_diff(
+        src.join(dm, pk, "left_semi"), tgt.join(dm, pk, "left_semi"), pk, compare,
+    ).groupBy(*pk).agg(
+        F.array_sort(F.collect_list(F.struct("column", "src_val", "tgt_val"))).alias("fields"))
+    out["mismatches"] = diff.join(fields, pk, "left")
+    return out
 
 
 def register_bucketed(

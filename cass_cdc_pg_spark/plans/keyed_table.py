@@ -157,8 +157,10 @@ class KeyedTable:
         A retained version comes from ``_log/``; the current doc also
         answers for its own version when the crash window after the
         pointer swap ate its log copy; anything else raises
-        FileNotFoundError.  A path with no commit reads as version 0
-        with no buckets."""
+        FileNotFoundError.  Version 0 is the table before its first
+        commit — no buckets, whatever was committed since."""
+        if version == 0:
+            return {"buckets": {}, "version": 0}
         if version is not None:
             try:
                 with open(self._log_path(version)) as f:
@@ -371,9 +373,11 @@ class KeyedTable:
         GC'd past *keep_versions*).
 
         Merge-on-read: buckets carrying deltas are LWW-reduced; a
-        fully-compacted table is a plain parquet scan."""
+        fully-compacted table is a plain parquet scan.  Buckets with no
+        state at the version read as None, and at version 0 every
+        bucket does."""
         manifest = self._doc(version)["buckets"]
-        if not manifest:
+        if not manifest and version != 0:
             raise FileNotFoundError(f"empty keyed table at {self.path}")
         wanted = (
             manifest.items()

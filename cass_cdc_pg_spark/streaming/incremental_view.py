@@ -115,9 +115,7 @@ class IncrementalAggView(ChangeFeedFollower):
         buckets = self.source.bucket_ids(keys)
         parts = []
         for version, sign in ((hi, 1), (cur, -1)):
-            # version 0 is the empty table; buckets with no state at
-            # a version read as None
-            rows = self.source.read(buckets, version=version) if version else None
+            rows = self.source.read(buckets, version=version)
             if rows is not None:
                 c = self._contribution(rows.join(keys, key_cols, "left_semi"))
                 parts.append(c.select(

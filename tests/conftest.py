@@ -29,3 +29,32 @@ def _no_stray_streams():
                 q.stop()
             except Exception:
                 pass
+
+
+def make_recon_pair(spark, root, n=20):
+    """``(warehouse, source_warehouse, table_config)`` under *root*, each
+    warehouse holding a ``users`` CDC table: *n* source rows; the target
+    misses the last key (5 % drift at n=20) and holds u03 with another
+    age."""
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+    from cass_cdc_pg_spark.streaming.ingest import cdc_table_path
+
+    payload = "id string, username string, age int"
+    ddl = (payload + ", _cdc_deleted boolean, _cdc_timestamp_micros long, "
+           "_last_event_id string, _ttl_expiry_timestamp_us long")
+    src = [(f"u{i:02d}", f"user{i}", 20 + i, False, 1000, f"e{i}", None)
+           for i in range(n)]
+    tgt = [(k, u, a + 1 if k == "u03" else a, *meta) for k, u, a, *meta in src[:-1]]
+    out = []
+    for name, rows in (("recon_tgt", tgt), ("recon_src", src)):
+        wh = str(root / name)
+        KeyedTable(spark, cdc_table_path(wh, "users"), ["id"], num_buckets=2).merge(
+            spark.createDataFrame(rows, ddl))
+        out.append(wh)
+    return (*out, {"tables": {"users": {"ddl": payload, "keys": ["id"]}}})
+
+
+@pytest.fixture
+def recon_pair(spark, tmp_path):
+    """``make_recon_pair`` with 20 source rows."""
+    return make_recon_pair(spark, tmp_path)

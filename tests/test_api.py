@@ -24,7 +24,7 @@ CHANGE_EVENT_DDL = (
     "schema_version int, ttl_seconds int, is_tombstone boolean"
 )
 
-SF = "/root/testdata/sf0.001"
+USERS_CFG = {"tables": {"users": {"ddl": USERS_DDL, "keys": ["id"]}}}
 
 
 def _seed_warehouse(spark, wh: str) -> None:
@@ -49,8 +49,9 @@ def _seed_warehouse(spark, wh: str) -> None:
 
 
 @contextlib.contextmanager
-def _server(spark, wh=None, sf_dir=None, cfg=None, rate_limit_state=None):
-    svc = CdcApiService(spark, sf_dir=sf_dir, warehouse=wh, table_config=cfg)
+def _server(spark, wh=None, source_wh=None, cfg=None, rate_limit_state=None):
+    svc = CdcApiService(spark, warehouse=wh, source_warehouse=source_wh,
+                        table_config=cfg)
     srv = CdcApiServer(svc, rate_limit_state=rate_limit_state)
     host, port = srv.start()
     try:
@@ -79,12 +80,14 @@ def _req(base: str, method: str, path: str, body=None, headers=None):
 def test_api_health_metrics_request_id_and_routing(spark, tmp_path):
     wh = str(tmp_path / "wh")
     _seed_warehouse(spark, wh)
-    with _server(spark, wh=wh, sf_dir=SF) as base:
+    # the warehouse is its own source: its users table has a commit doc
+    with _server(spark, wh=wh, source_wh=wh, cfg=USERS_CFG) as base:
         st, hdrs, out = _req(base, "GET", "/health",
                              headers={"X-Request-ID": "req-7"})
         assert st == 200
         assert hdrs["X-Request-ID"] == "req-7"  # header echo (middleware)
         assert out["components"]["source"]["status"] == "healthy"
+        assert out["components"]["source"]["details"]["tables"] == 1
         assert out["components"]["target"]["status"] == "healthy"
 
         st, _, comp = _req(base, "GET", "/health/source")
@@ -106,8 +109,7 @@ def test_api_health_metrics_request_id_and_routing(spark, tmp_path):
 def test_api_dlq_surface(spark, tmp_path):
     wh = str(tmp_path / "wh")
     _seed_warehouse(spark, wh)
-    cfg = {"tables": {"users": {"ddl": USERS_DDL, "keys": ["id"]}}}
-    with _server(spark, wh=wh, sf_dir=SF, cfg=cfg) as base:
+    with _server(spark, wh=wh, cfg=USERS_CFG) as base:
         st, _, recs = _req(base, "GET", "/dlq/records")
         assert st == 200 and len(recs) == 1
         assert recs[0]["resolution_status"] == "PENDING"
@@ -127,34 +129,61 @@ def test_api_dlq_surface(spark, tmp_path):
         assert st == 200 and out["replayed"] == 1
 
 
-def test_api_reconciliation_flow(spark, tmp_path):
-    wh = str(tmp_path / "wh")
-    with _server(spark, wh=wh, sf_dir=SF) as base:
+def test_api_reconciliation_flow(spark, recon_pair):
+    """The trigger reconciles a CDC table against the same table in the
+    source warehouse: a reference-shaped job, 404/503/422 errors, and
+    durable mismatch records that list and resolve."""
+    wh, src_wh, cfg = recon_pair
+    with _server(spark, wh=wh, source_wh=src_wh, cfg=cfg) as base:
         st, _, job = _req(base, "POST", "/reconciliation/trigger",
-                          body={"strategy": "row_count"})
-        assert st == 200 and job["status"] == "completed"
-        assert {"src_count", "tgt_count", "severity"} <= set(job["rows"][0])
+                          body={"table": "users"})
+        assert st == 200 and job["status"] == "COMPLETED"
+        assert {k: job[k] for k in (
+            "table_name", "job_type", "validation_strategy", "source_count",
+            "target_count", "mismatch_count", "drift_percentage", "alert_fired",
+        )} == {"table_name": "users", "job_type": "MANUAL_ONDEMAND",
+               "validation_strategy": "ROW_COUNT", "source_count": 20,
+               "target_count": 19, "mismatch_count": 1,
+               "drift_percentage": 5.0, "alert_fired": True}
+        assert job["started_at"] <= job["completed_at"]
 
         st, _, jobs = _req(base, "GET", "/reconciliation/jobs")
         assert st == 200 and [j["job_id"] for j in jobs] == [job["job_id"]]
         st, _, got = _req(base, "GET",
                           f"/reconciliation/jobs/{job['job_id']}")
-        assert st == 200 and got["strategy"] == "row_count"
+        assert st == 200 and got == job
         st, _, _ = _req(base, "GET", "/reconciliation/jobs/deadbeef")
         assert st == 404
 
-        st, _, bad = _req(base, "POST", "/reconciliation/trigger",
-                          body={"strategy": "full_scan"})
-        assert st == 422 and "unknown strategy" in bad["detail"]
+        for body, status, detail in (
+            ({"table": "users", "strategy": "full_scan"}, 422, "unknown strategy"),
+            ({"table": "ghost"}, 404, "unknown table"),
+        ):
+            st, _, bad = _req(base, "POST", "/reconciliation/trigger", body=body)
+            assert st == status and detail in bad["detail"], bad
 
-        # checksum trigger persists durable mismatch records
+        # a checksum job persists one mismatch record per divergent key
         st, _, cj = _req(base, "POST", "/reconciliation/trigger",
-                         body={"strategy": "checksum", "limit": 10})
-        assert st == 200 and cj["mismatch_count"] > 0
-        st, _, mms = _req(base, "GET", "/reconciliation/mismatches?limit=5")
-        assert st == 200 and 0 < len(mms) <= 5
-        assert mms[0]["resolution_status"] == "PENDING"
-        assert json.loads(mms[0]["detail"])  # row payload round-trips
+                         body={"table": "users", "strategy": "checksum"})
+        assert st == 200 and cj["validation_strategy"] == "CHECKSUM"
+        assert cj["mismatch_count"] == 2
+        st, _, mms = _req(base, "GET", "/reconciliation/mismatches")
+        assert st == 200 and len(mms) == 2
+        assert {m["job_id"] for m in mms} == {cj["job_id"]}
+        details = {json.loads(m["detail"])["id"]: json.loads(m["detail"])
+                   for m in mms}
+        assert details["u19"]["mismatch_type"] == "MISSING_IN_TARGET"
+        assert details["u03"]["mismatch_type"] == "DATA_MISMATCH"
+        assert details["u03"]["fields"] == [
+            {"column": "age", "src_val": "23", "tgt_val": "24"}]
+        st, _, page = _req(base, "GET", "/reconciliation/mismatches?limit=1")
+        assert st == 200 and page == mms[:1]
+
+        # re-detecting the same mismatches upserts, not duplicates
+        st, _, _ = _req(base, "POST", "/reconciliation/trigger",
+                        body={"table": "users", "strategy": "checksum"})
+        st, _, again = _req(base, "GET", "/reconciliation/mismatches")
+        assert st == 200 and len(again) == 2
 
         mid = mms[0]["mismatch_id"]
         st, _, res = _req(base, "POST",
@@ -169,6 +198,11 @@ def test_api_reconciliation_flow(spark, tmp_path):
         st, _, _ = _req(base, "POST",
                         "/reconciliation/mismatches/none/resolve", body={})
         assert st == 404
+
+    with _server(spark, wh=wh, cfg=cfg) as base:  # no source_warehouse
+        st, _, err = _req(base, "POST", "/reconciliation/trigger",
+                          body={"table": "users"})
+        assert st == 503 and "source_warehouse" in err["detail"]
 
 
 def test_api_gdpr_delete(spark, tmp_path):
@@ -287,7 +321,7 @@ def test_api_hot_route_cache_and_invalidation(spark, tmp_path):
 
     from cass_cdc_pg_spark.api import CdcApiService
 
-    svc = CdcApiService(spark, sf_dir=None, warehouse=wh, cache_ttl=60.0)
+    svc = CdcApiService(spark, warehouse=wh, cache_ttl=60.0)
     first = svc.dlq_stats()
     assert first["total"] == 1
     calls = []
@@ -299,7 +333,7 @@ def test_api_hot_route_cache_and_invalidation(spark, tmp_path):
     assert svc.dlq_stats() == first  # recomputed after invalidation
     assert calls == [1]
 
-    nocache = CdcApiService(spark, sf_dir=None, warehouse=wh, cache_ttl=0)
+    nocache = CdcApiService(spark, warehouse=wh, cache_ttl=0)
     seen = []
     inner = nocache._dlq_stats_compute
     nocache._dlq_stats_compute = lambda: seen.append(1) or inner()
@@ -307,27 +341,28 @@ def test_api_hot_route_cache_and_invalidation(spark, tmp_path):
     assert seen == [1, 1]  # every call computes
 
 
-def test_api_async_reconciliation_trigger(spark, tmp_path):
+def test_api_async_reconciliation_trigger(spark, recon_pair):
     """The reference trigger contract (reconciliation.py:73-119):
-    async returns status=running immediately; polling /jobs/{id}
-    eventually shows completed with the same fields the sync path
+    async returns status=RUNNING immediately; polling /jobs/{id}
+    eventually shows COMPLETED with the same fields the sync path
     returns."""
     import time as _time
 
-    wh = str(tmp_path / "wh")
-    with _server(spark, wh=wh, sf_dir=SF) as base:
+    wh, src_wh, cfg = recon_pair
+    with _server(spark, wh=wh, source_wh=src_wh, cfg=cfg) as base:
         st, _, job = _req(base, "POST", "/reconciliation/trigger",
-                          body={"strategy": "row_count", "async": True})
-        assert st == 200 and job["status"] == "running"
+                          body={"table": "users", "async": True})
+        assert st == 200 and job["status"] == "RUNNING"
         jid = job["job_id"]
         for _ in range(120):
             st, _, got = _req(base, "GET", f"/reconciliation/jobs/{jid}")
             assert st == 200
-            if got["status"] != "running":
+            if got["status"] != "RUNNING":
                 break
             _time.sleep(0.5)
-        assert got["status"] == "completed", got
-        assert {"src_count", "tgt_count", "severity"} <= set(got["rows"][0])
+        assert got["status"] == "COMPLETED", got
+        assert (got["source_count"], got["target_count"]) == (20, 19)
+        assert set(got) == set(job)
 
 
 def test_api_empty_dlq_is_200(spark, tmp_path):
@@ -363,17 +398,18 @@ def test_api_gdpr_delete_deletes_once(spark, tmp_path, monkeypatch):
     assert KeyedTable(spark, f"{wh}/cdc_users", ["id"]).read_live().count() == 0
 
 
-def test_api_job_registry_keeps_only_the_most_recent(spark, monkeypatch):
+def test_api_job_registry_keeps_only_the_most_recent(spark, recon_pair, monkeypatch):
     """A long-running server keeps the ``MAX_JOBS`` most recent
     reconciliation jobs; older ones answer 404."""
     from cass_cdc_pg_spark import api
 
     monkeypatch.setattr(api, "MAX_JOBS", 2)
-    svc = CdcApiService(spark, sf_dir=SF)
-    ids = [svc.reconciliation_trigger({"strategy": "row_count"})["job_id"]
+    wh, src_wh, cfg = recon_pair
+    svc = CdcApiService(spark, warehouse=wh, source_warehouse=src_wh, table_config=cfg)
+    ids = [svc.reconciliation_trigger({"table": "users"})["job_id"]
            for _ in range(3)]
     assert [j["job_id"] for j in svc.reconciliation_jobs()] == ids[1:]
-    assert svc.reconciliation_job(ids[2])["status"] == "completed"
+    assert svc.reconciliation_job(ids[2])["status"] == "COMPLETED"
     with pytest.raises(api.ApiError) as e:
         svc.reconciliation_job(ids[0])
     assert e.value.status == 404

@@ -89,16 +89,22 @@ def test_cli_full_surface(spark, tmp_path, capsys):
     assert "cdc_events_processed_total" in capsys.readouterr().out
 
 
-def test_cli_reconcile_and_health(spark, tmp_path, capsys):
-    sf = "/root/testdata/sf0.001"
-    assert main(["reconcile", "run", "--sf-dir", sf,
-                 "--strategy", "row_count"], spark) == 0
-    row = json.loads(capsys.readouterr().out)
-    assert {"src_count", "tgt_count", "drift_pct", "severity"} <= set(row)
+def test_cli_reconcile_and_health(spark, tmp_path, recon_pair, capsys):
+    """`reconcile run` prints the job the trigger route returns."""
+    recon_wh, recon_src, recon_cfg = recon_pair
+    cfg = tmp_path / "recon_cfg.json"
+    cfg.write_text(json.dumps(recon_cfg))
+    assert main(["reconcile", "run", "--warehouse", recon_wh,
+                 "--source-warehouse", recon_src, "--config", str(cfg),
+                 "--table", "users", "--strategy", "checksum"], spark) == 0
+    job = json.loads(capsys.readouterr().out)
+    assert (job["status"], job["validation_strategy"]) == ("COMPLETED", "CHECKSUM")
+    assert (job["source_count"], job["target_count"], job["mismatch_count"]) == (20, 19, 2)
 
     wh = str(tmp_path / "wh")
     _seed_warehouse(spark, wh)
-    assert main(["health", "--sf-dir", sf, "--warehouse", wh], spark) == 0
+    assert main(["health", "--source-warehouse", wh, "--warehouse", wh,
+                 "--config", _cfg(tmp_path)], spark) == 0
     health = json.loads(capsys.readouterr().out)
     assert health["components"]["source"]["status"] == "healthy"
     assert health["components"]["target"]["status"] == "healthy"
@@ -150,10 +156,12 @@ def test_cli_prints_what_the_service_returns(spark, tmp_path, capsys):
     answer for the same arguments."""
     from cass_cdc_pg_spark.api import CdcApiService
 
-    sf = "/root/testdata/sf0.001"
     wh = str(tmp_path / "wh")
     _seed_warehouse(spark, wh)
-    svc = CdcApiService(spark, sf_dir=sf, warehouse=wh, cache_ttl=0)
+    cfg = _cfg(tmp_path)
+    with open(cfg) as fh:
+        svc = CdcApiService(spark, warehouse=wh, source_warehouse=wh,
+                            table_config=json.load(fh), cache_ttl=0)
 
     assert main(["dlq", "list", "--warehouse", wh], spark) == 0
     assert _lines(capsys.readouterr().out) == json.loads(
@@ -166,7 +174,8 @@ def test_cli_prints_what_the_service_returns(spark, tmp_path, capsys):
     assert main(["dlq", "stats", "--warehouse", wh], spark) == 0
     assert _lines(capsys.readouterr().out) == [svc.dlq_stats()]
 
-    assert main(["health", "--sf-dir", sf, "--warehouse", wh], spark) == 0
+    assert main(["health", "--source-warehouse", wh, "--warehouse", wh,
+                 "--config", cfg], spark) == 0
     (printed,) = _lines(capsys.readouterr().out)
     status, out = svc.health()
     assert status == 200

@@ -421,6 +421,18 @@ def test_time_travel_reads_prior_versions(spark, tmp_path):
     assert all(h["updated_at"] is not None for h in hist)
 
 
+def test_version_zero_reads_as_the_empty_table(spark, tmp_path):
+    """Version 0 is the table before its first commit: after three
+    commits it still reads as empty, never as "not retained"."""
+    t = KeyedTable(spark, str(tmp_path / "v0"), ["id"], num_buckets=2)
+    for i in range(3):
+        t.merge(_batch(spark, [(f"k{i}", "v", False, 1000 + i, f"e{i}", None)]))
+    assert t._current_version() == 3
+    assert t._doc(0) == {"buckets": {}, "version": 0}
+    assert t.read([0], version=0) is None
+    assert t.read(version=0) is None
+
+
 def test_time_travel_survives_compaction_gc(spark, tmp_path):
     """Compaction rewrites bases and GC runs — but dirs referenced by
     retained historical versions must survive, so a pre-compaction

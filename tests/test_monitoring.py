@@ -82,53 +82,51 @@ def test_alert_log_keeps_only_the_most_recent(monkeypatch):
     assert [x["job_id"] for x in a.alerts] == ["job-2", "job-3", "job-4"]
 
 
-def test_drift_5pct_fires_critical_alert(spark, tmp_path):
+def _service(spark, wh, src_wh, cfg):
+    from cass_cdc_pg_spark.api import CdcApiService
+
+    return CdcApiService(spark, warehouse=wh, source_warehouse=src_wh,
+                         table_config=cfg)
+
+
+def test_drift_5pct_fires_critical_alert(spark, recon_pair):
     """VERDICT r1 'done' criterion: a drift-5% run emits a critical
-    alert record."""
+    alert record.  The scheduled job runs the trigger route's job path,
+    so it lists among the service's jobs."""
     pushed = []
-    alerts = AlertService(pusher=pushed.append)
-    src = spark.range(100).select(F.col("id"))
-    tgt = spark.range(95).select(F.col("id"))  # 5% drift
-    sched = ReconciliationScheduler(
-        spark,
-        {"users": lambda: (src, tgt)},
-        str(tmp_path / "jobs"),
-        alert_service=alerts,
-    )
+    svc = _service(spark, *recon_pair)
+    svc.alerts = AlertService(pusher=pushed.append)
+    sched = ReconciliationScheduler(svc, ["users"])
     job = sched.run_once("users")
     assert job["drift_percentage"] == 5.0
     assert job["alert_fired"] is True
-    assert len(alerts.alerts) == 1
-    assert alerts.alerts[0]["severity"] == "critical"
-    assert pushed == alerts.alerts  # pusher hook saw the same record
-    # job row persisted
-    rows = sched.jobs().collect()
-    assert len(rows) == 1 and rows[0]["status"] == "COMPLETED"
-    assert rows[0]["validation_strategy"] == "ROW_COUNT"
+    assert len(svc.alerts.alerts) == 1
+    assert svc.alerts.alerts[0]["severity"] == "critical"
+    assert pushed == svc.alerts.alerts  # pusher hook saw the same record
+    assert svc.reconciliation_jobs() == [job]
+    assert (job["status"], job["job_type"], job["validation_strategy"]) == (
+        "COMPLETED", "HOURLY_SCHEDULED", "ROW_COUNT")
+    assert METRICS.value("cdc_reconciliation_drift_percentage",
+                         {"table": "users"}) == 5.0
 
 
 def test_scheduler_no_alert_below_threshold(spark, tmp_path):
-    alerts = AlertService()
-    src = spark.range(1000)
-    tgt = spark.range(999)  # 0.1% drift
-    sched = ReconciliationScheduler(
-        spark, {"t": lambda: (src, tgt)}, str(tmp_path / "jobs"),
-        alert_service=alerts,
-    )
-    job = sched.run_once("t")
+    from conftest import make_recon_pair
+
+    # 200 source rows against 199 target rows: 0.5 % drift
+    svc = _service(spark, *make_recon_pair(spark, tmp_path, n=200))
+    job = ReconciliationScheduler(svc, ["users"]).run_once("users")
+    assert (job["drift_percentage"], job["mismatch_count"]) == (0.5, 1)
     assert job["alert_fired"] is False
-    assert alerts.alerts == []
+    assert svc.alerts.alerts == []
 
 
-def test_scheduler_max_one_instance_per_table(spark, tmp_path):
-    sched = ReconciliationScheduler(
-        spark, {"t": lambda: (spark.range(10), spark.range(10))},
-        str(tmp_path / "jobs"),
-    )
-    sched._running.add("t")  # simulate a job in flight
-    assert sched.run_once("t") is None
-    sched._running.discard("t")
-    assert sched.run_once("t") is not None
+def test_scheduler_max_one_instance_per_table(spark, recon_pair):
+    sched = ReconciliationScheduler(_service(spark, *recon_pair), ["users"])
+    sched._running.add("users")  # simulate a job in flight
+    assert sched.run_once("users") is None
+    sched._running.discard("users")
+    assert sched.run_once("users") is not None
 
 
 def test_ingest_feeds_red_metrics(spark, tmp_path):
@@ -225,11 +223,11 @@ def test_health_all_green(spark, tmp_path):
     import os
 
     from cass_cdc_pg_spark.monitoring import HEALTHY, HealthCheckService
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
     from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
 
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
-    spark.range(10).write.parquet(f"{src_dir}/t.parquet")
+    src = KeyedTable(spark, str(tmp_path / "src" / "cdc_t"), ["id"], num_buckets=1)
+    src.upsert(spark.range(10))
     reg = SchemaRegistry(str(tmp_path / "reg"))
 
     # a live stream so the stream probe is healthy
@@ -248,7 +246,7 @@ def test_health_all_green(spark, tmp_path):
         q.processAllAvailable()
         hc = HealthCheckService(
             spark,
-            source_path=src_dir,
+            source_tables=[src.path],
             target_warehouse=str(tmp_path / "wh"),
             schema_registry=reg,
         )
@@ -256,8 +254,8 @@ def test_health_all_green(spark, tmp_path):
     finally:
         q.stop()
     assert out["status"] == HEALTHY, out
-    # one footer is opened (readability proof), not the whole table
-    assert out["components"]["source"]["details"]["probe_rows"] > 0
+    # the source table's commit doc is opened, no data file
+    assert out["components"]["source"]["details"]["tables"] == 1
     assert out["components"]["target"]["details"]["writable"] is True
     assert out["components"]["stream"]["details"]["active_queries"] >= 1
     assert all(
@@ -278,7 +276,7 @@ def test_health_probe_failures(spark, tmp_path):
 
     hc = HealthCheckService(
         spark,
-        source_path=str(tmp_path / "nope"),
+        source_tables=[str(tmp_path / "nope")],
         target_warehouse="/proc/definitely-not-writable/wh",
         schema_registry=None,
     )

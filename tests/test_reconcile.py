@@ -200,3 +200,95 @@ def test_incremental_checksum_diff_rejects_different_key_sets(spark, tmp_path):
     tgt = KeyedTable(spark, str(tmp_path / "t2"), ["b"], num_buckets=2)
     with pytest.raises(ValueError, match="share key columns"):
         incremental_checksum_diff(src, tgt, 0, ["val"])
+
+
+def _seeded_pair(spark, tmp_path):
+    """A source and a target keyed table, each a base commit plus a
+    delta commit.  Source: ids 0-59 at version 0, then the ids with
+    id % 3 == 0 rewritten.  Target: the source's final state plus the
+    extra ids 60-62, then a delta that mutates columns a and c of the
+    ids with id % 10 == 1 and deletes the ids with id % 10 == 7.
+    Returns (source, target, source version before its delta)."""
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+
+    ddl = ("id long, a string, b long, c double, _cdc_deleted boolean, "
+           "_cdc_timestamp_micros long, _last_event_id string, "
+           "_ttl_expiry_timestamp_us long")
+
+    def row(i, version, ts, mutated=False, deleted=False):
+        a, c = f"a{i}-{version}", i * 1.5 + version
+        if mutated:
+            a, c = a + "!", c + 1000
+        return (i, a, i + 100 * version, c, deleted, ts, f"e{i}-{ts}", None)
+
+    def final(i):
+        return 1 if i % 3 == 0 else 0
+
+    src = KeyedTable(spark, str(tmp_path / "src"), ["id"], num_buckets=4)
+    tgt = KeyedTable(spark, str(tmp_path / "tgt"), ["id"], num_buckets=4)
+    src.merge(spark.createDataFrame([row(i, 0, 1) for i in range(60)], ddl))
+    since = src._current_version()
+    src.merge(spark.createDataFrame(
+        [row(i, 1, 2) for i in range(60) if i % 3 == 0], ddl))
+    tgt.merge(spark.createDataFrame(
+        [row(i, final(i), 1) for i in range(63)], ddl))
+    tgt.merge(spark.createDataFrame(
+        [row(i, final(i), 3, mutated=i % 10 == 1, deleted=i % 10 == 7)
+         for i in range(60) if i % 10 in (1, 7)], ddl))
+    return src, tgt, since
+
+
+def test_run_job_matches_the_seeded_perturbation(spark, tmp_path):
+    """``run_job`` over a seeded pair: the counts, the mismatches by
+    type and the field diff equal the perturbation, and the scoped job
+    equals the full diff restricted to the source's changed keys."""
+    import collections
+
+    import pytest
+
+    from cass_cdc_pg_spark.operators.reconcile import run_job
+
+    src, tgt, since = _seeded_pair(spark, tmp_path)
+    missing = {i for i in range(60) if i % 10 == 7}
+    mutated = {i for i in range(60) if i % 10 == 1}
+    extra = {60, 61, 62}
+    changed = {i for i in range(60) if i % 3 == 0}
+
+    rc = run_job(src, tgt, "row_count")
+    assert (rc["src_count"], rc["tgt_count"], rc["mismatch_count"]) == (60, 57, 3)
+    assert (rc["drift_pct"], rc["severity"]) == (5.0, "critical")
+    assert rc["mismatches"] is None
+
+    full = run_job(src, tgt, "checksum")
+    assert (full["src_count"], full["tgt_count"]) == (60, 57)
+    rows = full["mismatches"].collect()
+    by_type = collections.defaultdict(set)
+    for m in rows:
+        by_type[m["mismatch_type"]].add(m["id"])
+    assert by_type == {"MISSING_IN_TARGET": missing, "MISSING_IN_SOURCE": extra,
+                       "DATA_MISMATCH": mutated}
+    assert {(m["id"], f["column"]) for m in rows for f in m["fields"] or []} == {
+        (i, c) for i in mutated for c in ("a", "c")}
+
+    scoped = run_job(src, tgt, "checksum", since_version=since)["mismatches"].collect()
+    assert sorted((m["id"], m["mismatch_type"]) for m in scoped) == sorted(
+        (m["id"], m["mismatch_type"]) for m in rows if m["id"] in changed)
+    assert {m["id"] for m in scoped} == (missing | mutated) & changed
+    assert run_job(src, tgt, "checksum", since_version=src._current_version()
+                   )["mismatches"] is None
+
+    with pytest.raises(ValueError, match="unknown strategy"):
+        run_job(src, tgt, "sample")
+
+
+def test_row_count_cache_is_bounded(spark):
+    """``row_count_validation_from_counts`` keeps at most
+    ``ROW_COUNT_CACHE_MAX`` analysed DataFrames."""
+    from cass_cdc_pg_spark.operators import reconcile
+
+    fn = reconcile.row_count_validation_from_counts
+    for i in range(100):
+        fn(spark, 1000 + i, 999)
+    assert fn.cache_info().currsize <= reconcile.ROW_COUNT_CACHE_MAX < 100
+    assert fn(spark, 1099, 999) is fn(spark, 1099, 999)
+    assert fn(spark, 1099, 999).collect()[0]["src_count"] == 1099

@@ -15,8 +15,6 @@ import pytest
 
 from cass_cdc_pg_spark import tls
 
-SF = "/root/testdata/sf0.001"
-
 
 # ---------------------------------------------------------------- unit
 
@@ -122,7 +120,7 @@ def tls_server(spark, certs):
     from cass_cdc_pg_spark.api import CdcApiServer, CdcApiService
 
     crt, key = certs["server"]
-    srv = CdcApiServer(CdcApiService(spark, sf_dir=SF))
+    srv = CdcApiServer(CdcApiService(spark))
     tls.secure_server(srv, cert_file=crt, key_file=key)
     host, port = srv.start()
     yield f"https://{host}:{port}", crt
@@ -168,7 +166,7 @@ def mtls_server(spark, certs):
 
     crt, key = certs["server"]
     client_crt, _ = certs["client"]
-    srv = CdcApiServer(CdcApiService(spark, sf_dir=SF))
+    srv = CdcApiServer(CdcApiService(spark))
     # trust exactly the client's self-signed cert as the client CA
     tls.secure_server(srv, cert_file=crt, key_file=key, ca_file=client_crt)
     host, port = srv.start()

@@ -12,10 +12,13 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+DOC = os.path.join(ROOT, "docs", "QUERIES.md")
 
 
-def main() -> int:
+def render() -> str:
+    """The text of docs/QUERIES.md for the current ``queries()``."""
     import __spark_entry__ as entrymod
 
     from cass_cdc_pg_spark import registry
@@ -41,11 +44,13 @@ def main() -> int:
         doc = doc.replace("|", "\\|")
         kind = "static SQL" if name in static else "generated (fixture-trained)"
         lines.append(f"| {i} | `{name}` | {doc} | {kind} |")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "docs", "QUERIES.md")
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"docs/QUERIES.md written ({len(queries)} rows)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> int:
+    with open(DOC, "w") as f:
+        f.write(render())
+    print("docs/QUERIES.md written")
     return 0
 
 
