@@ -16,11 +16,13 @@ Implementation: ``max_by(struct(payload), struct(ts, event_id))`` —
 an *aggregate*, not a window.  On its own, Catalyst plans it with a
 map-side partial aggregate, so each executor reduces its partitions
 to ≤1 row per key before the shuffle; a window (`row_number`)
-variant would shuffle + sort every event.  ``KeyedTable.merge``
-instead hands it a batch already clustered by bucket: the aggregate
-then runs after that one bucket shuffle, with no exchange of its own,
-so the merge shuffles once rather than twice.  `lww_window` is kept
-for the cross-check test.
+variant would shuffle + sort every event.  ``KeyedTable``'s write
+path (merge, compaction, rewrites) instead hands it rows already
+clustered by bucket and groups on ``("_bucket", *key_cols)``, bucket
+first: the aggregate then runs after that one bucket shuffle, with no
+exchange of its own, and its sort on the grouping keys is the order the
+bucket files are written in, so the write adds no sort of its own.
+`lww_window` is kept for the cross-check test.
 """
 
 from __future__ import annotations

@@ -46,10 +46,13 @@ DRIFT_CRITICAL_PCT = 5.0
 
 
 def drift_pct(src_count: Column, tgt_count: Column) -> Column:
-    """|a-b|/a*100 rounded to 2 dp (``reconciliation_engine.py:107-119``)."""
-    return F.round(
-        F.abs(src_count - tgt_count) * F.lit(100.0) / src_count, 2
-    )
+    """|a-b|/a*100 rounded to 2 dp (``reconciliation_engine.py:107-119``).
+    An empty source drifts 0 % from an empty target and 100 % from any
+    other, so a table whose source rows are all gone still reconciles
+    (the division would raise under ANSI)."""
+    return F.when(
+        src_count == 0, F.when(tgt_count == 0, F.lit(0.0)).otherwise(F.lit(100.0))
+    ).otherwise(F.round(F.abs(src_count - tgt_count) * F.lit(100.0) / src_count, 2))
 
 
 def drift_severity(drift: Column) -> Column:
@@ -107,7 +110,9 @@ def row_count_validation_from_counts(
     (``spark.createDataFrame`` is deliberately avoided: its pickled-RDD
     path costs ~250 ms per action)."""
     a, b = int(src_count), int(tgt_count)
-    drift = f"ROUND(ABS(CAST({a} AS BIGINT) - CAST({b} AS BIGINT)) * 100.0 / {a}, 2)"
+    # an empty source: 0 % against an empty target, else 100 % (drift_pct)
+    drift = (f"ROUND(ABS(CAST({a} AS BIGINT) - CAST({b} AS BIGINT)) * 100.0 / {a}, 2)"
+             if a else "0.0" if b == 0 else "100.0")
     # CAST to DOUBLE: the bare SQL literal 100.0 is DECIMAL, so the
     # ROUND would otherwise surface as decimal(27,2) — a type the
     # driver's pandas canonicalizer is not guaranteed to render the

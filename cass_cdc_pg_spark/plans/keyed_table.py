@@ -28,16 +28,26 @@ merge-on-read:
   compacted (base∪deltas → LWW reduce → new base) — the amortized
   O(table/threshold) background cost that keeps reads fast.
 
+Every file is a key-sorted run (the SSTable layout of an LSM tree):
+merge, compaction, ``overwrite`` and ``delete_where`` share one write
+path (``_cluster`` then ``_write``) that shuffles by bucket once,
+LWW-reduces grouped on ``(_bucket, *key_cols)`` and writes each bucket
+file sorted on that same order — the aggregate's sort is the file's
+sort, so the write adds none.  Per-file key min/max are therefore
+tight, and the sorted leading key column delta-encodes.
+
 At 100 TB this is exactly the upsert cost model of Delta/Hudi MoR:
 ingest throughput is bounded by batch size, not table size; bucket
 count spreads compaction work (thousands of buckets for TB-scale
 tables — set ``num_buckets`` accordingly; it is fixed at table
 creation like any hash-bucketing scheme).
 
-File format: zstd parquet with the default v1 pages, one file per
-touched bucket per commit, written straight into a fresh uuid dir
-(``_write`` is the one writer; nothing is ever overwritten in place).
-Snappy files from older commits read and compact alongside them.
+File format: zstd parquet with v2 data pages and no dictionary on the
+leading key column (``DELTA_BINARY_PACKED`` for an int key,
+``DELTA_BYTE_ARRAY`` for a string one), one file per touched bucket per
+commit, written straight into a fresh uuid dir (``_write`` is the one
+writer; nothing is ever overwritten in place).  Snappy or v1-page files
+from older commits read and compact alongside them.
 
 One commit path: every commit doc (the ``_manifest.json`` pointer and
 its ``_log/manifest.v{N}.json`` copy) is read through ``_doc`` and
@@ -87,9 +97,6 @@ from pyspark.sql import functions as F
 
 from cass_cdc_pg_spark.durable import write_json
 from cass_cdc_pg_spark.operators.lww import lww_latest
-
-#: Codec of every parquet file the table writes (see ``KeyedTable._write``).
-PARQUET_CODEC = "zstd"
 
 META_COLS = (
     "_cdc_deleted",
@@ -362,6 +369,42 @@ class KeyedTable:
             tiebreak_col="_last_event_id",
         )
 
+    def _scan(self, entries) -> tuple[DataFrame | None, bool]:
+        """The unreduced union of the base and delta files of *entries*
+        (``(bucket, manifest entry)`` pairs), and whether any of them
+        carries deltas; ``(None, False)`` when they hold no files."""
+        dirs: list[str] = []
+        has_deltas = False
+        for b, entry in entries:
+            dirs.extend(self._bucket_dirs(b, entry))
+            has_deltas = has_deltas or bool(entry.get("deltas"))
+        if not dirs:
+            return None, False
+        # mergeSchema: buckets/deltas written before an ADD_COLUMN
+        # evolution lack the new column; the merged read backfills NULL
+        df = self.spark.read.option("mergeSchema", "true").parquet(*sorted(set(dirs)))
+        return df, has_deltas
+
+    def _cluster(self, df: DataFrame, n_buckets: int, reduce: bool = True) -> DataFrame:
+        """*df* with its ``_bucket``, shuffled once by bucket into at
+        most *n_buckets* tasks and, with *reduce*, LWW-reduced grouped
+        on ``("_bucket", *key_cols)`` — the input of every ``_write``
+        that partitions by bucket.  The aggregate reuses the bucket
+        clustering (no exchange of its own), and its sort on
+        ``(_bucket, *key_cols)`` is the sort ``_write`` asks for, so
+        Spark drops the writer's; without *reduce* (rows reduced
+        already) the writer's sort is the one sort."""
+        parts = max(1, min(n_buckets, self.spark.sparkContext.defaultParallelism))
+        df = df.withColumn("_bucket", self._bucket_col()).repartition(parts, "_bucket")
+        if not reduce:
+            return df
+        return lww_latest(
+            df,
+            ["_bucket", *self.key_cols],
+            ts_col="_cdc_timestamp_micros",
+            tiebreak_col="_last_event_id",
+        )
+
     def read(
         self, buckets: list[int] | None = None, version: int | None = None
     ) -> DataFrame:
@@ -384,16 +427,9 @@ class KeyedTable:
             if buckets is None
             else [(b, manifest[b]) for b in map(str, buckets) if b in manifest]
         )
-        dirs: list[str] = []
-        has_deltas = False
-        for b, entry in wanted:
-            dirs.extend(self._bucket_dirs(b, entry))
-            has_deltas = has_deltas or bool(entry.get("deltas"))
-        if not dirs:
+        df, has_deltas = self._scan(wanted)
+        if df is None:
             return None  # no state for these buckets yet
-        # mergeSchema: buckets/deltas written before an ADD_COLUMN
-        # evolution lack the new column; the merged read backfills NULL
-        df = self.spark.read.option("mergeSchema", "true").parquet(*sorted(set(dirs)))
         return self._reduce(df) if has_deltas else df
 
     def read_live(self) -> DataFrame:
@@ -429,19 +465,9 @@ class KeyedTable:
                        if c not in batch.columns]
             if missing:
                 raise ValueError(f"merge batch missing columns: {missing}")
-            # the one shuffle: cluster by bucket first, and the LWW
-            # aggregate (grouped on keys + _bucket) reuses that
-            # clustering, so the reduce and the per-bucket write run in
-            # the same tasks
-            parts = min(self.num_buckets, self.spark.sparkContext.defaultParallelism)
-            reduced = lww_latest(
-                batch.withColumn("_bucket", self._bucket_col()).repartition(parts, "_bucket"),
-                [*self.key_cols, "_bucket"],
-                ts_col="_cdc_timestamp_micros",
-                tiebreak_col="_last_event_id",
-            )
             delta = f"delta-{uuid.uuid4().hex[:12]}"
-            touched = self._write(reduced, f"{self.path}/{delta}")
+            touched = self._write(
+                self._cluster(batch, self.num_buckets), f"{self.path}/{delta}")
             if not touched:
                 shutil.rmtree(f"{self.path}/{delta}", ignore_errors=True)
         if not touched and txn is None:
@@ -525,9 +551,8 @@ class KeyedTable:
         missing = [c for c in (*self.key_cols, *META_COLS) if c not in state.columns]
         if missing:
             raise ValueError(f"overwrite state missing columns: {missing}")
-        reduced = self._reduce(state).withColumn("_bucket", self._bucket_col())
-        self._publish(reduced, list(range(self.num_buckets)), op="rewrite",
-                      txn=txn or {})
+        self._publish(self._cluster(state, self.num_buckets),
+                      list(range(self.num_buckets)), op="rewrite", txn=txn or {})
 
     # -- compaction ---------------------------------------------------------
 
@@ -552,12 +577,8 @@ class KeyedTable:
         ]
         if not targets:
             return 0
-        dirs: list[str] = []
-        for b in targets:
-            dirs.extend(self._bucket_dirs(b, manifest[b]))
-        df = self.spark.read.option("mergeSchema", "true").parquet(*sorted(set(dirs)))
-        merged = self._reduce(df).withColumn("_bucket", self._bucket_col())
-        self._publish(merged, targets, op="compact")
+        df, _ = self._scan((b, manifest[b]) for b in targets)
+        self._publish(self._cluster(df, len(targets)), targets, op="compact")
         return len(targets)
 
     def _publish(
@@ -567,16 +588,13 @@ class KeyedTable:
         op: str = "rewrite",
         txn: dict[str, int] | None = None,
     ) -> None:
-        """Write *df_with_bucket* as the new **base** of *buckets*
-        (deltas cleared) and commit it with *txn* (see ``_commit``).
-        A bucket that ends up empty gets an empty-schema marker dir."""
+        """Write *df_with_bucket* (a ``_cluster`` output) as the new
+        **base** of *buckets* (deltas cleared) and commit it with *txn*
+        (see ``_commit``).  A bucket that ends up empty gets an
+        empty-schema marker dir."""
         snap_name = f"snap-{uuid.uuid4().hex[:12]}"
         snap = f"{self.path}/{snap_name}"
-        written = set(
-            self._write(
-                df_with_bucket.repartition(max(len(buckets), 1), "_bucket"), snap
-            )
-        )
+        written = set(self._write(df_with_bucket, snap))
         doc = self._doc()
         manifest = doc["buckets"]
         for b in map(str, buckets):
@@ -588,21 +606,29 @@ class KeyedTable:
     def _write(self, df: DataFrame, dest: str) -> list[str]:
         """Write *df* into the fresh directory *dest* — every data file
         the table holds goes through here, so the file format is set in
-        one place: zstd parquet (``PARQUET_CODEC``), default v1 pages.
-        The default error-if-exists mode writes straight into *dest*;
-        it is always a new uuid dir, so there is nothing to overwrite.
+        one place: zstd parquet with v2 data pages, and no dictionary on
+        the leading key column, which a sorted run stores smaller
+        delta-encoded.  The default error-if-exists mode writes straight
+        into *dest*; it is always a new uuid dir, so there is nothing to
+        overwrite.
 
         A ``_bucket`` column partitions the output: one ``bucket=<b>``
         dir per value, one file per bucket when *df* is clustered by
-        bucket; the bucket ids written are returned (the written dirs
-        ARE the touched set, no extra job to discover it).  Without
-        that column *dest* is a single bucket dir and ``[]`` comes
-        back — the empty-bucket marker of ``_publish``."""
-        w = df.write.option("compression", PARQUET_CODEC)
+        bucket (``_cluster``), each sorted on ``(_bucket, *key_cols)``;
+        the bucket ids written are returned (the written dirs ARE the
+        touched set, no extra job to discover it).  Without that column
+        *dest* is a single bucket dir and ``[]`` comes back — the
+        empty-bucket marker of ``_publish``."""
+        options = {
+            "compression": "zstd",
+            "parquet.writer.version": "v2",
+            f"parquet.enable.dictionary#{self.key_cols[0]}": "false",
+        }
         if "_bucket" not in df.columns:
-            w.parquet(dest)
+            df.write.options(**options).parquet(dest)
             return []
-        w.partitionBy("_bucket").parquet(dest)
+        df.sortWithinPartitions("_bucket", *self.key_cols).write.options(
+            **options).partitionBy("_bucket").parquet(dest)
         touched = []
         for d in os.listdir(dest):
             if d.startswith("_bucket="):
@@ -659,12 +685,10 @@ class KeyedTable:
         if not per_bucket:
             return 0
         touched = [r[0] for r in per_bucket]
-        keep = (
-            self.read(buckets=touched)
-            .withColumn("_bucket", self._bucket_col())
-            .filter(~hit)
-        )
-        self._publish(keep, touched)
+        manifest = self._doc()["buckets"]
+        # reduce only where deltas remain: a base is reduced already
+        df, has_deltas = self._scan((str(b), manifest[str(b)]) for b in touched)
+        self._publish(self._cluster(df, len(touched), has_deltas).filter(~hit), touched)
         return sum(r["count"] for r in per_bucket)
 
     def expire_ttl(self, now_us: int | None = None) -> int:

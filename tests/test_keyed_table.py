@@ -198,38 +198,29 @@ def test_compaction_folds_deltas_and_preserves_state(spark, tmp_path):
     assert all(not e["deltas"] for e in t._doc()["buckets"].values())
 
 
-def test_snappy_files_read_merge_and_compact_to_zstd(spark, tmp_path):
-    """Format compatibility: a table whose base and delta files are
-    snappy (what the table wrote before zstd; pyarrow stands in for
-    that writer) still reads, merges and compacts to the same LWW
-    state, and every file a later merge or compaction writes is zstd."""
+def _legacy_table(spark, path, n, commits, **write_opts):
+    """Commit *commits* — ``{dir: rows}``, a ``snap-*`` dir the base
+    and ``delta-*`` dirs the deltas, in order — as one version of an
+    *n*-bucket table at *path* whose files pyarrow writes with
+    *write_opts*: a stand-in for the files an older writer left."""
     import json
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    n = 4
     arrow_schema = pa.schema([
         ("id", pa.string()), ("val", pa.string()), ("_cdc_deleted", pa.bool_()),
         ("_cdc_timestamp_micros", pa.int64()), ("_last_event_id", pa.string()),
         ("_ttl_expiry_timestamp_us", pa.int64()),
     ])
-    base_rows = [(f"k{i}", "base", False, 100, f"b{i}", None) for i in range(12)]
-    delta_rows = [(f"k{i}", "delta", i % 4 == 0, 200, f"d{i}", None)
-                  for i in range(0, 12, 2)]
-    late_rows = [("k1", "late", False, 300, "m1", None),
-                 ("k2", "stale", False, 150, "m2", None),
-                 ("k20", "new", False, 300, "m20", None)]
     bucket_of = {
         r["id"]: str(r["b"])
-        for r in _batch(spark, base_rows + late_rows)
+        for r in _batch(spark, [r for rows in commits.values() for r in rows])
         .select("id", F.expr(f"pmod(xxhash64(id), {n})").alias("b")).collect()
     }
-
-    path = tmp_path / "legacy"
     buckets: dict[str, dict] = {}
-    for d, rows in (("snap-legacy00000", base_rows), ("delta-legacy0000", delta_rows)):
+    for d, rows in commits.items():
         by_bucket: dict[str, list] = {}
         for r in rows:
             by_bucket.setdefault(bucket_of[r[0]], []).append(r)
@@ -238,9 +229,7 @@ def test_snappy_files_read_merge_and_compact_to_zstd(spark, tmp_path):
             pq.write_table(
                 pa.Table.from_pylist([dict(zip(arrow_schema.names, r)) for r in rs],
                                      schema=arrow_schema),
-                path / d / f"bucket={b}" / "part-00000.snappy.parquet",
-                compression="snappy",
-            )
+                path / d / f"bucket={b}" / "part-00000.parquet", **write_opts)
             entry = buckets.setdefault(b, {"base": None, "deltas": []})
             if d.startswith("snap-"):
                 entry["base"] = d
@@ -250,36 +239,168 @@ def test_snappy_files_read_merge_and_compact_to_zstd(spark, tmp_path):
         json.dump({"buckets": buckets, "num_buckets": n, "key_cols": ["id"],
                    "version": 1, "op": "merge", "added": []}, f)
 
-    def lww(rows):  # the state every step must agree with, as _state reports it
-        win: dict = {}
-        for r in rows:
-            if r[0] not in win or (r[3], r[4]) > win[r[0]][1]:
-                win[r[0]] = ((r[1], r[2], r[3]), (r[3], r[4]))
-        return {k: v[0] for k, v in win.items()}
+
+def _serial_lww(rows):
+    """The LWW state of *rows*, applied one at a time, as ``_state``
+    reports it."""
+    win: dict = {}
+    for r in rows:
+        if r[0] not in win or (r[3], r[4]) > win[r[0]][1]:
+            win[r[0]] = ((r[1], r[2], r[3]), (r[3], r[4]))
+    return {k: v[0] for k, v in win.items()}
+
+
+def _files_added(t: KeyedTable) -> list[str]:
+    """The parquet files of the dirs the current commit added."""
+    import os
+
+    return sorted(os.path.join(root, f)
+                  for d in t._doc()["added"] for root, _, fs in os.walk(f"{t.path}/{d}")
+                  for f in fs if f.endswith(".parquet"))
+
+
+def test_snappy_files_read_merge_and_compact_to_zstd(spark, tmp_path):
+    """Format compatibility: a table whose base and delta files are
+    snappy (what the table wrote before zstd; pyarrow stands in for
+    that writer) still reads, merges and compacts to the same LWW
+    state, and every file a later merge or compaction writes is zstd."""
+    import pyarrow.parquet as pq
+
+    n = 4
+    base_rows = [(f"k{i}", "base", False, 100, f"b{i}", None) for i in range(12)]
+    delta_rows = [(f"k{i}", "delta", i % 4 == 0, 200, f"d{i}", None)
+                  for i in range(0, 12, 2)]
+    late_rows = [("k1", "late", False, 300, "m1", None),
+                 ("k2", "stale", False, 150, "m2", None),
+                 ("k20", "new", False, 300, "m20", None)]
+    path = tmp_path / "legacy"
+    _legacy_table(spark, path, n, {"snap-legacy00000": base_rows,
+                                   "delta-legacy0000": delta_rows},
+                  compression="snappy")
 
     def codecs_of_last_commit():  # footer codecs of the dirs the last commit added
         out = set()
-        for d in t._doc(t._current_version())["added"]:
-            for root, _, files in os.walk(path / d):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        md = pq.ParquetFile(os.path.join(root, f)).metadata
-                        out |= {md.row_group(g).column(c).compression
-                                for g in range(md.num_row_groups)
-                                for c in range(md.num_columns)}
+        for f in _files_added(t):
+            md = pq.ParquetFile(f).metadata
+            out |= {md.row_group(g).column(c).compression
+                    for g in range(md.num_row_groups)
+                    for c in range(md.num_columns)}
         return out
 
     t = KeyedTable(spark, str(path), ["id"], num_buckets=n, compact_threshold=100)
-    assert _state(t) == lww(base_rows + delta_rows)
+    assert _state(t) == _serial_lww(base_rows + delta_rows)
     t.merge(_batch(spark, late_rows))
-    assert _state(t) == lww(base_rows + delta_rows + late_rows)
+    assert _state(t) == _serial_lww(base_rows + delta_rows + late_rows)
     assert codecs_of_last_commit() == {"ZSTD"}
     t.compact()
-    assert _state(t) == lww(base_rows + delta_rows + late_rows)
+    assert _state(t) == _serial_lww(base_rows + delta_rows + late_rows)
     assert codecs_of_last_commit() == {"ZSTD"}
     # compaction folded every snappy file away
     assert all(e["base"] != "snap-legacy00000" and not e["deltas"]
                for e in t._doc()["buckets"].values())
+
+
+def test_v1_dictionary_base_with_v2_deltas(spark, tmp_path):
+    """Old and new files together: a base with v1 pages and a
+    dictionary on the key (pyarrow stands in for the writer before
+    sorted v2 runs) under v2 deltas reads, feeds, merges and compacts
+    to the serial LWW state; DuckDB, a reader independent of Spark,
+    reads the compacted v2 files to the same rows."""
+    import hashlib
+
+    import duckdb
+
+    from tools.table_bytes import file_layout
+
+    n = 4
+    base_rows = [(f"k{i:02d}", "base", False, 100, f"b{i}", None) for i in range(24)]
+    d1 = [(f"k{i:02d}", "d1", i % 5 == 0, 200, f"d1-{i}", None) for i in range(0, 24, 2)]
+    d2 = [(f"k{i:02d}", "d2", False, 150 + i * 10, f"d2-{i}", None) for i in range(24)]
+    late = [("k03", "late", False, 900, "m3", None), ("k30", "new", False, 900, "m30", None)]
+    path = tmp_path / "mixed"
+    _legacy_table(spark, path, n, {"snap-legacy00000": base_rows},
+                  compression="zstd", data_page_version="1.0", use_dictionary=True)
+    t = KeyedTable(spark, str(path), ["id"], num_buckets=n, compact_threshold=100)
+    for f in path.glob("snap-legacy00000/*/*.parquet"):
+        old = file_layout(str(f), ["id"])["columns"]["id"]
+        assert old["dictionary"] and old["pages"] == {"v1"}
+
+    t.merge(_batch(spark, d1))
+    t.merge(_batch(spark, d2))
+    assert _state(t) == _serial_lww(base_rows + d1 + d2)
+    feed = {(r["id"], r["val"], r["_change_version"]) for r in t.read_changes(1).collect()}
+    assert feed == {(r[0], r[1], 2) for r in d1} | {(r[0], r[1], 3) for r in d2}
+    t.merge(_batch(spark, late))
+    t.compact()
+    assert _state(t) == _serial_lww(base_rows + d1 + d2 + late)
+
+    files = _files_added(t)
+    assert len(files) == n  # every bucket took a delta, so each was compacted
+    assert all(c["pages"] == {"v2"}
+               for f in files for c in file_layout(f, ["id"])["columns"].values())
+
+    def digest(rows):
+        return len(rows), hashlib.sha256(repr(sorted(rows)).encode()).hexdigest()
+
+    cols = "id, val, _cdc_deleted, _cdc_timestamp_micros, _last_event_id"
+    ours = [tuple(r) for r in t.read().selectExpr(*cols.split(", ")).collect()]
+    theirs = duckdb.sql(f"SELECT {cols} FROM read_parquet({files!r})").fetchall()
+    assert digest(theirs) == digest(ours)
+
+
+@pytest.mark.parametrize("key,key_type,encoding", [
+    ("id", "int", "DELTA_BINARY_PACKED"),
+    ("dlq_id", "string", "DELTA_BYTE_ARRAY"),
+])
+def test_every_write_is_a_key_sorted_v2_run(spark, tmp_path, key, key_type, encoding):
+    """Every file a merge, a compaction, an ``overwrite`` and a
+    ``delete_where`` (with and without deltas to reduce) write is a run
+    sorted on the key, with v2 data pages and no dictionary on the key
+    column — also when rows reach the write from several tasks and AQE
+    does not coalesce the shuffle, so that a second shuffle to cluster
+    by bucket would concatenate several runs into one file.  An int key
+    delta-encodes as ``DELTA_BINARY_PACKED``, a string key (the DLQ's
+    ``dlq_id``) as ``DELTA_BYTE_ARRAY``."""
+    from tools.table_bytes import file_layout
+
+    def batch(n, ts):  # four input tasks; each key repeats, so the reduce works
+        return spark.range(0, n, 1, 4).selectExpr(
+            f"CAST(id * 7919 % {n // 2} AS {key_type}) AS {key}", "id AS v",
+            "id % 5 = 0 AS _cdc_deleted", f"id + {ts} AS _cdc_timestamp_micros",
+            "CAST(id AS STRING) AS _last_event_id",
+            "CAST(NULL AS LONG) AS _ttl_expiry_timestamp_us")
+
+    def check_last_commit():
+        op = t._doc()["op"]
+        layouts = [file_layout(f, [key]) for f in _files_added(t)]
+        assert layouts, op
+        for lay in (x for x in layouts if x["rows"]):  # skip empty-bucket markers
+            assert lay["sorted"], op
+            assert {p for c in lay["columns"].values() for p in c["pages"]} == {"v2"}, op
+            k = lay["columns"][key]
+            assert not k["dictionary"] and k["encodings"] == {encoding}, (op, k)
+
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        t = KeyedTable(spark, str(tmp_path / "t"), [key], num_buckets=4,
+                       compact_threshold=100)
+        t.merge(batch(2000, 0))
+        check_last_commit()
+        t.merge(batch(2000, 10_000))
+        check_last_commit()
+        assert t.compact() == 4
+        check_last_commit()
+        t.overwrite(batch(2000, 20_000))
+        check_last_commit()
+        assert t.delete_where(F.col("v") % 7 == 0) > 0  # bases only: no reduce
+        check_last_commit()
+        t.merge(batch(400, 30_000))
+        assert t.delete_where(F.col("v") % 3 == 0) > 0  # a delta over each base
+        check_last_commit()
+    finally:
+        spark.conf.set(coalesce, prev)
 
 
 def test_auto_compaction_triggers_at_threshold(spark, tmp_path):

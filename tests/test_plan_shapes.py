@@ -136,6 +136,82 @@ def test_keyed_table_merge_shuffles_once(spark, tmp_path):
     assert t.read().count() == 200
 
 
+def _scala(seq) -> list:
+    it, out = seq.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _run_in_group(spark, group, fn):
+    """Run *fn* under job group *group*; return its shuffle-writing
+    stages and the node names of the final (after AQE) physical plans
+    of the SQL executions that ran its jobs, both from the JVM status
+    stores."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(group))
+    store = jsc.statusStore()
+    shuffle_writers = [
+        s for j in jobs for s in tracker.getJobInfo(j).stageIds
+        if store.lastStageAttempt(s).shuffleWriteRecords() > 0
+    ]
+    sql = spark._jsparkSession.sharedState().statusStore()
+    nodes = [
+        n.name()
+        for ex in _scala(sql.executionsList())
+        if jobs & {int(j) for j in _scala(ex.jobs().keys())}
+        for n in _scala(sql.planGraph(ex.executionId()).allNodes())
+    ]
+    return shuffle_writers, nodes
+
+
+def _keyed_batch(spark, ts):
+    # 200 keys, each repeated 5 times, from four input tasks
+    return spark.range(0, 1000, 1, 4).selectExpr(
+        "CAST(id % 200 AS STRING) AS id", "id AS v", "false AS _cdc_deleted",
+        f"id + {ts} AS _cdc_timestamp_micros", "CAST(id AS STRING) AS _last_event_id",
+        "CAST(NULL AS LONG) AS _ttl_expiry_timestamp_us")
+
+
+def test_keyed_table_merge_write_sorts_once(spark, tmp_path):
+    """The merge's write plan sorts once: the LWW aggregate, grouped on
+    ``(_bucket, id)``, sorts its input in the order the bucket files
+    are written in, so Spark drops the writer's own sort by bucket."""
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+
+    t = KeyedTable(spark, str(tmp_path / "kt"), ["id"], num_buckets=8)
+    shuffle_writers, nodes = _run_in_group(
+        spark, "keyed-table-merge-sorts", lambda: t.merge(_keyed_batch(spark, 0)))
+    assert len(shuffle_writers) == 1, shuffle_writers
+    assert (nodes.count("Exchange"), nodes.count("Sort")) == (1, 1), nodes
+
+
+def test_keyed_table_compaction_shuffles_once(spark, tmp_path):
+    """Compaction goes through the merge's write path: one
+    shuffle-writing stage (by bucket, which the LWW aggregate reuses)
+    and one Sort (the aggregate's, which is also the files' order).
+    Reducing on the keys and then clustering by bucket took two
+    shuffles and three sorts."""
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+
+    t = KeyedTable(spark, str(tmp_path / "kt"), ["id"], num_buckets=8,
+                   compact_threshold=100)
+    t.merge(_keyed_batch(spark, 0))
+    t.merge(_keyed_batch(spark, 10_000))
+    shuffle_writers, nodes = _run_in_group(spark, "keyed-table-compact-shape", t.compact)
+    assert len(shuffle_writers) == 1, shuffle_writers
+    assert (nodes.count("Exchange"), nodes.count("Sort")) == (1, 1), nodes
+    assert t.read().count() == 200
+
+
 def test_delete_where_finds_buckets_and_count_in_one_pass(spark, tmp_path):
     """``delete_where`` learns the touched buckets and the hit count
     from one grouped scan, then rewrites only those buckets: at most 8

@@ -292,3 +292,40 @@ def test_row_count_cache_is_bounded(spark):
     assert fn.cache_info().currsize <= reconcile.ROW_COUNT_CACHE_MAX < 100
     assert fn(spark, 1099, 999) is fn(spark, 1099, 999)
     assert fn(spark, 1099, 999).collect()[0]["src_count"] == 1099
+
+
+def test_empty_source_drift_is_defined(spark):
+    """An empty source drifts 0 % from an empty target (``ok``) and
+    100 % from any other (``critical``), on the DataFrame path and the
+    from-counts SQL path alike — the plain division would raise
+    ``DIVIDE_BY_ZERO`` under ANSI."""
+    from cass_cdc_pg_spark.operators.reconcile import row_count_validation_from_counts
+
+    for tgt_n, drift, severity in ((3, 100.0, "critical"), (0, 0.0, "ok")):
+        for r in (row_count_validation(spark.range(0), spark.range(tgt_n)).collect()[0],
+                  row_count_validation_from_counts(spark, 0, tgt_n).collect()[0]):
+            assert (r["src_count"], r["tgt_count"], r["mismatch_count"]) == (0, tgt_n, tgt_n)
+            assert (r["drift_pct"], r["severity"]) == (drift, severity)
+
+
+def test_job_on_a_fully_tombstoned_source_completes(spark, recon_pair):
+    """A source table whose rows are all tombstoned has no visible
+    rows; its reconciliation job still ends COMPLETED, with 100 %
+    drift, and the checksum job lists every target row as
+    MISSING_IN_SOURCE."""
+    from cass_cdc_pg_spark.api import CdcApiService
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+    from cass_cdc_pg_spark.streaming.ingest import cdc_table_path
+
+    wh, src_wh, cfg = recon_pair
+    src = KeyedTable(spark, cdc_table_path(src_wh, "users"), ["id"])
+    src.merge(src.read().withColumns({
+        "_cdc_deleted": F.lit(True), "_cdc_timestamp_micros": F.lit(2000).cast("long"),
+        "_last_event_id": F.lit("delete-all")}))
+    svc = CdcApiService(spark, warehouse=wh, source_warehouse=src_wh, table_config=cfg)
+    for strategy in ("row_count", "checksum"):
+        job = svc.reconciliation_trigger({"table": "users", "strategy": strategy})
+        assert job["status"] == "COMPLETED", job
+        assert (job["source_count"], job["target_count"], job["drift_percentage"]) == (
+            0, 19, 100.0)
+    assert job["mismatch_count"] == 19
