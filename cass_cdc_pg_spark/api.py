@@ -47,6 +47,7 @@ exercises the real upsert engine.
 
 from __future__ import annotations
 
+import copy
 import json
 import re
 import threading
@@ -65,6 +66,9 @@ _IDENT_RE = re.compile(r"^[A-Za-z0-9_.\-:]{1,128}$")
 
 #: Most recent reconciliation jobs a ``CdcApiService`` keeps in memory.
 MAX_JOBS = 256
+
+#: Most recently used route answers a ``CdcApiService`` memoizes.
+MAX_MEMO = 256
 
 RESOLUTION_STATUSES = ("PENDING", "MANUAL_RESOLVED", "AUTO_RESOLVED", "IGNORED")
 
@@ -88,7 +92,14 @@ def _validate_identifier(value: str, kind: str) -> str:
 
 class CdcApiService:
     """Engine-facing handlers, one method per route; transport-free, so
-    the HTTP server, the CLI and tests all call the same methods."""
+    the HTTP server, the CLI and tests all call the same methods.
+
+    A route that reads one keyed table (the DLQ routes, the mismatch
+    listing, the change feed) answers per committed version of that
+    table (``_memoized``): a request repeated at an unchanged version
+    runs no Spark job, and the next request after any commit, by any
+    writer, sees it.  Health is answered live; its probes run no Spark
+    job."""
 
     def __init__(
         self,
@@ -98,7 +109,6 @@ class CdcApiService:
         source_warehouse: str | None = None,
         table_config: dict | None = None,
         secrets=None,
-        cache_ttl: float = 2.0,
     ) -> None:
         self.spark = spark
         self.warehouse = warehouse.rstrip("/") if warehouse else None
@@ -108,73 +118,57 @@ class CdcApiService:
         self.alerts = AlertService()
         self._jobs: dict[str, dict] = {}
         self._jobs_lock = threading.Lock()
-        self.cache_ttl = cache_ttl
-        self._cache: dict[str, tuple[float, object]] = {}
-        self._cache_lock = threading.Lock()
-        self._cache_epoch = 0  # bumped by every invalidation
-        self._cache_max_entries = 256
+        self._memo: dict[tuple, object] = {}
+        self._memo_lock = threading.Lock()
 
     # -- shared plumbing ----------------------------------------------------
 
-    def _cached(self, key: str, compute):
-        """Short-TTL cache for hot READ-ONLY routes whose answers cost
-        Spark actions (health probes, DLQ stats).  Under concurrent
-        load every request was paying driver-side job latency for an
-        answer that changes at microbatch cadence — the reference's
-        dashboard polling has the same shape and caches at the proxy.
-        Any mutating route calls ``_invalidate_cache`` so the server
-        keeps read-your-writes semantics; ``cache_ttl=0`` disables."""
-        import copy
+    def _memoized(self, table, route: str, params: dict, compute):
+        """``compute(version)``, the answer of *route* with *params*
+        over *table*, memoized on the commit it reads.  A commit is an
+        immutable snapshot, so its answer holds until the next commit,
+        whoever writes it (the stream, the CLI, another process); no
+        write has to invalidate anything.  The key holds the commit's
+        ``KeyedTable.commit_id``, read once, and *compute* gets its
+        version.  A compute that sees a newer commit is still safe to
+        store under the version it was given: versions only grow, so no
+        later request reads that key.  The ``MAX_MEMO`` most recently
+        used answers are kept; every caller gets its own copy, so one
+        that edits its answer cannot change another's."""
+        version, updated_at = table.commit_id()
+        key = (table.path, version, updated_at, route,
+               json.dumps(params, sort_keys=True, default=str))
+        with self._memo_lock:
+            if key in self._memo:
+                self._memo[key] = self._memo.pop(key)  # now the most recent
+                return copy.deepcopy(self._memo[key])
+        out = compute(version)
+        with self._memo_lock:
+            self._memo[key] = copy.deepcopy(out)
+            for old in list(self._memo)[:-MAX_MEMO]:
+                del self._memo[old]
+        return out
 
-        if self.cache_ttl <= 0:
-            return compute()
-        now = time.monotonic()
-        with self._cache_lock:
-            hit = self._cache.get(key)
-            if hit is not None and hit[0] > now:
-                # defensive copy (r7 ADVICE): the stored dicts/lists
-                # are mutable — a handler that edits its response in
-                # place (request ids, pagination trims) must not
-                # poison every later hit within the TTL
-                return copy.deepcopy(hit[1])
-            epoch = self._cache_epoch
-        val = compute()
-        with self._cache_lock:
-            # an invalidation DURING compute means this value may
-            # predate a mutation — serve it, but don't cache it, or a
-            # pre-mutation answer would outlive the invalidation and
-            # break the read-your-writes promise
-            if self._cache_epoch == epoch:
-                if len(self._cache) >= self._cache_max_entries:
-                    # purge expired first; if still full, drop the
-                    # soonest-to-expire (client-supplied param combos
-                    # must not grow the cache without bound)
-                    for k in [k for k, v in self._cache.items() if v[0] <= now]:
-                        del self._cache[k]
-                    while len(self._cache) >= self._cache_max_entries:
-                        del self._cache[min(self._cache, key=lambda k: self._cache[k][0])]
-                # store a private copy too: the first caller gets the
-                # original and may mutate it after this returns
-                self._cache[key] = (now + self.cache_ttl, copy.deepcopy(val))
-        return val
+    @staticmethod
+    def _live_page(table, params: dict, filters: dict, order_by) -> list[dict]:
+        """One page (``limit``/``offset`` params) of *table*'s live
+        rows in *order_by*, keeping those whose column ``filters[p]``
+        equals each param ``p`` that is set; [] before the first
+        commit.  These tables carry no TTL, so the page depends on the
+        commit read alone."""
+        from cass_cdc_pg_spark.operators.listings import listing
+        from cass_cdc_pg_spark.plans.keyed_table import META_COLS
 
-    def _invalidate_cache(self, *prefixes: str) -> None:
-        """Drop cached entries whose key starts with any *prefix* (all
-        entries when none given).  Mutating routes invalidate only the
-        families they can affect — a reconciliation trigger must not
-        force every health probe and DLQ read to recompute.  Bumps the
-        epoch so in-flight computes started before the mutation are
-        not cached after it."""
-        with self._cache_lock:
-            self._cache_epoch += 1
-            if not prefixes:
-                self._cache.clear()
-                return
-            for k in [
-                k for k in self._cache
-                if any(k.startswith(p) for p in prefixes)
-            ]:
-                del self._cache[k]
+        if not table.exists():
+            return []
+        out = listing(
+            table.read_live().drop(*META_COLS),
+            [F.col(col) == params[p] for p, col in filters.items() if params.get(p)],
+            order_by,
+            limit=int(params.get("limit", 50)),
+            offset=int(params.get("offset", 0)),
+        )
+        return [r.asDict() for r in out.collect()]
 
     def _require_warehouse(self) -> str:
         if not self.warehouse:
@@ -227,7 +221,7 @@ class CdcApiService:
         )
 
     def health(self) -> tuple[int, dict]:
-        out = self._cached("health", lambda: self._health_service().check_all())
+        out = self._health_service().check_all()
         return (503 if out["status"] == "unhealthy" else 200), out
 
     def health_component(self, component: str) -> tuple[int, dict]:
@@ -241,7 +235,7 @@ class CdcApiService:
         }
         if component not in probes:
             raise ApiError(404, f"unknown component: {component}")
-        out = self._cached(f"health:{component}", probes[component])
+        out = probes[component]()
         return (503 if out["status"] == "unhealthy" else 200), out
 
     def metrics(self) -> str:
@@ -250,44 +244,22 @@ class CdcApiService:
     # -- dlq ----------------------------------------------------------------
 
     def dlq_records(self, params: dict) -> list[dict]:
-        key = "dlq_records:" + json.dumps(
-            {k: params[k] for k in sorted(params)}, sort_keys=True
-        )
-        return self._cached(key, lambda: self._dlq_records_compute(params))
-
-    def _dlq_records_compute(self, params: dict) -> list[dict]:
-        from cass_cdc_pg_spark.operators.listings import listing
-        from cass_cdc_pg_spark.plans.keyed_table import META_COLS
-
         t = self._dlq_table()
-        if not t.exists():  # nothing was ever routed to the DLQ
-            return []
-        df = t.read_live().drop(*META_COLS)
-        preds = []
-        for qp, col in (
-            ("error_type", "error_type"),
-            ("status", "resolution_status"),
-            ("table", "source_table"),
-        ):
-            if params.get(qp):
-                preds.append(F.col(col) == params[qp])
-        out = listing(
-            df,
-            preds,
-            [F.desc("first_failed_at_us"), F.asc("dlq_id")],
-            limit=int(params.get("limit", 50)),
-            offset=int(params.get("offset", 0)),
-        )
-        return [r.asDict() for r in out.collect()]
+        filters = {"error_type": "error_type", "status": "resolution_status",
+                   "table": "source_table"}
+        return self._memoized(t, "dlq_records", params, lambda _: self._live_page(
+            t, params, filters, [F.desc("first_failed_at_us"), F.asc("dlq_id")]
+        ))
 
     def dlq_stats(self) -> dict:
-        return self._cached("dlq_stats", self._dlq_stats_compute)
+        t = self._dlq_table()
+        return self._memoized(t, "dlq_stats", {}, lambda _: self._dlq_stats(t))
 
-    def _dlq_stats_compute(self) -> dict:
+    @staticmethod
+    def _dlq_stats(t) -> dict:
         # ONE Spark action: group on the full dim triple (bounded by
         # distinct error/status/table combinations, tiny by contract)
         # and marginalize driver-side; an empty DLQ has zero totals
-        t = self._dlq_table()
         dims = ("error_type", "resolution_status", "source_table")
         rows = (
             t.read_live().groupBy(*dims).count().collect() if t.exists() else []
@@ -308,7 +280,6 @@ class CdcApiService:
         if not isinstance(ids, list) or not ids:
             raise ApiError(422, "event_ids must be a non-empty list")
         n = self._ingest().replay_dlq([str(i) for i in ids])
-        self._invalidate_cache("dlq", "health")
         return {"replayed": n, "resolution_status": "MANUAL_RESOLVED"}
 
     # -- reconciliation -----------------------------------------------------
@@ -430,24 +401,11 @@ class CdcApiService:
         return job
 
     def reconciliation_mismatches(self, params: dict) -> list[dict]:
-        from cass_cdc_pg_spark.operators.listings import listing
-        from cass_cdc_pg_spark.plans.keyed_table import META_COLS
-
         t = self._mismatch_table()
-        if not t.exists():
-            return []
-        df = t.read_live().drop(*META_COLS)
-        preds = []
-        if params.get("status"):
-            preds.append(F.col("resolution_status") == params["status"])
-        out = listing(
-            df,
-            preds,
-            [F.asc("mismatch_id")],
-            limit=int(params.get("limit", 50)),
-            offset=int(params.get("offset", 0)),
-        )
-        return [r.asDict() for r in out.collect()]
+        return self._memoized(t, "reconciliation_mismatches", params, lambda _: (
+            self._live_page(t, params, {"status": "resolution_status"},
+                            [F.asc("mismatch_id")])
+        ))
 
     def reconciliation_resolve(self, mismatch_id: str, body: dict) -> dict:
         status = body.get("status", "MANUAL_RESOLVED")
@@ -461,7 +419,7 @@ class CdcApiService:
         df = t.read_live().drop(*META_COLS)
         hit = df.filter(F.col("mismatch_id") == mismatch_id)
         updated = hit.withColumn("resolution_status", F.lit(status)).withColumn(
-            "resolution_notes", F.lit(body.get("notes"))
+            "resolution_notes", F.lit(body.get("notes")).cast("string")
         )
         if not updated.take(1):
             raise ApiError(404, f"mismatch {mismatch_id} not found")
@@ -471,29 +429,37 @@ class CdcApiService:
     # -- gdpr ---------------------------------------------------------------
 
     def gdpr_delete(self, keyspace: str, table: str, primary_key: str) -> dict:
+        _validate_identifier(keyspace, "keyspace")
+        return self.gdpr_erase(table, primary_key)
+
+    def gdpr_erase(self, table: str, primary_key: str,
+                   requester: str = "api_user") -> dict:
+        """Erase the record *primary_key* of configured *table* from its
+        CDC table under ``source_warehouse`` (when set) and under
+        ``warehouse`` (``ops.GdprService``: backup, delete from the
+        source, delete from the target, compensate, audit).  The audit
+        log lives in ``warehouse``, the target, as the reference's
+        ``_cdc_audit_log`` lives in Postgres.  404 when the source
+        holds no such record."""
         from cass_cdc_pg_spark.ops import AuditLog, GdprService
         from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
         from cass_cdc_pg_spark.streaming.ingest import audit_log_path, cdc_table_path
 
-        _validate_identifier(keyspace, "keyspace")
         _validate_identifier(table, "table")
         _validate_identifier(primary_key, "primary_key")
-        cfg = self.table_config["tables"].get(table)
-        if cfg is None:
-            raise ApiError(404, f"unknown table: {table}")
+        source = self._keyed_table_or_404(table, self.source_warehouse)
         wh = self._require_warehouse()
-        src = KeyedTable(self.spark, cdc_table_path(wh, table), cfg["keys"])
-        audit = AuditLog(self.spark, audit_log_path(wh))
-        key_col = cfg["keys"][0]
-        pred = F.col(key_col).cast("string") == primary_key
+        target = (
+            KeyedTable(self.spark, cdc_table_path(wh, table), source.key_cols)
+            if self.source_warehouse else source
+        )
+        pred = F.col(source.key_cols[0]).cast("string") == primary_key
         try:
-            out = GdprService(self.spark, audit).erase(
-                src, src, pred, table, primary_key, requester="api_user"
+            return GdprService(self.spark, AuditLog(self.spark, audit_log_path(wh))).erase(
+                source, target, pred, table, primary_key, requester=requester
             )
         except KeyError as e:
             raise ApiError(404, str(e)) from e
-        self._invalidate_cache("health", "tables")
-        return out
 
     def table_history(self, table: str) -> list[dict]:
         _validate_identifier(table, "table")
@@ -515,15 +481,21 @@ class CdcApiService:
                 422, "query params 'since' (int, required), 'to'/'limit' "
                 "(int) malformed"
             ) from e
-        try:
-            df = t.read_changes(since, to)
-        except FileNotFoundError as e:
-            raise ApiError(410, str(e)) from e
-        except ValueError as e:
-            raise ApiError(409, str(e)) from e
-        if df is None:
-            return []
-        return [r.asDict(recursive=True) for r in df.limit(limit).collect()]
+
+        def changes(version: int) -> list[dict]:
+            try:
+                df = t.read_changes(since, version if to is None else to)
+            except FileNotFoundError as e:
+                raise ApiError(410, str(e)) from e
+            except ValueError as e:
+                raise ApiError(409, str(e)) from e
+            if df is None:
+                return []
+            return [r.asDict(recursive=True) for r in df.limit(limit).collect()]
+
+        return self._memoized(
+            t, "table_changes", {"since": since, "to": to, "limit": limit}, changes
+        )
 
     def _keyed_table_or_404(self, table: str, warehouse: str | None = None):
         """The CDC table of configured *table* in *warehouse* (default:

@@ -2,15 +2,18 @@
 storage verbs that have no HTTP route.
 
 A verb that mirrors a route (reference ``src/api/routes/*``) builds one
-uncached service, calls the route's method and prints what it returns
-as JSON — one line per object or list element; a service ``ApiError``
-becomes one stderr JSON line and exit 1:
+service, calls the route's method and prints what it returns as JSON
+— one line per object or list element; a service ``ApiError`` becomes
+one stderr JSON line and exit 1:
 
 - ``dlq list``           → GET /dlq/records  (``dlq_records``)
 - ``dlq stats``          → GET /dlq/stats    (``dlq_stats``)
 - ``dlq replay``         → POST /dlq/replay  (``dlq_replay``)
 - ``health``             → GET /health       (``health``)
 - ``metrics dump``       → GET /metrics      (``metrics``)
+- ``gdpr erase``         → DELETE /records/{keyspace}/{table}/{id}
+  (``gdpr_erase``): ``--table`` of ``--warehouse`` and, with
+  ``--target-warehouse``, of that target too (``gdpr.py:37-216``)
 - ``reconcile run``      → POST /reconciliation/trigger
   (``reconciliation_trigger``): ``--table`` of ``--warehouse`` against
   the same table of ``--source-warehouse``
@@ -18,8 +21,6 @@ becomes one stderr JSON line and exit 1:
 CLI-local verbs:
 
 - ``dlq resolve``        → status flip without replay (``dlq_service.py:246-255``)
-- ``gdpr erase``         → the erasure cascade with ``--target-warehouse``
-  (``gdpr.py:37-216``)
 - ``table history``      → retained snapshot versions of a keyed table
 - ``table read``         → current or ``--version`` time-travel read
 - ``table changes``      → change feed between retained versions (CDF)
@@ -63,14 +64,13 @@ def _emit(rows) -> None:
 
 
 def _service(args, spark) -> CdcApiService:
-    """The route handlers, uncached: one CLI call is one request."""
+    """The route handlers for one CLI call, which is one request."""
     config = getattr(args, "config", None)
     return CdcApiService(
         spark,
         warehouse=getattr(args, "warehouse", None),
         source_warehouse=getattr(args, "source_warehouse", None),
         table_config=_load_config(config) if config else None,
-        cache_ttl=0,
     )
 
 
@@ -120,22 +120,15 @@ def cmd_dlq_resolve(args, spark) -> int:
 
 
 def cmd_gdpr_erase(args, spark) -> int:
-    from cass_cdc_pg_spark.ops import AuditLog, GdprService
-    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
-    from cass_cdc_pg_spark.streaming.ingest import audit_log_path, cdc_table_path
-
-    keys = _load_config(args.config)["tables"][args.table]["keys"]
-    src = KeyedTable(spark, cdc_table_path(args.warehouse, args.table), keys)
-    tgt = (
-        KeyedTable(spark, cdc_table_path(args.target_warehouse, args.table), keys)
-        if args.target_warehouse
-        else src
+    # --warehouse holds the source replica; --target-warehouse, when
+    # given, the target, which keeps the audit log
+    svc = CdcApiService(
+        spark,
+        warehouse=args.target_warehouse or args.warehouse,
+        source_warehouse=args.warehouse if args.target_warehouse else None,
+        table_config=_load_config(args.config),
     )
-    audit = AuditLog(spark, audit_log_path(args.warehouse))
-    pred = F.col(keys[0]).cast("string") == args.id
-    result = GdprService(spark, audit).erase(
-        src, tgt, pred, args.table, args.id, requester=args.requester
-    )
+    result = svc.gdpr_erase(args.table, args.id, requester=args.requester)
     print(json.dumps(result, default=str, sort_keys=True))
     return 0 if result["status"] == "success" else 1
 

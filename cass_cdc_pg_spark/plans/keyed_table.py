@@ -223,6 +223,15 @@ class KeyedTable:
     def _current_version(self) -> int:
         return self._doc()["version"]
 
+    def commit_id(self) -> tuple[int, float | None]:
+        """``(version, updated_at)`` of the current commit, from one
+        read of its doc: the name of one immutable snapshot.  A table
+        dropped and re-created at the same path restarts its versions,
+        so the version alone could name two snapshots; ``updated_at``
+        tells them apart.  ``(0, None)`` before the first commit."""
+        doc = self._doc()
+        return doc["version"], doc.get("updated_at")
+
     @property
     def txn(self) -> dict[str, int]:
         """The committed position of every change-feed consumer that

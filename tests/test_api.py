@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import contextlib
 import json
+import shutil
 import urllib.error
 import urllib.request
+import uuid
 
 import pytest
 from pyspark.sql import types as T
@@ -27,7 +29,9 @@ CHANGE_EVENT_DDL = (
 USERS_CFG = {"tables": {"users": {"ddl": USERS_DDL, "keys": ["id"]}}}
 
 
-def _seed_warehouse(spark, wh: str) -> None:
+def _seed_warehouse(spark, wh: str) -> CdcIngest:
+    """One good user row and one invalid event (routed to the DLQ);
+    returns the ingest that wrote them."""
     ingest = CdcIngest(
         spark,
         wh,
@@ -46,6 +50,33 @@ def _seed_warehouse(spark, wh: str) -> None:
             CHANGE_EVENT_DDL,
         )
     )
+    return ingest
+
+
+def _jobs_of(spark, fn):
+    """``(fn(), number of Spark jobs it ran)``."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _merge_users(spark, wh: str, *rows):
+    """Merge ``(id, username, ts)`` rows into *wh*'s users CDC table."""
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+    from cass_cdc_pg_spark.streaming.ingest import cdc_table_path
+
+    ddl = (USERS_DDL + ", _cdc_deleted boolean, _cdc_timestamp_micros long, "
+           "_last_event_id string, _ttl_expiry_timestamp_us long")
+    t = KeyedTable(spark, cdc_table_path(wh, "users"), ["id"], num_buckets=2)
+    t.merge(spark.createDataFrame(
+        [(k, name, 30, False, ts, f"e{ts}", None) for k, name, ts in rows], ddl))
+    return t
 
 
 @contextlib.contextmanager
@@ -311,34 +342,135 @@ def test_api_changes_conflict_after_rewrite(spark, tmp_path):
         assert st == 409 and "rewrite" in err["detail"]
 
 
-def test_api_hot_route_cache_and_invalidation(spark, tmp_path):
-    """The short-TTL read cache: repeated dlq_stats within the TTL
-    reuses the computed answer (no extra Spark actions); any mutating
-    route invalidates, so read-your-writes holds; cache_ttl=0
-    disables caching entirely."""
+def test_api_answers_per_committed_version(spark, tmp_path, monkeypatch):
+    """A change-feed tail repeated at an unchanged version runs no Spark
+    job; a merge between two calls makes the second recompute; a table
+    re-created at the same path (same version number) is not served the
+    old answer; the memo never holds more than ``MAX_MEMO`` answers."""
+    from cass_cdc_pg_spark import api
+
     wh = str(tmp_path / "wh")
-    _seed_warehouse(spark, wh)  # seeds one invalid event -> one DLQ row
+    _merge_users(spark, wh, ("a", "a1", 1))
+    t = _merge_users(spark, wh, ("b", "b1", 2))
+    svc = CdcApiService(spark, warehouse=wh, table_config=USERS_CFG)
 
-    from cass_cdc_pg_spark.api import CdcApiService
+    def tail():
+        return svc.table_changes("users", {"since": str(t._current_version() - 1)})
 
-    svc = CdcApiService(spark, warehouse=wh, cache_ttl=60.0)
-    first = svc.dlq_stats()
-    assert first["total"] == 1
-    calls = []
-    orig = svc._dlq_stats_compute
-    svc._dlq_stats_compute = lambda: calls.append(1) or orig()
-    assert svc.dlq_stats() == first  # served from cache
-    assert calls == []
-    svc._invalidate_cache()
-    assert svc.dlq_stats() == first  # recomputed after invalidation
-    assert calls == [1]
+    first, jobs = _jobs_of(spark, tail)
+    assert jobs > 0 and [r["username"] for r in first] == ["b1"]
+    first.append("edited by the caller")
+    again, jobs = _jobs_of(spark, tail)
+    assert jobs == 0 and [r["username"] for r in again] == ["b1"]
 
-    nocache = CdcApiService(spark, warehouse=wh, cache_ttl=0)
-    seen = []
-    inner = nocache._dlq_stats_compute
-    nocache._dlq_stats_compute = lambda: seen.append(1) or inner()
-    nocache.dlq_stats(); nocache.dlq_stats()
-    assert seen == [1, 1]  # every call computes
+    _merge_users(spark, wh, ("c", "c1", 3))
+    after, jobs = _jobs_of(spark, tail)
+    assert jobs > 0 and [r["username"] for r in after] == ["c1"]
+    version = t._current_version()
+
+    shutil.rmtree(t.path)
+    for row in (("x", "x1", 1), ("y", "y1", 2), ("z", "z1", 3)):
+        _merge_users(spark, wh, row)
+    assert t._current_version() == version
+    assert [r["username"] for r in tail()] == ["z1"]
+
+    monkeypatch.setattr(api, "MAX_MEMO", 2)
+    for limit in (1, 2, 3):
+        svc.table_changes("users", {"since": str(version - 1), "limit": str(limit)})
+        assert len(svc._memo) <= 2
+    assert len(svc._memo) == 2
+
+
+def test_api_memo_under_concurrent_requests(monkeypatch):
+    """Threads sharing one service's memo each get the answer of the
+    commit they read, and the memo ends within its bound."""
+    import sys
+    import threading
+
+    from cass_cdc_pg_spark import api
+
+    monkeypatch.setattr(api, "MAX_MEMO", 8)
+    svc = CdcApiService(None)
+
+    class Table:  # a keyed table that only names its commit
+        path = "t"
+
+        def __init__(self, version):
+            self.version = version
+
+        def commit_id(self):
+            return self.version, float(self.version)
+
+    wrong = []
+
+    def worker(seed):
+        for i in range(300):
+            v, p = (seed * 7 + i) % 20, i % 3
+            got = svc._memoized(Table(v), "r", {"p": p}, lambda ver: [ver, p])
+            if got != [v, p]:
+                wrong.append((v, p, got))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(s,)) for s in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert wrong == [] and len(svc._memo) <= 8
+
+
+def test_api_every_writer_commit_shows_in_the_next_read(spark, tmp_path, recon_pair):
+    """Answers follow the commits of any writer, not only the API's own:
+    an event the stream routes to the DLQ shows in the next DLQ read on
+    the same service, and a resolve in the next mismatch listing."""
+    wh = str(tmp_path / "wh")
+    ingest = _seed_warehouse(spark, wh)
+    svc = CdcApiService(spark, warehouse=wh, table_config=USERS_CFG)
+    assert svc.dlq_stats()["total"] == 1 and len(svc.dlq_records({})) == 1
+    _, jobs = _jobs_of(spark, svc.dlq_stats)
+    assert jobs == 0  # unchanged DLQ: answered from the memo
+    ingest.process_batch(spark.createDataFrame(
+        [(None, "users", "CREATE", None, None, {"id": "y"}, 1, None, False)],
+        CHANGE_EVENT_DDL))
+    assert svc.dlq_stats()["total"] == 2
+    assert len(svc.dlq_records({})) == 2
+
+    recon_wh, src_wh, cfg = recon_pair
+    svc = CdcApiService(spark, warehouse=recon_wh, source_warehouse=src_wh,
+                        table_config=cfg)
+    svc.reconciliation_trigger({"table": "users", "strategy": "checksum"})
+    listed = svc.reconciliation_mismatches({})
+    assert {m["resolution_status"] for m in listed} == {"PENDING"}
+    mid = listed[0]["mismatch_id"]
+    svc.reconciliation_resolve(mid, {"status": "IGNORED"})
+    statuses = {m["mismatch_id"]: m["resolution_status"]
+                for m in svc.reconciliation_mismatches({})}
+    assert statuses[mid] == "IGNORED"
+
+
+def test_api_gdpr_erasure_covers_the_source_warehouse(spark, recon_pair):
+    """With a source warehouse, an API erasure removes the record from
+    the source replica and from the target table, and audits it in the
+    target warehouse."""
+    from cass_cdc_pg_spark.ops import AuditLog
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+    from cass_cdc_pg_spark.streaming.ingest import audit_log_path, cdc_table_path
+
+    wh, src_wh, cfg = recon_pair
+    svc = CdcApiService(spark, warehouse=wh, source_warehouse=src_wh, table_config=cfg)
+    out = svc.gdpr_delete("cdc", "users", "u05")
+    assert (out["status"], out["deleted_from_source"], out["deleted_from_target"]) == (
+        "success", True, True)
+    for w in (src_wh, wh):
+        live = KeyedTable(spark, cdc_table_path(w, "users"), ["id"]).read_live()
+        assert live.filter("id = 'u05'").count() == 0, w
+    audit = AuditLog(spark, audit_log_path(wh)).read().collect()
+    assert [a["record_identifier"] for a in audit] == ["u05"]
 
 
 def test_api_async_reconciliation_trigger(spark, recon_pair):

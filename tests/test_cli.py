@@ -161,7 +161,7 @@ def test_cli_prints_what_the_service_returns(spark, tmp_path, capsys):
     cfg = _cfg(tmp_path)
     with open(cfg) as fh:
         svc = CdcApiService(spark, warehouse=wh, source_warehouse=wh,
-                            table_config=json.load(fh), cache_ttl=0)
+                            table_config=json.load(fh))
 
     assert main(["dlq", "list", "--warehouse", wh], spark) == 0
     assert _lines(capsys.readouterr().out) == json.loads(
@@ -200,7 +200,7 @@ def test_cli_dlq_stats_runs_no_more_jobs_than_the_service(spark, tmp_path, capsy
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    svc = CdcApiService(spark, warehouse=wh, cache_ttl=0)
+    svc = CdcApiService(spark, warehouse=wh)
     api_jobs = jobs("api-dlq-stats", svc.dlq_stats)
     cli_jobs = jobs("cli-dlq-stats",
                     lambda: main(["dlq", "stats", "--warehouse", wh], spark))
@@ -231,6 +231,36 @@ def test_cli_service_error_is_one_stderr_line(spark, tmp_path, capsys):
                  "--config", str(cfg), "--ids", "x"], spark) == 1
     (err,) = _lines(capsys.readouterr().err)
     assert err["status"] == 503 and "table config" in err["detail"]
+
+
+def test_cli_gdpr_erase_is_the_service_erasure(spark, tmp_path, recon_pair, capsys):
+    """`gdpr erase --target-warehouse` removes the record from both
+    warehouses, audits it with its requester in the target warehouse and
+    prints the service's result; an unknown record exits 1 with the
+    error JSON on stderr."""
+    from cass_cdc_pg_spark.ops import AuditLog
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+    from cass_cdc_pg_spark.streaming.ingest import audit_log_path, cdc_table_path
+
+    wh, src_wh, recon_cfg = recon_pair
+    cfg = tmp_path / "recon_cfg.json"
+    cfg.write_text(json.dumps(recon_cfg))
+    erase = ["gdpr", "erase", "--warehouse", src_wh, "--target-warehouse", wh,
+             "--config", str(cfg), "--table", "users", "--requester", "ops"]
+    assert main([*erase, "--id", "u05"], spark) == 0
+    out = json.loads(capsys.readouterr().out)
+    assert (out["status"], out["deleted_from_source"], out["deleted_from_target"]) == (
+        "success", True, True)
+    for w in (src_wh, wh):
+        live = KeyedTable(spark, cdc_table_path(w, "users"), ["id"]).read_live()
+        assert live.filter("id = 'u05'").count() == 0, w
+    (entry,) = AuditLog(spark, audit_log_path(wh)).read().collect()
+    assert (entry["record_identifier"], entry["requester"]) == ("u05", "ops")
+
+    assert main([*erase, "--id", "u05"], spark) == 1
+    captured = capsys.readouterr()
+    (err,) = _lines(captured.err)
+    assert captured.out == "" and err["status"] == 404 and "u05" in err["detail"]
 
 
 def test_tracer_stack_is_per_thread():
