@@ -82,6 +82,20 @@ class ApiError(Exception):
         self.detail = detail
 
 
+def _int_param(params: dict, name: str, default: int | None = None) -> int:
+    """Query param *name* as an int >= 0 (*default* when absent; no
+    default: required).  Anything else answers 422 naming the param —
+    checked before any table is read."""
+    try:
+        value = int(params.get(name, default))
+        if value >= 0:
+            return value
+    except (TypeError, ValueError):
+        pass
+    raise ApiError(422, f"query param {name!r} must be an int >= 0, "
+                        f"got {params.get(name)!r}")
+
+
 def _validate_identifier(value: str, kind: str) -> str:
     """Reference ``gdpr.py:235`` — reject path-traversal / injection
     shaped identifiers before they reach the engine."""
@@ -149,26 +163,31 @@ class CdcApiService:
                 del self._memo[old]
         return out
 
-    @staticmethod
-    def _live_page(table, params: dict, filters: dict, order_by) -> list[dict]:
+    def _live_page(self, table, route: str, params: dict, filters: dict,
+                   order_by) -> list[dict]:
         """One page (``limit``/``offset`` params) of *table*'s live
         rows in *order_by*, keeping those whose column ``filters[p]``
         equals each param ``p`` that is set; [] before the first
         commit.  These tables carry no TTL, so the page depends on the
-        commit read alone."""
+        commit read alone (``_memoized`` under *route*)."""
         from cass_cdc_pg_spark.operators.listings import listing
         from cass_cdc_pg_spark.plans.keyed_table import META_COLS
 
-        if not table.exists():
-            return []
-        out = listing(
-            table.read_live().drop(*META_COLS),
-            [F.col(col) == params[p] for p, col in filters.items() if params.get(p)],
-            order_by,
-            limit=int(params.get("limit", 50)),
-            offset=int(params.get("offset", 0)),
-        )
-        return [r.asDict() for r in out.collect()]
+        limit, offset = _int_param(params, "limit", 50), _int_param(params, "offset", 0)
+
+        def page(_version: int) -> list[dict]:
+            if not table.exists():
+                return []
+            out = listing(
+                table.read_live().drop(*META_COLS),
+                [F.col(col) == params[p] for p, col in filters.items() if params.get(p)],
+                order_by,
+                limit=limit,
+                offset=offset,
+            )
+            return [r.asDict() for r in out.collect()]
+
+        return self._memoized(table, route, params, page)
 
     def _require_warehouse(self) -> str:
         if not self.warehouse:
@@ -247,9 +266,8 @@ class CdcApiService:
         t = self._dlq_table()
         filters = {"error_type": "error_type", "status": "resolution_status",
                    "table": "source_table"}
-        return self._memoized(t, "dlq_records", params, lambda _: self._live_page(
-            t, params, filters, [F.desc("first_failed_at_us"), F.asc("dlq_id")]
-        ))
+        return self._live_page(t, "dlq_records", params, filters,
+                               [F.desc("first_failed_at_us"), F.asc("dlq_id")])
 
     def dlq_stats(self) -> dict:
         t = self._dlq_table()
@@ -402,10 +420,8 @@ class CdcApiService:
 
     def reconciliation_mismatches(self, params: dict) -> list[dict]:
         t = self._mismatch_table()
-        return self._memoized(t, "reconciliation_mismatches", params, lambda _: (
-            self._live_page(t, params, {"status": "resolution_status"},
-                            [F.asc("mismatch_id")])
-        ))
+        return self._live_page(t, "reconciliation_mismatches", params,
+                               {"status": "resolution_status"}, [F.asc("mismatch_id")])
 
     def reconciliation_resolve(self, mismatch_id: str, body: dict) -> dict:
         status = body.get("status", "MANUAL_RESOLVED")
@@ -468,23 +484,25 @@ class CdcApiService:
 
     def table_changes(self, table: str, params: dict) -> list[dict]:
         """Change feed over HTTP (the CDF surface of `table changes`):
-        410 Gone when the range fell out of retention, 409 Conflict
-        when it crosses a rewrite commit (resync required)."""
+        422 unless ``since <= to <= head`` (``to`` defaults to the head
+        version), 410 Gone when the range fell out of retention, 409
+        Conflict when it crosses a rewrite commit (resync required)."""
         _validate_identifier(table, "table")
         t = self._keyed_table_or_404(table)
-        try:
-            since = int(params["since"])
-            to = int(params["to"]) if "to" in params else None
-            limit = min(int(params.get("limit", 100)), 1000)
-        except (KeyError, ValueError) as e:
-            raise ApiError(
-                422, "query params 'since' (int, required), 'to'/'limit' "
-                "(int) malformed"
-            ) from e
+        since = _int_param(params, "since")
+        to = _int_param(params, "to") if "to" in params else None
+        limit = min(_int_param(params, "limit", 100), 1000)
 
         def changes(version: int) -> list[dict]:
+            hi = version if to is None else to
+            if hi > version:
+                raise ApiError(422, f"query param 'to' ({to}) is past the "
+                                    f"head version {version}")
+            if since > hi:
+                raise ApiError(422, f"query param 'since' ({since}) is past "
+                                    f"version {hi}")
             try:
-                df = t.read_changes(since, version if to is None else to)
+                df = t.read_changes(since, hi)
             except FileNotFoundError as e:
                 raise ApiError(410, str(e)) from e
             except ValueError as e:

@@ -65,14 +65,33 @@ crashed writes are garbage-collected on the next commit.  Concurrent
 writers are not supported: the version check a second writer would
 need is not made.
 
-A commit doc also carries ``txn``: ``{consumer_id: source_version}``,
-the position of every change-feed consumer that writes this table
-(Delta's ``SetTransaction``).  A consumer passes its new position as
-``merge(..., txn=...)`` or ``overwrite(..., txn=...)``, so the position
-commits atomically with the state it produced and a crash can never
-leave one without the other.  Every commit carries the previous map
-forward; ``overwrite`` replaces it with the caller's entry alone, since
-the state the other positions described is gone.
+A commit doc holds:
+
+- ``buckets``: bucket id (str) → ``{"base": dir|None, "deltas": [dir,
+  ...]}``; a bucket a rewrite emptied keeps an entry with no dirs;
+- ``num_buckets`` and ``key_cols``, fixed at the first commit;
+- ``version``, ``updated_at``, and ``op``/``added`` (the change-feed
+  provenance, see ``read_changes``);
+- ``schema``: the columns of every file the doc names, as
+  ``StructType.jsonValue()`` with every field nullable (Delta's
+  ``metaData`` action).  A commit widens the previous doc's schema by
+  the columns of the files it adds, in that order; one that rewrites
+  every bucket (``overwrite``) replaces it.  A column keeps the type it
+  was first written with: a write that changes it raises before its
+  commit.  Reads name their dirs and this schema, so planning a read
+  runs no Spark job, and a committed table whose buckets hold no file
+  still reads as an empty frame with its columns.  A doc written before
+  schemas were recorded has none; its files' footers are merged
+  (``mergeSchema``, one Spark job) until its table's next commit
+  records the result;
+- ``txn``: ``{consumer_id: source_version}``, the position of every
+  change-feed consumer that writes this table (Delta's
+  ``SetTransaction``).  A consumer passes its new position as
+  ``merge(..., txn=...)`` or ``overwrite(..., txn=...)``, so the
+  position commits atomically with the state it produced and a crash
+  can never leave one without the other.  Every commit carries the
+  previous map forward; ``overwrite`` replaces it with the caller's
+  entry alone, since the state the other positions described is gone.
 
 Filesystem note: commit atomicity relies on POSIX ``os.replace`` of
 the single manifest file (data dirs are immutable once written, so
@@ -94,6 +113,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cass_cdc_pg_spark.durable import write_json
 from cass_cdc_pg_spark.operators.lww import lww_latest
@@ -104,6 +124,37 @@ META_COLS = (
     "_last_event_id",
     "_ttl_expiry_timestamp_us",
 )
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """*t* as a parquet scan reads it: every field, element and map
+    value nullable."""
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                             for f in t.fields])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _widen(schema: T.StructType | None, written: DataFrame) -> T.StructType:
+    """*schema*'s columns, then the columns of *written* (a ``_write``
+    input, ``_bucket`` aside) that it lacks — what merging the footers
+    of the old files and the new ones yields.  A column both hold must
+    keep its type (a nested struct counts as one type): a conflict
+    raises ValueError, which every later read would otherwise hit."""
+    new = _nullable(T.StructType([f for f in written.schema.fields if f.name != "_bucket"]))
+    if schema is None:
+        return new
+    have = {f.name: f.dataType for f in schema.fields}
+    for f in new.fields:
+        if have.get(f.name, f.dataType) != f.dataType:
+            raise ValueError(
+                f"column {f.name!r} is {have[f.name].simpleString()} in the keyed "
+                f"table, but this write has {f.dataType.simpleString()}")
+    return T.StructType(schema.fields + [f for f in new.fields if f.name not in have])
 
 
 def committed_layout(path: str) -> tuple[list[str], int] | None:
@@ -158,8 +209,8 @@ class KeyedTable:
 
     def _doc(self, version: int | None = None) -> dict:
         """The commit doc of *version* (default: the current one) — the
-        one reader of the table's commit files.  ``buckets`` maps
-        bucket-id (str) → {"base": dir|None, "deltas": [dir, ...]}.
+        one reader of the table's commit files (fields: module
+        docstring).
 
         A retained version comes from ``_log/``; the current doc also
         answers for its own version when the crash window after the
@@ -193,6 +244,7 @@ class KeyedTable:
         op: str,
         added: list[str],
         txn: dict[str, int] | None = None,
+        schema: T.StructType | None = None,
     ) -> None:
         """Commit *buckets* as the version after *base_doc* — the doc
         the caller read and modified, so the version number needs no
@@ -201,8 +253,8 @@ class KeyedTable:
         copy, see ``_doc``), then one GC pass.  ``op`` and ``added``
         are the change-feed provenance: what kind of commit this was
         and which data dirs it ADDED (see ``read_changes``).  *txn* is
-        the new doc's whole consumer-position map; None carries
-        *base_doc*'s forward."""
+        the new doc's whole consumer-position map, and *schema* its
+        file schema (``_widen``); None carries *base_doc*'s forward."""
         doc = {
             "buckets": buckets,
             "num_buckets": self.num_buckets,
@@ -211,6 +263,7 @@ class KeyedTable:
             "version": base_doc["version"] + 1,
             "op": op,
             "added": added,
+            "schema": base_doc.get("schema") if schema is None else schema.jsonValue(),
             "txn": base_doc.get("txn", {}) if txn is None else txn,
         }
         os.makedirs(self._log_dir, exist_ok=True)
@@ -316,21 +369,17 @@ class KeyedTable:
             dirs.extend((d, v) for d in doc.get("added", ()))
         if not dirs:
             return None
+        # the range holds merges and compactions only, so the last doc's
+        # schema covers every commit's files; older ones backfill NULL
+        schema = self._schema(doc)
         out = None
         for d, v in dirs:
             part = (
-                self.spark.read.parquet(f"{self.path}/{d}")
+                self.spark.read.schema(schema).parquet(f"{self.path}/{d}")
                 .drop("bucket")
                 .withColumn("_change_version", F.lit(v).cast("int"))
             )
-            # allowMissingColumns: commits from before an ADD_COLUMN
-            # evolution lack the new column; the feed backfills NULL,
-            # same as the snapshot read's mergeSchema
-            out = (
-                part
-                if out is None
-                else out.unionByName(part, allowMissingColumns=True)
-            )
+            out = part if out is None else out.unionByName(part)
         return out
 
     # -- helpers ------------------------------------------------------------
@@ -378,21 +427,32 @@ class KeyedTable:
             tiebreak_col="_last_event_id",
         )
 
-    def _scan(self, entries) -> tuple[DataFrame | None, bool]:
+    def _schema(self, doc: dict) -> T.StructType | None:
+        """The schema *doc*'s files read with: the one its commit
+        recorded, None when the doc names no file (version 0, a table
+        never committed).  A doc written before schemas were recorded
+        merges its files' footers instead, the one ``mergeSchema`` read
+        (a Spark job); the result stays on *doc*, so a commit built on
+        it records it."""
+        if doc.get("schema") is None:
+            dirs = [d for b, e in doc["buckets"].items() for d in self._bucket_dirs(b, e)]
+            if dirs:
+                doc["schema"] = self.spark.read.option("mergeSchema", "true").parquet(
+                    *sorted(dirs)).schema.jsonValue()
+        return None if doc.get("schema") is None else T.StructType.fromJson(doc["schema"])
+
+    def _scan(self, entries, schema: T.StructType) -> tuple[DataFrame, bool]:
         """The unreduced union of the base and delta files of *entries*
-        (``(bucket, manifest entry)`` pairs), and whether any of them
-        carries deltas; ``(None, False)`` when they hold no files."""
+        (``(bucket, manifest entry)`` pairs), read with *schema* (the
+        doc's: files written before an ADD_COLUMN backfill NULL), and
+        whether any of them carries deltas.  Entries with no files read
+        as an empty frame of *schema*."""
         dirs: list[str] = []
         has_deltas = False
         for b, entry in entries:
             dirs.extend(self._bucket_dirs(b, entry))
             has_deltas = has_deltas or bool(entry.get("deltas"))
-        if not dirs:
-            return None, False
-        # mergeSchema: buckets/deltas written before an ADD_COLUMN
-        # evolution lack the new column; the merged read backfills NULL
-        df = self.spark.read.option("mergeSchema", "true").parquet(*sorted(set(dirs)))
-        return df, has_deltas
+        return self.spark.read.schema(schema).parquet(*sorted(set(dirs))), has_deltas
 
     def _cluster(self, df: DataFrame, n_buckets: int, reduce: bool = True) -> DataFrame:
         """*df* with its ``_bucket``, shuffled once by bucket into at
@@ -425,20 +485,22 @@ class KeyedTable:
         GC'd past *keep_versions*).
 
         Merge-on-read: buckets carrying deltas are LWW-reduced; a
-        fully-compacted table is a plain parquet scan.  Buckets with no
-        state at the version read as None, and at version 0 every
-        bucket does."""
-        manifest = self._doc(version)["buckets"]
+        fully-compacted table is a plain parquet scan.  The frame has
+        the commit's schema, also when the buckets read hold no file;
+        version 0 (before the first commit) has none and reads as None."""
+        doc = self._doc(version)
+        manifest = doc["buckets"]
         if not manifest and version != 0:
             raise FileNotFoundError(f"empty keyed table at {self.path}")
+        schema = self._schema(doc)
+        if schema is None:
+            return None
         wanted = (
             manifest.items()
             if buckets is None
             else [(b, manifest[b]) for b in map(str, buckets) if b in manifest]
         )
-        df, has_deltas = self._scan(wanted)
-        if df is None:
-            return None  # no state for these buckets yet
+        df, has_deltas = self._scan(wanted, schema)
         return self._reduce(df) if has_deltas else df
 
     def read_live(self) -> DataFrame:
@@ -466,27 +528,30 @@ class KeyedTable:
         *txn* sets consumer positions in the same commit (module
         docstring).  A merge that carries a position commits even when
         it has no rows (*batch* None or empty): the consumer then moves
-        past a source range that changed nothing.
+        past a source range that changed nothing.  A batch column whose
+        type differs from the table's raises ValueError before anything
+        is written.
         """
+        doc = self._doc()
         touched: list[str] = []
         if batch is not None:
             missing = [c for c in (*self.key_cols, *META_COLS)
                        if c not in batch.columns]
             if missing:
                 raise ValueError(f"merge batch missing columns: {missing}")
+            clustered = self._cluster(batch, self.num_buckets)
+            schema = _widen(self._schema(doc), clustered)
             delta = f"delta-{uuid.uuid4().hex[:12]}"
-            touched = self._write(
-                self._cluster(batch, self.num_buckets), f"{self.path}/{delta}")
+            touched = self._write(clustered, f"{self.path}/{delta}")
             if not touched:
                 shutil.rmtree(f"{self.path}/{delta}", ignore_errors=True)
         if not touched and txn is None:
             return
-        doc = self._doc()
         manifest = doc["buckets"]
         for b in touched:
             manifest.setdefault(b, {"base": None, "deltas": []})["deltas"].append(delta)
         self._commit(doc, manifest, "merge", [delta] if touched else [],
-                     {**doc.get("txn", {}), **(txn or {})})
+                     {**doc.get("txn", {}), **(txn or {})}, schema if touched else None)
         self._compact_if_needed(manifest)
 
     def truncate_tombstones(
@@ -560,7 +625,7 @@ class KeyedTable:
         missing = [c for c in (*self.key_cols, *META_COLS) if c not in state.columns]
         if missing:
             raise ValueError(f"overwrite state missing columns: {missing}")
-        self._publish(self._cluster(state, self.num_buckets),
+        self._publish(self._doc(), self._cluster(state, self.num_buckets),
                       list(range(self.num_buckets)), op="rewrite", txn=txn or {})
 
     # -- compaction ---------------------------------------------------------
@@ -577,7 +642,8 @@ class KeyedTable:
     def compact(self, buckets: list[int] | None = None) -> int:
         """Fold deltas into a new base for *buckets* (default: every
         bucket carrying deltas).  Returns number of buckets compacted."""
-        manifest = self._doc()["buckets"]
+        doc = self._doc()
+        manifest = doc["buckets"]
         targets = [
             b
             for b, e in manifest.items()
@@ -586,56 +652,52 @@ class KeyedTable:
         ]
         if not targets:
             return 0
-        df, _ = self._scan((b, manifest[b]) for b in targets)
-        self._publish(self._cluster(df, len(targets)), targets, op="compact")
+        df, _ = self._scan(((b, manifest[b]) for b in targets), self._schema(doc))
+        self._publish(doc, self._cluster(df, len(targets)), targets, op="compact")
         return len(targets)
 
     def _publish(
         self,
+        doc: dict,
         df_with_bucket: DataFrame,
         buckets: list,
         op: str = "rewrite",
         txn: dict[str, int] | None = None,
     ) -> None:
         """Write *df_with_bucket* (a ``_cluster`` output) as the new
-        **base** of *buckets* (deltas cleared) and commit it with *txn*
-        (see ``_commit``).  A bucket that ends up empty gets an
-        empty-schema marker dir."""
+        **base** of *buckets* (deltas cleared) and commit it after
+        *doc*, the doc the caller read, with *txn* (see ``_commit``).
+        A bucket left with no rows keeps an entry with no dirs.  The
+        written columns widen *doc*'s schema, or replace it when every
+        bucket is rewritten: no older file is left then."""
+        every = len(buckets) == self.num_buckets
+        schema = _widen(None if every else self._schema(doc), df_with_bucket)
         snap_name = f"snap-{uuid.uuid4().hex[:12]}"
-        snap = f"{self.path}/{snap_name}"
-        written = set(self._write(df_with_bucket, snap))
-        doc = self._doc()
+        written = set(self._write(df_with_bucket, f"{self.path}/{snap_name}"))
         manifest = doc["buckets"]
         for b in map(str, buckets):
-            if b not in written:
-                self._write(df_with_bucket.drop("_bucket").limit(0), f"{snap}/bucket={b}")
-            manifest[b] = {"base": snap_name, "deltas": []}
-        self._commit(doc, manifest, op, [snap_name], txn)
+            manifest[b] = {"base": snap_name if b in written else None, "deltas": []}
+        self._commit(doc, manifest, op, [snap_name] if written else [], txn, schema)
 
     def _write(self, df: DataFrame, dest: str) -> list[str]:
-        """Write *df* into the fresh directory *dest* — every data file
-        the table holds goes through here, so the file format is set in
-        one place: zstd parquet with v2 data pages, and no dictionary on
-        the leading key column, which a sorted run stores smaller
-        delta-encoded.  The default error-if-exists mode writes straight
-        into *dest*; it is always a new uuid dir, so there is nothing to
-        overwrite.
+        """Write *df*, a ``_cluster`` output, into the fresh directory
+        *dest* — every data file the table holds goes through here, so
+        the file format is set in one place: zstd parquet with v2 data
+        pages, and no dictionary on the leading key column, which a
+        sorted run stores smaller delta-encoded.  The default
+        error-if-exists mode writes straight into *dest*; it is always a
+        new uuid dir, so there is nothing to overwrite.
 
-        A ``_bucket`` column partitions the output: one ``bucket=<b>``
-        dir per value, one file per bucket when *df* is clustered by
-        bucket (``_cluster``), each sorted on ``(_bucket, *key_cols)``;
-        the bucket ids written are returned (the written dirs ARE the
-        touched set, no extra job to discover it).  Without that column
-        *dest* is a single bucket dir and ``[]`` comes back — the
-        empty-bucket marker of ``_publish``."""
+        The ``_bucket`` column partitions the output: one ``bucket=<b>``
+        dir per value, one file per bucket (*df* is clustered by
+        bucket), each sorted on ``(_bucket, *key_cols)``; the bucket ids
+        written are returned (the written dirs ARE the touched set, no
+        extra job to discover it)."""
         options = {
             "compression": "zstd",
             "parquet.writer.version": "v2",
             f"parquet.enable.dictionary#{self.key_cols[0]}": "false",
         }
-        if "_bucket" not in df.columns:
-            df.write.options(**options).parquet(dest)
-            return []
         df.sortWithinPartitions("_bucket", *self.key_cols).write.options(
             **options).partitionBy("_bucket").parquet(dest)
         touched = []
@@ -694,10 +756,12 @@ class KeyedTable:
         if not per_bucket:
             return 0
         touched = [r[0] for r in per_bucket]
-        manifest = self._doc()["buckets"]
+        doc = self._doc()
+        manifest = doc["buckets"]
         # reduce only where deltas remain: a base is reduced already
-        df, has_deltas = self._scan((str(b), manifest[str(b)]) for b in touched)
-        self._publish(self._cluster(df, len(touched), has_deltas).filter(~hit), touched)
+        df, has_deltas = self._scan(((str(b), manifest[str(b)]) for b in touched),
+                                    self._schema(doc))
+        self._publish(doc, self._cluster(df, len(touched), has_deltas).filter(~hit), touched)
         return sum(r["count"] for r in per_bucket)
 
     def expire_ttl(self, now_us: int | None = None) -> int:

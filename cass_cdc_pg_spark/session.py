@@ -44,6 +44,13 @@ _RUNTIME_CONF = {
     # turns full-table row-count reconciliation (Q1/Q17) into a
     # metadata read, the difference between seconds and hours at 100 TB.
     "spark.sql.parquet.aggregatePushdown": "true",
+    # Above this many paths Spark lists a scan's files in a Spark job
+    # (default 32).  A KeyedTable read of a CdcIngest-default table
+    # names at most 288 dirs: 32 buckets × (1 base + compact_threshold
+    # = 8 deltas).  The driver lists those faster than the job does
+    # (read() planning, local disk, 4 vCPU, median of 7: 128 dirs
+    # 410 → 42 ms, 288 dirs 688 → 57 ms).
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "288",
 }
 
 

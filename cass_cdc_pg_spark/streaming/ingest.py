@@ -203,8 +203,8 @@ class CdcIngest:
         """Propose a new payload schema for *name* through the
         compatibility gate.  Accepted (e.g. ADD_COLUMN): the pinned
         schema advances for every process on the warehouse — new
-        merges carry the column, old buckets backfill NULL via
-        mergeSchema, nothing is rewritten.  Rejected (e.g.
+        merges carry the column and widen the table's recorded schema,
+        old files backfill NULL, nothing is rewritten.  Rejected (e.g.
         MODIFY_COLUMN under BACKWARD): the version is recorded REJECTED
         and events carrying it are DLQ'd as SCHEMA_MISMATCH."""
         return self.schema_registry.evolve(name, new_schema)

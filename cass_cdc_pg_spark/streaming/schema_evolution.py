@@ -14,8 +14,9 @@ Mirrors the reference's schema service semantics
   registry gates every table with): adds must be nullable-or-defaulted;
   drops OK; type changes never compatible;
 - **evolve**: a compatible new schema becomes the next ACTIVE version
-  (ADD_COLUMN rides the keyed table's ``mergeSchema`` read — old
-  buckets backfill NULL, nothing is rewritten); an incompatible one is
+  (ADD_COLUMN rides the schema the keyed table's commit doc records —
+  the first merge that carries the column widens it, files written
+  before backfill NULL, nothing is rewritten); an incompatible one is
   recorded REJECTED and events carrying its ``schema_version`` are
   DLQ'd as SCHEMA_MISMATCH by the ingest loop.
 

@@ -319,6 +319,42 @@ def test_api_table_history_and_changes(spark, tmp_path):
         assert st == 404
 
 
+@pytest.mark.parametrize("route,path,param", [
+    ("dlq_records", "/dlq/records?limit=abc", "limit"),
+    ("dlq_records", "/dlq/records?limit=-1", "limit"),
+    ("dlq_records", "/dlq/records?offset=-1", "offset"),
+    ("table_changes", "/tables/users/changes?since=-1", "since"),
+    ("table_changes", "/tables/users/changes?since=0&to=99", "to"),
+], ids=["limit-not-int", "limit-negative", "offset-negative", "since-negative",
+        "to-past-head"])
+def test_api_rejects_a_bad_paging_param(spark, tmp_path, route, path, param):
+    """A malformed or out-of-range paging param answers 422 naming the
+    param, before any table is read: no Spark job runs.  (A limit that
+    is not an int, or a negative limit or offset, used to reach Spark
+    and answer 500; since=-1 answered 409 and a ``to`` past the head
+    410.)"""
+    from urllib.parse import parse_qs, urlsplit
+
+    from cass_cdc_pg_spark.api import ApiError
+
+    wh = str(tmp_path / "wh")
+    _seed_warehouse(spark, wh)  # one users row, one DLQ row
+    with _server(spark, wh=wh, cfg=USERS_CFG) as base:
+        st, _, err = _req(base, "GET", path)
+    assert st == 422 and repr(param) in err["detail"], (st, err)
+
+    svc = CdcApiService(spark, warehouse=wh, table_config=USERS_CFG)
+    params = {k: v[0] for k, v in parse_qs(urlsplit(path).query).items()}
+    args = ("users", params) if route == "table_changes" else (params,)
+
+    def call():
+        with pytest.raises(ApiError) as e:
+            getattr(svc, route)(*args)
+        return e.value.status
+
+    assert _jobs_of(spark, call) == (422, 0)
+
+
 def test_api_changes_conflict_after_rewrite(spark, tmp_path):
     """A GDPR erasure (rewrite commit) in the requested range returns
     409 with the resync message — the error contract of the CDF

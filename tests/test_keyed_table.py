@@ -9,7 +9,10 @@ import pytest
 # loop (`pytest -m "not slow"`); the round gate runs it always
 pytestmark = pytest.mark.slow
 
+from pyspark.sql.types import StructType
+
 from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+from tools.table_bytes import schema_problems
 
 SCHEMA = (
     "id string, val string, _cdc_deleted boolean, _cdc_timestamp_micros long, "
@@ -374,7 +377,7 @@ def test_every_write_is_a_key_sorted_v2_run(spark, tmp_path, key, key_type, enco
         op = t._doc()["op"]
         layouts = [file_layout(f, [key]) for f in _files_added(t)]
         assert layouts, op
-        for lay in (x for x in layouts if x["rows"]):  # skip empty-bucket markers
+        for lay in layouts:
             assert lay["sorted"], op
             assert {p for c in lay["columns"].values() for p in c["pages"]} == {"v2"}, op
             k = lay["columns"][key]
@@ -704,3 +707,191 @@ def test_legacy_manifest_without_keys_refuses_reduce_and_compact(spark, tmp_path
     # rows are untouched: reopening with explicit keys still sees both
     again = KeyedTable(spark, path, ["id"])
     assert again.read().count() == 2
+
+
+# -- the schema recorded in the commit doc ------------------------------------
+
+AGE_SCHEMA = SCHEMA.replace("val string,", "val string, age int,")
+
+
+def _fields(schema) -> dict:
+    return {f.name: (f.dataType, f.nullable) for f in schema.fields}
+
+
+def _footer_schema(t: KeyedTable, version: int | None = None):
+    """The schema a merge of the footers of every file *version* names
+    infers — how a read found its columns before the commit doc
+    recorded them."""
+    doc = t._doc(version)
+    dirs = sorted(d for b, e in doc["buckets"].items() for d in t._bucket_dirs(b, e))
+    return t.spark.read.option("mergeSchema", "true").parquet(*dirs).schema
+
+
+def _files_of(t: KeyedTable, version: int | None = None) -> list[str]:
+    """The parquet files *version* of *t* names."""
+    import os
+
+    doc = t._doc(version)
+    return sorted(os.path.join(d, f) for b, e in doc["buckets"].items()
+                  for d in t._bucket_dirs(b, e) for f in os.listdir(d)
+                  if f.endswith(".parquet"))
+
+
+def _evolved(spark, t):  # ADD: old files backfill new_col with NULL
+    t.merge(_batch(spark, [("a", "v1", False, 100, "e1", None)]))
+    t.merge(spark.createDataFrame(
+        [("b", "v2", "extra", False, 200, "e2", None)],
+        SCHEMA.replace("val string,", "val string, new_col string,")))
+
+
+def _dropped(spark, t):  # DROP: new batches lack age, old files keep it
+    t.merge(spark.createDataFrame([("a", "v1", 30, False, 100, "e1", None)], AGE_SCHEMA))
+    t.merge(_batch(spark, [("b", "v2", False, 200, "e2", None)]))
+
+
+def _readded(spark, t):  # re-add with the retired type
+    _dropped(spark, t)
+    t.merge(spark.createDataFrame([("c", "v3", 31, False, 300, "e3", None)], AGE_SCHEMA))
+
+
+def _truncated(spark, t):  # TRUNCATE tombstones over a retired column
+    _dropped(spark, t)
+    t.merge(t.truncate_tombstones(_batch(spark, [("c", "v3", False, 50, "e3", None)]),
+                                  250, "trunc"))
+
+
+def _compacted(spark, t):
+    _readded(spark, t)
+    t.compact()
+
+
+def _overwritten(spark, t):  # every bucket rewritten without age
+    _dropped(spark, t)
+    t.overwrite(_batch(spark, [("z", "v9", False, 900, "e9", None)]))
+
+
+def _before_the_add(spark, t):  # time travel to a version from before the ADD
+    t.merge(_batch(spark, [("a", "v1", False, 100, "e1", None)]))
+    v = t._current_version()
+    _evolved(spark, t)
+    return v
+
+
+@pytest.mark.parametrize("build", [
+    _evolved, _dropped, _readded, _truncated, _compacted, _overwritten, _before_the_add,
+], ids=lambda f: f.__name__.strip("_"))
+def test_recorded_schema_is_what_the_footers_merge_to(spark, tmp_path, build):
+    """Each commit records the schema of its files in its doc, and a
+    read names that schema: names, types and nullability equal what
+    merging every footer of the version infers, through ADD, DROP
+    (the retired column stays), a re-add with the retired type, a
+    TRUNCATE, compaction, ``overwrite`` (which resets the schema) and
+    time travel."""
+    t = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=4,
+                   compact_threshold=100, keep_versions=10)
+    version = build(spark, t)
+    recorded = StructType.fromJson(t._doc(version)["schema"])
+    assert _fields(recorded) == _fields(_footer_schema(t, version))
+    assert _fields(t.read(version=version).schema) == _fields(recorded)
+    # tools/table_bytes.py, a reader independent of Spark, agrees
+    assert schema_problems(recorded.jsonValue(), _files_of(t, version)) == []
+    if build is _overwritten:
+        assert "age" not in recorded.names
+    if build in (_dropped, _truncated):
+        assert "age" in recorded.names
+    if build is _before_the_add:
+        assert "new_col" not in recorded.names
+
+
+def test_legacy_doc_reads_through_the_footers_until_its_next_commit(spark, tmp_path):
+    """A doc written before schemas were recorded reads through a merge
+    of its files' footers; its next commit records that schema, widened
+    by the new files, and reads then plan without a Spark job."""
+    path = tmp_path / "legacy"
+    base_rows = [(f"k{i}", "base", False, 100, f"b{i}", None) for i in range(8)]
+    _legacy_table(spark, path, 4, {"snap-legacy00000": base_rows})
+    t = KeyedTable(spark, str(path), ["id"], num_buckets=4, compact_threshold=100)
+    assert "schema" not in t._doc()
+    assert _fields(t.read().schema) == _fields(_footer_schema(t))
+    assert _state(t) == _serial_lww(base_rows)
+
+    late = [("k1", "late", False, 300, "m1", None)]
+    t.merge(spark.createDataFrame([(*late[0][:2], "x", *late[0][2:])],
+                                  SCHEMA.replace("val string,", "val string, extra string,")))
+    recorded = StructType.fromJson(t._doc()["schema"])
+    assert _fields(recorded) == _fields(_footer_schema(t))
+    assert "extra" in recorded.names
+    _, jobs = _jobs_of(spark, t.read)
+    assert jobs == 0
+    assert _state(t) == _serial_lww(base_rows + late)
+
+
+def test_merge_refuses_a_conflicting_column_type(spark, tmp_path):
+    """A batch whose column type differs from the recorded one raises
+    before it commits, and the table still reads its previous state (a
+    committed conflict would fail every later read)."""
+    t = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=4)
+    t.merge(spark.createDataFrame([("a", "v1", 30, False, 100, "e1", None)], AGE_SCHEMA))
+    before = t._current_version()
+    with pytest.raises(ValueError, match="age"):
+        t.merge(spark.createDataFrame([("b", "v2", "31", False, 200, "e2", None)],
+                                      AGE_SCHEMA.replace("age int", "age string")))
+    assert t._current_version() == before
+    assert [(r["id"], r["age"]) for r in t.read().collect()] == [("a", 30)]
+    # the tool flags a doc whose type the footers disagree with
+    doc = t._doc()["schema"]
+    assert schema_problems(doc, _files_of(t)) == []
+    wrong = {**doc, "fields": [{**f, "type": "string"} if f["name"] == "age" else f
+                               for f in doc["fields"]]}
+    problems = schema_problems(wrong, _files_of(t))
+    assert problems and all("type mismatch: age" in p for p in problems)
+    narrow = {**doc, "fields": [f for f in doc["fields"] if f["name"] != "age"]}
+    assert all("not in the doc: age" in p for p in schema_problems(narrow, _files_of(t)))
+
+
+def _jobs_of(spark, fn):
+    """``(fn(), number of Spark jobs it ran)``."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_an_emptied_bucket_writes_no_marker(spark, tmp_path):
+    """``delete_where`` that empties a bucket writes no file for it and
+    runs no more Spark jobs than one that leaves rows there; its entry
+    keeps no dirs.  A table whose every bucket was emptied still exists
+    and reads 0 live rows with its full schema."""
+    import os
+
+    rows = [(f"k{i}", "v", False, 100, f"e{i}", None) for i in range(40)]
+    by_bucket: dict = {}
+    for r in spark.createDataFrame([(r[0],) for r in rows], "id string").select(
+            "id", F.expr("pmod(xxhash64(id), 4)").alias("b")).collect():
+        by_bucket.setdefault(str(r["b"]), []).append(r["id"])
+    b0, keys = sorted(by_bucket.items())[0]
+    jobs = {}
+    for name, hit in (("keeps", keys[:1]), ("empties", keys)):
+        t = KeyedTable(spark, str(tmp_path / name), ["id"], num_buckets=4)
+        t.merge(_batch(spark, rows))
+        t.merge(_batch(spark, rows[:10]))  # a delta over the base
+        n, jobs[name] = _jobs_of(spark, lambda: t.delete_where(F.col("id").isin(hit)))
+        assert n == len(hit)
+    assert jobs["empties"] <= jobs["keeps"], jobs
+    assert t._doc()["buckets"][b0] == {"base": None, "deltas": []}
+    assert not any(os.path.exists(f"{t.path}/{d}/bucket={b0}") for d in t._doc()["added"])
+    assert len(_state(t)) == 40 - len(keys)
+
+    full = t.read().schema
+    t.delete_where(F.lit(True))
+    assert t.exists()
+    assert all(e == {"base": None, "deltas": []} for e in t._doc()["buckets"].values())
+    live = t.read_live()
+    assert live.count() == 0 and _fields(live.schema) == _fields(full)

@@ -181,6 +181,43 @@ def _keyed_batch(spark, ts):
         "CAST(NULL AS LONG) AS _ttl_expiry_timestamp_us")
 
 
+@pytest.mark.parametrize("num_buckets", [8, 32])
+def test_keyed_table_reads_plan_without_a_spark_job(spark, tmp_path, num_buckets):
+    """Planning a read runs no Spark job: the commit doc names the dirs
+    and their schema, so nothing merges parquet footers or lists files
+    in a job before the action.  At 32 buckets (the ``CdcIngest``
+    default) a base plus 3 deltas is 128 dirs, above Spark's default
+    parallel-listing threshold of 32 paths."""
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+
+    t = KeyedTable(spark, str(tmp_path / "kt"), ["id"], num_buckets=num_buckets,
+                   compact_threshold=100, keep_versions=10)
+    t.merge(_keyed_batch(spark, 0))
+    t.compact()
+    for ts in (10_000, 20_000, 30_000):
+        t.merge(_keyed_batch(spark, ts))
+    head = t._current_version()
+    assert all(e["base"] and len(e["deltas"]) == 3 for e in t._doc()["buckets"].values())
+    reads = {
+        "read": t.read,
+        "read_live": t.read_live,
+        "read(buckets=)": lambda: t.read(buckets=[0, 1]),
+        "read(version=)": lambda: t.read(version=head - 1),
+        "read_changes": lambda: t.read_changes(head - 3),
+    }
+    sc = spark.sparkContext
+    for name, plan in reads.items():
+        group = f"keyed-table-plan-{num_buckets}-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df = plan()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+        assert df.count() > 0, name
+
+
 def test_keyed_table_merge_write_sorts_once(spark, tmp_path):
     """The merge's write plan sorts once: the LWW aggregate, grouped on
     ``(_bucket, id)``, sorts its input in the order the bucket files
@@ -214,10 +251,11 @@ def test_keyed_table_compaction_shuffles_once(spark, tmp_path):
 
 def test_delete_where_finds_buckets_and_count_in_one_pass(spark, tmp_path):
     """``delete_where`` learns the touched buckets and the hit count
-    from one grouped scan, then rewrites only those buckets: at most 8
-    Spark jobs on an 8-bucket, 1000-row table with one delta (two
-    separate merge-on-read scans for the two values took 10), for one
-    key or 20 alike.  A NULL predicate result keeps the row."""
+    from one grouped scan, then rewrites only those buckets: at most 5
+    Spark jobs on an 8-bucket, 1000-row table with one delta, for one
+    key or 20 alike (two separate merge-on-read scans for the two
+    values took 10; merging the footers to plan each of its two scans
+    took 2 more).  A NULL predicate result keeps the row."""
     from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
 
     def batch(n, ts):
@@ -242,7 +280,7 @@ def test_delete_where_finds_buckets_and_count_in_one_pass(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert len(jobs) <= 8, sorted(jobs)
+        assert len(jobs) <= 5, sorted(jobs)
         expect = nkeys - (1 if nkeys > 7 else 0)
         assert n == expect
         assert t.read().count() == 1000 - expect
