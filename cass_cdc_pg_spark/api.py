@@ -96,6 +96,23 @@ def _int_param(params: dict, name: str, default: int | None = None) -> int:
                         f"got {params.get(name)!r}")
 
 
+def change_range(since: int, to: int | None, head: int) -> int:
+    """The last version of a change-feed request over ``(since, to]`` on
+    a table whose head version is *head*: *to*, or *head* when None.
+    Unless ``0 <= since <= to <= head``, 422 naming the param, before
+    any file is read.  The ``table_changes`` route and ``cli table
+    changes`` both check their range here."""
+    for name, value in (("since", since), ("to", to)):
+        if value is not None and value < 0:
+            raise ApiError(422, f"param {name!r} must be >= 0, got {value}")
+    hi = head if to is None else to
+    if hi > head:
+        raise ApiError(422, f"param 'to' ({to}) is past the head version {head}")
+    if since > hi:
+        raise ApiError(422, f"param 'since' ({since}) is past version {hi}")
+    return hi
+
+
 def _validate_identifier(value: str, kind: str) -> str:
     """Reference ``gdpr.py:235`` — reject path-traversal / injection
     shaped identifiers before they reach the engine."""
@@ -122,13 +139,11 @@ class CdcApiService:
         warehouse: str | None = None,
         source_warehouse: str | None = None,
         table_config: dict | None = None,
-        secrets=None,
     ) -> None:
         self.spark = spark
         self.warehouse = warehouse.rstrip("/") if warehouse else None
         self.source_warehouse = source_warehouse.rstrip("/") if source_warehouse else None
         self.table_config = table_config or {"tables": {}}
-        self.secrets = secrets
         self.alerts = AlertService()
         self._jobs: dict[str, dict] = {}
         self._jobs_lock = threading.Lock()
@@ -236,7 +251,6 @@ class CdcApiService:
             ] if self.source_warehouse else None,
             target_warehouse=self.warehouse,
             schema_registry=reg,
-            secrets=self.secrets,
         )
 
     def health(self) -> tuple[int, dict]:
@@ -250,7 +264,6 @@ class CdcApiService:
             "target": svc.check_target,
             "stream": svc.check_stream,
             "schema_registry": svc.check_schema_registry,
-            "secrets": svc.check_secrets,
         }
         if component not in probes:
             raise ApiError(404, f"unknown component: {component}")
@@ -494,15 +507,8 @@ class CdcApiService:
         limit = min(_int_param(params, "limit", 100), 1000)
 
         def changes(version: int) -> list[dict]:
-            hi = version if to is None else to
-            if hi > version:
-                raise ApiError(422, f"query param 'to' ({to}) is past the "
-                                    f"head version {version}")
-            if since > hi:
-                raise ApiError(422, f"query param 'since' ({since}) is past "
-                                    f"version {hi}")
             try:
-                df = t.read_changes(since, hi)
+                df = t.read_changes(since, change_range(since, to, version))
             except FileNotFoundError as e:
                 raise ApiError(410, str(e)) from e
             except ValueError as e:

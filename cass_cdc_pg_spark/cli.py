@@ -26,8 +26,13 @@ CLI-local verbs:
 - ``table changes``      → change feed between retained versions (CDF)
 - ``table compact``      → fold LSM deltas into fresh bases (OPTIMIZE)
 - ``table sync``         → follow a change feed into a derived table (auto-resync)
-- ``serve``              → run the HTTP listener, and with
-  ``--source-warehouse`` the hourly ``ReconciliationScheduler``
+- ``run``                → the replication service, in one process: with
+  ``--landing`` the CDC stream (its checkpoint under the warehouse), the
+  streaming listener, the HTTP listener (TLS with ``--tls-cert`` and
+  ``--tls-key``) and the hourly scheduler tick — the reconciliation jobs
+  with ``--source-warehouse``, then the TTL and audit-log retention
+  sweeps.  It stops on SIGTERM or SIGINT (exit 0), and when the stream
+  dies (exit 1).
 
 Table metadata comes from a config JSON (the connector-config analog):
 
@@ -39,7 +44,9 @@ from __future__ import annotations
 
 import argparse
 import json
+import signal
 import sys
+import time
 
 from pyspark.sql import functions as F
 
@@ -48,6 +55,7 @@ from cass_cdc_pg_spark.api import (
     ApiError,
     CdcApiServer,
     CdcApiService,
+    change_range,
 )
 from cass_cdc_pg_spark.operators.reconcile import STRATEGIES
 
@@ -176,7 +184,8 @@ def cmd_table_history(args, spark) -> int:
 
 def cmd_table_read(args, spark) -> int:
     """Read a keyed table's current — or, with ``--version``, a
-    retained historical — snapshot (time travel)."""
+    retained historical — snapshot (time travel).  Version 0, the
+    table before its first commit, has no rows."""
     from cass_cdc_pg_spark.plans.keyed_table import META_COLS
 
     t = _require_table(spark, args.warehouse, args.table)
@@ -188,6 +197,8 @@ def cmd_table_read(args, spark) -> int:
         print(json.dumps({"error": "version_not_retained", "detail": str(e)}),
               file=sys.stderr)
         return 1
+    if df is None:
+        return 0
     if not args.meta:
         df = df.drop(*META_COLS)
     _emit(df.limit(args.limit).collect())
@@ -198,12 +209,15 @@ def cmd_table_changes(args, spark) -> int:
     """Change feed between two retained versions (the Delta-CDF
     analog — see ``KeyedTable.read_changes``): merge-commit rows with
     ``_change_version``; errors distinctly when the range crosses a
-    rewrite (resync required) or falls outside retention."""
+    rewrite (resync required) or falls outside retention; a range that
+    is not ``0 <= since <= to <= head`` is a service error naming the
+    bad argument (``api.change_range``)."""
     t = _require_table(spark, args.warehouse, args.table)
     if t is None:
         return 1
+    to = change_range(args.since, args.to, t.commit_id()[0])
     try:
-        df = t.read_changes(args.since, args.to)
+        df = t.read_changes(args.since, to)
     except FileNotFoundError as e:
         print(json.dumps({"error": "version_not_retained", "detail": str(e)}),
               file=sys.stderr)
@@ -266,32 +280,58 @@ def cmd_table_sync(args, spark) -> int:
     return 0
 
 
-def cmd_serve(args, spark) -> int:
-    """Run the HTTP listener (``api.py``) — the uvicorn analog
-    (``src/api/main.py``) — and, given ``--source-warehouse``, the
-    hourly reconciliation of every configured table.  Blocks until
-    interrupted."""
-    from cass_cdc_pg_spark.monitoring import ReconciliationScheduler
+def cmd_run(args, spark) -> int:
+    """The replication service (module docstring): the Kafka Connect
+    workers and the uvicorn control plane of the reference
+    (``docs/architecture.md``) as one process.  A batch a stop
+    interrupts replays from the checkpoint on the next start; the
+    idempotent merge makes that safe."""
+    from cass_cdc_pg_spark import tls
+    from cass_cdc_pg_spark.monitoring import ReconciliationScheduler, register_listener
+    from cass_cdc_pg_spark.streaming.ingest import CdcIngest, checkpoint_path, jsonl_stream
 
-    service = CdcApiService(
-        spark,
-        warehouse=args.warehouse,
-        source_warehouse=args.source_warehouse,
-        table_config=_load_config(args.config) if args.config else None,
-    )
+    if bool(args.tls_cert) != bool(args.tls_key) or (args.tls_client_ca and not args.tls_cert):
+        print(json.dumps({"error": "tls_config", "detail": "--tls-cert and --tls-key "
+                          "go together, and --tls-client-ca needs both"}), file=sys.stderr)
+        return 1
+    config = _load_config(args.config)
+    service = CdcApiService(spark, warehouse=args.warehouse,
+                            source_warehouse=args.source_warehouse, table_config=config)
+    # bind (and load the certs) before the stream starts: a bad port or
+    # cert fails the start with nothing running yet
     server = CdcApiServer(service, host=args.host, port=args.port,
                           rate_limit_state=args.rate_limit_state)
-    scheduler = ReconciliationScheduler(service, service.table_config["tables"])
-    if args.source_warehouse:
-        scheduler.start()
+    if args.tls_cert:
+        tls.secure_server(server, args.tls_cert, args.tls_key, args.tls_client_ca)
+    stopping: list[int] = []
+    for sig in (signal.SIGTERM, signal.SIGINT):
+        signal.signal(sig, lambda signum, _frame: stopping.append(signum))
+    register_listener(spark)
+    query = None
+    if args.landing:
+        query = CdcIngest.from_config(spark, args.warehouse, config).start(
+            jsonl_stream(spark, args.landing), checkpoint_path(args.warehouse))
+    scheduler = ReconciliationScheduler(service, list(config["tables"]))
+    scheduler.start()
     host, port = server.start()
-    print(json.dumps({"listening": f"http://{host}:{port}"}))
+    scheme = "https" if args.tls_cert else "http"
+    print(json.dumps({"listening": f"{scheme}://{host}:{port}"}), flush=True)
+    rc = 0
     try:
-        server._thread.join()
-    except KeyboardInterrupt:
+        while not stopping:
+            if query is not None and not query.isActive:
+                # a supervisor restarts a service whose stream died
+                print(json.dumps({"error": "stream_terminated",
+                                  "detail": str(query.exception())}), file=sys.stderr)
+                rc = 1
+                break
+            time.sleep(0.5)
+    finally:
+        if query is not None:
+            query.stop()
         scheduler.stop()
         server.stop()
-    return 0
+    return rc
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -394,13 +434,17 @@ def build_parser() -> argparse.ArgumentParser:
                     help="derived table dir name under the warehouse")
     sy.set_defaults(fn=cmd_table_sync)
 
-    sv = sub.add_parser("serve")
+    sv = sub.add_parser("run")
+    sv.add_argument("--warehouse", required=True)
+    sv.add_argument("--config", required=True)
+    sv.add_argument("--landing", help="JSONL change-event dir the stream reads")
+    sv.add_argument("--source-warehouse")
     sv.add_argument("--host", default="127.0.0.1")
     sv.add_argument("--port", type=int, default=8000)
-    sv.add_argument("--source-warehouse")
-    sv.add_argument("--warehouse")
-    sv.add_argument("--config")
-    sv.set_defaults(fn=cmd_serve)
+    sv.add_argument("--tls-cert")
+    sv.add_argument("--tls-key")
+    sv.add_argument("--tls-client-ca", help="require client certs signed by this CA")
+    sv.set_defaults(fn=cmd_run)
     return p
 
 

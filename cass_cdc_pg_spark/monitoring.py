@@ -1,4 +1,4 @@
-"""Monitoring: RED metrics, health, reconciliation scheduler, alerts.
+"""Monitoring: RED metrics, health, the maintenance scheduler, alerts.
 
 Reproduces the reference's observability surface on Spark primitives:
 
@@ -6,14 +6,17 @@ Reproduces the reference's observability surface on Spark primitives:
   names/labels (``cdc_events_processed_total{table,operation}``,
   ``cdc_errors_total{error_type}``, ``cdc_processing_latency_seconds``,
   ``cdc_dlq_events_total``, …) kept in an in-process registry with a
-  Prometheus-text renderer.  Streaming rates/lag come from
-  ``StreamingQueryProgress`` via ``CdcStreamingListener`` instead of
-  instrumenting every handler — Spark already measures the pipeline.
+  Prometheus-text renderer.  ``process_batch`` counts events per table
+  and operation; streaming rates, microbatch latency and backlog come
+  from ``StreamingQueryProgress`` via ``CdcStreamingListener`` —
+  Spark already measures the pipeline.
 - **Scheduler** (``src/services/reconciliation_scheduler.py:81-211``):
-  interval-driven per-table ROW_COUNT jobs, one instance per table,
-  run through ``api.CdcApiService.reconciliation_trigger`` — the job
-  path of the trigger route, which records the job and fires the
-  alert above thresholds.
+  one hourly tick runs the per-table ROW_COUNT jobs (one instance per
+  table) through ``api.CdcApiService.reconciliation_trigger`` — the
+  job path of the trigger route, which records the job and fires the
+  alert above thresholds — then the retention sweeps: the TTL sweep of
+  every CDC table (``KeyedTable.expire_ttl``, T10) and the audit log's
+  1-year purge (``ops.AuditLog.purge_old``, Q19).
 - **Alerts** (``src/services/alert_service.py:135-210``): severity =
   critical at ≥5% drift, warning at ≥1% (``settings.py:98-99``);
   alert records are appended locally and optionally pushed through an
@@ -137,7 +140,9 @@ METRICS = MetricsCollector()
 class CdcStreamingListener(StreamingQueryListener):
     """Maps ``StreamingQueryProgress`` onto the reference's RED metric
     names: rows/sec → throughput, batch duration → latency histogram,
-    source backlog → ``cdc_backlog_depth``."""
+    source backlog → ``cdc_backlog_depth``.  Event counts are not taken
+    here: ``process_batch`` counts them per table and operation, DLQ'd
+    events apart."""
 
     def __init__(self, metrics: MetricsCollector | None = None) -> None:
         self.metrics = metrics or METRICS
@@ -148,8 +153,6 @@ class CdcStreamingListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
         m = self.metrics
-        m.inc("cdc_events_processed_total", {"table": "*", "operation": "*"},
-              by=p.get("numInputRows", 0) or 0)
         m.set_gauge("cdc_input_rows_per_second", p.get("inputRowsPerSecond") or 0.0)
         m.set_gauge("cdc_processed_rows_per_second",
                     p.get("processedRowsPerSecond") or 0.0)
@@ -173,6 +176,8 @@ class CdcStreamingListener(StreamingQueryListener):
 def register_listener(
     spark: SparkSession, metrics: MetricsCollector | None = None
 ) -> CdcStreamingListener:
+    """Attach a ``CdcStreamingListener`` to *spark*'s streams (``cli
+    run`` does, before its query starts)."""
     listener = CdcStreamingListener(metrics)
     spark.streams.addListener(listener)
     return listener
@@ -189,8 +194,8 @@ UNHEALTHY = "unhealthy"
 
 class HealthCheckService:
     """Deep component probes with latency and an aggregated status —
-    the Spark-engine analog of the reference's Cassandra/PG/Kafka/Vault
-    checks (``health_check.py:28-302``): *source readable* (every source
+    the Spark-engine analog of the reference's Cassandra/PG/Kafka checks
+    (``health_check.py:28-302``): *source readable* (every source
     table's commit doc opened), *target writable* (a probe file round-trips
     through the warehouse dir), *stream alive* (active query with
     recent progress), *schema registry readable*.  Unconfigured
@@ -207,14 +212,12 @@ class HealthCheckService:
         target_warehouse: str | None = None,
         schema_registry=None,
         stream_stale_after_sec: float = 60.0,
-        secrets=None,
     ) -> None:
         self.spark = spark
         self.source_tables = source_tables
         self.target_warehouse = target_warehouse
         self.schema_registry = schema_registry
         self.stream_stale_after_sec = stream_stale_after_sec
-        self.secrets = secrets
 
     @staticmethod
     def _probe(service: str, configured: bool, fn: Callable[[], dict]) -> dict:
@@ -317,17 +320,6 @@ class HealthCheckService:
             "schema_registry", self.schema_registry is not None, probe
         )
 
-    def check_secrets(self) -> dict:
-        """Vault-probe analog: the credentials store must be readable
-        (``vault_repository.py:63-96``)."""
-
-        def probe() -> dict:
-            if not self.secrets.health_check():
-                raise IOError("secrets store unreadable")
-            return {"connected": True}
-
-        return self._probe("secrets", self.secrets is not None, probe)
-
     def check_all(self) -> dict:
         components = {
             "source": self.check_source(),
@@ -335,10 +327,6 @@ class HealthCheckService:
             "stream": self.check_stream(),
             "schema_registry": self.check_schema_registry(),
         }
-        # the Vault component only reports when a provider is wired —
-        # an unconfigured secrets store is normal for local mode
-        if self.secrets is not None:
-            components["secrets"] = self.check_secrets()
         statuses = [c["status"] for c in components.values()]
         if all(s == HEALTHY for s in statuses):
             overall = HEALTHY
@@ -409,11 +397,10 @@ class AlertService:
 
 
 class ReconciliationScheduler:
-    """Interval-driven per-table reconciliation
-    (``reconciliation_scheduler.py:81-211``): each tick runs one
-    ROW_COUNT job per table of *tables* through *service*'s
-    ``reconciliation_trigger`` (an ``api.CdcApiService``), one instance
-    per table — ticks skip tables still running."""
+    """The service's maintenance loop
+    (``reconciliation_scheduler.py:81-211``): one thread runs ``tick``
+    every *interval_seconds* over *tables*, the configured table names
+    of *service* (an ``api.CdcApiService``)."""
 
     def __init__(self, service, tables: list[str],
                  interval_seconds: float = 3600.0) -> None:
@@ -439,6 +426,44 @@ class ReconciliationScheduler:
             with self._lock:
                 self._running.discard(table)
 
+    def tick(self) -> None:
+        """One round: with the service's ``source_warehouse`` set, one
+        ROW_COUNT job per table (``run_once``); then, in its warehouse,
+        the TTL sweep of each table's CDC table that exists
+        (``KeyedTable.expire_ttl``) and the purge of audit-log entries
+        past a year (``ops.AuditLog.purge_old``).  A sweep that matches
+        no row commits nothing, so feed consumers resync only after one
+        that changed state.  A step that raises is counted and the tick
+        goes on: the loop must survive."""
+        from cass_cdc_pg_spark.ops import AuditLog
+        from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+        from cass_cdc_pg_spark.streaming.ingest import audit_log_path, cdc_table_path
+
+        svc = self.service
+        if svc.source_warehouse:
+            for table in self.tables:
+                try:
+                    self.run_once(table)
+                except Exception:  # noqa: BLE001
+                    METRICS.inc("cdc_reconciliation_job_errors_total", {"table": table})
+        if not svc.warehouse:
+            return
+
+        def expire(table: str) -> int:
+            t = KeyedTable(svc.spark, cdc_table_path(svc.warehouse, table), [])
+            return t.expire_ttl() if t.exists() else 0
+
+        sweeps = [(f"cdc_{t}", lambda t=t: expire(t)) for t in self.tables]
+        sweeps.append(("_cdc_audit_log",
+                       lambda: AuditLog(svc.spark, audit_log_path(svc.warehouse)).purge_old()))
+        for name, sweep in sweeps:
+            try:
+                n = sweep()
+            except Exception:  # noqa: BLE001
+                METRICS.inc("cdc_retention_sweep_errors_total", {"table": name})
+            else:
+                METRICS.inc("cdc_retention_rows_deleted_total", {"table": name}, by=n)
+
     # -- loop ---------------------------------------------------------------
 
     def start(self) -> None:
@@ -448,14 +473,7 @@ class ReconciliationScheduler:
 
         def loop() -> None:
             while not self._stop.wait(self.interval_seconds):
-                for table in self.tables:
-                    if self._stop.is_set():
-                        return
-                    try:
-                        self.run_once(table)
-                    except Exception:  # noqa: BLE001 — scheduler must survive
-                        METRICS.inc("cdc_reconciliation_job_errors_total",
-                                    {"table": table})
+                self.tick()
 
         self._thread = threading.Thread(target=loop, daemon=True)
         self._thread.start()

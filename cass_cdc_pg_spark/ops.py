@@ -35,9 +35,9 @@ class AuditLog:
     as a ``KeyedTable`` keyed on ``audit_id``: an append is one merge
     and the sweep one ``delete_where``, so both commit through the
     table's one atomic commit path and the log is readable at every
-    instant, across a crash at any point (ADVICE r2).  Single writer
-    assumed, like the reference's SQL cleanup function
-    (``init-db.sql:87-92``)."""
+    instant, across a crash at any point (ADVICE r2).  Appends and the
+    sweep of one process take turns on the table's writer lock; the
+    hourly scheduler tick of ``cli run`` runs the sweep."""
 
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark

@@ -61,9 +61,16 @@ intact, which is what makes ``foreachBatch`` replays idempotent (C5;
 ``tests/test_plan_shapes.py`` crashes between the data write and the
 commit); a crash after it can lose only the log copy, and ``_doc``
 lets the current doc answer for its own version.  Orphaned dirs from
-crashed writes are garbage-collected on the next commit.  Concurrent
-writers are not supported: the version check a second writer would
-need is not made.
+crashed writes are garbage-collected on the next commit.
+
+Writers in one process take turns: every writer (``merge`` with the
+compaction it triggers, ``compact``, ``overwrite``, ``delete_where``)
+holds its table's in-process lock (``_writer``, reentrant, keyed on the
+table's real path) from its doc read to ``_commit``'s return, so the
+stream, the API threads and the scheduler of one service never commit
+on a doc another writer has moved.  Writers in separate processes are
+not supported: the version check a second process would need is not
+made.
 
 A commit doc holds:
 
@@ -105,9 +112,11 @@ writes that object stores already provide.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 
@@ -155,6 +164,28 @@ def _widen(schema: T.StructType | None, written: DataFrame) -> T.StructType:
                 f"column {f.name!r} is {have[f.name].simpleString()} in the keyed "
                 f"table, but this write has {f.dataType.simpleString()}")
     return T.StructType(schema.fields + [f for f in new.fields if f.name not in have])
+
+
+_WRITER_LOCKS: dict[str, threading.RLock] = {}
+_WRITER_LOCKS_GUARD = threading.Lock()
+
+
+def _writer(method):
+    """Run *method*, a ``KeyedTable`` writer, holding the process-wide
+    reentrant lock of its table's real path (module docstring).  One
+    lock per table, so writers of different tables never wait on each
+    other, and reentrant, so a merge keeps it through the compaction it
+    triggers."""
+
+    @functools.wraps(method)
+    def locked(self, *args, **kwargs):
+        key = os.path.realpath(self.path)
+        with _WRITER_LOCKS_GUARD:
+            lock = _WRITER_LOCKS.setdefault(key, threading.RLock())
+        with lock:
+            return method(self, *args, **kwargs)
+
+    return locked
 
 
 def committed_layout(path: str) -> tuple[list[str], int] | None:
@@ -514,6 +545,7 @@ class KeyedTable:
 
     # -- merge --------------------------------------------------------------
 
+    @_writer
     def merge(
         self, batch: DataFrame | None, *, txn: dict[str, int] | None = None
     ) -> None:
@@ -609,6 +641,7 @@ class KeyedTable:
         )
         self.merge(stamped)
 
+    @_writer
     def overwrite(
         self, state: DataFrame, *, txn: dict[str, int] | None = None
     ) -> None:
@@ -639,6 +672,7 @@ class KeyedTable:
         if over:
             self.compact(over)
 
+    @_writer
     def compact(self, buckets: list[int] | None = None) -> int:
         """Fold deltas into a new base for *buckets* (default: every
         bucket carrying deltas).  Returns number of buckets compacted."""
@@ -741,6 +775,7 @@ class KeyedTable:
 
     # -- maintenance (T10/T12/Q18/Q19) -------------------------------------
 
+    @_writer
     def delete_where(self, predicate) -> int:
         """Hard delete (T12/Q18): rewrite buckets dropping matches.
 

@@ -142,6 +142,12 @@ def audit_log_path(warehouse: str) -> str:
     return f"{warehouse.rstrip('/')}/_cdc_audit_log"
 
 
+def checkpoint_path(warehouse: str) -> str:
+    """Where a warehouse keeps the checkpoint of the stream that feeds
+    it (``cli run``), so a restart resumes where the last run stopped."""
+    return f"{warehouse.rstrip('/')}/_stream_checkpoint"
+
+
 def dlq_table(spark: SparkSession, warehouse: str) -> KeyedTable:
     """The DLQ as a keyed table (S5/S12 storage) — its one definition,
     shared by the ingest, the API and the CLI.  Status changes are

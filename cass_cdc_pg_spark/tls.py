@@ -20,12 +20,12 @@ contract is re-expressed over what a Spark job actually opens:
 - :func:`secure_server` — wraps the bound socket of an already-
   constructed ``CdcApiServer`` (or any ``socketserver`` server) so
   the HTTP surface serves TLS 1.3; certificates are the operator's
-  (the reference terminates TLS at each service the same way).
+  (the reference terminates TLS at each service the same way).  ``cli
+  run --tls-cert F --tls-key F [--tls-client-ca F]`` serves through it.
 
 Everything here is driver-side configuration: contexts and dicts are
 built before any reader/writer/server starts, nothing travels to
-executors, and key material is referenced by path only (pair with
-:mod:`cass_cdc_pg_spark.secrets` to resolve the paths).
+executors, and key material is referenced by path only.
 """
 
 from __future__ import annotations

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import subprocess
+
 import pytest
 
 
@@ -29,6 +31,29 @@ def _no_stray_streams():
                 q.stop()
             except Exception:
                 pass
+
+
+@pytest.fixture(scope="session")
+def certs(tmp_path_factory):
+    """``{"server": (crt, key), "client": (crt, key)}``: a self-signed
+    server cert for 127.0.0.1 and a distinct self-signed client cert,
+    minted by the openssl CLI."""
+    d = tmp_path_factory.mktemp("tls")
+    out = {}
+    for name, cn in (("server", "127.0.0.1"), ("client", "cdc-client")):
+        crt, key = d / f"{name}.crt", d / f"{name}.key"
+        subprocess.run(
+            [
+                "openssl", "req", "-x509", "-newkey", "ec",
+                "-pkeyopt", "ec_paramgen_curve:prime256v1",
+                "-keyout", str(key), "-out", str(crt),
+                "-days", "2", "-nodes", "-subj", f"/CN={cn}",
+                "-addext", "subjectAltName=IP:127.0.0.1",
+            ],
+            check=True, capture_output=True,
+        )
+        out[name] = (str(crt), str(key))
+    return out
 
 
 def make_recon_pair(spark, root, n=20):

@@ -474,6 +474,38 @@ def test_cli_table_changes_feed(spark, tmp_path, capsys):
     assert "table_not_found" in capsys.readouterr().err
 
 
+def test_cli_table_read_version_zero_prints_no_rows(spark, tmp_path, capsys):
+    """Version 0 is the table before its first commit: `table read
+    --version 0` prints no rows and exits 0 (it raised AttributeError,
+    since ``read(version=0)`` is None)."""
+    wh = str(tmp_path / "wh")
+    _seed_warehouse(spark, wh)
+    assert main(["table", "read", "--warehouse", wh, "--table", "cdc_users",
+                 "--version", "0"], spark=spark) == 0
+    out = capsys.readouterr()
+    assert out.out == "" and out.err == ""
+
+
+def test_cli_table_changes_names_a_bad_range_argument(spark, tmp_path, capsys):
+    """A change range that is not ``0 <= since <= to <= head`` prints
+    one JSON error line naming the bad argument and exits 1, the check
+    the HTTP route makes (``api.change_range``).  ``--since -1`` used to
+    report a misleading ``rewrite_in_range``, and a ``--to`` past the
+    head ``version_not_retained``."""
+    wh = str(tmp_path / "wh")
+    _seed_warehouse(spark, wh)  # one commit: the head is version 1
+    for args, name in ((["--since", "-1"], "since"),
+                       (["--since", "2"], "since"),
+                       (["--since", "0", "--to", "99"], "to")):
+        assert main(["table", "changes", "--warehouse", wh, "--table", "cdc_users",
+                     *args], spark=spark) == 1
+        out = capsys.readouterr()
+        lines = out.err.splitlines()
+        assert out.out == "" and len(lines) == 1, (args, out)
+        err = json.loads(lines[0])
+        assert err["status"] == 422 and repr(name) in err["detail"], (args, err)
+
+
 def test_cli_table_compact(spark, tmp_path, capsys):
     """`table compact` folds deltas and reports bucket count; a second
     run is a no-op (0 buckets)."""

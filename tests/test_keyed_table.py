@@ -895,3 +895,61 @@ def test_an_emptied_bucket_writes_no_marker(spark, tmp_path):
     assert all(e == {"base": None, "deltas": []} for e in t._doc()["buckets"].values())
     live = t.read_live()
     assert live.count() == 0 and _fields(live.schema) == _fields(full)
+
+
+@pytest.mark.parametrize("second", ["delete_where", "merge"])
+def test_a_second_writer_waits_for_the_first(spark, tmp_path, monkeypatch, second):
+    """Writer A pauses between its data write and its commit while
+    writer B, on a second thread, deletes or merges on the same table.
+    Both commits survive and the table ends in the serial LWW state: B
+    waits on the table's writer lock until A has committed, and then
+    reads A's doc.  Without the lock both committed after the same doc,
+    so the later commit dropped the other's delta and GC deleted it."""
+    import threading
+
+    t = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=1)
+    t.merge(_batch(spark, [("a", "v1", False, 100, "e1", None),
+                           ("b", "w1", False, 100, "e2", None)]))
+    v0 = t.commit_id()[0]
+    a_wrote, release, b_wrote = threading.Event(), threading.Event(), threading.Event()
+    write = KeyedTable._write
+
+    def paused_write(self, df, dest):
+        out = write(self, df, dest)
+        if threading.current_thread().name == "writer-a":
+            a_wrote.set()
+            release.wait(120)
+        else:
+            b_wrote.set()
+        return out
+
+    monkeypatch.setattr(KeyedTable, "_write", paused_write)
+    errors = []
+
+    def run(fn):
+        try:
+            fn(KeyedTable(spark, t.path, ["id"]))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    a = threading.Thread(name="writer-a", target=run, args=(
+        lambda kt: kt.merge(_batch(spark, [("a", "v2", False, 200, "e3", None)])),))
+    if second == "merge":
+        b_op = lambda kt: kt.merge(_batch(spark, [("c", "x1", False, 300, "e4", None)]))  # noqa: E731
+        want = {"a": ("v2", False, 200), "b": ("w1", False, 100), "c": ("x1", False, 300)}
+    else:
+        b_op = lambda kt: kt.delete_where(F.col("id") == "b")  # noqa: E731
+        want = {"a": ("v2", False, 200)}
+    b = threading.Thread(name="writer-b", target=run, args=(b_op,))
+    a.start()
+    assert a_wrote.wait(120)
+    b.start()
+    # an unlocked B writes within this wait; a locked one cannot
+    b_wrote.wait(5)
+    release.set()
+    a.join(120)
+    b.join(120)
+    assert not a.is_alive() and not b.is_alive()
+    assert not errors, errors
+    assert _state(t) == want
+    assert t.commit_id()[0] == v0 + 2

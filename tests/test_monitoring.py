@@ -202,15 +202,60 @@ def test_streaming_listener_maps_progress(spark, tmp_path):
         q.awaitTermination(60)
         deadline = time.time() + 15
         while time.time() < deadline:
-            if m.value("cdc_events_processed_total",
-                       {"table": "*", "operation": "*"}) >= 1:
+            if m.observations("cdc_processing_latency_seconds", {"stage": "microbatch"}):
                 break
             time.sleep(0.25)
-        assert m.value("cdc_events_processed_total",
-                       {"table": "*", "operation": "*"}) >= 1
+        assert m.observations("cdc_processing_latency_seconds", {"stage": "microbatch"})
         assert m.value("cdc_streaming_queries_started_total") >= 1
+        # events are counted per table by process_batch alone: a
+        # listener series over all tables would count them twice
+        assert m.value("cdc_events_processed_total",
+                       {"table": "*", "operation": "*"}) == 0
     finally:
         spark.streams.removeListener(listener)
+
+
+def test_scheduler_tick_sweeps_ttl_and_the_audit_log(spark, tmp_path):
+    """One scheduler tick, in-process, with no thread and no wait: a
+    TTL-expired row is gone from ``read()``, an audit entry older than
+    365 days is gone, and a table with nothing to expire keeps its
+    version (a sweep that matches nothing commits nothing).  A
+    configured table that was never committed is skipped."""
+    import time
+
+    from cass_cdc_pg_spark.ops import AUDIT_SCHEMA_DDL, AuditLog
+    from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
+    from cass_cdc_pg_spark.streaming.ingest import audit_log_path, cdc_table_path
+
+    wh = str(tmp_path / "wh")
+    ddl = ("id string, age int, _cdc_deleted boolean, _cdc_timestamp_micros long, "
+           "_last_event_id string, _ttl_expiry_timestamp_us long")
+    now_us = int(time.time() * 1_000_000)
+    users = KeyedTable(spark, cdc_table_path(wh, "users"), ["id"], num_buckets=2)
+    users.merge(spark.createDataFrame(
+        [("a", 1, False, 1, "e1", now_us - 1_000_000), ("b", 2, False, 1, "e2", None)], ddl))
+    orders = KeyedTable(spark, cdc_table_path(wh, "orders"), ["id"], num_buckets=2)
+    orders.merge(spark.createDataFrame(
+        [("o", 3, False, 1, "e3", now_us + 3_600_000_000)], ddl))
+    audit = AuditLog(spark, audit_log_path(wh))
+    audit.append("GDPR_ERASURE", "users", "kept", "DELETE")
+    audit.table.upsert(spark.createDataFrame(
+        [("old-id", "GDPR_ERASURE", now_us - 366 * 86_400 * 1_000_000, "x", "users",
+          "old", "DELETE", "", "{}")], AUDIT_SCHEMA_DDL))
+    cfg = {"tables": {t: {"ddl": "id string, age int", "keys": ["id"]}
+                      for t in ("users", "orders", "ghost")}}
+    svc = _service(spark, wh, None, cfg)
+    orders_before = orders.commit_id()
+    errors = METRICS.value("cdc_retention_sweep_errors_total", {"table": "cdc_ghost"})
+
+    ReconciliationScheduler(svc, list(cfg["tables"])).tick()
+
+    assert [r["id"] for r in users.read().collect()] == ["b"]
+    assert [r["record_identifier"] for r in audit.read().collect()] == ["kept"]
+    assert orders.commit_id() == orders_before
+    assert METRICS.value("cdc_retention_sweep_errors_total",
+                         {"table": "cdc_ghost"}) == errors
+    assert not (tmp_path / "wh" / "cdc_ghost").exists()
 
 
 # ---------------------------------------------------------------------------

@@ -2,13 +2,12 @@
 reference ``src/config/tls_config.py``) — context pinning, the
 Kafka/JDBC option contracts, and the API server actually serving
 TLS 1.3 over a real socket (handshake + request + mutual-TLS
-rejection), with certs minted by the openssl CLI."""
+rejection), with the ``certs`` fixture's certs (``conftest.py``)."""
 
 from __future__ import annotations
 
 import json
 import ssl
-import subprocess
 import urllib.request
 
 import pytest
@@ -92,27 +91,6 @@ def test_jdbc_properties_escalate_with_ca():
 
 
 # ---------------------------------------------------- e2e over sockets
-
-
-@pytest.fixture(scope="module")
-def certs(tmp_path_factory):
-    """Self-signed server cert + a distinct client cert, openssl CLI."""
-    d = tmp_path_factory.mktemp("tls")
-    out = {}
-    for name, cn in (("server", "127.0.0.1"), ("client", "cdc-client")):
-        crt, key = d / f"{name}.crt", d / f"{name}.key"
-        subprocess.run(
-            [
-                "openssl", "req", "-x509", "-newkey", "ec",
-                "-pkeyopt", "ec_paramgen_curve:prime256v1",
-                "-keyout", str(key), "-out", str(crt),
-                "-days", "2", "-nodes", "-subj", f"/CN={cn}",
-                "-addext", "subjectAltName=IP:127.0.0.1",
-            ],
-            check=True, capture_output=True,
-        )
-        out[name] = (str(crt), str(key))
-    return out
 
 
 @pytest.fixture(scope="module")
