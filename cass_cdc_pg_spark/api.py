@@ -59,7 +59,7 @@ from urllib.parse import parse_qs, urlsplit
 from pyspark.sql import functions as F
 
 from cass_cdc_pg_spark import middleware
-from cass_cdc_pg_spark.monitoring import METRICS, AlertService, HealthCheckService
+from cass_cdc_pg_spark.monitoring import METRICS, HealthCheckService
 from cass_cdc_pg_spark.operators import reconcile
 
 _IDENT_RE = re.compile(r"^[A-Za-z0-9_.\-:]{1,128}$")
@@ -144,7 +144,6 @@ class CdcApiService:
         self.warehouse = warehouse.rstrip("/") if warehouse else None
         self.source_warehouse = source_warehouse.rstrip("/") if source_warehouse else None
         self.table_config = table_config or {"tables": {}}
-        self.alerts = AlertService()
         self._jobs: dict[str, dict] = {}
         self._jobs_lock = threading.Lock()
         self._memo: dict[tuple, object] = {}
@@ -371,11 +370,13 @@ class CdcApiService:
             self._keep_job({**job, "status": "FAILED", "completed_at": time.time(),
                             "detail": f"{type(e).__name__}: {e}"})
             raise
-        table, drift = job["table_name"], out["drift_pct"]
+        table, drift, severity = job["table_name"], out["drift_pct"], out["severity"]
         METRICS.inc("cdc_reconciliation_jobs_total",
                     {"table": table, "strategy": job["validation_strategy"]})
         METRICS.set_gauge("cdc_reconciliation_drift_percentage", drift, {"table": table})
-        alert = self.alerts.send_reconciliation_alert(table, drift, n, job["job_id"])
+        if severity != "ok":
+            METRICS.inc("cdc_reconciliation_alerts_total",
+                        {"table": table, "severity": severity})
         done = {
             **job,
             "source_count": out["src_count"],
@@ -383,7 +384,7 @@ class CdcApiService:
             "mismatch_count": n,
             "drift_percentage": drift,
             "status": "COMPLETED",
-            "alert_fired": alert is not None,
+            "alert_fired": severity != "ok",
             "completed_at": time.time(),
         }
         self._keep_job(done)

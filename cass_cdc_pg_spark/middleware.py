@@ -17,15 +17,14 @@ this module re-expresses each once, for both transports over
   of a long-lived API maps to a file for a short-lived CLI).  The
   clock is injectable for tests.
 - ``Tracer``      → ``src/monitoring/tracing.py``: span context
-  manager with trace/span/parent IDs, wall-clock duration, status,
-  and parent-based ratio sampling where errors are ALWAYS sampled
-  (the reference configures ``ParentBasedTraceIdRatio`` plus 100 %
-  error sampling).  Export is a pluggable callable; the default
-  keeps the most recent ``MAX_SPANS`` in memory (the Jaeger exporter
-  has no in-container analog).  The span stack is per thread, so the
-  threaded HTTP server's concurrent requests each get their own root
-  span.  Spark's own UI covers executor-side timing; these spans
-  cover the service layer above it.
+  manager with trace/span/parent IDs, wall-clock duration and status.
+  Every span is kept, the most recent ``MAX_SPANS`` in memory: the
+  reference's trace-id ratio sampling, service name and Jaeger
+  exporter have no counterpart, since every caller kept every span.
+  The span stack is per thread, so the threaded HTTP server's
+  concurrent requests each get their own root span.  Spark's own UI
+  covers executor-side timing; these spans cover the service layer
+  above it.
 """
 
 from __future__ import annotations
@@ -39,8 +38,8 @@ from typing import Callable
 
 from cass_cdc_pg_spark.durable import write_json
 
-#: spans the default in-memory exporter retains (a long-running server
-#: must not grow per request), like ``monitoring.OBSERVATION_WINDOW``
+#: spans a ``Tracer`` retains (a long-running server must not grow per
+#: request), like ``monitoring.OBSERVATION_WINDOW``
 MAX_SPANS = 1024
 
 
@@ -73,29 +72,20 @@ class RateLimiter:
 
     def __init__(
         self,
-        state_path: str | None = None,
+        state_path: str,
         limits: tuple[tuple[int, int], ...] = DEFAULT_LIMITS,
         clock: Callable[[], float] = time.time,
     ) -> None:
         self.state_path = state_path
         self.limits = limits
         self.clock = clock
-        self._mem: dict = {}
 
     def _load(self) -> dict:
-        if self.state_path is None:
-            return self._mem
         try:
             with open(self.state_path) as fh:
                 return json.load(fh)
         except (OSError, ValueError):
             return {}
-
-    def _save(self, state: dict) -> None:
-        if self.state_path is None:
-            self._mem = state
-            return
-        write_json(self.state_path, state)
 
     def check(self, key: str) -> None:
         """Record one call for *key*; raise ``RateLimitExceeded`` if any
@@ -115,40 +105,16 @@ class RateLimiter:
                 )
         for _, window in self.limits:
             entry[str(window)]["count"] += 1
-        self._save(state)
+        write_json(self.state_path, state)
 
 
 class Tracer:
-    """Minimal span tracer: parent-based ratio sampling, errors always
-    kept, pluggable exporter."""
+    """Minimal span tracer: every span is kept, the ``MAX_SPANS`` most
+    recent in ``spans``."""
 
-    def __init__(
-        self,
-        service_name: str = "cass-cdc-pg-spark",
-        sampling_ratio: float = 1.0,
-        exporter: Callable[[dict], None] | None = None,
-        clock: Callable[[], float] = time.time,
-    ) -> None:
-        self.service_name = service_name
-        self.sampling_ratio = sampling_ratio
+    def __init__(self) -> None:
         self.spans: list[dict] = []
-        self.exporter = exporter or self._keep
-        self.clock = clock
         self._local = threading.local()  # .stack: this thread's open spans
-
-    def _keep(self, sp: dict) -> None:
-        self.spans.append(sp)
-        if len(self.spans) > MAX_SPANS:
-            del self.spans[:-MAX_SPANS]
-
-    def _sampled(self, trace_id: str) -> bool:
-        # deterministic trace-id ratio: hash the id into [0, 1).
-        # Caller-supplied ids may not be hex — md5 them first.
-        import hashlib
-
-        h = hashlib.md5(trace_id.encode()).hexdigest()
-        bucket = int(h[:8], 16) / 0xFFFFFFFF
-        return bucket < self.sampling_ratio
 
     @contextmanager
     def span(self, name: str, trace_id: str | None = None, **attrs):
@@ -160,12 +126,11 @@ class Tracer:
             else (trace_id or uuid.uuid4().hex)
         )
         sp = {
-            "service": self.service_name,
             "name": name,
             "trace_id": tid,
             "span_id": uuid.uuid4().hex[:16],
             "parent_span_id": parent["span_id"] if parent else None,
-            "start": self.clock(),
+            "start": time.time(),
             "attributes": attrs,
             "status": "ok",
         }
@@ -177,8 +142,7 @@ class Tracer:
             sp["attributes"]["exception"] = repr(e)[:200]
             raise
         finally:
-            sp["duration_ms"] = round((self.clock() - sp["start"]) * 1000, 3)
+            sp["duration_ms"] = round((time.time() - sp["start"]) * 1000, 3)
             stack.pop()
-            # parent-based: child follows root decision; errors always kept
-            if sp["status"] == "error" or self._sampled(sp["trace_id"]):
-                self.exporter(sp)
+            self.spans.append(sp)
+            del self.spans[:-MAX_SPANS]

@@ -17,11 +17,13 @@ Reproduces the reference's observability surface on Spark primitives:
   alert above thresholds — then the retention sweeps: the TTL sweep of
   every CDC table (``KeyedTable.expire_ttl``, T10) and the audit log's
   1-year purge (``ops.AuditLog.purge_old``, Q19).
-- **Alerts** (``src/services/alert_service.py:135-210``): severity =
-  critical at ≥5% drift, warning at ≥1% (``settings.py:98-99``);
-  alert records are appended locally and optionally pushed through an
-  injected pusher callable (the Prometheus pushgateway HTTP POST in a
-  real deployment — no network in this container).
+- **Alerts** (``src/services/alert_service.py:135-210``): a job's
+  severity is its Q1 row's (``reconcile.drift_severity``: critical at
+  ≥5% drift, warning at ≥1%, ``settings.py:98-99``), and a job above a
+  threshold counts ``cdc_reconciliation_alerts_total{table,severity}``
+  (``api.CdcApiService._run_job``), which ``/metrics`` exposes to the
+  alerting side (``docs/monitoring/``).  The reference's local alert
+  log and pushgateway push have no counterpart: nothing read them.
 """
 
 from __future__ import annotations
@@ -36,8 +38,6 @@ from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
-
-from cass_cdc_pg_spark.operators import reconcile
 
 # ---------------------------------------------------------------------------
 # metrics registry
@@ -198,12 +198,13 @@ class HealthCheckService:
     (``health_check.py:28-302``): *source readable* (every source
     table's commit doc opened), *target writable* (a probe file round-trips
     through the warehouse dir), *stream alive* (active query with
-    recent progress), *schema registry readable*.  Unconfigured
-    components report ``degraded`` ("Repository not initialized" in
-    the reference); probe failures report ``unhealthy`` with the error
-    and the latency of the failed attempt.  Aggregation matches
-    ``check_all`` exactly: all healthy → healthy, any unhealthy →
-    unhealthy, else degraded."""
+    recent progress), *schema registry readable*.  An unconfigured
+    component's probe reports ``degraded`` ("Repository not initialized"
+    in the reference), and ``check_all`` leaves an unconfigured source
+    out; probe failures report ``unhealthy`` with the error and the
+    latency of the failed attempt.  Aggregation matches the reference's
+    ``check_all``: all healthy → healthy, any unhealthy → unhealthy,
+    else degraded."""
 
     def __init__(
         self,
@@ -321,12 +322,18 @@ class HealthCheckService:
         )
 
     def check_all(self) -> dict:
+        """Every component's probe and the aggregate.  The source is
+        optional: with no *source_tables* it is left out of both, so a
+        service that replicates without a source replica can be healthy
+        (``check_source`` alone still answers ``degraded``)."""
         components = {
             "source": self.check_source(),
             "target": self.check_target(),
             "stream": self.check_stream(),
             "schema_registry": self.check_schema_registry(),
         }
+        if self.source_tables is None:
+            del components["source"]
         statuses = [c["status"] for c in components.values()]
         if all(s == HEALTHY for s in statuses):
             overall = HEALTHY
@@ -335,60 +342,6 @@ class HealthCheckService:
         else:
             overall = DEGRADED
         return {"status": overall, "components": components}
-
-
-# ---------------------------------------------------------------------------
-# alerts
-# ---------------------------------------------------------------------------
-
-
-#: Most recent alerts an ``AlertService`` keeps in its local log.
-MAX_ALERTS = 1024
-
-
-class AlertService:
-    """Drift alerting (``alert_service.py:135-210``): severity
-    thresholds (``reconcile.DRIFT_*_PCT``), a local log of the
-    ``MAX_ALERTS`` most recent alerts, pluggable push."""
-
-    def __init__(
-        self,
-        pusher: Callable[[dict], None] | None = None,
-        metrics: MetricsCollector | None = None,
-    ) -> None:
-        self.pusher = pusher
-        self.metrics = metrics or METRICS
-        self.alerts: list[dict] = []
-
-    def determine_severity(self, drift_percentage: float) -> str | None:
-        if drift_percentage >= reconcile.DRIFT_CRITICAL_PCT:
-            return "critical"
-        if drift_percentage >= reconcile.DRIFT_WARNING_PCT:
-            return "warning"
-        return None
-
-    def send_reconciliation_alert(
-        self, table: str, drift_percentage: float, mismatch_count: int, job_id: str
-    ) -> dict | None:
-        severity = self.determine_severity(drift_percentage)
-        if severity is None:
-            return None
-        alert = {
-            "alertname": "CDCReconciliationDrift",
-            "severity": severity,
-            "table": table,
-            "drift_percentage": drift_percentage,
-            "mismatch_count": mismatch_count,
-            "job_id": job_id,
-            "fired_at": time.time(),
-        }
-        self.alerts.append(alert)
-        del self.alerts[:-MAX_ALERTS]
-        self.metrics.inc("cdc_reconciliation_alerts_total",
-                         {"table": table, "severity": severity})
-        if self.pusher is not None:
-            self.pusher(alert)
-        return alert
 
 
 # ---------------------------------------------------------------------------

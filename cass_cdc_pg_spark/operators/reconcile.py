@@ -285,24 +285,22 @@ def field_diff(
 STRATEGIES = ("row_count", "checksum")
 
 
-def run_job(source, target, strategy: str, since_version: int | None = None) -> dict:
+def run_job(source, target, strategy: str) -> dict:
     """One reconciliation job of the keyed table *target* against its
     *source* (two ``KeyedTable``s on the same key columns), over their
     visible rows and the payload columns both sides hold:
 
     - ``row_count``: Q1.
     - ``checksum``: Q1 and the Q3 checksum diff, each DATA_MISMATCH key
-      carrying its Q8 field diff.  With *since_version*, the scoped
-      ``incremental_checksum_diff`` over the keys the source's change
-      feed touched after that version replaces the full diff (no
-      field diff).
+      carrying its Q8 field diff.
 
     Returns the Q1 row (src_count, tgt_count, mismatch_count, drift_pct,
-    severity) with ``mismatches``: None for ``row_count`` and for a
-    scope with no changes, else a DataFrame of one row per divergent
-    key — pk columns, mismatch_type, src_checksum, tgt_checksum and,
-    for the full diff, ``fields`` (array of column, src_val, tgt_val;
-    null unless DATA_MISMATCH).  Only the Q1 row is collected."""
+    severity) with ``mismatches``: None for ``row_count``, else a
+    DataFrame of one row per divergent key — pk columns, mismatch_type,
+    src_checksum, tgt_checksum and ``fields`` (array of column,
+    src_val, tgt_val; null unless DATA_MISMATCH).  Only the Q1 row is
+    collected.  The scoped job over the keys a change feed touched is
+    ``incremental_checksum_diff``."""
     if strategy not in STRATEGIES:
         raise ValueError(f"unknown strategy: {strategy}")
     pk = list(source.key_cols)
@@ -312,9 +310,6 @@ def run_job(source, target, strategy: str, since_version: int | None = None) -> 
     if strategy == "row_count":
         return out
     compare = [c for c in src.columns if c not in pk and c in tgt.columns]
-    if since_version is not None:
-        out["mismatches"] = incremental_checksum_diff(source, target, since_version, compare)
-        return out
     diff = checksum_diff(src, tgt, pk, compare)
     dm = diff.filter(F.col("mismatch_type") == DATA_MISMATCH).select(*pk)
     fields = field_diff(

@@ -190,9 +190,10 @@ def _writer(method):
 
 def committed_layout(path: str) -> tuple[list[str], int] | None:
     """``(key_cols, num_buckets)`` of the keyed table committed at
-    *path*, or None when nothing is committed there — the catalog probe
-    (``streaming.ingest.discover_cdc_tables``).  It opens the table's
-    commit doc only, so it needs no Spark session and creates nothing."""
+    *path*, or None when nothing is committed there — the source probe
+    of the health check (``monitoring.HealthCheckService.check_source``).
+    It opens the table's commit doc only, so it needs no Spark session
+    and creates nothing."""
     t = KeyedTable(None, path, [])
     return (t.key_cols, t.num_buckets) if t.exists() else None
 

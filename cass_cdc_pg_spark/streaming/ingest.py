@@ -1,6 +1,6 @@
 """CDC ingest pipeline (SURVEY.md §3.1) on Structured Streaming.
 
-Source → parse (S2/S3) → validate/split (T7/S5) → unwrap+type (T1/T8)
+Source → parse (S2) → validate/split (T7/S5) → unwrap+type (T1/T8)
 → cdc metadata+TTL (T4-T6/T9) → intra-batch LWW dedup (C1a) →
 keyed-table merge (C1b/S4).  One classifier tags each event with its
 DLQ route (T7, unknown table, rejected schema version, T8 conversion);
@@ -11,7 +11,9 @@ One streaming query serves all tables (the reference's
 ``source_table``.  Checkpointing is Spark's ``checkpointLocation`` —
 offsets+commits replace the reference's ``_cdc_checkpoints`` table —
 and end-to-end effectively-once = checkpoint replay + idempotent LWW
-merge (C5).
+merge (C5).  Each table's merge is retried with backoff (three
+attempts); a failure that escapes them ends the query, and a restart
+resumes from the checkpoint.
 
 Backpressure (C8 / FR-024): ``maxFilesPerTrigger`` here,
 ``maxOffsetsPerTrigger`` on a Kafka source — native rate limiting.
@@ -32,10 +34,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cass_cdc_pg_spark.monitoring import METRICS
-from cass_cdc_pg_spark.plans.keyed_table import META_COLS, KeyedTable, committed_layout
+from cass_cdc_pg_spark.plans.keyed_table import META_COLS, KeyedTable
 from cass_cdc_pg_spark.schema import CHANGE_EVENT_SCHEMA
 from cass_cdc_pg_spark.streaming import transforms
-from cass_cdc_pg_spark.streaming.reliability import CircuitBreaker, retry_with_backoff
+from cass_cdc_pg_spark.streaming.reliability import retry_with_backoff
 from cass_cdc_pg_spark.streaming.schema_evolution import SchemaRegistry
 
 
@@ -81,50 +83,6 @@ def kafka_stream(
         .load()
     )
     return parse_change_events(raw)
-
-
-def discover_cdc_tables(warehouse: str) -> dict[str, dict]:
-    """CDC-tables catalog discovery (S9): the Spark-warehouse analog of
-    the reference's ``get_cdc_enabled_tables`` + ``read_schema``
-    (``src/repositories/cassandra_repository.py:257-295,110-150``) —
-    enumerate the warehouse "keyspace", treat a ``cdc_*`` KeyedTable
-    manifest as the per-table cdc-enabled extension flag, and
-    introspect key columns + bucket count from the table manifest and
-    payload columns from the schema registry.
-
-    Driver-side metadata reads only (the table's commit doc through
-    ``committed_layout`` and the schema registry); returns
-    ``name → {key_cols, num_buckets, columns}`` where ``columns`` is the
-    registered payload schema as ``col → ddl-type`` (empty if the table
-    was never registered).
-    """
-    warehouse = warehouse.rstrip("/")
-    registry = SchemaRegistry(schema_registry_path(warehouse))
-    out: dict[str, dict] = {}
-    try:
-        entries = sorted(os.listdir(warehouse))
-    except FileNotFoundError:
-        return out
-    for d in entries:
-        if not d.startswith("cdc_"):
-            continue
-        try:
-            layout = committed_layout(f"{warehouse}/{d}")
-        except ValueError:  # unreadable commit doc
-            continue
-        if layout is None:
-            continue  # dir exists but nothing committed -> not cdc-live
-        name = d[len("cdc_"):]
-        try:
-            columns = registry.current_columns(name)
-        except KeyError:
-            columns = {}
-        out[name] = {
-            "key_cols": layout[0],
-            "num_buckets": layout[1],
-            "columns": columns,
-        }
-    return out
 
 
 def schema_registry_path(warehouse: str) -> str:
@@ -181,7 +139,6 @@ class CdcIngest:
         self.warehouse = warehouse.rstrip("/")
         self.key_cols = key_cols
         self.num_buckets = num_buckets
-        self.breaker = CircuitBreaker()
         os.makedirs(self.warehouse, exist_ok=True)
         self.schema_registry = SchemaRegistry(schema_registry_path(self.warehouse))
         for name, schema in table_schemas.items():
@@ -222,21 +179,6 @@ class CdcIngest:
             self.key_cols[name],
             self.num_buckets,
         )
-
-    @classmethod
-    def discover(
-        cls, spark: SparkSession, warehouse: str, **kwargs
-    ) -> "CdcIngest":
-        """Construct an ingest pipeline from warehouse discovery alone
-        (S9): table set and key columns come from the catalog, payload
-        schemas from the registry — the config-dict parameters of
-        ``__init__`` are the connector-config path; this is the
-        ``get_cdc_enabled_tables`` path.  Tables never merged or never
-        registered are not live."""
-        keys = {name: info["key_cols"]
-                for name, info in discover_cdc_tables(warehouse).items()
-                if info["key_cols"] and info["columns"]}
-        return cls(spark, warehouse, {}, keys, **kwargs)
 
     @classmethod
     def from_config(
@@ -406,7 +348,7 @@ class CdcIngest:
                     if rows is None:
                         continue  # nothing to truncate
                 commit = lambda r=rows, t=target: t.merge(r)  # noqa: E731
-                self.breaker.call(lambda: retry_with_backoff(commit, max_attempts=3))
+                retry_with_backoff(commit, max_attempts=3)
 
             if any_bad:
                 # DLQ merge (S5): deterministic dlq_id + LWW merge make

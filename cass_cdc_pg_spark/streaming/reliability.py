@@ -1,9 +1,12 @@
-"""Sink-side resilience: retry with exponential backoff + circuit
-breaker (SURVEY.md §2.7; ``src/utils/retry.py:15-50``,
-``src/utils/circuit_breaker.py:27-110``).
+"""Sink-side resilience: retry with exponential backoff (SURVEY.md
+§2.7; ``src/utils/retry.py:15-50``).
 
-These wrap the ``foreachBatch`` commit — driver-side control flow, so
-plain Python is the right tool (no DataFrame work here).
+It wraps the ``foreachBatch`` commit — driver-side control flow, so
+plain Python is the right tool (no DataFrame work here).  The
+reference's circuit breaker (``src/utils/circuit_breaker.py:27-110``)
+has no counterpart: a failure that escapes the retries ends the
+streaming query, which restarts from its checkpoint, so no run of
+failed batches could ever open one.
 """
 
 from __future__ import annotations
@@ -30,41 +33,3 @@ def retry_with_backoff(
                 raise
             sleep(delay)
             delay = min(delay * 2, max_delay)
-
-
-class CircuitBreaker:
-    """CLOSED → OPEN after *failure_threshold* consecutive failures;
-    OPEN → HALF_OPEN after *recovery_timeout* seconds; HALF_OPEN
-    closes on success, re-opens on failure (circuit_breaker.py:27-110).
-    """
-
-    def __init__(
-        self,
-        failure_threshold: int = 5,
-        recovery_timeout: float = 60.0,
-        clock: Callable[[], float] = time.monotonic,
-    ) -> None:
-        self.failure_threshold = failure_threshold
-        self.recovery_timeout = recovery_timeout
-        self._clock = clock
-        self.state = "CLOSED"
-        self.failures = 0
-        self._opened_at = 0.0
-
-    def call(self, fn: Callable[[], None]) -> None:
-        if self.state == "OPEN":
-            if self._clock() - self._opened_at >= self.recovery_timeout:
-                self.state = "HALF_OPEN"
-            else:
-                raise RuntimeError("circuit breaker OPEN")
-        try:
-            fn()
-        except Exception:
-            self.failures += 1
-            if self.state == "HALF_OPEN" or self.failures >= self.failure_threshold:
-                self.state = "OPEN"
-                self._opened_at = self._clock()
-            raise
-        else:
-            self.failures = 0
-            self.state = "CLOSED"

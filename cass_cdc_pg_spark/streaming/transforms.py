@@ -1,10 +1,14 @@
-"""The SMT transform chain (SURVEY.md §2.2, T1-T16) as pure
+"""The SMT transform chain (SURVEY.md §2.2) as pure
 DataFrame→DataFrame functions over the ChangeEvent envelope.
 
 Chain order matches the reference connector config
 (``docker/connectors/cassandra-source.json:38-50`` →
 ``docker/connectors/postgres-sink.json:32-46``):
 unwrap → validate → convert → cdc-metadata → ttl.
+
+The reference's declarative column rules (T13-T15: include/exclude,
+mask, redact, cast, rename, compute) have no counterpart: no table
+config carries them, so every payload column replicates as typed.
 """
 
 from __future__ import annotations
@@ -311,40 +315,3 @@ def add_cdc_metadata(rows: DataFrame) -> DataFrame:
             ),
         }
     ).drop(*ENVELOPE_ALIASES.values())
-
-
-def apply_column_rules(
-    rows: DataFrame,
-    include: list[str] | None = None,
-    exclude: list[str] | None = None,
-    masks: dict[str, str] | None = None,
-    redact: list[str] | None = None,
-    casts: dict[str, str] | None = None,
-    renames: dict[str, str] | None = None,
-    computed: dict[str, str] | None = None,
-) -> DataFrame:
-    """T13-T15: declarative transformation rules
-    (``specs/001-cass-cdc-pg/data-model.md:411-421``):
-    include/exclude projection, MASK (regexp_replace to '***'),
-    REDACT (whole value replaced, type-preserving NULL for
-    non-strings), CAST, RENAME, COMPUTE (SQL expression)."""
-    out = rows
-    if include:
-        out = out.select(*include)
-    if exclude:
-        out = out.drop(*exclude)
-    for col, pattern in (masks or {}).items():
-        out = out.withColumn(col, F.regexp_replace(F.col(col), pattern, "***"))
-    schema = {f.name: f.dataType for f in out.schema.fields}
-    for col in redact or ():
-        if isinstance(schema[col], T.StringType):
-            out = out.withColumn(col, F.lit("[REDACTED]"))
-        else:
-            out = out.withColumn(col, F.lit(None).cast(schema[col]))
-    for col, to_type in (casts or {}).items():
-        out = out.withColumn(col, F.col(col).cast(to_type))
-    for old, new in (renames or {}).items():
-        out = out.withColumnRenamed(old, new)
-    for col, expr in (computed or {}).items():
-        out = out.withColumn(col, F.expr(expr))
-    return out

@@ -364,25 +364,6 @@ def test_backpressure_max_files_per_trigger(spark, tmp_path):
     assert ingest.table("users").read_live().count() == 2
 
 
-def test_column_rules_redact_and_cast(spark):
-    from cass_cdc_pg_spark.streaming.transforms import apply_column_rules
-
-    df = spark.createDataFrame(
-        [("a", "x@y.com", 30, "1999-01-01")],
-        "id string, email string, age int, dob string")
-    out = apply_column_rules(
-        df,
-        masks={"email": r"[^@]+"},          # mask local part
-        redact=["dob", "age"],              # REDACT: string vs non-string
-        casts={"id": "string"},
-        computed={"age_bucket": "CASE WHEN age IS NULL THEN 'unknown' END"},
-    ).collect()[0]
-    assert out["email"] == "***@***"
-    assert out["dob"] == "[REDACTED]"
-    assert out["age"] is None
-    assert out["age_bucket"] == "unknown"
-
-
 def test_missing_event_id_synthesized_not_dlqd(spark, users_ingest):
     """T3 addEventId (cassandra-source.json:48-50): an event arriving
     without an event_id gets a content-derived UUID injected before

@@ -298,43 +298,6 @@ def test_stateful_sessionize_idle_timeout_flush(spark, tmp_path):
     assert got == [(9, 0, 0, 1)]
 
 
-def test_discovery_round_trip(spark, ingest, tmp_path):
-    """S9: a warehouse built from config is fully re-discoverable —
-    table set, key columns, bucket count, payload schema — and a
-    discovered CdcIngest continues merging with correct LWW state."""
-    from cass_cdc_pg_spark.streaming.ingest import discover_cdc_tables
-
-    events_dir = str(tmp_path / "events")
-    _write_batch(events_dir, "b1", [
-        _event(_eid(1), "CREATE", 1000,
-               after={"id": U1, "username": "ann", "age": "34"}),
-    ])
-    _run(spark, ingest, events_dir, str(tmp_path / "cp"))
-
-    found = discover_cdc_tables(ingest.warehouse)
-    assert set(found) == {"users"}
-    assert found["users"]["key_cols"] == ["id"]
-    assert found["users"]["num_buckets"] == 4
-    assert found["users"]["columns"] == {
-        "id": "string", "username": "string", "age": "int"}
-
-    # unregistered dirs without a manifest are not cdc-live
-    os.makedirs(f"{ingest.warehouse}/cdc_ghost")
-    assert "ghost" not in discover_cdc_tables(ingest.warehouse)
-
-    ing2 = CdcIngest.discover(spark, ingest.warehouse)
-    assert ing2.table_schemas["users"] == USERS_SCHEMA
-    events2 = str(tmp_path / "events2")
-    _write_batch(events2, "b2", [
-        _event(_eid(2), "UPDATE", 2000,
-               before={"id": U1, "username": "ann", "age": "34"},
-               after={"id": U1, "username": "ann2", "age": "35"}),
-    ])
-    _run(spark, ing2, events2, str(tmp_path / "cp2"))
-    rows = {r["id"]: r for r in ing2.table("users").read_live().collect()}
-    assert rows[U1]["username"] == "ann2" and rows[U1]["age"] == 35
-
-
 def test_deduplicate_stream_drops_late_duplicates(spark, tmp_path):
     """An event id replayed within the watermark horizon is dropped;
     distinct ids all pass; the plan carries bounded dedup state."""

@@ -1,17 +1,15 @@
-"""Skip-gated Kafka/Avro JVM-path integration tests (S2/S3).
+"""Skip-gated Kafka JVM-path integration test (S2).
 
-The production transport (``streaming/ingest.kafka_stream`` +
-``sources/avro.decode_avro_value``) needs two things this container
-does not ship: the ``spark-sql-kafka``/``spark-avro`` jars and a
-reachable broker.  These tests activate the moment the environment
+The Kafka transport (``streaming/ingest.kafka_stream``) needs two
+things this container does not ship: the ``spark-sql-kafka`` jar and a
+reachable broker.  The test activates the moment the environment
 provides them — mirroring the reference's skip-gated integration
 suite (``reference/tests/integration/test_end_to_end_replication.py:12-20``,
 which skips without its docker compose stack) — so the env-gated code
 stops being dead the day it can run:
 
     spark-submit --packages \
-        org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>,\
-        org.apache.spark:spark-avro_2.13:<spark-version> ...
+        org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version> ...
     export KAFKA_BOOTSTRAP=broker:9092
     pytest tests/test_kafka_integration.py
 
@@ -102,59 +100,3 @@ def test_kafka_stream_parses_change_events_end_to_end(kafka_env, spark, tmp_path
     assert r["source_table"] == "users"
     assert r["operation_type"] == "CREATE"
     assert r["after"]["username"] == "a"
-
-
-def test_jvm_from_avro_agrees_with_python_codec(kafka_env, spark, tmp_path):
-    """Round-trip the schema-registry contract over the wire: encode
-    with the pure-Python writer, produce to Kafka, consume, and decode
-    BOTH ways — the jar's from_avro and the jar-free Python codec must
-    produce identical typed rows."""
-    from pyspark.sql import types as T
-
-    from cass_cdc_pg_spark.sources.avro import (
-        avro_available,
-        avro_schema_for,
-        decode_avro_value,
-        decode_avro_value_python,
-        encode_avro_record,
-    )
-
-    if not avro_available():
-        pytest.skip("spark-avro jars not on the classpath "
-                    "(--packages org.apache.spark:spark-avro_2.13)")
-
-    payload = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("age", T.IntegerType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    schema_json = avro_schema_for(payload, "users")
-    topic = f"cdc-avro-users-{uuid.uuid4().hex[:8]}"
-    blobs = [
-        encode_avro_record(schema_json, {"id": "u1", "age": 30, "score": 1.5}),
-        encode_avro_record(schema_json, {"id": "u2", "age": None, "score": 2.0}),
-    ]
-    (
-        spark.createDataFrame([(b,) for b in blobs], "value binary")
-        .write.format("kafka")
-        .option("kafka.bootstrap.servers", kafka_env)
-        .option("topic", topic)
-        .save()
-    )
-    raw = (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", kafka_env)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .load()
-    )
-    via_jar = {
-        tuple(r) for r in decode_avro_value(raw, payload, "users").collect()
-    }
-    via_py = {
-        tuple(r)
-        for r in decode_avro_value_python(raw, payload, "users").collect()
-    }
-    assert via_jar == via_py == {("u1", 30, 1.5), ("u2", None, 2.0)}

@@ -3,7 +3,8 @@
 Local-mode ports of the reference's observability behavior:
 RED metrics with the reference's names (``metrics.py:8-213``),
 threshold alerting (``alert_service.py:135-151``: critical ≥5%,
-warning ≥1%), and the hourly per-table reconciliation loop
+warning ≥1%, counted in ``cdc_reconciliation_alerts_total``), and the
+hourly per-table reconciliation loop
 (``reconciliation_scheduler.py:81-211``) with max one instance per
 table.
 """
@@ -19,7 +20,6 @@ from pyspark.sql import types as T
 from cass_cdc_pg_spark.monitoring import (
     METRICS,
     OBSERVATION_WINDOW,
-    AlertService,
     CdcStreamingListener,
     MetricsCollector,
     ReconciliationScheduler,
@@ -61,27 +61,6 @@ def test_metrics_observations_bounded():
     assert "never_observed" not in m.render_prometheus()
 
 
-def test_alert_severity_thresholds():
-    a = AlertService()
-    assert a.determine_severity(0.5) is None
-    assert a.determine_severity(1.0) == "warning"
-    assert a.determine_severity(4.99) == "warning"
-    assert a.determine_severity(5.0) == "critical"
-
-
-def test_alert_log_keeps_only_the_most_recent(monkeypatch):
-    """The local alert log of a long-running service is bounded: past
-    ``MAX_ALERTS`` the oldest alerts are forgotten, and it stays a list."""
-    from cass_cdc_pg_spark import monitoring
-
-    monkeypatch.setattr(monitoring, "MAX_ALERTS", 3)
-    a = AlertService(metrics=MetricsCollector())
-    for i in range(5):
-        a.send_reconciliation_alert("t", 7.0, i, f"job-{i}")
-    assert isinstance(a.alerts, list)
-    assert [x["job_id"] for x in a.alerts] == ["job-2", "job-3", "job-4"]
-
-
 def _service(spark, wh, src_wh, cfg):
     from cass_cdc_pg_spark.api import CdcApiService
 
@@ -90,19 +69,18 @@ def _service(spark, wh, src_wh, cfg):
 
 
 def test_drift_5pct_fires_critical_alert(spark, recon_pair):
-    """VERDICT r1 'done' criterion: a drift-5% run emits a critical
-    alert record.  The scheduled job runs the trigger route's job path,
-    so it lists among the service's jobs."""
-    pushed = []
+    """VERDICT r1 'done' criterion: a drift-5% run fires a critical
+    alert, counted once under its table and severity.  The scheduled
+    job runs the trigger route's job path, so it lists among the
+    service's jobs."""
+    labels = {"table": "users", "severity": "critical"}
+    before = METRICS.value("cdc_reconciliation_alerts_total", labels)
     svc = _service(spark, *recon_pair)
-    svc.alerts = AlertService(pusher=pushed.append)
     sched = ReconciliationScheduler(svc, ["users"])
     job = sched.run_once("users")
     assert job["drift_percentage"] == 5.0
     assert job["alert_fired"] is True
-    assert len(svc.alerts.alerts) == 1
-    assert svc.alerts.alerts[0]["severity"] == "critical"
-    assert pushed == svc.alerts.alerts  # pusher hook saw the same record
+    assert METRICS.value("cdc_reconciliation_alerts_total", labels) == before + 1
     assert svc.reconciliation_jobs() == [job]
     assert (job["status"], job["job_type"], job["validation_strategy"]) == (
         "COMPLETED", "HOURLY_SCHEDULED", "ROW_COUNT")
@@ -110,15 +88,21 @@ def test_drift_5pct_fires_critical_alert(spark, recon_pair):
                          {"table": "users"}) == 5.0
 
 
+def _alert_series() -> list[str]:
+    return [line for line in METRICS.render_prometheus().splitlines()
+            if line.startswith("cdc_reconciliation_alerts_total")]
+
+
 def test_scheduler_no_alert_below_threshold(spark, tmp_path):
     from conftest import make_recon_pair
 
     # 200 source rows against 199 target rows: 0.5 % drift
     svc = _service(spark, *make_recon_pair(spark, tmp_path, n=200))
+    before = _alert_series()
     job = ReconciliationScheduler(svc, ["users"]).run_once("users")
     assert (job["drift_percentage"], job["mismatch_count"]) == (0.5, 1)
     assert job["alert_fired"] is False
-    assert svc.alerts.alerts == []
+    assert _alert_series() == before
 
 
 def test_scheduler_max_one_instance_per_table(spark, recon_pair):
@@ -263,7 +247,11 @@ def test_scheduler_tick_sweeps_ttl_and_the_audit_log(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_health_all_green(spark, tmp_path):
+@pytest.mark.parametrize("source", ["configured", "unconfigured"])
+def test_health_all_green(spark, tmp_path, source):
+    """Every probe healthy gives a healthy aggregate.  Without source
+    tables the source is left out of the components and the aggregate,
+    so a service without a source replica is healthy too."""
     import json
     import os
 
@@ -291,7 +279,7 @@ def test_health_all_green(spark, tmp_path):
         q.processAllAvailable()
         hc = HealthCheckService(
             spark,
-            source_tables=[src.path],
+            source_tables=[src.path] if source == "configured" else None,
             target_warehouse=str(tmp_path / "wh"),
             schema_registry=reg,
         )
@@ -299,8 +287,11 @@ def test_health_all_green(spark, tmp_path):
     finally:
         q.stop()
     assert out["status"] == HEALTHY, out
-    # the source table's commit doc is opened, no data file
-    assert out["components"]["source"]["details"]["tables"] == 1
+    if source == "configured":
+        # the source table's commit doc is opened, no data file
+        assert out["components"]["source"]["details"]["tables"] == 1
+    else:
+        assert "source" not in out["components"]
     assert out["components"]["target"]["details"]["writable"] is True
     assert out["components"]["stream"]["details"]["active_queries"] >= 1
     assert all(

@@ -1,11 +1,10 @@
 """Audit log (S12), GDPR cascade (Q18), conflict metadata (T16),
-tumbling windows (§2.5), Avro gate (S3)."""
+tumbling windows (§2.5)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from cass_cdc_pg_spark.ops import AuditLog, GdprService
 from cass_cdc_pg_spark.plans.keyed_table import KeyedTable
@@ -178,33 +177,6 @@ def test_throughput_window_streaming(spark, tmp_path):
     assert got[0] == 3 and got[60_000_000] == 2
 
 
-def test_avro_schema_generation_and_gate(spark):
-    from cass_cdc_pg_spark.sources import avro
-
-    payload = T.StructType([
-        T.StructField("id", T.StringType()),
-        T.StructField("n", T.LongType()),
-    ])
-    schema = avro.avro_schema_for(payload, "users")
-    assert '"type": "record"' in schema and '"long"' in schema
-    if not avro_jar_present(spark):
-        # gate must fail loudly at *use* time, not at import
-        raw = spark.createDataFrame([(b"\x00",)], "value binary")
-        with pytest.raises(Exception):
-            avro.decode_avro_value(raw, payload, "users").collect()
-
-
-def avro_jar_present(spark) -> bool:
-    try:
-        from pyspark.sql.avro.functions import from_avro
-
-        df = spark.createDataFrame([(b"\x00",)], "value binary")
-        df.select(from_avro("value", '{"type":"record","name":"r","fields":[]}')).collect()
-        return True
-    except Exception:
-        return False
-
-
 def test_sessionize_gaps_and_islands(spark):
     """30-min-gap sessionization: events 10 min apart chain into one
     session; a 31-min gap opens a new one; groupBy reuses the window's
@@ -226,51 +198,6 @@ def test_sessionize_gaps_and_islands(spark):
 
     plan = sessionize(ev)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 2  # shuffle on user_id + AQE read, no re-shuffle for the agg
-
-
-def test_avro_binary_codec_roundtrip():
-    """Pure-Python Avro binary codec (Avro 1.11 spec): round-trips the
-    value space avro_schema_for covers, incl. zigzag negatives, NULL
-    union branches, and IEEE floats."""
-    from cass_cdc_pg_spark.sources import avro
-
-    payload = T.StructType([
-        T.StructField("s", T.StringType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("i", T.IntegerType()),
-        T.StructField("d", T.DoubleType()),
-        T.StructField("b", T.BooleanType()),
-        T.StructField("raw", T.BinaryType()),
-    ])
-    schema = avro.avro_schema_for(payload, "t")
-    cases = [
-        {"s": "héllo", "n": -(2**40), "i": 0, "d": -1.5, "b": True, "raw": b"\x00\xff"},
-        {"s": None, "n": None, "i": None, "d": None, "b": None, "raw": None},
-        {"s": "", "n": 2**62, "i": -1, "d": 0.1, "b": False, "raw": b""},
-    ]
-    for case in cases:
-        assert avro.decode_avro_record(schema, avro.encode_avro_record(schema, case)) == case
-
-
-def test_avro_python_decode_spark_path(spark):
-    """S3 executed end-to-end without the jar: binary Avro values →
-    typed columns via the mapInPandas decode; garbage bytes become an
-    all-NULL row (DLQ contract), not a batch failure."""
-    from cass_cdc_pg_spark.sources import avro
-
-    payload = T.StructType([
-        T.StructField("id", T.StringType()),
-        T.StructField("age", T.LongType()),
-    ])
-    schema = avro.avro_schema_for(payload, "users")
-    good = avro.encode_avro_record(schema, {"id": "u1", "age": 33})
-    raw = spark.createDataFrame(
-        [(good,), (b"\x99\x99\x99garbage",)], "value binary"
-    )
-    rows = avro.decode_avro_value_python(raw, payload, "users").collect()
-    byid = {r["id"]: r for r in rows}
-    assert byid["u1"]["age"] == 33
-    assert None in byid and byid[None]["age"] is None
 
 
 def test_throughput_hopping_windows(spark):

@@ -240,13 +240,14 @@ def _seeded_pair(spark, tmp_path):
 
 def test_run_job_matches_the_seeded_perturbation(spark, tmp_path):
     """``run_job`` over a seeded pair: the counts, the mismatches by
-    type and the field diff equal the perturbation, and the scoped job
-    equals the full diff restricted to the source's changed keys."""
+    type and the field diff equal the perturbation, and the scoped
+    ``incremental_checksum_diff`` equals the full diff restricted to the
+    source's changed keys."""
     import collections
 
     import pytest
 
-    from cass_cdc_pg_spark.operators.reconcile import run_job
+    from cass_cdc_pg_spark.operators.reconcile import incremental_checksum_diff, run_job
 
     src, tgt, since = _seeded_pair(spark, tmp_path)
     missing = {i for i in range(60) if i % 10 == 7}
@@ -270,12 +271,12 @@ def test_run_job_matches_the_seeded_perturbation(spark, tmp_path):
     assert {(m["id"], f["column"]) for m in rows for f in m["fields"] or []} == {
         (i, c) for i in mutated for c in ("a", "c")}
 
-    scoped = run_job(src, tgt, "checksum", since_version=since)["mismatches"].collect()
+    compare = ["a", "b", "c"]
+    scoped = incremental_checksum_diff(src, tgt, since, compare).collect()
     assert sorted((m["id"], m["mismatch_type"]) for m in scoped) == sorted(
         (m["id"], m["mismatch_type"]) for m in rows if m["id"] in changed)
     assert {m["id"] for m in scoped} == (missing | mutated) & changed
-    assert run_job(src, tgt, "checksum", since_version=src._current_version()
-                   )["mismatches"] is None
+    assert incremental_checksum_diff(src, tgt, src._current_version(), compare) is None
 
     with pytest.raises(ValueError, match="unknown strategy"):
         run_job(src, tgt, "sample")

@@ -2,7 +2,7 @@ from __future__ import annotations
 
 import pytest
 
-from cass_cdc_pg_spark.streaming.reliability import CircuitBreaker, retry_with_backoff
+from cass_cdc_pg_spark.streaming.reliability import retry_with_backoff
 
 
 def test_retry_succeeds_after_failures():
@@ -25,34 +25,3 @@ def test_retry_exhausts_budget():
 
     with pytest.raises(RuntimeError):
         retry_with_backoff(always_fails, max_attempts=3, sleep=lambda _: None)
-
-
-def test_breaker_opens_after_threshold_and_half_opens():
-    now = {"t": 0.0}
-    cb = CircuitBreaker(failure_threshold=2, recovery_timeout=60, clock=lambda: now["t"])
-
-    def fail():
-        raise RuntimeError("x")
-
-    for _ in range(2):
-        with pytest.raises(RuntimeError):
-            cb.call(fail)
-    assert cb.state == "OPEN"
-    with pytest.raises(RuntimeError, match="OPEN"):
-        cb.call(lambda: None)  # rejected while open
-
-    now["t"] = 61.0
-    cb.call(lambda: None)  # half-open probe succeeds → closed
-    assert cb.state == "CLOSED"
-
-
-def test_breaker_reopens_on_half_open_failure():
-    now = {"t": 0.0}
-    cb = CircuitBreaker(failure_threshold=1, recovery_timeout=10, clock=lambda: now["t"])
-    with pytest.raises(RuntimeError):
-        cb.call(lambda: (_ for _ in ()).throw(RuntimeError("x")))
-    assert cb.state == "OPEN"
-    now["t"] = 11.0
-    with pytest.raises(RuntimeError):
-        cb.call(lambda: (_ for _ in ()).throw(RuntimeError("y")))
-    assert cb.state == "OPEN"

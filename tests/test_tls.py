@@ -1,8 +1,7 @@
 """TLS 1.3 transport parity (``cass_cdc_pg_spark/tls.py`` vs
-reference ``src/config/tls_config.py``) — context pinning, the
-Kafka/JDBC option contracts, and the API server actually serving
-TLS 1.3 over a real socket (handshake + request + mutual-TLS
-rejection), with the ``certs`` fixture's certs (``conftest.py``)."""
+reference ``src/config/tls_config.py``) — context pinning and the API
+server actually serving TLS 1.3 over a real socket (handshake +
+request + mutual-TLS rejection), with the ``certs`` fixture's certs (``conftest.py``)."""
 
 from __future__ import annotations
 
@@ -44,50 +43,6 @@ def test_pinned_ca_is_sole_trust_anchor(certs):
     # sanity: without a pin the default bundle loads (many CAs)
     system = tls.create_tls_context()
     assert system.cert_store_stats()["x509_ca"] > 1
-
-
-def test_kafka_options_pem_shape(tmp_path):
-    """The JVM Kafka client (KIP-651 PEM support) takes the private
-    key INLINE as ssl.keystore.key + the chain as
-    ssl.keystore.certificate.chain — librdkafka's ssl.key.location is
-    ignored by the Java client and a cert-only PEM keystore location
-    is rejected at startup, so the options must carry file CONTENTS
-    for the keystore and a path only for the truststore."""
-    cert = tmp_path / "c.pem"
-    key = tmp_path / "k.pem"
-    cert.write_text("CERT-PEM-BODY")
-    key.write_text("KEY-PEM-BODY")
-    opts = tls.kafka_ssl_options(str(cert), str(key), "ca.pem")
-    assert opts["kafka.security.protocol"] == "SSL"
-    assert opts["kafka.ssl.enabled.protocols"] == "TLSv1.3"
-    assert opts["kafka.ssl.truststore.type"] == "PEM"
-    assert opts["kafka.ssl.truststore.location"] == "ca.pem"
-    assert opts["kafka.ssl.keystore.type"] == "PEM"
-    assert opts["kafka.ssl.keystore.certificate.chain"] == "CERT-PEM-BODY"
-    assert opts["kafka.ssl.keystore.key"] == "KEY-PEM-BODY"
-    assert "kafka.ssl.key.location" not in opts
-    assert "kafka.ssl.keystore.location" not in opts
-    # minimal form: no file entries at all
-    assert set(tls.kafka_ssl_options()) == {
-        "kafka.security.protocol",
-        "kafka.ssl.enabled.protocols",
-        "kafka.ssl.protocol",
-    }
-    # path-only mTLS alternative: combined key+cert PEM by location —
-    # no secret material enters the option map (no redaction caveat)
-    opts2 = tls.kafka_ssl_options(ca_file="ca.pem", keystore_location="kc.pem")
-    assert opts2["kafka.ssl.keystore.location"] == "kc.pem"
-    assert "kafka.ssl.keystore.key" not in opts2
-    assert "kafka.ssl.keystore.certificate.chain" not in opts2
-
-
-def test_jdbc_properties_escalate_with_ca():
-    assert tls.jdbc_ssl_properties()["sslmode"] == "require"
-    props = tls.jdbc_ssl_properties("c.pem", "k.pem", "ca.pem")
-    assert props["sslmode"] == "verify-full"
-    assert props["sslrootcert"] == "ca.pem"
-    assert props["sslcert"] == "c.pem"
-    assert props["sslkey"] == "k.pem"
 
 
 # ---------------------------------------------------- e2e over sockets
@@ -166,19 +121,3 @@ def test_mutual_tls_requires_client_cert(mtls_server, certs):
     authed.check_hostname = False
     status, _ = _https_get(base + "/health", authed)
     assert status == 200
-
-
-def test_kafka_ssl_rejects_conflicting_mtls_identities(tmp_path):
-    """keystore_location and cert_file/key_file are alternative mTLS
-    identities — supplying both must raise, not silently prefer one
-    (a misconfigured client identity would otherwise pass unnoticed)."""
-    import pytest
-
-    from cass_cdc_pg_spark.tls import kafka_ssl_options
-
-    pem = tmp_path / "id.pem"
-    pem.write_text("dummy")
-    with pytest.raises(ValueError, match="not both"):
-        kafka_ssl_options(keystore_location=str(pem), cert_file=str(pem))
-    with pytest.raises(ValueError, match="not both"):
-        kafka_ssl_options(keystore_location=str(pem), key_file=str(pem))
